@@ -1123,14 +1123,15 @@ def _j3_broadcast_dim_chain(spark, sf_dir):
 
 
 def _o2_top1_per_group(spark, sf_dir):
-    """Top-1 per group as a hash AGGREGATE, not a window (r8, guide
+    """Top-1 per group as an AGGREGATE, not a window (r8, guide
     §2.3 "aggregate before you shuffle"): max over (o_totalprice,
     -o_orderkey) picks exactly the row_number()==1 row of the original
     ORDER BY (o_totalprice DESC, o_orderkey ASC) — struct comparison
     is lexicographic and the keys carry no NULLs — but partial
     aggregation collapses each map partition to one row per custkey
     before the exchange and both window sorts disappear (plan:
-    2×Sort + 2×WindowGroupLimit + Window -> 2×HashAggregate;
+    2×Sort + 2×WindowGroupLimit + Window -> 2×SortAggregate, since a
+    struct max buffer is not hash-aggregatable;
     plans/r08/o2_top1_per_group_{before,after}.txt)."""
     o = _t(spark, sf_dir, "orders")
     top = F.max(F.struct(F.col("o_totalprice").alias("tp"),

@@ -97,10 +97,10 @@ def probe_ogg_vorbis(data: bytes) -> tuple:
     last_granule = 0
     ident = None
     while pos < len(data):
+        if pos + 27 > len(data):                # before ANY header read
+            raise ValueError("ogg: truncated page header")
         if data[pos:pos + 4] != b"OggS":
             raise ValueError("ogg: bad capture pattern")
-        if pos + 27 > len(data):                # before ANY fixed-field read
-            raise ValueError("ogg: truncated page header")
         if data[pos + 4] != 0:
             raise ValueError("ogg: unsupported stream structure version")
         granule = struct.unpack("<q", data[pos + 6:pos + 14])[0]

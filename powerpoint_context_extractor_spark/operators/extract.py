@@ -1,4 +1,4 @@
-"""The extraction operator: Arrow-batched ``mapInPandas`` over pages.
+"""The extraction operator: Arrow-batched ``mapInArrow`` over pages.
 
 This is the Spark re-expression of the reference's whole extraction
 dataflow (the notes/animations/slides extractors are collectively one
@@ -54,36 +54,6 @@ EXTRACTED_SCHEMA = T.StructType([
 ])
 
 
-def _kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx is not None else -1
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        fallbacks = pdf["text"].tolist() if "text" in pdf.columns else [None] * len(urls)
-        out = {k: [] for k in ("url", "title", "text", "spans", "n_blocks",
-                               "error", "text_source", "charset", "in_bytes")}
-        for url, html, fb in zip(urls, htmls, fallbacks):
-            content = bytes(html) if html is not None else None
-            r = extract_document(url, content)
-            out["url"].append(url)
-            out["title"].append(r.title)
-            if r.error is None:
-                out["text"].append(r.text)
-                out["text_source"].append("kernel")
-            else:
-                out["text"].append(fb)
-                out["text_source"].append("fallback" if fb is not None else None)
-            out["spans"].append(r.spans)
-            out["n_blocks"].append(r.n_blocks)
-            out["error"].append(r.error)
-            out["charset"].append(r.charset)
-            out["in_bytes"].append(len(content) if content is not None else 0)
-        res = pd.DataFrame(out)
-        res["partition_id"] = pid
-        yield res[[f.name for f in EXTRACTED_SCHEMA.fields]]
-
-
 _ARROW_OUT_SCHEMA = None
 
 
@@ -109,8 +79,8 @@ def _arrow_out_schema():
 
 
 def _kernel_batches_arrow(batches):
-    """mapInArrow twin of _kernel_batches: skips the pandas layer on
-    both sides (Arrow RecordBatch in/out)."""
+    """The extraction kernel over Arrow RecordBatches in and out: no
+    pandas layer on either side."""
     import pyarrow as pa
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
@@ -363,18 +333,12 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
         _nobom_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
 
 
-def extract_pages(pages: DataFrame, num_partitions: int | None = None,
-                  use_arrow: bool = True) -> DataFrame:
-    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA).
-
-    ``use_arrow=True`` routes through mapInArrow (no pandas layer on
-    either side — measurably cheaper per batch for multi-KB binary
-    rows); the mapInPandas path is kept for A/B and as the reference
-    implementation."""
+def extract_pages(pages: DataFrame,
+                  num_partitions: int | None = None) -> DataFrame:
+    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
+    one ``mapInArrow`` crossing."""
     cols = ["url", "html"] + (["text"] if "text" in pages.columns else [])
     narrow = pages.select(*cols)  # column pruning reaches the scan (F7)
     if num_partitions:
         narrow = repartition_for_extract(narrow, num_partitions)
-    if use_arrow:
-        return narrow.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
-    return narrow.mapInPandas(_kernel_batches, schema=EXTRACTED_SCHEMA)
+    return narrow.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)

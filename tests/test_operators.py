@@ -3578,10 +3578,10 @@ def test_ogg_vorbis_probe_contract():
     other = build_ogg_vorbis(1, 8000, 16000, [500], serial=888)
     with pytest.raises(ValueError, match="multiplexed"):
         probe_ogg_vorbis(d + other)
-    # a page truncated INSIDE the 27-byte fixed header is the same
-    # honest ValueError, not an IndexError from reading header fields
-    # before the length check
-    for cut in (b"OggS", b"OggS\x00" + b"\x00" * 10):
+    # a page truncated INSIDE the 27-byte fixed header, even inside
+    # the capture pattern, is the same honest ValueError, not an
+    # IndexError from reading header fields before the length check
+    for cut in (b"O", b"Og", b"OggS", b"OggS\x00" + b"\x00" * 10):
         with pytest.raises(ValueError, match="truncated page header"):
             probe_ogg_vorbis(mono + cut)
 
