@@ -23,10 +23,12 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,13 +80,29 @@ def _arrow_out_schema():
     return _ARROW_OUT_SCHEMA
 
 
-def _kernel_batches_arrow(batches):
+class PartitionTally(AccumulatorParam):
+    """List accumulator of ``(partition_id, rows, ok, fail, bytes)``
+    tuples, one per non-empty partition of an ``extract_pages`` map.
+    Module-level so workers unpickle it by reference."""
+
+    def zero(self, value):
+        return []
+
+    def addInPlace(self, value1, value2):
+        value1.extend(value2)
+        return value1
+
+
+def _kernel_batches_arrow(batches, tally=None):
     """The extraction kernel over Arrow RecordBatches in and out: no
-    pandas layer on either side."""
+    pandas layer on either side. With a ``PartitionTally`` accumulator
+    as ``tally``, adds this partition's row, ok and byte counts to it
+    after the last batch."""
     import pyarrow as pa
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
     schema = _arrow_out_schema()
+    rows = ok = n_bytes = 0
     for rb in batches:
         names = rb.schema.names
         urls = rb.column(names.index("url")).to_pylist()
@@ -109,6 +127,9 @@ def _kernel_batches_arrow(batches):
             out["charset"].append(r.charset)
             out["in_bytes"].append(len(html) if html is not None else 0)
         n = len(urls)
+        rows += n
+        ok += out["error"].count(None)
+        n_bytes += sum(out["in_bytes"])
         yield pa.RecordBatch.from_arrays(
             [pa.array(out["url"], schema.field(0).type),
              pa.array(out["title"], schema.field(1).type),
@@ -121,6 +142,8 @@ def _kernel_batches_arrow(batches):
              pa.array([pid] * n, schema.field(8).type),
              pa.array(out["in_bytes"], schema.field(9).type)],
             schema=schema)
+    if tally is not None and rows:
+        tally.add([(pid, rows, ok, rows - ok, n_bytes)])
 
 
 def repartition_for_extract(df: DataFrame, num_partitions: int,
@@ -334,11 +357,15 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
 
 
 def extract_pages(pages: DataFrame,
-                  num_partitions: int | None = None) -> DataFrame:
+                  num_partitions: int | None = None,
+                  tally=None) -> DataFrame:
     """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
-    one ``mapInArrow`` crossing."""
+    one ``mapInArrow`` crossing. ``tally``, a ``PartitionTally``
+    accumulator, collects per-partition counts as the map runs."""
     cols = ["url", "html"] + (["text"] if "text" in pages.columns else [])
     narrow = pages.select(*cols)  # column pruning reaches the scan (F7)
     if num_partitions:
         narrow = repartition_for_extract(narrow, num_partitions)
-    return narrow.mapInArrow(_kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
+    return narrow.mapInArrow(
+        functools.partial(_kernel_batches_arrow, tally=tally),
+        schema=EXTRACTED_SCHEMA)

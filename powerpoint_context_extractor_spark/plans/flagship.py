@@ -4,6 +4,11 @@ Spark plan): snapshot-table scan -> resume anti-join -> narrow
 projection -> hash(url) spread -> Arrow-batched kernel -> snapshot
 commit -> per-partition lineage commit.
 
+Lineage is tallied per task: the kernel map counts rows, ok rows and
+input bytes of its partition into a ``PartitionTally`` accumulator, and
+the driver writes those O(partitions) rows as one small parquet file.
+No scan of the output and no Spark job run after the extraction write.
+
 Run via ``spark-submit --py-files pcx.zip -m`` or the module main below.
 """
 
@@ -15,14 +20,23 @@ import time
 import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
+from ..operators.extract import PartitionTally, extract_pages
 from ..sources.table_io import SnapshotTable
 
-LINEAGE_COLS = ("run_id", "partition_id", "input_split", "row_count",
-                "ok_count", "fail_count", "bytes", "wall_ms", "committed_at")
+LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("partition_id", pa.int32()),
+    ("input_split", pa.string()),
+    ("row_count", pa.int64()),
+    ("ok_count", pa.int64()),
+    ("fail_count", pa.int64()),
+    ("bytes", pa.int64()),
+    ("wall_ms", pa.int32()),
+    ("committed_at", pa.timestamp("us", tz="UTC")),
+])
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
@@ -45,35 +59,37 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
             pages = pages.join(done, "url", "left_anti")
 
     t0 = time.monotonic()
-    extracted = extract_pages(pages, num_partitions=num_partitions)
+    tally = spark.sparkContext.accumulator([], PartitionTally())
+    extracted = extract_pages(pages, num_partitions=num_partitions,
+                              tally=tally)
     # r8: url/text/spans are unique per row — parquet dictionary pages
     # always overflow and fall back, costing ~11% of the write wall for
-    # zero size win (A/B in OPTIMIZATION_r08.md); low-cardinality tables
-    # (lineage below) keep the default dictionary encoding.
+    # zero size win (A/B in OPTIMIZATION_r08.md).
     snap = extracted_tbl.append(
         extracted, run_id,
         write_options={"parquet.enable.dictionary": "false"})
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # Lineage (U4): column-pruned read-back of the just-committed files —
-    # at 100 TB this scans 3 small columns of the output, not the input.
+    # Lineage (U4) from the map's tally. Spark merges a result-stage task's
+    # accumulator update once per partition, the map runs in the write's
+    # result stage, and the driver acks each merge before runJob returns.
+    parts = sorted(tally.value)
+    tallied = sum(p[1] for p in parts)
+    if tallied != snap["row_count"]:
+        raise RuntimeError(
+            f"lineage tally counts {tallied} rows but snapshot "
+            f"{snap['snapshot_id']} holds {snap['row_count']}; "
+            "lineage not committed")
     lineage_entry = None
     if snap["files"]:
-        ext = spark.read.parquet(*snap["files"]).select(
-            "partition_id", "error", "in_bytes")
-        lineage = (
-            ext.groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("row_count"),
-                 F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("ok_count"),
-                 F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("fail_count"),
-                 F.sum("in_bytes").alias("bytes"))
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("input_split", F.lit(f"snap-{snap['snapshot_id']}"))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("committed_at",
-                        F.lit(datetime.now(timezone.utc).isoformat()).cast("timestamp"))
-            .select(*LINEAGE_COLS)
-        )
+        split = f"snap-{snap['snapshot_id']}"
+        now = datetime.now(timezone.utc)
+        lineage = pa.Table.from_pylist(
+            [dict(zip(LINEAGE_SCHEMA.names,
+                      (run_id, pid, split, rows, ok, fail, n_bytes,
+                       wall_ms, now)))
+             for pid, rows, ok, fail, n_bytes in parts],
+            schema=LINEAGE_SCHEMA)
         lineage_entry = lineage_tbl.append(lineage, run_id)
     return {"run_id": run_id, "snapshot": snap, "lineage": lineage_entry,
             "wall_ms": wall_ms}
@@ -84,7 +100,6 @@ def write_pages_table(spark: SparkSession, rows_iter, out_dir: str,
     """Materialize a pages parquet dataset from corpus rows (driver-side
     generator -> distributed parquet). Used by tests/bench only; real
     deployments read an existing Iceberg/WARC-derived table."""
-    from ..operators.extract import EXTRACTED_SCHEMA  # noqa: F401 (schema sibling)
     import pyspark.sql.types as T
     schema = T.StructType([
         T.StructField("url", T.StringType(), False),

@@ -188,23 +188,41 @@ class SnapshotTable:
         return out
 
     # -- IO --------------------------------------------------------------
-    def append(self, df: DataFrame, run_id: str,
+    def append(self, df, run_id: str,
                write_options: dict | None = None) -> dict:
-        """``write_options`` are passed to the parquet writer (r8 seam:
-        the extraction sink sets ``parquet.enable.dictionary=false`` —
-        its url/text/spans columns are unique per row, so dictionary
-        encoding always falls back after burning the page-build CPU;
-        measured 11% off the sf1.0 extract+write wall, same bytes)."""
-        new_schema = [(f.name, f.dataType.simpleString())
-                      for f in df.schema.fields]
-        self._check_evolution(self.table_schema(df.sparkSession),
-                              new_schema)
+        """Commit ``df`` as one new snapshot. A Spark DataFrame is
+        distributed data and gets a Spark write; a ``pyarrow.Table`` is
+        small driver-side data (e.g. one row per partition) and is
+        written by the driver as one zstd parquet file, with no Spark
+        job. ``write_options`` are passed to the Spark parquet writer
+        (r8 seam: the extraction sink sets
+        ``parquet.enable.dictionary=false`` — its url/text/spans columns
+        are unique per row, so dictionary encoding always falls back
+        after burning the page-build CPU; measured 11% off the sf1.0
+        extract+write wall, same bytes)."""
+        import pyarrow as pa
+        local = isinstance(df, pa.Table)
+        if local:
+            from pyspark.sql.pandas.types import from_arrow_schema
+            fields = from_arrow_schema(df.schema).fields
+            spark = SparkSession.active()
+        else:
+            fields = df.schema.fields
+            spark = df.sparkSession
+        new_schema = [(f.name, f.dataType.simpleString()) for f in fields]
+        self._check_evolution(self.table_schema(spark), new_schema)
         snap_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, f"snap-{snap_id}")
-        w = df.write.mode("error")
-        for k, v in (write_options or {}).items():
-            w = w.option(k, v)
-        w.parquet(out_dir)
+        if local:
+            import pyarrow.parquet as pq
+            os.makedirs(out_dir)
+            pq.write_table(df, os.path.join(out_dir, "part-00000.parquet"),
+                           compression="zstd")
+        else:
+            w = df.write.mode("error")
+            for k, v in (write_options or {}).items():
+                w = w.option(k, v)
+            w.parquet(out_dir)
         files = sorted(
             os.path.join(out_dir, f) for f in os.listdir(out_dir)
             if f.endswith(".parquet"))
@@ -561,9 +579,16 @@ class SnapshotTable:
 
     def committed_keys(self, spark: SparkSession, key_col: str) -> DataFrame | None:
         """Column-pruned scan of just the key column across committed
-        snapshots — the probe side of the resume anti-join (U3)."""
-        df = self.read(spark)
-        return None if df is None else df.select(key_col)
+        snapshots — the probe side of the resume anti-join (U3). The
+        read schema comes from the manifest (``table_schema``), so no
+        schema-inference job runs; the whole schema is given and then
+        pruned, so the scan's size estimate, and with it the join
+        strategy, is the same as for an inferred read."""
+        files = self.data_files()
+        if not files:
+            return None
+        ddl = ", ".join(f"`{n}` {t}" for n, t in self.table_schema(spark))
+        return spark.read.schema(ddl).parquet(*files).select(key_col)
 
 
 def _footer_minmax(path: str, col: str):

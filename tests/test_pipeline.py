@@ -60,20 +60,125 @@ def test_mixed_corpus_zero_decode_errors(spark, pages_dir):
         assert by.get(cs, 0) > 0, (cs, by)
 
 
+LINEAGE_MANIFEST_SCHEMA = [
+    ["run_id", "string"], ["partition_id", "int"], ["input_split", "string"],
+    ["row_count", "bigint"], ["ok_count", "bigint"], ["fail_count", "bigint"],
+    ["bytes", "bigint"], ["wall_ms", "int"], ["committed_at", "timestamp"]]
+
+
+def _lineage_by_partition(spark, info):
+    return {r["partition_id"]: (r["row_count"], r["ok_count"],
+                                r["fail_count"], r["bytes"])
+            for r in spark.read.parquet(*info["lineage"]["files"]).collect()}
+
+
+def _grouped_extracted(spark, info):
+    """What lineage must equal: a group-by over the run's committed
+    extracted snapshot."""
+    ext = spark.read.parquet(*info["snapshot"]["files"])
+    agg = ext.groupBy("partition_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("error").isNull().cast("long")).alias("ok"),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("fail"),
+        F.sum("in_bytes").alias("bytes"))
+    return {r["partition_id"]: (r["n"], r["ok"], r["fail"], r["bytes"])
+            for r in agg.collect()}
+
+
 def test_run_extraction_lineage_reconciles(spark, pages_dir, tmp_path):
-    out = str(tmp_path / "out")
     pages = spark.read.parquet(pages_dir)
     n_input = pages.count()
-    info = run_extraction(spark, pages, out, num_partitions=4)
-    assert info["snapshot"]["row_count"] == n_input
-    lineage = SnapshotTable(os.path.join(out, "lineage")).read(spark)
-    agg = lineage.agg(F.sum("row_count").alias("n"), F.sum("ok_count").alias("ok"),
-                      F.sum("fail_count").alias("fail")).collect()[0]
-    assert agg["n"] == n_input                       # sum(row_count)=input rows
-    assert agg["ok"] + agg["fail"] == n_input        # ok+fail reconciles
-    assert agg["fail"] > 0                           # corpus contains bad rows
-    per = lineage.select("partition_id").distinct().count()
-    assert 1 <= per <= 4  # AQE may coalesce the repartition(4)
+    resumed = str(tmp_path / "resumed")
+    run_extraction(spark, pages.limit(120), resumed, num_partitions=3)
+    runs = {
+        "plain": run_extraction(spark, pages, str(tmp_path / "plain")),
+        "three": run_extraction(spark, pages, str(tmp_path / "three"),
+                                num_partitions=3),
+        "resume": run_extraction(spark, pages, resumed),
+    }
+    for shape, info in runs.items():
+        want = n_input - 120 if shape == "resume" else n_input
+        assert info["snapshot"]["row_count"] == want, shape
+        lineage = _lineage_by_partition(spark, info)
+        assert lineage == _grouped_extracted(spark, info), shape
+        assert sum(v[0] for v in lineage.values()) == want, shape
+        assert info["lineage"]["schema"] == LINEAGE_MANIFEST_SCHEMA, shape
+    three = _lineage_by_partition(spark, runs["three"])
+    assert sum(v[2] for v in three.values()) > 0   # corpus has bad rows
+    assert 1 <= len(three) <= 3   # AQE may coalesce the repartition(3)
+
+    # a snapshot the Spark writer committed (older tables) reads back
+    # together with the driver-written ones
+    lineage_tbl = SnapshotTable(str(tmp_path / "three" / "lineage"))
+    driver_rows = lineage_tbl.read(spark)
+    spark_written = lineage_tbl.append(driver_rows, "spark-written")
+    assert spark_written["schema"] == LINEAGE_MANIFEST_SCHEMA
+    both = lineage_tbl.read(spark)
+    assert both.schema == driver_rows.schema
+    got = sorted(tuple(r) for r in both.collect())
+    assert got == sorted(2 * [tuple(r) for r in driver_rows.collect()])
+
+
+def test_run_extraction_refuses_a_short_tally(spark, pages_dir, tmp_path,
+                                             monkeypatch):
+    """A tally that lost one task's counts fails the run before any
+    lineage line is committed."""
+    from powerpoint_context_extractor_spark.operators.extract import (
+        PartitionTally,
+    )
+    from powerpoint_context_extractor_spark.sources.table_io import MANIFEST
+    merge = PartitionTally.addInPlace
+    dropped = []
+
+    def lossy_merge(self, value, update):
+        if update and not dropped:
+            dropped.append(update)
+            return value
+        return merge(self, value, update)
+
+    monkeypatch.setattr(PartitionTally, "addInPlace", lossy_merge)
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="lineage tally"):
+        run_extraction(spark, spark.read.parquet(pages_dir), out,
+                       num_partitions=3)
+    assert dropped
+    assert not os.path.exists(os.path.join(out, "lineage", MANIFEST))
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn's result, number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # status store is async
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_extraction_spark_jobs(spark, pages_dir, tmp_path):
+    """The extraction write is the only Spark job of a fresh run, and the
+    resume probe infers no schema."""
+    pages = spark.read.parquet(pages_dir)
+    out = str(tmp_path / "out")
+    _, n = _jobs_in_group(spark, "pcx-fresh", lambda: run_extraction(
+        spark, pages, out, resume=False))
+    assert n == 1
+    extracted = SnapshotTable(os.path.join(out, "extracted"))
+    keys, n = _jobs_in_group(spark, "pcx-probe", lambda: (
+        extracted.committed_keys(spark, "url")))
+    assert n == 0
+    # same size estimate as an inferred read, so the same join strategy
+    inferred = spark.read.parquet(*extracted.data_files()).select("url")
+    assert (keys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            == inferred._jdf.queryExecution().optimizedPlan().stats()
+            .sizeInBytes())
+    # broadcast of the committed keys + the (empty) extraction write
+    info, n = _jobs_in_group(spark, "pcx-resume", lambda: run_extraction(
+        spark, pages, out))
+    assert info["snapshot"]["row_count"] == 0
+    assert n == 2
 
 
 def test_resume_exactly_once(spark, pages_dir, tmp_path):
