@@ -17,7 +17,13 @@ Design contract (frozen; golden fixtures under tests/fixtures/ pin it):
   parser (both are the analog of the reference's PPTX->PDF->image
   binary path, `slides/extractor.py:38-109`, re-expressed as
   in-process parses — never a subprocess per row). Everything else is
-  parsed as UTF-8 HTML with the lenient stdlib parser.
+  decoded (``decode_html_bytes``) and walked by ``_fast_extract``, a
+  hand-written tolerant scanner that agrees with the stdlib
+  ``html.parser`` on every input (tests/html_reference.py is that
+  oracle). At each ``<`` plus a letter it takes one of three steps: a
+  leaf element ``<name attrs>text</name>`` in one regex match, a start
+  tag with simple attributes in one match, or the general port of
+  html.parser's start-tag parse.
 * Traversal is strictly document order; every candidate block gets a
   monotonically increasing ``block_id`` whether or not it is kept, so
   IDs are stable under classification-rule changes.
@@ -45,8 +51,8 @@ from __future__ import annotations
 import hashlib
 import re
 import zlib
-from dataclasses import dataclass, field
-from html.parser import HTMLParser
+from dataclasses import dataclass
+from html import unescape as _unescape
 
 __all__ = [
     "extract_document",
@@ -99,15 +105,6 @@ _PREFIX = {"h1": "# ", "h2": "## ", "h3": "### ", "h4": "#### ",
 
 
 @dataclass
-class _Block:
-    tag: str
-    path: str
-    parts: list = field(default_factory=list)
-    total_chars: int = 0  # non-whitespace chars
-    link_chars: int = 0   # non-whitespace chars inside <a>
-
-
-@dataclass
 class KernelResult:
     url: str
     title: str | None
@@ -132,162 +129,6 @@ def _is_boiler_attrs(attrs) -> bool:
     return False
 
 
-class _Extractor(HTMLParser):
-    """Event-stream DOM walk; document order == event order (html.parser
-    preserves serialization order, like the reference's `findall`,
-    `notes/extractor.py:62`)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        # stack frames: [tag, is_boiler_root, child_counter, path]
-        self.stack: list = []
-        self.drop_depth = 0
-        self.a_depth = 0
-        self.pre_depth = 0
-        self.block: _Block | None = None
-        self.blocks: list = []      # finalized candidate blocks (kept & dropped)
-        self.kept: list = []        # (block_id, tag, path, rendered_text)
-        self.next_id = 0
-        self.root_children = 0
-
-    # -- path helpers -------------------------------------------------
-    def _child_ordinal(self) -> int:
-        if self.stack:
-            self.stack[-1][2] += 1
-            return self.stack[-1][2]
-        self.root_children += 1
-        return self.root_children
-
-    def _parent_path(self) -> str:
-        return self.stack[-1][3] if self.stack else ""
-
-    def _path_for(self, tag: str, ordinal: int) -> str:
-        parent = self._parent_path()
-        comp = f"{tag}:{ordinal}"
-        return f"{parent}>{comp}" if parent else comp
-
-    # -- block lifecycle ----------------------------------------------
-    def _open_block(self, tag: str, path: str) -> None:
-        if self.block is not None:
-            self._flush_block()
-        self.block = _Block(tag=tag, path=path)
-
-    def _flush_block(self) -> None:
-        b = self.block
-        self.block = None
-        if b is None:
-            return
-        raw = "".join(b.parts)
-        # corpus hygiene: drop C0 control chars (NUL etc.) except the
-        # whitespace ones the collapse/pre rules handle
-        if not raw.isprintable():
-            raw = _C0_STRIP("", raw)
-        if b.tag == "pre":
-            text = raw.strip()
-        else:
-            text = " ".join(raw.split())
-        block_id = self.next_id
-        self.next_id += 1
-        self.blocks.append(b)
-        if not text:
-            return
-        if b.tag in HEADING_TAGS:
-            keep = True
-        elif b.tag == "li":
-            keep = 2 * b.link_chars <= b.total_chars
-        else:
-            keep = 3 * b.link_chars <= b.total_chars
-        if keep:
-            self.kept.append((block_id, b.tag, b.path, text))
-
-    # -- parser events -------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        if tag in VOID_TAGS:
-            if self.block is not None and tag == "br":
-                self.block.parts.append("\n" if self.pre_depth else " ")
-            return
-        boiler = False
-        if self.drop_depth == 0:
-            boiler = tag in DROP_TAGS or (bool(attrs)
-                                          and _is_boiler_attrs(attrs))
-        if self.drop_depth > 0 or boiler:
-            if self.block is not None:
-                self._flush_block()
-            self.drop_depth += 1
-            self.stack.append([tag, True, 0, self._parent_path()])
-            return
-        ordinal = self._child_ordinal()
-        path = self._path_for(tag, ordinal)
-        if tag == "a":
-            self.a_depth += 1
-        if tag in BLOCK_TAGS:
-            self._open_block(tag, path)
-            if tag == "pre":
-                self.pre_depth += 1
-        elif tag in STRUCT_TAGS:
-            if self.block is not None:
-                self._flush_block()
-        # inline tags: keep current block open, text flows through
-        self.stack.append([tag, False, 0, path])
-
-    def handle_endtag(self, tag):
-        if tag in VOID_TAGS:
-            return
-        # fast path: well-formed HTML closes the top of stack
-        if self.stack and self.stack[-1][0] == tag:
-            depth = len(self.stack) - 1
-        else:
-            # pop to the matching open tag if present (lenient recovery
-            # keeps ordering stable under malformed HTML)
-            depth = None
-            for i in range(len(self.stack) - 1, -1, -1):
-                if self.stack[i][0] == tag:
-                    depth = i
-                    break
-            if depth is None:
-                return  # stray end tag: ignore
-        while len(self.stack) > depth:
-            frame = self.stack.pop()
-            ftag, fboiler = frame[0], frame[1]
-            if fboiler:
-                self.drop_depth -= 1
-                continue
-            if ftag == "a":
-                self.a_depth -= 1
-            if ftag in BLOCK_TAGS:
-                if ftag == "pre":
-                    self.pre_depth -= 1
-                if self.block is not None:
-                    self._flush_block()
-            elif ftag in STRUCT_TAGS:
-                if self.block is not None:
-                    self._flush_block()
-
-    def handle_data(self, data):
-        if self.drop_depth > 0:
-            return
-        if not data:
-            return
-        if self.block is None:
-            if not data.strip():
-                return
-            # anonymous block: bare text directly inside a structural tag
-            self.block = _Block(tag="text", path=self._parent_path() + ">#text"
-                                if self._parent_path() else "#text")
-        self.block.parts.append(data)
-        # non-whitespace char count; str.split() uses the same unicode
-        # whitespace class as isspace() but runs in C (~40% of kernel
-        # time went to a per-char generator here)
-        n = sum(map(len, data.split()))
-        self.block.total_chars += n
-        if self.a_depth > 0:
-            self.block.link_chars += n
-
-    def close(self):
-        super().close()
-        self._flush_block()
-
-
 def _assemble(url: str, kept: list) -> KernelResult:
     """Deterministic serialization: render prefixes, join '\n\n', compute
     spans over the final text (invariant: text[start:end] == rendered)."""
@@ -310,17 +151,33 @@ def _assemble(url: str, kept: list) -> KernelResult:
 
 
 # ---------------------------------------------------------------------------
-# Fast engine: a single-pass scanner with the _Extractor block logic
-# INLINED into the tokenizer loop (r8: the handler-dispatch layer was
-# ~60% of kernel time; the stdlib-driven _Extractor above remains the
-# reference implementation the differential tests compare against).
-# Behavior contract: byte-identical output to the stdlib engine — pinned
-# by tests/test_kernel.py differential tests over every fixture class,
-# the bulk corpus, and hypothesis-generated tag soup. The three
-# tolerant-parsing regexes mirror html.parser's (CPython, PSF license).
+# HTML engine: a single-pass scanner with the block rules inlined into the
+# tokenizer loop (r8: a handler per html.parser event spent ~60% of kernel
+# time on dispatch). Behavior contract: the kept blocks equal those of the
+# html.parser-driven reference engine in tests/html_reference.py, pinned
+# by the differential tests in tests/test_kernel.py over every fixture
+# class, the bulk corpus and hypothesis-generated tag soup.
+#
+# A '<' followed by an ASCII letter takes the first step that fits:
+#   1. leaf element: '<name simple-attrs>text</name>' (same name, same
+#      case, text without '<', not void or raw-text) is one _TAG_STEP
+#      match; the loop applies the net effect of start tag + text + end
+#      tag and jumps past it (~80% of the start tags of a typical page);
+#   2. simple start tag: the same match without the leaf part, attributes
+#      taken by one findall;
+#   3. anything else: the port of html.parser's start-tag endgame
+#      (_STARTTAG_END, _TAGNAME, _ATTRFIND; CPython, PSF license).
 # ---------------------------------------------------------------------------
 
-from html import unescape as _unescape  # noqa: E402 (single import point)
+# name, name="v" or name='v' with no '&' in v, so the value needs no
+# unescape; shared by _TAG_STEP and _SIMPLE_ATTRS
+_SIMPLE_ATTR = r"""[a-zA-Z][-.:_a-zA-Z0-9]*(?:="[^"&]*"|='[^'&]*')?"""
+# group 1 tag name, 2 attributes, 3 leaf text (None when the start tag is
+# not followed by text and its own end tag)
+_TAG_STEP = re.compile(
+    r"<([a-zA-Z][a-zA-Z0-9]*)((?:[ \t\n\r\f]+" + _SIMPLE_ATTR + r")*+)"
+    r"[ \t\n\r\f]*+(?:/>|>(?:([^<]*+)</\1>)?)")
+_SIMPLE_ATTRS = re.compile(_SIMPLE_ATTR).findall
 
 _STARTTAG_END = re.compile(r"""
   <[a-zA-Z][^\t\n\r\f />\x00]*        # tag name
@@ -360,11 +217,39 @@ _CDATA_CLOSE = {
 }
 
 
+def _simple_attrs(attrs: str) -> list:
+    """[(name, value)] of a _TAG_STEP attribute run; a bare name gets
+    value '', which the boilerplate check treats like html.parser's None."""
+    out = []
+    for kv in _SIMPLE_ATTRS(attrs):
+        name, _, value = kv.partition("=")
+        out.append((name.lower(), value[1:-1]))
+    return out
+
+
+def _block_text(raw: str, tag: str) -> str:
+    """A block's rendered text: C0 controls dropped, then ``pre`` strips
+    its ends and every other tag collapses whitespace runs to one space.
+    Printable text holds no whitespace but U+0020 (every other
+    ``str.isspace`` char is in Cc, Zs, Zl or Zp, which ``isprintable``
+    rejects), so it needs the split-and-join only when it has a double,
+    leading or trailing space."""
+    if raw.isprintable():
+        if tag == "pre":
+            return raw.strip()
+        if "  " in raw or raw[:1] == " " or raw[-1:] == " ":
+            return " ".join(raw.split())
+        return raw
+    raw = _C0_STRIP("", raw)
+    return raw.strip() if tag == "pre" else " ".join(raw.split())
+
+
 def _fast_extract(s: str) -> list:
     """Single-pass tokenizer + block classifier in ONE function frame:
     returns the kept list [(block_id, tag, path, text)] with semantics
-    byte-identical to driving ``_Extractor`` via html.parser (the
-    differential/fuzz tests under tests/test_kernel.py pin it).
+    byte-identical to driving the block rules from html.parser events
+    (tests/html_reference.py; the differential/fuzz tests under
+    tests/test_kernel.py pin it).
 
     This is the r8 optimization-round rewrite of the former
     ``_fast_feed`` + handler-dispatch engine (guide §1.2 "per-task
@@ -393,9 +278,10 @@ def _fast_extract(s: str) -> list:
     root_children = 0
 
     def _flush() -> None:
-        # twin of _Extractor._flush_block: classify + render one block.
-        # total_chars is derived from the joined parts (char counts are
-        # concatenation-invariant), and only when link_chars > 0.
+        # twin of the reference engine's _flush_block: classify + render
+        # one block. total_chars is derived from the joined parts (char
+        # counts are concatenation-invariant), and only when
+        # link_chars > 0.
         nonlocal blk_tag, blk_parts, blk_link, next_id
         tag = blk_tag
         blk_tag = None
@@ -403,11 +289,7 @@ def _fast_extract(s: str) -> list:
         link = blk_link
         blk_parts = []
         blk_link = 0
-        raw = raw0 if raw0.isprintable() else _C0_STRIP("", raw0)
-        if tag == "pre":
-            text = raw.strip()
-        else:
-            text = " ".join(raw.split())
+        text = _block_text(raw0, tag)
         block_id = next_id
         next_id += 1
         if not text:
@@ -419,7 +301,7 @@ def _fast_extract(s: str) -> list:
         kept.append((block_id, tag, blk_path, text))
 
     def _data(data: str) -> None:
-        # twin of _Extractor.handle_data (cold call sites; the two hot
+        # twin of the reference handle_data (cold call sites; the hot
         # text sites are inlined in the main loop below)
         nonlocal blk_tag, blk_path, blk_parts, blk_link
         if drop_depth or not data:
@@ -437,7 +319,7 @@ def _fast_extract(s: str) -> list:
             blk_link += sum(map(len, data.split()))
 
     def _end(tag: str) -> None:
-        # twin of _Extractor.handle_endtag
+        # twin of the reference handle_endtag
         nonlocal drop_depth, a_depth, pre_depth
         if tag in VOID_TAGS:
             return
@@ -485,9 +367,13 @@ def _fast_extract(s: str) -> list:
     find = s.find
     # global-name traffic: ~500 set/func lookups per 5 KiB page otherwise
     VOID, DROPT, BLOCK, STRUCT = VOID_TAGS, DROP_TAGS, BLOCK_TAGS, STRUCT_TAGS
+    HEADING = HEADING_TAGS
     unescape = _unescape
     cdata_close = _CDATA_CLOSE
     is_boiler = _is_boiler_attrs
+    tag_step = _TAG_STEP.match
+    simple_attrs = _simple_attrs
+    block_text = _block_text
     while i < n:
         lt = find("<", i)
         if lt < 0 or lt > i:
@@ -500,7 +386,8 @@ def _fast_extract(s: str) -> list:
                     blk_parts.append(data)
                     if a_depth:
                         blk_link += sum(map(len, data.split()))
-                elif not data.isspace():
+                elif data and not data.isspace():
+                    # (data is '' when a charref decodes to nothing)
                     pp = stack[-1][3] if stack else ""
                     blk_tag = "text"
                     blk_path = pp + ">#text" if pp else "#text"
@@ -513,17 +400,24 @@ def _fast_extract(s: str) -> list:
         nxt = s[lt + 1:lt + 2]
         if nxt in _ASCII_ALPHA:
             selfclose = False
-            gt = find(">", lt + 1)
-            body = s[lt + 1:gt] if gt > 0 else ""
-            if body and body.isalnum():
-                # ---- attr-less start tag fast path: '<name>' --------
-                # equivalent to the generic endgame below (tag name is
-                # the whole body, no attrs, tail '>')
-                tag = body.lower()
-                attrs: list = []
-                endpos = gt + 1
+            leaf = None
+            m = tag_step(s, lt)
+            if m is not None:
+                # ---- steps 1 and 2: leaf element or simple start tag
+                # (what the generic endgame below gives for this shape)
+                tag, attrs, leaf = m.groups()
+                tag = tag.lower()
+                attrs = simple_attrs(attrs) if attrs else []
+                if leaf is None:
+                    endpos = m.end()
+                    selfclose = s[endpos - 2] == "/"
+                elif tag in VOID or tag in cdata_close:
+                    leaf = None           # start tag only
+                    endpos = m.start(3)
+                else:
+                    endpos = m.end()
             else:
-                # faithful port of html.parser's
+                # ---- step 3: faithful port of html.parser's
                 # check_for_whole_start_tag + parse_starttag endgame
                 # (which chars end the tag, when '/>' means
                 # self-closing vs a bare attr value, raw-data fallback
@@ -575,9 +469,10 @@ def _fast_extract(s: str) -> list:
                     (attrs and is_boiler(attrs)):
                 if blk_tag is not None:
                     _flush()
-                drop_depth += 1
-                stack.append([tag, True, 0,
-                              stack[-1][3] if stack else ""])
+                if leaf is None:
+                    drop_depth += 1
+                    stack.append([tag, True, 0,
+                                  stack[-1][3] if stack else ""])
             else:
                 if stack:
                     f = stack[-1]
@@ -588,6 +483,42 @@ def _fast_extract(s: str) -> list:
                 else:
                     root_children += 1
                     path = f"{tag}:{root_children}"
+                if leaf is not None:
+                    # ---- leaf: net effect of start tag, text, end tag
+                    if "&" in leaf:
+                        leaf = unescape(leaf)
+                    if tag in BLOCK:
+                        if blk_tag is not None:
+                            _flush()
+                        text = block_text(leaf, tag)
+                        # all of the block's text is link text under an
+                        # <a>, which fails every rule but the headings'
+                        if text and (not a_depth or tag in HEADING):
+                            kept.append((next_id, tag, path, text))
+                        next_id += 1
+                    elif tag in STRUCT:
+                        if blk_tag is not None:
+                            _flush()
+                        # its text is an anonymous block that its end
+                        # tag flushes (same link rule as above)
+                        if leaf and not leaf.isspace():
+                            text = block_text(leaf, "text")
+                            if text and not a_depth:
+                                kept.append((next_id, "text",
+                                             path + ">#text", text))
+                            next_id += 1
+                    elif blk_tag is not None:
+                        blk_parts.append(leaf)
+                        if a_depth or tag == "a":
+                            blk_link += sum(map(len, leaf.split()))
+                    elif leaf and not leaf.isspace():
+                        blk_tag = "text"
+                        blk_path = path + ">#text"
+                        blk_parts = [leaf]
+                        blk_link = (sum(map(len, leaf.split()))
+                                    if a_depth or tag == "a" else 0)
+                    i = endpos
+                    continue
                 if tag == "a":
                     a_depth += 1
                 if tag in BLOCK:
@@ -906,14 +837,8 @@ def decode_html_bytes(content: bytes) -> tuple:
     return content.decode("latin-1"), "latin-1-fallback"
 
 
-def extract_html(url: str, html_text: str,
-                 engine: str = "fast") -> KernelResult:
-    if engine == "fast":
-        return _assemble(url, _fast_extract(html_text))
-    parser = _Extractor()                 # stdlib reference engine
-    parser.feed(html_text)
-    parser.close()
-    return _assemble(url, parser.kept)
+def extract_html(url: str, html_text: str) -> KernelResult:
+    return _assemble(url, _fast_extract(html_text))
 
 
 # ---------------------------------------------------------------------------

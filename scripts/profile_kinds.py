@@ -1,10 +1,15 @@
-"""Per-payload-kind kernel cost over a cached bench corpus: reads a
-sample from the scaling parquet, buckets rows by payload kind (html /
-wdoc / pdf / legacy-charset / broken), and times extract_document per
-bucket — the feedback loop for deciding WHERE kernel optimization
-minutes go (a 3% kind at 10x cost eats ~25% of total wall).
+"""Per-payload-kind kernel cost over a bench corpus: takes a sample of
+pages, buckets rows by payload kind (html / wdoc / pdf / legacy-charset),
+and times extract_document per bucket — the feedback loop for deciding
+WHERE kernel optimization minutes go (a 3% kind at 10x cost eats ~25%
+of total wall).
 
-Usage: python scripts/profile_kinds.py [--n 20000]
+The sample is the first ``--n`` rows of the cached scaling parquet under
+``--pages-dir`` (read through duckdb). When that directory does not
+exist, it is ``--n`` generated rows of the benchmark's page shape,
+``corpus.page_row(i, --seed, min_paras=10, max_paras=60)``.
+
+Usage: python scripts/profile_kinds.py [--n 20000] [--seed 1]
 """
 
 from __future__ import annotations
@@ -39,16 +44,24 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=20000)
     ap.add_argument("--pages-dir", default=os.path.join(
         REPO, ".bench_cache", "pages_scaling_v5"))
+    ap.add_argument("--seed", type=int, default=1,
+                    help="corpus seed when --pages-dir does not exist")
     args = ap.parse_args()
-
-    import duckdb
 
     from powerpoint_context_extractor_spark.kernel import extract_document
 
-    con = duckdb.connect()
-    rows = con.sql(
-        f"SELECT url, html FROM read_parquet('{args.pages_dir}/*.parquet') "
-        f"LIMIT {args.n}").fetchall()
+    if os.path.isdir(args.pages_dir):
+        import duckdb
+        con = duckdb.connect()
+        rows = con.sql(
+            f"SELECT url, html FROM "
+            f"read_parquet('{args.pages_dir}/*.parquet') "
+            f"LIMIT {args.n}").fetchall()
+    else:
+        from powerpoint_context_extractor_spark.corpus import page_row
+        rows = [(r["url"], r["html"]) for r in (
+            page_row(i, args.seed, min_paras=10, max_paras=60)
+            for i in range(args.n))]
     buckets: dict = {}
     for u, h in rows:
         buckets.setdefault(kind_of(bytes(h)), []).append((u, bytes(h)))

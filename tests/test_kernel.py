@@ -11,6 +11,8 @@ from powerpoint_context_extractor_spark.kernel import (
     extract_document, render_wdoc,
 )
 
+from .html_reference import extract_html_reference
+
 
 def _x(html: str):
     return extract_document("u", html.encode("utf-8"))
@@ -621,13 +623,21 @@ _SOUP_CASES = [
     "<script>a</script x>b</script y>c</script><p>tail</p>",
     "<style>a</style >b</style><p>nbsp</p>",
     "<script>a</script<b</script><p>lt</p>",
+    # the leaf-element and simple-attribute steps: whitespace and content
+    "<p>a  b</p>", "<li>  x </li>", "<p>\tx\n</p>", "<p>a\xa0b</p>",
+    "<p>x\x01y</p>", "<pre>  k  </pre>", "<p></p>", "<p> </p>",
+    # tag-name case, attributes, void and raw-text tags, nesting
+    "<P>x</P>", "<P>x</p>", '<a href="/">Home</a>', '<p class="share">x</p>',
+    '<p title="a&amp;b">t</p>', '<p title="x>y">t</p>', "<br>x</br>",
+    "<title>x</title>", "<script>x</script>", "<div>text</div>",
+    '<li><a href="x">all link</a></li>',
+    # a charref that decodes to nothing opens no block
+    "<div>&#1;</div><p>x</p>", "&#1;<p>x</p>", "<p>a</p><b>&#1;</b><p>x</p>",
 ]
 
 
 def _both(t):
-    a = kernel.extract_html("u", t, engine="fast")
-    b = kernel.extract_html("u", t, engine="stdlib")
-    return a, b
+    return kernel.extract_html("u", t), extract_html_reference("u", t)
 
 
 def test_fast_engine_matches_stdlib_on_adversarial_cases():
@@ -651,13 +661,16 @@ def test_fast_engine_matches_stdlib_on_fixture_corpus():
 
 
 def test_fast_engine_matches_stdlib_on_bulk_pages():
-    for row in corpus.generate_pages_rows(400, min_paras=1, max_paras=6):
-        if row["html"].startswith(b"%"):
-            continue
-        t, _cs = kernel.decode_html_bytes(row["html"])
-        a, b = _both(t)
-        assert (a.text, a.title, a.spans, a.n_blocks) == \
-               (b.text, b.title, b.spans, b.n_blocks), row["url"]
+    # small pages, and the benchmark's page shape (perfbench cc_mixed)
+    for min_paras, max_paras in ((1, 6), (10, 60)):
+        for row in corpus.generate_pages_rows(400, min_paras=min_paras,
+                                              max_paras=max_paras):
+            if row["html"].startswith(b"%"):
+                continue
+            t, _cs = kernel.decode_html_bytes(row["html"])
+            a, b = _both(t)
+            assert (a.text, a.title, a.spans, a.n_blocks) == \
+                   (b.text, b.title, b.spans, b.n_blocks), row["url"]
 
 
 if _HYP:
@@ -677,7 +690,16 @@ if _HYP:
             # elements, attribute quirks, charref overflow/surrogates
             "<textarea>", "</textarea>", "<title>", "</title>",
             "<p class=unquoted>", "<p class='>x'>", "<p a==b>",
-            "&#1114112;", "&#xD800;", "<P>", "</SCRIPT>", "<3", "<-p>"]))
+            "&#1114112;", "&#xD800;", "<P>", "</SCRIPT>", "<3", "<-p>",
+            # leaf elements and simple attributes, whole and in pieces
+            "<p>a  b</p>", "<li>  x </li>", "<p>\tx\n</p>", "<p>a\xa0b</p>",
+            "<p>x\x01y</p>", "<pre>  k  </pre>", "<p></p>", "<p> </p>",
+            "<P>x</P>", "<P>x</p>", '<a href="/">Home</a>',
+            '<p class="share">x</p>', '<p title="a&amp;b">t</p>',
+            '<p title="x>y">t</p>', "<br>x</br>", "<title>x</title>",
+            "<script>x</script>", "<div>text</div>",
+            '<li><a href="x">all link</a></li>', "&#1;", "<b>", "</b>",
+            "<p class='a' id=\"b\" hidden/>"]))
 
     @settings(max_examples=400, deadline=None)
     @given(st.lists(_FRAG, max_size=25).map("".join))
