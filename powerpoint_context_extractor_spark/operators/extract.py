@@ -1,11 +1,16 @@
-"""The extraction operator: Arrow-batched ``mapInArrow`` over pages.
+"""The two Python crossings, both ``mapInArrow`` with no pandas layer.
 
-This is the Spark re-expression of the reference's whole extraction
-dataflow (the notes/animations/slides extractors are collectively one
-UDTF: document in, records out — SURVEY.md §2.10 U2). Zero per-row
-Python dispatch: one Python call per Arrow batch, the pure kernel does
-the per-document work, exactly as the reference amortizes one
-``zipfile.ZipFile`` open across all members (`notes/extractor.py:29`).
+- ``extract_pages`` is the hot one: the Spark re-expression of the
+  reference's whole extraction dataflow (the notes/animations/slides
+  extractors are collectively one UDTF: document in, records out —
+  SURVEY.md §2.10 U2). One Python call per Arrow batch, the pure kernel
+  does the per-document work, exactly as the reference amortizes one
+  ``zipfile.ZipFile`` open across all members (`notes/extractor.py:29`).
+  It also carries per-task state: a partition-id column and the
+  ``PartitionTally`` accumulator.
+- ``row_map`` is the generic one every other per-row Python step uses:
+  a per-row function, batched over Arrow, 0..n output rows per input
+  row, after one ``_spread_small_input`` guard.
 
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*; ``repartition_for_extract`` is an
@@ -24,9 +29,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
@@ -196,30 +199,38 @@ def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
     return df.repartition(target, F.col(key))
 
 
+def row_map(df: DataFrame, fn, schema) -> DataFrame:
+    """The generic Python crossing: ``fn(*row)`` runs once per input
+    row, and every tuple it yields is one output row, so an input row
+    gives 0, 1 or n outputs. ``schema`` is a ``StructType`` or a DDL
+    string. Batches cross through ``mapInArrow`` with no pandas on
+    either side, and the input is first spread by
+    ``_spread_small_input`` on its first column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def _batches(batches):
+        import pyarrow as pa
+        for rb in batches:
+            rows = [out for row in zip(*(c.to_pylist() for c in rb.columns))
+                    for out in fn(*row)]
+            cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    return _spread_small_input(df, df.columns[0]).mapInArrow(
+        _batches, schema=schema)
+
+
 DOC_EXTRACT_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("title", T.StringType(), True),
     T.StructField("text", T.StringType(), True),
     T.StructField("n_blocks", T.LongType(), True),
 ])
-
-
-def _make_doc_kernel_batches(wrap_name: str):
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .. import corpus
-        wrap = getattr(corpus, wrap_name)
-        for pdf in batches:
-            out = {"url": [], "title": [], "text": [], "n_blocks": []}
-            for doc_id, text in zip(pdf["doc_id"].tolist(),
-                                    pdf["text"].tolist()):
-                url = f"doc://{doc_id}"
-                r = extract_document(url, wrap(doc_id, text))
-                out["url"].append(url)
-                out["title"].append(r.title)
-                out["text"].append(r.text)
-                out["n_blocks"].append(r.n_blocks)
-            yield pd.DataFrame(out)
-    return _batches
 
 
 def extract_wrapped_documents(docs: DataFrame,
@@ -235,8 +246,14 @@ def extract_wrapped_documents(docs: DataFrame,
     parser is graded by the same oracle as the HTML DOM walk."""
     fn = {"html": "page_for_document", "pdf": "pdf_page_for_document",
           "pdf15": "pdf15_page_for_document"}[wrap]
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _make_doc_kernel_batches(fn), schema=DOC_EXTRACT_SCHEMA)
+
+    def _row(doc_id, text):
+        from .. import corpus
+        url = f"doc://{doc_id}"
+        r = extract_document(url, getattr(corpus, fn)(doc_id, text))
+        yield url, r.title, r.text, r.n_blocks
+
+    return row_map(docs.select("doc_id", "text"), _row, DOC_EXTRACT_SCHEMA)
 
 
 CHARSET_EXTRACT_SCHEMA = T.StructType([
@@ -249,31 +266,34 @@ CHARSET_EXTRACT_SCHEMA = T.StructType([
 _CHARSET_KINDS = ("utf-8", "utf-8-bom", "utf-16", "cp1252-meta")
 
 
-def _charset_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _charset_page(doc_id: int, text: str) -> bytes:
     from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            page = corpus.page_for_document(doc_id, text).decode("utf-8")
-            kind = _CHARSET_KINDS[doc_id % 4]
-            if kind == "utf-8":
-                raw = page.encode("utf-8")
-            elif kind == "utf-8-bom":
-                raw = b"\xef\xbb\xbf" + page.encode("utf-8")
-            elif kind == "utf-16":
-                raw = page.encode("utf-16")
-            else:  # cp1252 bytes + meta declaration; the dropped <nav>
-                # carries é bytes that make the page invalid UTF-8
-                page = page.replace(
-                    "<html><body>",
-                    '<html><head><meta charset="iso-8859-1"></head>'
-                    '<body><nav class="nav">café résumé</nav>', 1)
-                raw = page.encode("cp1252")
-            r = extract_document(f"doc://{doc_id}", raw)
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+    page = corpus.page_for_document(doc_id, text).decode("utf-8")
+    kind = _CHARSET_KINDS[doc_id % 4]
+    if kind == "utf-8":
+        return page.encode("utf-8")
+    if kind == "utf-8-bom":
+        return b"\xef\xbb\xbf" + page.encode("utf-8")
+    if kind == "utf-16":
+        return page.encode("utf-16")
+    # cp1252 bytes + meta declaration; the dropped <nav> carries é
+    # bytes that make the page invalid UTF-8
+    page = page.replace(
+        "<html><body>",
+        '<html><head><meta charset="iso-8859-1"></head>'
+        '<body><nav class="nav">café résumé</nav>', 1)
+    return page.encode("cp1252")
+
+
+def _charset_extract(docs: DataFrame, page) -> DataFrame:
+    """(doc_id, detected charset, extracted text) of the kernel over
+    ``page(doc_id, text)`` per documents row."""
+    def _row(doc_id, text):
+        r = extract_document(f"doc://{doc_id}", page(doc_id, text))
+        yield doc_id, r.charset, r.text
+
+    return row_map(docs.select("doc_id", "text"), _row,
+                   CHARSET_EXTRACT_SCHEMA)
 
 
 def extract_documents_charset(docs: DataFrame) -> DataFrame:
@@ -284,21 +304,12 @@ def extract_documents_charset(docs: DataFrame) -> DataFrame:
     Because the wrap is the invertible flagship wrap and all testdata
     text is ASCII, the expected text AND charset label are both pure
     SQL expressions — DuckDB grades the sniffer itself."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _charset_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return _charset_extract(docs, _charset_page)
 
 
-def _cjk_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _cjk_page(doc_id: int, text: str) -> bytes:
     from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            raw = corpus.cjk_page_for_document(doc_id, text)
-            r = extract_document(f"doc://{doc_id}", raw)
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+    return corpus.cjk_page_for_document(doc_id, text)
 
 
 def extract_documents_cjk(docs: DataFrame) -> DataFrame:
@@ -310,8 +321,7 @@ def extract_documents_cjk(docs: DataFrame) -> DataFrame:
     the WHATWG mapping (cp932/gbk/cp949/big5hkscs) — decoding with the
     narrow national-standard codec replace-mangles the extension char
     and fails the md5 check."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _cjk_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return _charset_extract(docs, _cjk_page)
 
 
 # doc_id % 4 -> (encoding, page shape); kinds 2/3 are CJK-HEAVY minimal
@@ -320,24 +330,17 @@ def extract_documents_cjk(docs: DataFrame) -> DataFrame:
 NOBOM_CJK_REPEAT = 6
 
 
-def _nobom_kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _nobom_page(doc_id: int, text: str) -> bytes:
     from .. import corpus
-    for pdf in batches:
-        out = {"doc_id": [], "charset": [], "text": []}
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            kind = doc_id % 4
-            enc = "utf-16-le" if kind in (0, 2) else "utf-16-be"
-            if kind < 2:
-                page = corpus.page_for_document(doc_id, text).decode("utf-8")
-            else:
-                snippet = corpus.CJK_KINDS[kind][2]
-                page = (f"<html><body><h1>Doc {doc_id}</h1>"
-                        f"<p>{snippet * NOBOM_CJK_REPEAT}</p></body></html>")
-            r = extract_document(f"doc://{doc_id}", page.encode(enc))
-            out["doc_id"].append(doc_id)
-            out["charset"].append(r.charset)
-            out["text"].append(r.text)
-        yield pd.DataFrame(out)
+    kind = doc_id % 4
+    enc = "utf-16-le" if kind in (0, 2) else "utf-16-be"
+    if kind < 2:
+        page = corpus.page_for_document(doc_id, text).decode("utf-8")
+    else:
+        snippet = corpus.CJK_KINDS[kind][2]
+        page = (f"<html><body><h1>Doc {doc_id}</h1>"
+                f"<p>{snippet * NOBOM_CJK_REPEAT}</p></body></html>")
+    return page.encode(enc)
 
 
 def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
@@ -352,8 +355,7 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
     shunted to latin-1 mojibake, now resolved by the common-script
     orientation scorer. The kernel must label the encoding AND recover
     the exact text (md5 vs the SQL reconstruction)."""
-    return _spread_small_input(docs.select("doc_id", "text")).mapInPandas(
-        _nobom_kernel_batches, schema=CHARSET_EXTRACT_SCHEMA)
+    return _charset_extract(docs, _nobom_page)
 
 
 def extract_pages(pages: DataFrame,

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .extract import _spread_small_input
+from .extract import row_map
 
 P = 1_000_000_007
 
@@ -226,13 +226,12 @@ def normalize_nfc(docs: DataFrame, id_col: str = "doc_id",
     text pipeline runs before hashing/dedup — visually identical
     strings with decomposed combining marks ('e'+U+0301 vs 'é') hash
     differently and silently defeat exact dedup. Spark has no built-in
-    normalizer, so this is an Arrow-batched mapInPandas over stdlib
-    ``unicodedata`` (one Python crossing per batch, no per-row UDF);
-    DuckDB's ``nfc_normalize`` is the independent oracle. Emits
+    normalizer, so this is a ``row_map`` over stdlib ``unicodedata``
+    (one Python crossing per Arrow batch, no per-row UDF); DuckDB's
+    ``nfc_normalize`` is the independent oracle. Emits
     (id, text_nfc, changed)."""
     import unicodedata
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -241,21 +240,14 @@ def normalize_nfc(docs: DataFrame, id_col: str = "doc_id",
         T.StructField("changed", T.LongType(), True),
     ])
 
-    def _batches(batches):
-        for pdf in batches:
-            src = pdf[text_col].tolist()
-            nfc = [unicodedata.normalize("NFC", t) if t is not None
-                   else None for t in src]
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "text_nfc": nfc,
-                "changed": [None if t is None else int(t != o)
-                            for t, o in zip(nfc, src)],
-            })
+    def _row(did, text):
+        if text is None:
+            yield did, None, None
+        else:
+            nfc = unicodedata.normalize("NFC", text)
+            yield did, nfc, int(nfc != text)
 
-    return _spread_small_input(docs.select(id_col, text_col),
-                               key=id_col).mapInPandas(
-        _batches, schema=schema)
+    return row_map(docs.select(id_col, text_col), _row, schema)
 
 
 def bigram_coherence(docs: DataFrame, id_col: str = "doc_id",
@@ -455,13 +447,11 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
     the input bytes — pinned by a dual-run pytest; DuckDB has no zlib,
     so the driver check is rows-only by design).
 
-    Scale shape: Arrow-batched mapInPandas over stdlib zlib (one
-    Python crossing per batch, no per-row UDF), map-only — zero
-    shuffles, scan speed at 100 TB. Emits (id, raw_len, zlib_len,
-    ratio_bp)."""
+    Scale shape: a ``row_map`` over stdlib zlib (one Python crossing
+    per Arrow batch, no per-row UDF), map-only — zero shuffles, scan
+    speed at 100 TB. Emits (id, raw_len, zlib_len, ratio_bp)."""
     import zlib
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -471,22 +461,12 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
         T.StructField("ratio_bp", T.LongType()),
     ])
 
-    def _batches(batches):
-        for pdf in batches:
-            ids, raws, zs, bps = [], [], [], []
-            for did, t in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                b = (t or "").encode("utf-8")
-                z = len(zlib.compress(b, level))
-                ids.append(did)
-                raws.append(len(b))
-                zs.append(z)
-                bps.append(z * 10000 // len(b) if b else None)
-            yield pd.DataFrame({id_col: ids, "raw_len": raws,
-                                "zlib_len": zs, "ratio_bp": bps})
+    def _row(did, text):
+        b = (text or "").encode("utf-8")
+        z = len(zlib.compress(b, level))
+        yield did, len(b), z, z * 10000 // len(b) if b else None
 
-    return _spread_small_input(docs.select(id_col, text_col),
-                               key=id_col).mapInPandas(
-        _batches, schema=schema)
+    return row_map(docs.select(id_col, text_col), _row, schema)
 
 
 def detect_heavy_hitters(df: DataFrame, key_col: str,

@@ -109,7 +109,7 @@ def surt_key(col: F.Column) -> F.Column:
 
 def surt_key_py(url: str) -> str:
     """Python twin of ``surt_key`` for file-side indexers (CDX lines
-    are built inside mapInPandas); equality with the Spark expression
+    are built inside a row_map); equality with the Spark expression
     is pytest-pinned."""
     import re
     m = re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", url)

@@ -52,7 +52,7 @@ def get_spark(app: str = "pcx-extract", master: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """``extra_conf`` entries are applied at BUILDER time — the seam for
     core (non-SQL) confs like ``spark.python.worker.reuse`` that
-    ``spark.conf.set`` rejects after startup (bench/width32.py)."""
+    ``spark.conf.set`` rejects after startup (perfbench/harness.py)."""
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     if shuffle_partitions is None:
         n = master.split("[")[-1].rstrip("]*")

@@ -15,7 +15,7 @@ Scale shape: Common Crawl ships ~64k warc files per crawl at ~1 GiB
 each — FILE-level parallelism is the unit every production CC job uses
 (one task per .warc.gz, since gzip members don't expose offsets without
 an index). ``read_warc`` therefore maps one binaryFile row -> that
-file's records inside ``mapInPandas``; with tens of thousands of files
+file's records through ``row_map``; with tens of thousands of files
 per crawl this saturates any executor count long before per-file
 splitting would matter.
 """
@@ -28,6 +28,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..operators.extract import row_map
 
 CRLF = "\r\n"
 _GZ_MAGIC = b"\x1f\x8b"
@@ -153,17 +155,13 @@ WARC_PAGE_SCHEMA = T.StructType([
 ])
 
 
-def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"url": [], "warc_date": [], "html": []}
-        for content in pdf["content"]:
-            for headers, payload in iter_warc_records(bytes(content)):
-                if headers.get("warc-type", "response") != "response":
-                    continue              # warcinfo/request/metadata
-                out["url"].append(headers.get("warc-target-uri"))
-                out["warc_date"].append(headers.get("warc-date"))
-                out["html"].append(http_body(payload))
-        yield pd.DataFrame(out)
+def _warc_pages(content: bytes):
+    """(url, warc_date, html) of each response record in one file."""
+    for headers, payload in iter_warc_records(content):
+        if headers.get("warc-type", "response") != "response":
+            continue              # warcinfo/request/metadata
+        yield (headers.get("warc-target-uri"), headers.get("warc-date"),
+               http_body(payload))
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -174,7 +172,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("content"))
-    return files.mapInPandas(_warc_batches, schema=WARC_PAGE_SCHEMA)
+    return row_map(files, _warc_pages, WARC_PAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -246,17 +244,13 @@ WET_SCHEMA = T.StructType([
 ])
 
 
-def _wet_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"url": [], "warc_date": [], "text": []}
-        for content in pdf["content"]:
-            for headers, payload in iter_warc_records(bytes(content)):
-                if headers.get("warc-type") != "conversion":
-                    continue              # warcinfo / anything else
-                out["url"].append(headers.get("warc-target-uri"))
-                out["warc_date"].append(headers.get("warc-date"))
-                out["text"].append(payload.decode("utf-8", "replace"))
-        yield pd.DataFrame(out)
+def _wet_records(content: bytes):
+    """(url, warc_date, text) of each conversion record in one file."""
+    for headers, payload in iter_warc_records(content):
+        if headers.get("warc-type") != "conversion":
+            continue              # warcinfo / anything else
+        yield (headers.get("warc-target-uri"), headers.get("warc-date"),
+               payload.decode("utf-8", "replace"))
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -267,7 +261,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("content"))
-    return files.mapInPandas(_wet_batches, schema=WET_SCHEMA)
+    return row_map(files, _wet_records, WET_SCHEMA)
 
 
 def write_extracted_as_wet(extracted: DataFrame, out_dir: str,
@@ -358,42 +352,29 @@ def index_warc_files(spark: SparkSession, path: str,
     """Build CDX rows for every record in every (per-record-gzip)
     WARC/WET file under ``path``: SURT urlkey, record timestamp/URI/
     type, a sha256:16-hex payload digest, and the member's true
-    (offset, length) within the file. One mapInPandas pass,
+    (offset, length) within the file. One ``row_map`` pass,
     file-per-task — the index build shuffles nothing."""
     import hashlib
     import os
 
     from ..operators.urltools import surt_key_py
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {f.name: [] for f in CDX_SCHEMA.fields}
-            for fpath, content in zip(pdf["path"].tolist(),
-                                      pdf["content"].tolist()):
-                name = os.path.basename(fpath)
-                raw = bytes(content)
-                if raw[:2] != _GZ_MAGIC:
-                    continue              # CDX spans need gzip members
-                for off, ln, member in _gzip_member_spans(raw):
-                    for headers, payload in _parse_plain(member):
-                        url = headers.get("warc-target-uri", "")
-                        out["urlkey"].append(surt_key_py(url))
-                        out["rec_ts"].append(headers.get("warc-date", ""))
-                        out["url"].append(url)
-                        out["rec_type"].append(
-                            headers.get("warc-type", ""))
-                        out["digest"].append(
-                            "sha256:" + hashlib.sha256(payload)
-                            .hexdigest()[:16])
-                        out["offset"].append(off)
-                        out["length"].append(ln)
-                        out["filename"].append(name)
-            yield pd.DataFrame(out)
+    def _row(fpath, raw):
+        if raw[:2] != _GZ_MAGIC:
+            return                        # CDX spans need gzip members
+        name = os.path.basename(fpath)
+        for off, ln, member in _gzip_member_spans(raw):
+            for headers, payload in _parse_plain(member):
+                url = headers.get("warc-target-uri", "")
+                yield (surt_key_py(url), headers.get("warc-date", ""), url,
+                       headers.get("warc-type", ""),
+                       "sha256:" + hashlib.sha256(payload).hexdigest()[:16],
+                       off, ln, name)
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", glob).load(path)
              .select("path", "content"))
-    return files.mapInPandas(_batches, schema=CDX_SCHEMA)
+    return row_map(files, _row, CDX_SCHEMA)
 
 
 def write_cdx(idx: DataFrame, out_dir: str, n_files: int = 4) -> None:

@@ -29,12 +29,16 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash
+from ..operators.extract import row_map
+
+_SHARD_NAME = re.compile(r"shard-(\d{5})\.tar")
 
 
 def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
@@ -84,29 +88,29 @@ def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
 
 def read_wds_shards(spark: SparkSession, path: str) -> DataFrame:
     """Read shards back as (doc_id, text, shard) — one task per shard
-    file, members parsed with stdlib tarfile inside Arrow batches."""
-    shards = sorted(f for f in os.listdir(path) if f.endswith(".tar"))
+    file, members parsed with stdlib tarfile inside Arrow batches.
+    Every ``.tar`` under ``path`` must be named ``shard-NNNNN.tar``:
+    the shard id is parsed here on the driver, and a foreign tar raises
+    ``ValueError`` before any job runs."""
+    shards = []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".tar"):
+            continue
+        m = _SHARD_NAME.fullmatch(f)
+        if m is None:
+            raise ValueError(
+                f"read_wds_shards: {f!r} in {path} is not a shard-NNNNN.tar")
+        shards.append((os.path.join(path, f), int(m.group(1))))
     if not shards:
         raise ValueError(f"read_wds_shards: no .tar shards in {path}")
-    import pandas as pd
-    files = spark.createDataFrame(
-        [(os.path.join(path, f),) for f in shards], "file string") \
+    files = spark.createDataFrame(shards, "file string, shard long") \
         .repartition(len(shards), "file")
 
-    def _read(batches):
-        for pdf in batches:
-            for fp in pdf["file"].tolist():
-                out = {"doc_id": [], "text": [], "shard": []}
-                sid = int(os.path.basename(fp)[6:11])
-                with tarfile.open(fp, "r") as tf:
-                    for m in tf:
-                        if not m.isfile() or not m.name.endswith(".txt"):
-                            continue
-                        out["doc_id"].append(int(m.name[:-4]))
-                        out["text"].append(
-                            tf.extractfile(m).read().decode("utf-8"))
-                        out["shard"].append(sid)
-                yield pd.DataFrame(out)
+    def _members(fp, sid):
+        with tarfile.open(fp, "r") as tf:
+            for m in tf:
+                if m.isfile() and m.name.endswith(".txt"):
+                    yield (int(m.name[:-4]),
+                           tf.extractfile(m).read().decode("utf-8"), sid)
 
-    return files.mapInPandas(
-        _read, schema="doc_id long, text string, shard long")
+    return row_map(files, _members, "doc_id long, text string, shard long")

@@ -4,7 +4,7 @@ The reference is strictly batch (SURVEY.md §2.9); the target adds the
 natural streaming surface:
 
 * ``stream_extract``: file-source pages -> the SAME Arrow-batched
-  extraction kernel (mapInPandas works unchanged on streaming frames)
+  extraction kernel (mapInArrow works unchanged on streaming frames)
   -> ``foreachBatch`` committing into the snapshot table with the
   resume anti-join, so replayed micro-batches stay exactly-once
   (at-least-once delivery + idempotent commit).
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.extract import extract_pages
+from ..operators.extract import extract_pages, row_map
 from ..sources.pagegen import PAGES_SCHEMA
 from ..sources.table_io import SnapshotTable
 
@@ -364,7 +364,7 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
     snapshot table behind the committed-url anti-join — exactly-once
     under replay, identical output to the batch read_warc path (pinned
     by pytest). Returns the committed table as a DataFrame."""
-    from ..sources.warc import WARC_PAGE_SCHEMA, _warc_batches
+    from ..sources.warc import WARC_PAGE_SCHEMA, _warc_pages
     table = SnapshotTable(os.path.join(out_root, "extracted"))
     bin_schema = T.StructType([
         T.StructField("path", T.StringType(), True),
@@ -378,7 +378,7 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
               .option("maxFilesPerTrigger", 1)
               .load(warc_dir)
               .select("content"))
-    pages = stream.mapInPandas(_warc_batches, schema=WARC_PAGE_SCHEMA)
+    pages = row_map(stream, _warc_pages, WARC_PAGE_SCHEMA)
     extracted = extract_pages(pages.select("url", "html"))
 
     def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:

@@ -4,7 +4,7 @@ and times extract_document per bucket — the feedback loop for deciding
 WHERE kernel optimization minutes go (a 3% kind at 10x cost eats ~25%
 of total wall).
 
-The sample is the first ``--n`` rows of the cached scaling parquet under
+The sample is the first ``--n`` rows of a pages parquet under
 ``--pages-dir`` (read through duckdb). When that directory does not
 exist, it is ``--n`` generated rows of the benchmark's page shape,
 ``corpus.page_row(i, --seed, min_paras=10, max_paras=60)``.

@@ -177,3 +177,10 @@ def test_wds_shards_roundtrip_and_reproducible(spark, tmp_path):
         write_wds_shards(docs, str(tmp_path / "c"), n_shards=0)
     with _pytest.raises(ValueError, match="no .tar"):
         read_wds_shards(spark, str(tmp_path))
+    # a tar that is not a shard fails on the driver, naming the file,
+    # instead of failing the Spark job inside a worker
+    assert {s for _, s in got.values()} == {int(f[6:11]) for f in shards}
+    with open(os.path.join(d1, "notes.tar"), "wb") as f:
+        f.write(b"\0" * 1024)
+    with _pytest.raises(ValueError, match="notes.tar"):
+        read_wds_shards(spark, d1).collect()

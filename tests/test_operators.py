@@ -3670,3 +3670,55 @@ def test_webp_lz77_distance_alphabet_cap():
             if t[0] == "copy" and t[2] > 4096]
     assert caps == [("copy", 3, _MAX_COPY_DIST)]
     assert _prefix_for_value(caps[0][2] + 120)[0] == 39
+
+
+def test_row_map_fan_out_nulls_and_empty_partitions(spark):
+    """``row_map``: an input row gives 0, 1 or 3 output rows; a binary
+    input column and its null arrive as bytes / None; null and
+    array<double> outputs round-trip; a DDL-string schema parses; an
+    input partition with no rows and a batch whose rows all give 0
+    outputs both yield nothing."""
+    from powerpoint_context_extractor_spark.operators.extract import row_map
+    rows = [(1, 0, b"x"), (2, 1, None), (3, 3, b"\x00\xffab")]
+    # more slices than rows: one row per partition, the rest empty
+    rdd = spark.sparkContext.parallelize(rows, numSlices=len(rows) + 2)
+    df = spark.createDataFrame(rdd, "doc_id long, n long, payload binary")
+    assert df.rdd.glom().map(len).collect().count(0) >= 2
+
+    def fn(doc_id, n, payload):
+        assert payload is None or isinstance(payload, bytes)
+        for i in range(n):
+            yield (doc_id, i, None if payload is None else len(payload),
+                   [float(doc_id), i / 2])
+
+    out = row_map(df, fn, "doc_id long, i long, n_bytes long, "
+                          "feats array<double>")
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,i:bigint,n_bytes:bigint,feats:array<double>>")
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(2, 0, None, [2.0, 0.0]),
+                   (3, 0, 4, [3.0, 0.0]), (3, 1, 4, [3.0, 0.5]),
+                   (3, 2, 4, [3.0, 1.0])]
+
+
+def test_row_map_spreads_single_row_group_parquet(spark, tmp_path):
+    """``row_map`` applies ``_spread_small_input`` on the first column:
+    a one-file, single-row-group parquet input (one scan task) runs
+    over ``defaultParallelism`` partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+
+    from powerpoint_context_extractor_spark.operators.extract import row_map
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(64))}), path)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    out = row_map(spark.read.parquet(path),
+                  lambda d: [(d, TaskContext.get().partitionId())],
+                  "doc_id long, pid long")
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    assert out.rdd.getNumPartitions() == target
+    got = out.collect()
+    assert sorted(r["doc_id"] for r in got) == list(range(64))
+    assert len({r["pid"] for r in got}) > 1
