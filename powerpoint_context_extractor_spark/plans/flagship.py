@@ -48,15 +48,18 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
     Resume semantics (U3, replacing the reference's "rerun everything"):
     urls already in a committed snapshot are anti-joined away, so a
     rerun after a partial failure produces exactly-once per-url output.
+
+    The data commit and the lineage commit are two manifest appends. A
+    crash between them keeps the extracted rows but loses that run's
+    lineage rows: the rerun skips the committed urls and does not
+    re-tally them.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     extracted_tbl = SnapshotTable(os.path.join(out_root, "extracted"))
     lineage_tbl = SnapshotTable(os.path.join(out_root, "lineage"))
 
     if resume:
-        done = extracted_tbl.committed_keys(spark, "url")
-        if done is not None:
-            pages = pages.join(done, "url", "left_anti")
+        pages = extracted_tbl.without_committed(pages, "url")
 
     t0 = time.monotonic()
     tally = spark.sparkContext.accumulator([], PartitionTally())

@@ -72,6 +72,16 @@ def _as_stream_dir(path: str) -> str:
     return d
 
 
+def _exactly_once_commit(table: SnapshotTable, key_col: str, run_id: str):
+    """``foreachBatch`` sink: append the micro-batch's rows whose
+    ``key_col`` is not committed yet, so a replayed epoch commits no row
+    twice (at-least-once delivery + idempotent commit)."""
+    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        table.append(table.without_committed(batch_df, key_col),
+                     run_id=f"{run_id}-epoch{epoch_id}")
+    return commit_batch
+
+
 def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
                    checkpoint_dir: str, run_id: str = "stream") -> None:
     """Ingest a pages directory as a bounded stream (availableNow) and
@@ -82,14 +92,8 @@ def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
               .parquet(pages_dir))
     extracted = extract_pages(stream)
 
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "url")
-        if done is not None:
-            batch_df = batch_df.join(done, "url", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (extracted.writeStream
-         .foreachBatch(commit_batch)
+         .foreachBatch(_exactly_once_commit(table, "url", run_id))
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
@@ -197,14 +201,8 @@ def stream_windowed_counts_to_table(spark: SparkSession, events_parquet: str,
                    F.concat_ws("|", F.col("w.start").cast("string"),
                                F.col("event_type")).alias("win_key")))
 
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "win_key")
-        if done is not None:
-            batch_df = batch_df.join(done, "win_key", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (agg.writeStream.outputMode("append")
-         .foreachBatch(commit_batch)
+         .foreachBatch(_exactly_once_commit(table, "win_key", run_id))
          .option("checkpointLocation", os.path.join(out_root, "ck"))
          .trigger(availableNow=True)
          .start())
@@ -280,21 +278,18 @@ def sessionize(spark: SparkSession, events_dir: str) -> DataFrame:
 
 def sessionize_to_table(spark: SparkSession, events_parquet: str,
                         out_root: str, n_files: int = 4,
-                        run_id: str = "sessstream",
-                        compact: bool = True) -> DataFrame:
+                        run_id: str = "sessstream") -> DataFrame:
     """PRODUCTION shape of sessionize: update-mode state rows are
     committed per micro-batch into a snapshot table (run_id carries the
-    epoch); readers take the latest row per user. The memory-sink
-    ``sessionize`` stays as the test harness.
+    epoch). The memory-sink ``sessionize`` stays as the test harness.
 
-    ``compact=True`` (default) runs a keyed table compaction after the
-    stream drains: one row per user survives (newest epoch), the
-    replaced snapshots are superseded by a single manifest line, and
-    the reader's latest-per-user window becomes a no-op scan — without
-    it the table grows one row per (user, epoch) forever (r3 open
-    end). On a live deployment the same call runs periodically from a
-    maintenance job; vacuum() reclaims the replaced files after the
-    in-flight-reader grace window."""
+    After the stream drains, a keyed table compaction always runs: one
+    row per user survives (newest epoch) and the replaced snapshots are
+    superseded by a single manifest line, so the result is a plain
+    read — without it the table grows one row per (user, epoch)
+    forever (r3 open end). On a live deployment the same call runs
+    periodically from a maintenance job; vacuum() reclaims the replaced
+    files after the in-flight-reader grace window."""
     stream_dir = os.path.join(out_root, "backlog")
     _write_time_ordered_files(spark, events_parquet, stream_dir, n_files)
     table = SnapshotTable(os.path.join(out_root, "sessions"))
@@ -317,15 +312,9 @@ def sessionize_to_table(spark: SparkSession, events_parquet: str,
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-    if compact:
-        table.compact(spark, run_id=f"{run_id}-compact",
-                      key_col="user_id", order_col="epoch")
-    from pyspark.sql import Window as W
-    res = table.read(spark)
-    w = F.row_number().over(
-        W.partitionBy("user_id").orderBy(F.col("epoch").desc()))
-    return (res.withColumn("rn", w).filter(F.col("rn") == 1)
-            .select("user_id", "n_sessions", "n_events"))
+    table.compact(spark, run_id=f"{run_id}-compact",
+                  key_col="user_id", order_col="epoch")
+    return table.read(spark).select("user_id", "n_sessions", "n_events")
 
 
 def stream_dedup_exact(spark: SparkSession, docs_dir: str,
@@ -381,14 +370,8 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
     pages = row_map(stream, _warc_pages, WARC_PAGE_SCHEMA)
     extracted = extract_pages(pages.select("url", "html"))
 
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done = table.committed_keys(batch_df.sparkSession, "url")
-        if done is not None:
-            batch_df = batch_df.join(done, "url", "left_anti")
-        table.append(batch_df, run_id=f"{run_id}-epoch{epoch_id}")
-
     q = (extracted.writeStream
-         .foreachBatch(commit_batch)
+         .foreachBatch(_exactly_once_commit(table, "url", run_id))
          .option("checkpointLocation", os.path.join(out_root, "ck"))
          .trigger(availableNow=True)
          .start())

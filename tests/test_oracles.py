@@ -1,5 +1,7 @@
 """Oracle parity for every ``queries()`` entry whose Spark operator is a
-``row_map`` crossing: each runs on a local session and must match its
+``row_map`` crossing, and for the queries that commit through
+``SnapshotTable`` (compaction, merge, time travel, pruned, incremental
+and evolved reads): each runs on a local session and must match its
 ``oracle_sql()`` in DuckDB (``scripts/check_entry.check_query``, the
 same compare the full sweep runs), at the small test scale."""
 
@@ -18,6 +20,12 @@ ROW_MAP_QUERIES = sorted(
        "warc_extract", "wet_roundtrip", "web_cdx_index",
        "warc_stream_extract", "sink_wds_roundtrip"])
 
+#: queries committing through SnapshotTable not already listed above
+TABLE_QUERIES = ["table_time_travel", "table_pruned_read",
+                 "table_read_changes", "table_merge_upsert",
+                 "table_schema_evolution", "capstone_incremental_dedup",
+                 "w_stream_sketch_counts"]
+
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
@@ -28,5 +36,11 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", ROW_MAP_QUERIES)
 def test_row_map_query_matches_oracle(spark, duck, sf_dir, name):
+    _rows, problem = check_query(spark, duck, name, sf_dir)
+    assert problem is None, f"{name}: {problem}"
+
+
+@pytest.mark.parametrize("name", TABLE_QUERIES)
+def test_table_query_matches_oracle(spark, duck, sf_dir, name):
     _rows, problem = check_query(spark, duck, name, sf_dir)
     assert problem is None, f"{name}: {problem}"

@@ -197,26 +197,41 @@ def test_resume_exactly_once(spark, pages_dir, tmp_path):
     assert info3["snapshot"]["row_count"] == 0
 
 
-def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path):
-    """Crash-safety: a snap- dir without a manifest entry (simulating a
-    job killed mid-write, before the atomic manifest swap) must be
-    invisible to readers and to resume."""
-    import shutil
+def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path,
+                                               monkeypatch):
+    """Crash-safety with a real failed commit: Spark writes the
+    extraction snap- dir, then the manifest append fails. The run
+    raises and commits no lineage; the orphan dir is invisible to
+    readers and to resume, a rerun commits every url exactly once, and
+    vacuum() reclaims the orphan."""
     out = str(tmp_path / "out")
-    pages = spark.read.parquet(pages_dir)
-    run_extraction(spark, pages.limit(50), out, num_partitions=2)
     ext_root = os.path.join(out, "extracted")
-    committed = SnapshotTable(ext_root).read(spark).count()
-    # fake a torn write: copy a real snap dir under a new uncommitted name
-    snaps = [d for d in os.listdir(ext_root) if d.startswith("snap-")]
-    shutil.copytree(os.path.join(ext_root, snaps[0]),
-                    os.path.join(ext_root, "snap-deadbeef-uncommitted"))
-    assert SnapshotTable(ext_root).read(spark).count() == committed
-    # resume still sees only committed urls: full rerun adds the rest once
-    run_extraction(spark, pages, out, num_partitions=2)
+    pages = spark.read.parquet(pages_dir)
+    real_commit = SnapshotTable._commit
+    failed = []
+
+    def crash_once(self, entry):
+        if not failed and os.path.basename(self.root) == "extracted":
+            failed.append(entry)
+            raise OSError("killed before the manifest append")
+        real_commit(self, entry)
+
+    monkeypatch.setattr(SnapshotTable, "_commit", crash_once)
+    with pytest.raises(OSError, match="killed before the manifest append"):
+        run_extraction(spark, pages, out, num_partitions=2)
+    orphan = os.path.join(ext_root, f"snap-{failed[0]['snapshot_id']}")
+    assert os.path.isdir(orphan) and failed[0]["row_count"] > 0
+    assert SnapshotTable(os.path.join(out, "lineage")).snapshots() == []
+    assert SnapshotTable(ext_root).read(spark) is None
+    # the resumed rerun sees no committed url: it redoes exactly the
+    # failed run's urls, each once
+    info = run_extraction(spark, pages, out, num_partitions=2)
+    n_urls = pages.select("url").distinct().count()
+    assert info["snapshot"]["row_count"] == failed[0]["row_count"] == n_urls
     tbl = SnapshotTable(ext_root).read(spark)
-    assert tbl.count() == pages.count()
-    assert tbl.select("url").distinct().count() == pages.count()
+    assert tbl.count() == tbl.select("url").distinct().count() == n_urls
+    assert SnapshotTable(ext_root).vacuum() == [orphan]
+    assert SnapshotTable(ext_root).read(spark).count() == n_urls
 
 
 def test_heavy_hitter_detection_on_skewed_hosts(spark, pages_dir):

@@ -284,10 +284,12 @@ def test_compaction_lock_excludes_concurrent_compactors(spark, tmp_path):
     assert table.read(spark).count() == 4
 
 
-def test_compaction_heartbeat_keeps_long_run_lock_fresh(spark, tmp_path):
-    """r4 ADVICE #1: a LIVE compaction running longer than stale_lock_s
-    must not have its lock broken as 'stale' — the heartbeat refreshes
-    the lock mtime, so a second compactor still raises."""
+@pytest.mark.parametrize("op", ["compact", "merge"])
+def test_compaction_heartbeat_keeps_long_run_lock_fresh(spark, tmp_path, op):
+    """r4 ADVICE #1: a LIVE compaction or merge running longer than
+    stale_lock_s must not have its lock broken as 'stale' — the
+    heartbeat refreshes the lock mtime, so a second maintainer still
+    raises."""
     import time
 
     import pytest as _pytest
@@ -297,22 +299,69 @@ def test_compaction_heartbeat_keeps_long_run_lock_fresh(spark, tmp_path):
     table.append(spark.range(3).selectExpr("id AS user_id"), run_id="a")
 
     stale_s = 0.4
-    orig = table_io.SnapshotTable._compact_locked
+    orig = table_io._footer_row_count          # runs just before _commit
 
-    def slow_compact(self, *a, **kw):
+    def slow_count(files):
         time.sleep(3 * stale_s)            # outlive stale_lock_s
         # mid-run, a would-be takeover must see a FRESH lock and raise
         with _pytest.raises(RuntimeError, match="concurrent compaction"):
             table._acquire_compact_lock(stale_lock_s=stale_s)
-        return orig(self, *a, **kw)
+        return orig(files)
 
     try:
-        table_io.SnapshotTable._compact_locked = slow_compact
-        entry = table.compact(spark, stale_lock_s=stale_s)
+        table_io._footer_row_count = slow_count
+        if op == "compact":
+            entry = table.compact(spark, stale_lock_s=stale_s)
+        else:
+            entry = table.merge(
+                spark, spark.createDataFrame([(7,)], "user_id long"),
+                "user_id", stale_lock_s=stale_s)
     finally:
-        table_io.SnapshotTable._compact_locked = orig
+        table_io._footer_row_count = orig
     assert entry is not None
-    assert table.read(spark).count() == 3
+    assert table.read(spark).count() == (3 if op == "compact" else 4)
+
+
+@pytest.mark.parametrize("op", ["compact", "merge"])
+def test_replace_commit_uses_one_manifest_read(spark, tmp_path, op):
+    """A replace-commit rewrites and replaces exactly the snapshots of
+    ONE manifest read. An append that lands right after that read stays
+    live exactly once beside a compaction, and aborts a merge
+    (optimistic concurrency) instead of being silently replaced."""
+    import pytest as _pytest
+
+    from powerpoint_context_extractor_spark.sources.table_io import (
+        SnapshotTable,
+    )
+    root = str(tmp_path / "t")
+    table = SnapshotTable(root)
+    schema = "k long, v string"
+    table.append(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(5)], schema), "base")
+    real_snapshots = SnapshotTable.snapshots
+    fired = []
+
+    def racy_snapshots(self):
+        snaps = real_snapshots(self)
+        if not fired:                    # first read inside the operation
+            fired.append(True)
+            SnapshotTable(root).append(spark.createDataFrame(
+                [(100, "late")], schema), "late")
+        return snaps
+
+    try:
+        SnapshotTable.snapshots = racy_snapshots
+        if op == "compact":
+            table.compact(spark)
+        else:
+            with _pytest.raises(RuntimeError, match="optimistic-concurrency"):
+                table.merge(spark, spark.createDataFrame(
+                    [(2, "m2")], schema), "k")
+    finally:
+        SnapshotTable.snapshots = real_snapshots
+    assert fired
+    ks = sorted(r["k"] for r in table.read(spark).collect())
+    assert ks == [0, 1, 2, 3, 4, 100]
 
 
 def test_compaction_aborts_commit_after_lock_ownership_loss(spark, tmp_path):
@@ -377,23 +426,6 @@ def test_manifest_tolerates_torn_trailing_line(spark, tmp_path):
         table.snapshots()
 
 
-def test_manifest_legacy_migration(tmp_path):
-    import json
-    from powerpoint_context_extractor_spark.sources.table_io import (
-        SnapshotTable,
-    )
-    root = str(tmp_path / "t2")
-    table = SnapshotTable(root)
-    legacy = {"snapshots": [{"snapshot_id": "old", "run_id": "r",
-                             "files": [], "row_count": 1,
-                             "committed_at": "then"}]}
-    with open(table._legacy_manifest_path, "w", encoding="utf-8") as f:
-        json.dump(legacy, f)
-    table._commit({"snapshot_id": "new", "run_id": "r", "files": [],
-                   "row_count": 2, "committed_at": "now"})
-    assert [s["snapshot_id"] for s in table.snapshots()] == ["old", "new"]
-
-
 def test_repetition_stats_is_shuffle_free(spark, sf):
     """The Gopher repetition filter must run at scan speed: per-row
     array math only, no Exchange anywhere in the plan."""
@@ -439,15 +471,10 @@ def test_paragraph_dedup_shuffles_hash_keys_not_bodies(spark, sf):
 def test_schema_evolution_add_widen_reject_and_legacy(spark, tmp_path):
     """r6: evolved reads project old snapshots to the latest schema
     (typed NULLs for added columns, casts for widened ones);
-    incompatible type changes are rejected at append; pre-r6 manifest
-    entries without a recorded schema fall back to the parquet footer;
-    compaction across schema versions preserves the evolved shape."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
+    incompatible type changes are rejected at append; compaction
+    across schema versions preserves the evolved shape."""
     from powerpoint_context_extractor_spark.sources.table_io import (
-        MANIFEST, SnapshotTable,
+        SnapshotTable,
     )
     table = SnapshotTable(str(tmp_path / "t"))
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string")
@@ -456,7 +483,7 @@ def test_schema_evolution_add_widen_reject_and_legacy(spark, tmp_path):
     v2 = spark.createDataFrame([(3, "c", 30)],
                                "id long, s string, extra long")
     table.append(v2, "v2")
-    assert table.table_schema(spark) == [
+    assert table.table_schema() == [
         ("id", "bigint"), ("s", "string"), ("extra", "bigint")]
     got = {r["id"]: (r["s"], r["extra"])
            for r in table.read_evolved(spark).collect()}
@@ -467,15 +494,6 @@ def test_schema_evolution_add_widen_reject_and_legacy(spark, tmp_path):
     with _pytest.raises(ValueError, match="cannot change"):
         table.append(spark.createDataFrame([(9, 1)], "id long, s int"),
                      "bad")
-    # legacy manifest lines (no recorded schema) derive from footers
-    mf = tmp_path / "t" / MANIFEST
-    lines = [_json.loads(x) for x in mf.read_text().splitlines()]
-    for e in lines:
-        e.pop("schema")
-    mf.write_text("".join(_json.dumps(e) + "\n" for e in lines))
-    got2 = {r["id"]: (r["s"], r["extra"])
-            for r in table.read_evolved(spark).collect()}
-    assert got2 == got
     # compaction over mixed schemas keeps the evolved projection
     table.compact(spark, run_id="c")
     got3 = {r["id"]: (r["s"], r["extra"])

@@ -189,7 +189,7 @@ def test_sessionize_to_table_equals_memory_harness(spark, sf_dir, tmp_path):
     mem = {r["user_id"]: (r["n_sessions"], r["n_events"])
            for r in sessionize(spark, ev).collect()}
     assert tab == mem
-    # default compaction leaves exactly one live row per user (the
+    # the post-stream compaction leaves exactly one live row per user (the
     # (user, epoch) growth from update-mode commits is folded away)
     from powerpoint_context_extractor_spark.sources.table_io import (
         SnapshotTable,
