@@ -6,8 +6,10 @@
   SURVEY.md §2.10 U2). One Python call per Arrow batch, the pure kernel
   does the per-document work, exactly as the reference amortizes one
   ``zipfile.ZipFile`` open across all members (`notes/extractor.py:29`).
-  It also carries per-task state: a partition-id column and the
-  ``PartitionTally`` accumulator.
+  It also carries per-task state: a partition-id column.
+  ``write_extracted`` is the same crossing with the sink inside the
+  task: each task writes its output batches to one parquet file where
+  they are built and returns one summary row instead of the batches.
 - ``row_map`` is the generic one every other per-row Python step uses:
   a per-row function, batched over Arrow, 0..n output rows per input
   row, after one ``_spread_small_input`` guard.
@@ -29,14 +31,17 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import functools
+import itertools
+import os
+import time
 
 from pyspark import TaskContext
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernel import extract_document
+from ..sources.table_io import parquet_writer
 
 SPAN_TYPE = T.ArrayType(T.StructType([
     T.StructField("block_id", T.LongType()),
@@ -59,53 +64,36 @@ EXTRACTED_SCHEMA = T.StructType([
 ])
 
 
-_ARROW_OUT_SCHEMA = None
+#: one row per non-empty ``write_extracted`` task
+WRITE_SUMMARY_SCHEMA = T.StructType([
+    T.StructField("partition_id", T.IntegerType(), False),
+    T.StructField("file", T.StringType(), False),
+    T.StructField("rows", T.LongType(), False),
+    T.StructField("ok", T.LongType(), False),
+    T.StructField("in_bytes", T.LongType(), False),
+    T.StructField("wall_ms", T.IntegerType(), False),
+])
 
 
+@functools.cache
 def _arrow_out_schema():
-    global _ARROW_OUT_SCHEMA
-    if _ARROW_OUT_SCHEMA is None:
-        import pyarrow as pa
-        _ARROW_OUT_SCHEMA = pa.schema([
-            ("url", pa.string()),
-            ("title", pa.string()),
-            ("text", pa.string()),
-            ("spans", pa.list_(pa.struct([
-                ("block_id", pa.int64()), ("path", pa.string()),
-                ("start", pa.int64()), ("end", pa.int64())]))),
-            ("n_blocks", pa.int64()),
-            ("error", pa.string()),
-            ("text_source", pa.string()),
-            ("charset", pa.string()),
-            ("partition_id", pa.int32()),
-            ("in_bytes", pa.int64()),
-        ])
-    return _ARROW_OUT_SCHEMA
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(EXTRACTED_SCHEMA)
 
 
-class PartitionTally(AccumulatorParam):
-    """List accumulator of ``(partition_id, rows, ok, fail, bytes)``
-    tuples, one per non-empty partition of an ``extract_pages`` map.
-    Module-level so workers unpickle it by reference."""
-
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, value1, value2):
-        value1.extend(value2)
-        return value1
+@functools.cache
+def _summary_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(WRITE_SUMMARY_SCHEMA)
 
 
-def _kernel_batches_arrow(batches, tally=None):
+def _kernel_batches_arrow(batches):
     """The extraction kernel over Arrow RecordBatches in and out: no
-    pandas layer on either side. With a ``PartitionTally`` accumulator
-    as ``tally``, adds this partition's row, ok and byte counts to it
-    after the last batch."""
+    pandas layer on either side."""
     import pyarrow as pa
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
     schema = _arrow_out_schema()
-    rows = ok = n_bytes = 0
     for rb in batches:
         names = rb.schema.names
         urls = rb.column(names.index("url")).to_pylist()
@@ -129,10 +117,6 @@ def _kernel_batches_arrow(batches, tally=None):
             out["error"].append(r.error)
             out["charset"].append(r.charset)
             out["in_bytes"].append(len(html) if html is not None else 0)
-        n = len(urls)
-        rows += n
-        ok += out["error"].count(None)
-        n_bytes += sum(out["in_bytes"])
         yield pa.RecordBatch.from_arrays(
             [pa.array(out["url"], schema.field(0).type),
              pa.array(out["title"], schema.field(1).type),
@@ -142,11 +126,39 @@ def _kernel_batches_arrow(batches, tally=None):
              pa.array(out["error"], schema.field(5).type),
              pa.array(out["text_source"], schema.field(6).type),
              pa.array(out["charset"], schema.field(7).type),
-             pa.array([pid] * n, schema.field(8).type),
+             pa.array([pid] * len(urls), schema.field(8).type),
              pa.array(out["in_bytes"], schema.field(9).type)],
             schema=schema)
-    if tally is not None and rows:
-        tally.add([(pid, rows, ok, rows - ok, n_bytes)])
+
+
+def _write_batches(out_dir, batches):
+    """Kernel output of one task streamed into
+    ``<out_dir>/part-<partition:05d>-<taskAttemptId>.parquet``; yields
+    one ``WRITE_SUMMARY_SCHEMA`` row, or nothing for an empty task.
+    ``wall_ms`` runs from the first input batch to the writer's close."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    batches = iter(batches)
+    first = next(batches, None)
+    if first is None:
+        return
+    t0 = time.monotonic()
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+    path = os.path.join(out_dir, name)
+    rows = ok = n_bytes = 0
+    with parquet_writer(path, _arrow_out_schema(),
+                        stats_skip=("text",)) as w:
+        for rb in _kernel_batches_arrow(itertools.chain([first], batches)):
+            w.write_batch(rb)
+            rows += rb.num_rows
+            ok += rb.column("error").null_count
+            n_bytes += pc.sum(rb.column("in_bytes")).as_py() or 0
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    yield pa.RecordBatch.from_pylist(
+        [{"partition_id": ctx.partitionId(), "file": name, "rows": rows,
+          "ok": ok, "in_bytes": n_bytes, "wall_ms": wall_ms}],
+        schema=_summary_arrow_schema())
 
 
 def repartition_for_extract(df: DataFrame, num_partitions: int,
@@ -358,16 +370,31 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
     return _charset_extract(docs, _nobom_page)
 
 
-def extract_pages(pages: DataFrame,
-                  num_partitions: int | None = None,
-                  tally=None) -> DataFrame:
-    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
-    one ``mapInArrow`` crossing. ``tally``, a ``PartitionTally``
-    accumulator, collects per-partition counts as the map runs."""
+def _narrow(pages: DataFrame, num_partitions: int | None) -> DataFrame:
     cols = ["url", "html"] + (["text"] if "text" in pages.columns else [])
     narrow = pages.select(*cols)  # column pruning reaches the scan (F7)
     if num_partitions:
         narrow = repartition_for_extract(narrow, num_partitions)
-    return narrow.mapInArrow(
-        functools.partial(_kernel_batches_arrow, tally=tally),
-        schema=EXTRACTED_SCHEMA)
+    return narrow
+
+
+def extract_pages(pages: DataFrame,
+                  num_partitions: int | None = None) -> DataFrame:
+    """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
+    one ``mapInArrow`` crossing."""
+    return _narrow(pages, num_partitions).mapInArrow(
+        _kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
+
+
+def write_extracted(pages: DataFrame, out_dir: str,
+                    num_partitions: int | None = None) -> DataFrame:
+    """The ``extract_pages`` crossing with the parquet write inside the
+    task: when run, each non-empty task writes its extracted rows
+    (``EXTRACTED_SCHEMA``, ``table_io.parquet_writer`` config) to one
+    file in ``out_dir`` and returns one ``WRITE_SUMMARY_SCHEMA`` row
+    with its file name. No extracted row crosses back to the JVM.
+    ``out_dir`` must exist at the same path on every worker (see
+    ``table_io.TaskWrite``)."""
+    return _narrow(pages, num_partitions).mapInArrow(
+        functools.partial(_write_batches, out_dir),
+        schema=WRITE_SUMMARY_SCHEMA)

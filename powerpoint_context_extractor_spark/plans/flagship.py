@@ -1,13 +1,18 @@
 """Flagship end-to-end extraction job (the reference's
 ``extract_pptx_content`` path, `pptx_extract.py:165-308`, as one lazy
 Spark plan): snapshot-table scan -> resume anti-join -> narrow
-projection -> hash(url) spread -> Arrow-batched kernel -> snapshot
-commit -> per-partition lineage commit.
+projection -> hash(url) spread -> Arrow-batched kernel that writes its
+own parquet file per task -> snapshot commit -> per-partition lineage
+commit.
 
-Lineage is tallied per task: the kernel map counts rows, ok rows and
-input bytes of its partition into a ``PartitionTally`` accumulator, and
-the driver writes those O(partitions) rows as one small parquet file.
-No scan of the output and no Spark job run after the extraction write.
+The extraction is one Spark job whose tasks write the extracted rows
+into the new snapshot dir themselves (``operators.extract.
+write_extracted``) and return one summary row each: partition id, file,
+rows, ok rows, input bytes and task wall time. The driver collects the
+summaries, commits exactly the files they name, and writes the
+O(partitions) lineage rows from them as one small parquet file. No
+extracted row crosses back to the JVM, and no Spark write or scan runs
+after the job.
 
 Run via ``spark-submit --py-files pcx.zip -m`` or the module main below.
 """
@@ -23,8 +28,8 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import PartitionTally, extract_pages
-from ..sources.table_io import SnapshotTable
+from ..operators.extract import EXTRACTED_SCHEMA, write_extracted
+from ..sources.table_io import SnapshotTable, TaskWrite
 
 LINEAGE_SCHEMA = pa.schema([
     ("run_id", pa.string()),
@@ -52,7 +57,18 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
     The data commit and the lineage commit are two manifest appends. A
     crash between them keeps the extracted rows but loses that run's
     lineage rows: the rerun skips the committed urls and does not
-    re-tally them.
+    re-tally them. Each lineage row is one partition's task: its
+    ``wall_ms`` runs from the task's first input batch to its file's
+    close, so a slow partition shows; the returned ``wall_ms`` is the
+    whole job's.
+
+    A run with no new urls commits an extracted snapshot that lists no
+    files (``row_count`` 0) and no lineage snapshot (``lineage`` is
+    None).
+
+    The tasks write into the snapshot dir under ``out_root``, so every
+    Python worker must see ``out_root`` at the same path as the driver:
+    local mode or a shared filesystem (see ``table_io.TaskWrite``).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     extracted_tbl = SnapshotTable(os.path.join(out_root, "extracted"))
@@ -62,36 +78,33 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
         pages = extracted_tbl.without_committed(pages, "url")
 
     t0 = time.monotonic()
-    tally = spark.sparkContext.accumulator([], PartitionTally())
-    extracted = extract_pages(pages, num_partitions=num_partitions,
-                              tally=tally)
-    # r8: url/text/spans are unique per row — parquet dictionary pages
-    # always overflow and fall back, costing ~11% of the write wall for
-    # zero size win (A/B in OPTIMIZATION_r08.md).
-    snap = extracted_tbl.append(
-        extracted, run_id,
-        write_options={"parquet.enable.dictionary": "false"})
+    parts: list = []
+
+    def write(out_dir: str) -> list:
+        parts.extend(sorted(write_extracted(
+            pages, os.path.abspath(out_dir), num_partitions).collect()))
+        return [os.path.join(out_dir, p.file) for p in parts]
+
+    snap = extracted_tbl.append(TaskWrite(EXTRACTED_SCHEMA, write), run_id)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    # Lineage (U4) from the map's tally. Spark merges a result-stage task's
-    # accumulator update once per partition, the map runs in the write's
-    # result stage, and the driver acks each merge before runJob returns.
-    parts = sorted(tally.value)
-    tallied = sum(p[1] for p in parts)
+    # Lineage (U4) from the task summaries: collect() returns exactly one
+    # row per partition, from the attempt whose file the snapshot lists.
+    tallied = sum(p.rows for p in parts)
     if tallied != snap["row_count"]:
         raise RuntimeError(
-            f"lineage tally counts {tallied} rows but snapshot "
+            f"lineage summaries count {tallied} rows but snapshot "
             f"{snap['snapshot_id']} holds {snap['row_count']}; "
             "lineage not committed")
     lineage_entry = None
-    if snap["files"]:
+    if parts:
         split = f"snap-{snap['snapshot_id']}"
         now = datetime.now(timezone.utc)
         lineage = pa.Table.from_pylist(
             [dict(zip(LINEAGE_SCHEMA.names,
-                      (run_id, pid, split, rows, ok, fail, n_bytes,
-                       wall_ms, now)))
-             for pid, rows, ok, fail, n_bytes in parts],
+                      (run_id, p.partition_id, split, p.rows, p.ok,
+                       p.rows - p.ok, p.in_bytes, p.wall_ms, now)))
+             for p in parts],
             schema=LINEAGE_SCHEMA)
         lineage_entry = lineage_tbl.append(lineage, run_id)
     return {"run_id": run_id, "snapshot": snap, "lineage": lineage_entry,

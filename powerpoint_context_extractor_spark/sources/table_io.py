@@ -10,10 +10,14 @@ API; no jars are available in this sandbox, SURVEY.md §7).
 
 Commit protocol (write-data-then-manifest-append), one path for every
 snapshot:
-  1. ``_write`` writes the batch to ``<root>/snap-<uuid>/`` (Spark for a
-     DataFrame, the driver for a small ``pyarrow.Table``) and builds the
-     manifest entry {snapshot_id, run_id, files, row_count, schema,
-     [replaces,] committed_at} from the listing and parquet footers.
+  1. ``_write`` writes the batch to ``<root>/snap-<uuid>/`` with one of
+     three writers: Spark's parquet writer for a DataFrame, the driver
+     for a small ``pyarrow.Table``, or the Spark tasks themselves for a
+     ``TaskWrite`` (each task writes its own file and reports it back).
+     The last two share one pyarrow writer config, ``parquet_writer``.
+     It then builds the manifest entry {snapshot_id, run_id, files,
+     row_count, schema, [replaces,] committed_at} from the written file
+     list and the parquet footers.
   2. ``_commit`` appends that entry to ``_snapshots.jsonl`` as one JSON
      line with a single O_APPEND write.
 Readers union only manifest-listed files, so half-written directories
@@ -41,11 +45,46 @@ import uuid
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from itertools import takewhile
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_snapshots.jsonl"
+
+
+def parquet_writer(path: str, schema, stats_skip=()):
+    """A ``pyarrow.parquet.ParquetWriter`` with the one config of every
+    snapshot file not written by Spark: zstd at level 3 (parquet-mr's
+    level), no dictionary pages, no embedded Arrow schema, and
+    statistics only on the top-level scalar columns not named in
+    ``stats_skip``. Dictionary pages are off because the extracted
+    url/text/spans columns are unique per row: the dictionary always
+    overflows and falls back, which cost ~11% of the write wall for no
+    size win (OPTIMIZATION_r08.md). Free-text columns go in
+    ``stats_skip``: their min/max never prunes a file, and
+    ``_pruned_files`` keeps files that have no stats."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    return pq.ParquetWriter(
+        path, schema, compression="zstd", compression_level=3,
+        use_dictionary=False, store_schema=False,
+        write_statistics=[f.name for f in schema
+                          if not pa.types.is_nested(f.type)
+                          and f.name not in stats_skip])
+
+
+class TaskWrite(NamedTuple):
+    """A snapshot whose parquet files the Spark tasks write themselves.
+    ``run(out_dir)`` runs the job, whose tasks each write at most one
+    file into ``out_dir``, and returns the paths of the files the job's
+    successful task attempts reported. ``schema`` is the ``StructType``
+    those files carry. ``out_dir`` must be reachable at the same path
+    from the driver and every Python worker: that holds in local mode
+    and on a shared filesystem, as every ``os.*`` call here needs."""
+    schema: T.StructType
+    run: Callable[[str], list]
 
 
 def _footer_row_count(files: list) -> int:
@@ -125,7 +164,7 @@ class SnapshotTable:
         an unlisted snap dir (invisible to readers and to resume,
         reclaimed by ``vacuum()``) or a torn final line (skipped by
         ``_entries``); tests/test_pipeline.py pins the failed-commit
-        case. Power loss is not covered: neither Spark's data files nor
+        case. Power loss is not covered: neither the data files nor
         this manifest line is fsynced, so a crash of the host can lose
         a commit that already returned. No fsync is added here."""
         line = json.dumps(entry, separators=(",", ":")) + "\n"
@@ -192,8 +231,9 @@ class SnapshotTable:
         latest = snaps[-1]["schema"]
         groups: dict = {}
         for s in snaps:
-            key = tuple(map(tuple, s["schema"]))
-            groups.setdefault(key, []).extend(s["files"])
+            if s["files"]:
+                key = tuple(map(tuple, s["schema"]))
+                groups.setdefault(key, []).extend(s["files"])
         out = None
         for key, files in groups.items():
             have = {n for n, _ in key}
@@ -205,22 +245,20 @@ class SnapshotTable:
         return out
 
     # -- IO --------------------------------------------------------------
-    def _write(self, df, run_id: str, write_options: dict | None = None,
-               replaces: list | None = None) -> dict:
+    def _write(self, df, run_id: str, replaces: list | None = None) -> dict:
         """Write ``df`` as a new, not yet committed snapshot dir and
         return its manifest entry. A Spark DataFrame is distributed
         data and gets a Spark write; a ``pyarrow.Table`` is small
         driver-side data (e.g. one row per partition) and is written by
-        the driver as one zstd parquet file, with no Spark job.
-        ``write_options`` are passed to the Spark parquet writer (r8
-        seam: the extraction sink sets ``parquet.enable.dictionary=
-        false`` — its url/text/spans columns are unique per row, so
-        dictionary encoding always falls back after burning the
-        page-build CPU; measured 11% off the sf1.0 extract+write wall,
-        same bytes). ``replaces`` makes the entry a replace-commit."""
+        the driver as one parquet file, with no Spark job; a
+        ``TaskWrite`` runs its job, and the entry lists exactly the
+        files the job reports, never a listing of the dir, so a failed
+        or speculative attempt's file is never committed. A
+        ``TaskWrite`` that reports no file commits a snapshot with no
+        files and ``row_count`` 0. ``replaces`` makes the entry a
+        replace-commit."""
         import pyarrow as pa
-        local = isinstance(df, pa.Table)
-        if local:
+        if isinstance(df, pa.Table):
             from pyspark.sql.pandas.types import from_arrow_schema
             fields = from_arrow_schema(df.schema).fields
         else:
@@ -229,19 +267,19 @@ class SnapshotTable:
         self._check_evolution(self.table_schema(), schema)
         snap_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, f"snap-{snap_id}")
-        if local:
-            import pyarrow.parquet as pq
-            os.makedirs(out_dir)
-            pq.write_table(df, os.path.join(out_dir, "part-00000.parquet"),
-                           compression="zstd")
+        if isinstance(df, DataFrame):
+            df.write.mode("error").parquet(out_dir)
+            files = sorted(
+                os.path.join(out_dir, f) for f in os.listdir(out_dir)
+                if f.endswith(".parquet"))
         else:
-            w = df.write.mode("error")
-            for k, v in (write_options or {}).items():
-                w = w.option(k, v)
-            w.parquet(out_dir)
-        files = sorted(
-            os.path.join(out_dir, f) for f in os.listdir(out_dir)
-            if f.endswith(".parquet"))
+            os.makedirs(out_dir)
+            if isinstance(df, TaskWrite):
+                files = sorted(df.run(out_dir))
+            else:
+                files = [os.path.join(out_dir, "part-00000.parquet")]
+                with parquet_writer(files[0], df.schema) as w:
+                    w.write_table(df)
         # O(metadata) commit: row counts come from the parquet footers
         # (what a real Iceberg manifest records), NOT a second Spark
         # scan of the just-written data — at 100 TB a count() here
@@ -253,11 +291,10 @@ class SnapshotTable:
         entry["committed_at"] = datetime.now(timezone.utc).isoformat()
         return entry
 
-    def append(self, df, run_id: str,
-               write_options: dict | None = None) -> dict:
-        """Commit ``df`` (a Spark DataFrame or a ``pyarrow.Table``, see
-        ``_write``) as one new snapshot."""
-        entry = self._write(df, run_id, write_options)
+    def append(self, df, run_id: str) -> dict:
+        """Commit ``df`` (a Spark DataFrame, a ``pyarrow.Table`` or a
+        ``TaskWrite``, see ``_write``) as one new snapshot."""
+        entry = self._write(df, run_id)
         self._commit(entry)
         return entry
 
@@ -485,19 +522,29 @@ class SnapshotTable:
 
     def vacuum(self) -> list:
         """Delete snap dirs no longer referenced by any live snapshot
-        (replaced by a compaction, or never committed). Explicit and
+        (replaced by a compaction, or never committed), and the parquet
+        files a live snapshot does not list inside its own dir (a
+        failed or speculative task attempt's file). Explicit and
         separate from compact() so in-flight readers of pre-compaction
         file lists get a grace window the caller controls. Returns
-        removed dirs."""
+        removed dirs and files."""
         import shutil
-        live_dirs = {os.path.dirname(f) for f in self.data_files()}
+        live = set(self.data_files())
+        live_dirs = {os.path.dirname(f) for f in live}
         removed = []
         for name in os.listdir(self.root):
             path = os.path.join(self.root, name)
-            if (name.startswith("snap-") and os.path.isdir(path)
-                    and path not in live_dirs):
+            if not (name.startswith("snap-") and os.path.isdir(path)):
+                continue
+            if path not in live_dirs:
                 shutil.rmtree(path)
                 removed.append(path)
+                continue
+            for f in sorted(os.listdir(path)):
+                stray = os.path.join(path, f)
+                if f.endswith(".parquet") and stray not in live:
+                    os.remove(stray)
+                    removed.append(stray)
         return removed
 
     # -- reads -----------------------------------------------------------

@@ -9,7 +9,9 @@ from pyspark.sql import functions as F
 
 from powerpoint_context_extractor_spark import corpus
 from powerpoint_context_extractor_spark.kernel import extract_document
-from powerpoint_context_extractor_spark.operators.extract import extract_pages
+from powerpoint_context_extractor_spark.operators.extract import (
+    EXTRACTED_SCHEMA, extract_pages,
+)
 from powerpoint_context_extractor_spark.plans.flagship import (
     run_extraction, write_pages_table,
 )
@@ -121,27 +123,26 @@ def test_run_extraction_lineage_reconciles(spark, pages_dir, tmp_path):
 
 def test_run_extraction_refuses_a_short_tally(spark, pages_dir, tmp_path,
                                              monkeypatch):
-    """A tally that lost one task's counts fails the run before any
-    lineage line is committed."""
-    from powerpoint_context_extractor_spark.operators.extract import (
-        PartitionTally,
-    )
+    """Task summaries that disagree with the committed snapshot's footer
+    row count fail the run before any lineage line is committed."""
+    from powerpoint_context_extractor_spark.sources import table_io
     from powerpoint_context_extractor_spark.sources.table_io import MANIFEST
-    merge = PartitionTally.addInPlace
-    dropped = []
+    footer_rows = table_io._footer_row_count
+    inflated = []
 
-    def lossy_merge(self, value, update):
-        if update and not dropped:
-            dropped.append(update)
-            return value
-        return merge(self, value, update)
+    def one_extra_row(files):
+        n = footer_rows(files)
+        if files and os.sep + "extracted" + os.sep in files[0]:
+            inflated.append(files)
+            return n + 1
+        return n
 
-    monkeypatch.setattr(PartitionTally, "addInPlace", lossy_merge)
+    monkeypatch.setattr(table_io, "_footer_row_count", one_extra_row)
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="lineage tally"):
+    with pytest.raises(RuntimeError, match="lineage summaries"):
         run_extraction(spark, spark.read.parquet(pages_dir), out,
                        num_partitions=3)
-    assert dropped
+    assert inflated
     assert not os.path.exists(os.path.join(out, "lineage", MANIFEST))
 
 
@@ -195,6 +196,14 @@ def test_resume_exactly_once(spark, pages_dir, tmp_path):
     # idempotent third run: nothing left to do
     info3 = run_extraction(spark, pages, out, num_partitions=3)
     assert info3["snapshot"]["row_count"] == 0
+    # a run with nothing new commits a snapshot with no files, and no
+    # lineage snapshot
+    assert info3["snapshot"]["files"] == []
+    assert info3["lineage"] is None
+    assert SnapshotTable(os.path.join(out, "extracted")).snapshots()[-1][
+        "snapshot_id"] == info3["snapshot"]["snapshot_id"]
+    assert SnapshotTable(os.path.join(out, "extracted")).read(
+        spark).count() == pages.count()
 
 
 def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path,
@@ -232,6 +241,115 @@ def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path,
     assert tbl.count() == tbl.select("url").distinct().count() == n_urls
     assert SnapshotTable(ext_root).vacuum() == [orphan]
     assert SnapshotTable(ext_root).read(spark).count() == n_urls
+
+
+def test_lineage_wall_ms_shows_the_slow_partition(spark, pages_dir,
+                                                  tmp_path):
+    """Each lineage row carries its own task's wall time, so the
+    partition holding one slow page (400k ``<p>`` blocks, about a second
+    in the kernel) has the largest ``wall_ms``."""
+    import pyspark.sql.types as T
+    slow_url = "https://slow.example/400k-blocks"
+    slow = spark.createDataFrame(
+        [(slow_url, b"<html><body>" + b"<p>a</p>" * 400_000
+          + b"</body></html>", None)],
+        T.StructType([T.StructField("url", T.StringType(), False),
+                      T.StructField("html", T.BinaryType(), True),
+                      T.StructField("text", T.StringType(), True)]))
+    pages = spark.read.parquet(pages_dir).select("url", "html", "text")
+    info = run_extraction(spark, pages.unionByName(slow),
+                          str(tmp_path / "out"), num_partitions=3)
+    lineage = spark.read.parquet(*info["lineage"]["files"]).collect()
+    slowest = max(lineage, key=lambda r: r["wall_ms"])
+    extracted = spark.read.parquet(*info["snapshot"]["files"])
+    slow_pid = extracted.filter(F.col("url") == slow_url).first()[
+        "partition_id"]
+    assert slowest["partition_id"] == slow_pid
+    assert max(r["wall_ms"] for r in lineage) <= info["wall_ms"]
+
+
+def test_task_written_snapshot_files(spark, pages_dir, tmp_path):
+    """The extraction tasks write one file per non-empty task, in the
+    snapshot-file config, holding the rows ``extract_pages`` returns."""
+    import re
+
+    import pyarrow.parquet as pq
+    pages = spark.read.parquet(pages_dir)
+    info = run_extraction(spark, pages, str(tmp_path / "out"),
+                          num_partitions=3)
+    pids = {f: int(re.fullmatch(r"part-(\d{5})-\d+\.parquet",
+                                os.path.basename(f)).group(1))
+            for f in info["snapshot"]["files"]}
+    lineage = spark.read.parquet(*info["lineage"]["files"]).collect()
+    assert sorted(r["partition_id"] for r in lineage) == sorted(pids.values())
+    for f, pid in pids.items():
+        assert set(pq.read_table(f, columns=["partition_id"]).column(
+            "partition_id").to_pylist()) == {pid}
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        assert not (md.metadata or {}).get(b"ARROW:schema")
+        assert pf.schema_arrow.field("url").nullable is False
+        paths = [md.schema.column(i).path for i in range(md.num_columns)]
+        for rg in range(md.num_row_groups):
+            for i, path in enumerate(paths):
+                col = md.row_group(rg).column(i)
+                assert col.compression == "ZSTD", path
+                assert not col.has_dictionary_page, path
+                assert not any("DICTIONARY" in e for e in col.encodings), path
+                if path == "text" or path.startswith("spans."):
+                    assert not col.is_stats_set, path
+                elif path == "url":
+                    assert col.is_stats_set, path
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.drop("partition_id").collect()),
+                      key=repr)
+
+    table = SnapshotTable(str(tmp_path / "out" / "extracted")).read(spark)
+    assert rows(table) == rows(extract_pages(pages))
+
+
+def test_vacuum_removes_unlisted_files_in_live_snap_dirs(spark, pages_dir,
+                                                        tmp_path):
+    """A file no snapshot lists, such as a failed task attempt's, is
+    invisible to reads and is deleted by ``vacuum()``."""
+    import shutil
+    out = str(tmp_path / "out")
+    info = run_extraction(spark, spark.read.parquet(pages_dir), out,
+                          num_partitions=2)
+    tbl = SnapshotTable(os.path.join(out, "extracted"))
+    listed = info["snapshot"]["files"]
+    stray = os.path.join(os.path.dirname(listed[0]), "part-00000-999.parquet")
+    shutil.copyfile(listed[0], stray)
+    n = info["snapshot"]["row_count"]
+    assert tbl.read(spark).count() == n
+    assert tbl.committed_keys(spark, "url").count() == n
+    assert stray not in tbl.data_files()
+    assert tbl.vacuum() == [stray]
+    assert not os.path.exists(stray)
+    assert tbl.data_files() == listed and tbl.read(spark).count() == n
+
+
+def test_mixed_writer_extracted_table(spark, pages_dir, tmp_path):
+    """A table with a snapshot Spark's writer committed (tables from
+    before the tasks wrote their own files) resumes and reads back as
+    one table with one schema."""
+    out = str(tmp_path / "out")
+    pages = spark.read.parquet(pages_dir)
+    tbl = SnapshotTable(os.path.join(out, "extracted"))
+    tbl.append(extract_pages(pages.orderBy("url").limit(50)), "spark-written")
+    schema = tbl.table_schema()
+    info = run_extraction(spark, pages, out, resume=True)
+    n_urls = pages.select("url").distinct().count()
+    assert info["snapshot"]["row_count"] == n_urls - 50
+    assert tbl.table_schema() == schema
+    assert [[tuple(c) for c in s["schema"]]
+            for s in tbl.snapshots()] == [schema, schema]
+    both = tbl.read(spark)
+    assert [f.name for f in both.schema.fields] == [
+        f.name for f in EXTRACTED_SCHEMA.fields]
+    assert both.count() == both.select("url").distinct().count() == n_urls
+    assert tbl.read_evolved(spark).count() == n_urls
 
 
 def test_heavy_hitter_detection_on_skewed_hosts(spark, pages_dir):
