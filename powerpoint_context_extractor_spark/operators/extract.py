@@ -12,14 +12,17 @@
   they are built and returns one summary row instead of the batches.
 - ``row_map`` is the generic one every other per-row Python step uses:
   a per-row function, batched over Arrow, 0..n output rows per input
-  row, after one ``_spread_small_input`` guard.
+  row.
+
+Both crossings spread a small input one way: ``_spread_small_input``.
 
 Scale notes (100 TB design):
-- map-only: no shuffle is *required*; ``repartition_for_extract`` is an
-  optional explicit hash(url) spread for when upstream file splits are
-  few or skewed. urls are unique, so hash(url) is uniform even when
-  hosts are Zipf-skewed — host skew matters for host-level *aggregates*
-  (see operators/textstats.host_stats_salted), not for this map.
+- map-only: no shuffle is *required*. ``_spread_small_input`` adds a
+  hash spread on the unique key (``url`` here) only when the input has
+  fewer parquet row groups than cores. urls are unique, so hash(url) is
+  uniform even when hosts are Zipf-skewed — host skew matters for
+  host-level *aggregates* (see operators/textstats.host_stats_salted),
+  not for this map.
 - the input projection is exactly (url, html, text): Catalyst prunes
   the parquet scan to those columns (F7).
 - J2 preference-merge (reference `notes/extractor.py:171-174`) runs
@@ -161,14 +164,6 @@ def _write_batches(out_dir, batches):
         schema=_summary_arrow_schema())
 
 
-def repartition_for_extract(df: DataFrame, num_partitions: int,
-                            key: str = "url") -> DataFrame:
-    """Explicit uniform spread by hash(key) (U5). Deterministic per row —
-    re-salting never changes per-url output (kernel is per-row pure)."""
-    return df.repartition(num_partitions,
-                          F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions)))
-
-
 def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Scale-adaptive parallelism guard (r8, guide §2.5 "input skew"):
     a parquet ROW GROUP is the minimum scan-task unit, so a file with
@@ -193,7 +188,7 @@ def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
         return df
     if not files or len(files) >= target:
         return df
-    from urllib.parse import urlparse
+    from urllib.parse import unquote, urlparse
     import pyarrow.parquet as pq
     groups = 0
     for uri in files:
@@ -203,7 +198,8 @@ def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
         if parsed.scheme not in ("file", "") or not uri.endswith(".parquet"):
             return df                     # remote/non-parquet: leave as-is
         try:
-            groups += pq.ParquetFile(parsed.path or uri).metadata.num_row_groups
+            groups += pq.ParquetFile(
+                unquote(parsed.path) or uri).metadata.num_row_groups
         except Exception:  # noqa: BLE001 — unreadable footer: leave as-is
             return df
     if groups >= target:
@@ -370,31 +366,30 @@ def extract_documents_utf16_nobom(docs: DataFrame) -> DataFrame:
     return _charset_extract(docs, _nobom_page)
 
 
-def _narrow(pages: DataFrame, num_partitions: int | None) -> DataFrame:
+def _narrow(pages: DataFrame) -> DataFrame:
+    """The kernel's input (url, html[, text]) of ``pages``, spread by
+    ``_spread_small_input`` on ``url``. Column pruning reaches the scan
+    (F7)."""
     cols = ["url", "html"] + (["text"] if "text" in pages.columns else [])
-    narrow = pages.select(*cols)  # column pruning reaches the scan (F7)
-    if num_partitions:
-        narrow = repartition_for_extract(narrow, num_partitions)
-    return narrow
+    return _spread_small_input(pages.select(*cols), "url")
 
 
-def extract_pages(pages: DataFrame,
-                  num_partitions: int | None = None) -> DataFrame:
+def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
     one ``mapInArrow`` crossing."""
-    return _narrow(pages, num_partitions).mapInArrow(
-        _kernel_batches_arrow, schema=EXTRACTED_SCHEMA)
+    return _narrow(pages).mapInArrow(_kernel_batches_arrow,
+                                     schema=EXTRACTED_SCHEMA)
 
 
-def write_extracted(pages: DataFrame, out_dir: str,
-                    num_partitions: int | None = None) -> DataFrame:
+def write_extracted(narrow: DataFrame, out_dir: str) -> DataFrame:
     """The ``extract_pages`` crossing with the parquet write inside the
-    task: when run, each non-empty task writes its extracted rows
-    (``EXTRACTED_SCHEMA``, ``table_io.parquet_writer`` config) to one
-    file in ``out_dir`` and returns one ``WRITE_SUMMARY_SCHEMA`` row
-    with its file name. No extracted row crosses back to the JVM.
-    ``out_dir`` must exist at the same path on every worker (see
-    ``table_io.TaskWrite``)."""
-    return _narrow(pages, num_partitions).mapInArrow(
-        functools.partial(_write_batches, out_dir),
-        schema=WRITE_SUMMARY_SCHEMA)
+    task, over ``narrow``: the frame ``_narrow`` returns, which may be
+    filtered further (``plans.flagship.run_extraction`` anti-joins the
+    committed urls after the spread). When run, each non-empty task
+    writes its extracted rows (``EXTRACTED_SCHEMA``,
+    ``table_io.parquet_writer`` config) to one file in ``out_dir`` and
+    returns one ``WRITE_SUMMARY_SCHEMA`` row with its file name. No
+    extracted row crosses back to the JVM. ``out_dir`` must exist at
+    the same path on every worker (see ``table_io.TaskWrite``)."""
+    return narrow.mapInArrow(functools.partial(_write_batches, out_dir),
+                             schema=WRITE_SUMMARY_SCHEMA)

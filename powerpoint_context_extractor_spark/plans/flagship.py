@@ -1,9 +1,10 @@
 """Flagship end-to-end extraction job (the reference's
 ``extract_pptx_content`` path, `pptx_extract.py:165-308`, as one lazy
-Spark plan): snapshot-table scan -> resume anti-join -> narrow
-projection -> hash(url) spread -> Arrow-batched kernel that writes its
-own parquet file per task -> snapshot commit -> per-partition lineage
-commit.
+Spark plan): pages scan -> narrow projection and small-input spread
+(``operators.extract._narrow``) -> resume anti-join -> Arrow-batched
+kernel that writes its own parquet file per task -> snapshot commit ->
+per-partition lineage commit. It is the one writer of an extracted
+snapshot: the streaming extract sinks call it once per micro-batch.
 
 The extraction is one Spark job whose tasks write the extracted rows
 into the new snapshot dir themselves (``operators.extract.
@@ -28,7 +29,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import EXTRACTED_SCHEMA, write_extracted
+from ..operators.extract import EXTRACTED_SCHEMA, _narrow, write_extracted
 from ..sources.table_io import SnapshotTable, TaskWrite
 
 LINEAGE_SCHEMA = pa.schema([
@@ -45,9 +46,7 @@ LINEAGE_SCHEMA = pa.schema([
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
-                   run_id: str | None = None,
-                   num_partitions: int | None = None,
-                   resume: bool = True) -> dict:
+                   run_id: str | None = None, resume: bool = True) -> dict:
     """Execute one extraction batch; returns commit info.
 
     Resume semantics (U3, replacing the reference's "rerun everything"):
@@ -66,6 +65,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
     files (``row_count`` 0) and no lineage snapshot (``lineage`` is
     None).
 
+    The spread (``_spread_small_input``) is decided on ``pages`` before
+    the anti-join: the anti-joined frame's input files also include the
+    committed snapshot's, which would hide a small input.
+
     The tasks write into the snapshot dir under ``out_root``, so every
     Python worker must see ``out_root`` at the same path as the driver:
     local mode or a shared filesystem (see ``table_io.TaskWrite``).
@@ -74,6 +77,7 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
     extracted_tbl = SnapshotTable(os.path.join(out_root, "extracted"))
     lineage_tbl = SnapshotTable(os.path.join(out_root, "lineage"))
 
+    pages = _narrow(pages)
     if resume:
         pages = extracted_tbl.without_committed(pages, "url")
 
@@ -82,7 +86,7 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
 
     def write(out_dir: str) -> list:
         parts.extend(sorted(write_extracted(
-            pages, os.path.abspath(out_dir), num_partitions).collect()))
+            pages, os.path.abspath(out_dir)).collect()))
         return [os.path.join(out_dir, p.file) for p in parts]
 
     snap = extracted_tbl.append(TaskWrite(EXTRACTED_SCHEMA, write), run_id)
@@ -111,39 +115,17 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_root: str,
             "wall_ms": wall_ms}
 
 
-def write_pages_table(spark: SparkSession, rows_iter, out_dir: str,
-                      num_partitions: int = 8) -> int:
-    """Materialize a pages parquet dataset from corpus rows (driver-side
-    generator -> distributed parquet). Used by tests/bench only; real
-    deployments read an existing Iceberg/WARC-derived table."""
-    import pyspark.sql.types as T
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ])
-    rows = list(rows_iter)
-    df = spark.createDataFrame(rows, schema=schema).repartition(num_partitions)
-    df.write.mode("overwrite").parquet(out_dir)
-    return len(rows)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description="flagship extraction job")
     ap.add_argument("--pages", required=True, help="pages parquet dir")
     ap.add_argument("--out", required=True, help="output table root")
-    ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
     from ..session import get_spark
     spark = get_spark("pcx-flagship", master=args.master)
     pages = spark.read.parquet(args.pages)
-    info = run_extraction(spark, pages, args.out,
-                          num_partitions=args.partitions,
-                          resume=not args.no_resume)
+    info = run_extraction(spark, pages, args.out, resume=not args.no_resume)
     print(info)
 
 

@@ -3,18 +3,19 @@
 The reference is strictly batch (SURVEY.md §2.9); the target adds the
 natural streaming surface:
 
-* ``stream_extract``: file-source pages -> the SAME Arrow-batched
-  extraction kernel (mapInArrow works unchanged on streaming frames)
-  -> ``foreachBatch`` committing into the snapshot table with the
-  resume anti-join, so replayed micro-batches stay exactly-once
-  (at-least-once delivery + idempotent commit).
+* ``stream_extract``: file-source pages -> ``foreachBatch`` that runs
+  ``plans.flagship.run_extraction`` on each micro-batch: the resume
+  anti-join before the kernel, task-written snapshot files and one
+  lineage snapshot per epoch, so a replayed micro-batch runs no kernel
+  on committed pages and stays exactly-once (at-least-once delivery +
+  idempotent commit).
 * ``windowed_event_counts``: watermark + tumbling-window agg — the
   deterministic demo (complete output over a bounded backlog equals
   the batch date_trunc aggregation, which is its DuckDB oracle).
 * ``sessionize``: applyInPandasWithState custom stateful operator —
   gap-based sessions per user.
 * ``stream_extract_warc``: .warc.gz files arriving in a directory ->
-  gzip-member record split -> kernel -> exactly-once snapshot commits
+  gzip-member record split -> the same per-epoch ``run_extraction``
   (the live Common-Crawl ingestion shape).
 * ``stream_windowed_counts_to_table`` / ``sessionize_to_table``: the
   production table-sink variants (append-mode watermarked windows;
@@ -32,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.extract import extract_pages, row_map
+from ..operators.extract import row_map
+from ..plans.flagship import run_extraction
 from ..sources.pagegen import PAGES_SCHEMA
 from ..sources.table_io import SnapshotTable
 
@@ -72,32 +74,33 @@ def _as_stream_dir(path: str) -> str:
     return d
 
 
-def _exactly_once_commit(table: SnapshotTable, key_col: str, run_id: str):
-    """``foreachBatch`` sink: append the micro-batch's rows whose
-    ``key_col`` is not committed yet, so a replayed epoch commits no row
-    twice (at-least-once delivery + idempotent commit)."""
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        table.append(table.without_committed(batch_df, key_col),
-                     run_id=f"{run_id}-epoch{epoch_id}")
-    return commit_batch
+def _extract_epochs(pages: DataFrame, out_root: str, checkpoint_dir: str,
+                    run_id: str) -> None:
+    """Drain the bounded page stream ``pages``, committing each
+    micro-batch with ``run_extraction`` under run id
+    ``<run_id>-epoch<epoch_id>``: extracted rows in
+    ``out_root/extracted``, lineage in ``out_root/lineage``."""
+    def commit_batch(batch: DataFrame, epoch_id: int) -> None:
+        run_extraction(batch.sparkSession, batch, out_root,
+                       run_id=f"{run_id}-epoch{epoch_id}")
+
+    q = (pages.writeStream
+         .foreachBatch(commit_batch)
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
 
 
 def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
                    checkpoint_dir: str, run_id: str = "stream") -> None:
     """Ingest a pages directory as a bounded stream (availableNow) and
-    commit extraction output per micro-batch, exactly-once."""
-    table = SnapshotTable(os.path.join(out_root, "extracted"))
+    commit extraction output per micro-batch through ``run_extraction``,
+    exactly-once."""
     stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", 4)
               .parquet(pages_dir))
-    extracted = extract_pages(stream)
-
-    q = (extracted.writeStream
-         .foreachBatch(_exactly_once_commit(table, "url", run_id))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _extract_epochs(stream, out_root, checkpoint_dir, run_id)
 
 
 def windowed_event_counts(spark: SparkSession, events_dir: str,
@@ -172,7 +175,7 @@ def stream_windowed_counts_to_table(spark: SparkSession, events_parquet: str,
     """PRODUCTION shape of the windowed agg (r3 VERDICT #5): append-mode
     watermarked window counts committed per micro-batch into a snapshot
     table via foreachBatch, exactly-once through the committed-keys
-    anti-join (same pattern as stream_extract) — no complete-mode memory
+    anti-join (``SnapshotTable.without_committed``) — no complete-mode memory
     sink, no full-result funnel through the driver.
 
     Append-mode semantics this encodes (pinned empirically + by pytest):
@@ -201,8 +204,13 @@ def stream_windowed_counts_to_table(spark: SparkSession, events_parquet: str,
                    F.concat_ws("|", F.col("w.start").cast("string"),
                                F.col("event_type")).alias("win_key")))
 
+    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # a replayed epoch commits no window key twice
+        table.append(table.without_committed(batch_df, "win_key"),
+                     run_id=f"{run_id}-epoch{epoch_id}")
+
     q = (agg.writeStream.outputMode("append")
-         .foreachBatch(_exactly_once_commit(table, "win_key", run_id))
+         .foreachBatch(commit_batch)
          .option("checkpointLocation", os.path.join(out_root, "ck"))
          .trigger(availableNow=True)
          .start())
@@ -348,13 +356,12 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
     """Live Common-Crawl ingestion shape: .warc.gz files arriving in a
     directory are streamed (binaryFile source, one file per
     micro-batch = the file-level parallelism unit real CC jobs use),
-    records split per gzip member, HTTP envelopes stripped, the SAME
-    Arrow-batched kernel extracts, and each micro-batch commits into a
-    snapshot table behind the committed-url anti-join — exactly-once
-    under replay, identical output to the batch read_warc path (pinned
-    by pytest). Returns the committed table as a DataFrame."""
+    records split per gzip member, HTTP envelopes stripped, and each
+    micro-batch of (url, html) pages is committed by ``run_extraction``
+    — exactly-once under replay, identical output to the batch
+    read_warc path (pinned by pytest). Returns the committed extracted
+    table as a DataFrame."""
     from ..sources.warc import WARC_PAGE_SCHEMA, _warc_pages
-    table = SnapshotTable(os.path.join(out_root, "extracted"))
     bin_schema = T.StructType([
         T.StructField("path", T.StringType(), True),
         T.StructField("modificationTime", T.TimestampType(), True),
@@ -368,15 +375,9 @@ def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,
               .load(warc_dir)
               .select("content"))
     pages = row_map(stream, _warc_pages, WARC_PAGE_SCHEMA)
-    extracted = extract_pages(pages.select("url", "html"))
-
-    q = (extracted.writeStream
-         .foreachBatch(_exactly_once_commit(table, "url", run_id))
-         .option("checkpointLocation", os.path.join(out_root, "ck"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return table.read(spark)
+    _extract_epochs(pages.select("url", "html"), out_root,
+                    os.path.join(out_root, "ck"), run_id)
+    return SnapshotTable(os.path.join(out_root, "extracted")).read(spark)
 
 
 def stream_interval_join(spark: SparkSession, events_parquet: str,

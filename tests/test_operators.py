@@ -3702,23 +3702,36 @@ def test_row_map_fan_out_nulls_and_empty_partitions(spark):
 
 
 def test_row_map_spreads_single_row_group_parquet(spark, tmp_path):
-    """``row_map`` applies ``_spread_small_input`` on the first column:
+    """``row_map`` and ``extract_pages`` apply ``_spread_small_input``:
     a one-file, single-row-group parquet input (one scan task) runs
-    over ``defaultParallelism`` partitions."""
+    over ``defaultParallelism`` partitions, also when the file's URI
+    percent-encodes its path."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark import TaskContext
 
-    from powerpoint_context_extractor_spark.operators.extract import row_map
-    path = str(tmp_path / "one.parquet")
-    pq.write_table(pa.table({"doc_id": list(range(64))}), path)
-    assert pq.ParquetFile(path).metadata.num_row_groups == 1
-    out = row_map(spark.read.parquet(path),
-                  lambda d: [(d, TaskContext.get().partitionId())],
-                  "doc_id long, pid long")
+    from powerpoint_context_extractor_spark.operators.extract import (
+        extract_pages, row_map,
+    )
     target = spark.sparkContext.defaultParallelism
     assert target > 1
-    assert out.rdd.getNumPartitions() == target
-    got = out.collect()
-    assert sorted(r["doc_id"] for r in got) == list(range(64))
-    assert len({r["pid"] for r in got}) > 1
+    for sub in ("plain", "with space"):
+        (tmp_path / sub).mkdir()
+        path = str(tmp_path / sub / "one.parquet")
+        pq.write_table(pa.table({
+            "doc_id": list(range(64)),
+            "url": [f"https://h.example/{i}" for i in range(64)],
+            "html": [b"<p>x</p>"] * 64}), path)
+        assert pq.ParquetFile(path).metadata.num_row_groups == 1
+        one = spark.read.parquet(path)
+        out = row_map(one.select("doc_id"),
+                      lambda d: [(d, TaskContext.get().partitionId())],
+                      "doc_id long, pid long")
+        assert out.rdd.getNumPartitions() == target, sub
+        got = out.collect()
+        assert sorted(r["doc_id"] for r in got) == list(range(64))
+        assert len({r["pid"] for r in got}) > 1, sub
+        extracted = extract_pages(one)
+        assert extracted.rdd.getNumPartitions() == target, sub
+        pids = {r["partition_id"] for r in extracted.collect()}
+        assert len(pids) > 1, sub

@@ -12,10 +12,10 @@ from powerpoint_context_extractor_spark.kernel import extract_document
 from powerpoint_context_extractor_spark.operators.extract import (
     EXTRACTED_SCHEMA, extract_pages,
 )
-from powerpoint_context_extractor_spark.plans.flagship import (
-    run_extraction, write_pages_table,
-)
+from powerpoint_context_extractor_spark.plans.flagship import run_extraction
 from powerpoint_context_extractor_spark.sources.table_io import SnapshotTable
+
+from .conftest import write_pages_table
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +28,8 @@ def pages_dir(spark, tmp_path_factory):
 
 def test_spark_matches_kernel_byte_identical(spark, pages_dir):
     pages = spark.read.parquet(pages_dir)
-    got = {r["url"]: r for r in extract_pages(pages, num_partitions=5).collect()}
+    got = {r["url"]: r
+           for r in extract_pages(pages.repartition(5, "url")).collect()}
     rows = {r["url"]: r for r in pages.select("url", "html", "text").collect()}
     assert set(got) == set(rows)
     for url, src in rows.items():
@@ -91,11 +92,11 @@ def test_run_extraction_lineage_reconciles(spark, pages_dir, tmp_path):
     pages = spark.read.parquet(pages_dir)
     n_input = pages.count()
     resumed = str(tmp_path / "resumed")
-    run_extraction(spark, pages.limit(120), resumed, num_partitions=3)
+    run_extraction(spark, pages.limit(120).repartition(3, "url"), resumed)
     runs = {
         "plain": run_extraction(spark, pages, str(tmp_path / "plain")),
-        "three": run_extraction(spark, pages, str(tmp_path / "three"),
-                                num_partitions=3),
+        "three": run_extraction(spark, pages.repartition(3, "url"),
+                                str(tmp_path / "three")),
         "resume": run_extraction(spark, pages, resumed),
     }
     for shape, info in runs.items():
@@ -140,8 +141,7 @@ def test_run_extraction_refuses_a_short_tally(spark, pages_dir, tmp_path,
     monkeypatch.setattr(table_io, "_footer_row_count", one_extra_row)
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="lineage summaries"):
-        run_extraction(spark, spark.read.parquet(pages_dir), out,
-                       num_partitions=3)
+        run_extraction(spark, spark.read.parquet(pages_dir), out)
     assert inflated
     assert not os.path.exists(os.path.join(out, "lineage", MANIFEST))
 
@@ -182,19 +182,66 @@ def test_run_extraction_spark_jobs(spark, pages_dir, tmp_path):
     assert n == 2
 
 
+def test_run_extraction_spreads_a_single_row_group_input(spark, pages_dir,
+                                                         tmp_path):
+    """A one-file, one-row-group input is spread over several tasks
+    even when resume anti-joins it against a table of more committed
+    files than cores: the spread is decided on the pages scan, before
+    the anti-join adds the committed files to the input."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    out = str(tmp_path / "out")
+    base = run_extraction(
+        spark, spark.read.parquet(pages_dir).repartition(6, "url"), out)
+    assert len(base["snapshot"]["files"]) >= 4
+    path = str(tmp_path / "single.parquet")
+    rows = [dict(r, url=r["url"] + "-single")
+            for r in corpus.generate_pages_rows(60, seed=9)]
+    pq.write_table(pa.Table.from_pylist(rows), path)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    info = run_extraction(spark, spark.read.parquet(path), out, resume=True)
+    assert info["snapshot"]["row_count"] == 60
+    assert len(_lineage_by_partition(spark, info)) >= 2
+    tbl = SnapshotTable(os.path.join(out, "extracted")).read(spark)
+    n = base["snapshot"]["row_count"] + 60
+    assert tbl.count() == tbl.select("url").distinct().count() == n
+
+
+def test_flagship_cli(spark, tmp_path, monkeypatch):
+    """``plans/flagship.py``'s ``main``: a resumed rerun commits no row,
+    ``--no-resume`` commits every page again, and ``--partitions`` is
+    rejected: the input spread is ``_spread_small_input``'s alone."""
+    import sys
+
+    from powerpoint_context_extractor_spark.plans import flagship
+    pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
+    write_pages_table(spark, corpus.generate_pages_rows(20, seed=3), pages, 2)
+    argv = ["flagship", "--pages", pages, "--out", out,
+            "--master", spark.sparkContext.master]
+    for extra in ([], [], ["--no-resume"]):
+        monkeypatch.setattr(sys, "argv", argv + extra)
+        flagship.main()
+    assert [s["row_count"] for s in SnapshotTable(
+        os.path.join(out, "extracted")).snapshots()] == [20, 0, 20]
+    monkeypatch.setattr(sys, "argv", argv + ["--partitions", "3"])
+    with pytest.raises(SystemExit) as exc:
+        flagship.main()
+    assert exc.value.code == 2
+
+
 def test_resume_exactly_once(spark, pages_dir, tmp_path):
     out = str(tmp_path / "out")
-    pages = spark.read.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir).repartition(3, "url")
     first = pages.limit(120)
-    run_extraction(spark, first, out, num_partitions=3)
+    run_extraction(spark, first, out)
     # second run over the FULL input resumes: only missing urls processed
-    info2 = run_extraction(spark, pages, out, num_partitions=3)
+    info2 = run_extraction(spark, pages, out)
     tbl = SnapshotTable(os.path.join(out, "extracted")).read(spark)
     assert tbl.count() == pages.count()
     assert tbl.select("url").distinct().count() == pages.count()  # exactly-once
     assert info2["snapshot"]["row_count"] == pages.count() - 120
     # idempotent third run: nothing left to do
-    info3 = run_extraction(spark, pages, out, num_partitions=3)
+    info3 = run_extraction(spark, pages, out)
     assert info3["snapshot"]["row_count"] == 0
     # a run with nothing new commits a snapshot with no files, and no
     # lineage snapshot
@@ -215,7 +262,7 @@ def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path,
     vacuum() reclaims the orphan."""
     out = str(tmp_path / "out")
     ext_root = os.path.join(out, "extracted")
-    pages = spark.read.parquet(pages_dir)
+    pages = spark.read.parquet(pages_dir).repartition(2, "url")
     real_commit = SnapshotTable._commit
     failed = []
 
@@ -227,14 +274,14 @@ def test_uncommitted_snapshot_dir_is_invisible(spark, pages_dir, tmp_path,
 
     monkeypatch.setattr(SnapshotTable, "_commit", crash_once)
     with pytest.raises(OSError, match="killed before the manifest append"):
-        run_extraction(spark, pages, out, num_partitions=2)
+        run_extraction(spark, pages, out)
     orphan = os.path.join(ext_root, f"snap-{failed[0]['snapshot_id']}")
     assert os.path.isdir(orphan) and failed[0]["row_count"] > 0
     assert SnapshotTable(os.path.join(out, "lineage")).snapshots() == []
     assert SnapshotTable(ext_root).read(spark) is None
     # the resumed rerun sees no committed url: it redoes exactly the
     # failed run's urls, each once
-    info = run_extraction(spark, pages, out, num_partitions=2)
+    info = run_extraction(spark, pages, out)
     n_urls = pages.select("url").distinct().count()
     assert info["snapshot"]["row_count"] == failed[0]["row_count"] == n_urls
     tbl = SnapshotTable(ext_root).read(spark)
@@ -257,8 +304,8 @@ def test_lineage_wall_ms_shows_the_slow_partition(spark, pages_dir,
                       T.StructField("html", T.BinaryType(), True),
                       T.StructField("text", T.StringType(), True)]))
     pages = spark.read.parquet(pages_dir).select("url", "html", "text")
-    info = run_extraction(spark, pages.unionByName(slow),
-                          str(tmp_path / "out"), num_partitions=3)
+    info = run_extraction(spark, pages.unionByName(slow).repartition(3, "url"),
+                          str(tmp_path / "out"))
     lineage = spark.read.parquet(*info["lineage"]["files"]).collect()
     slowest = max(lineage, key=lambda r: r["wall_ms"])
     extracted = spark.read.parquet(*info["snapshot"]["files"])
@@ -275,8 +322,8 @@ def test_task_written_snapshot_files(spark, pages_dir, tmp_path):
 
     import pyarrow.parquet as pq
     pages = spark.read.parquet(pages_dir)
-    info = run_extraction(spark, pages, str(tmp_path / "out"),
-                          num_partitions=3)
+    info = run_extraction(spark, pages.repartition(3, "url"),
+                          str(tmp_path / "out"))
     pids = {f: int(re.fullmatch(r"part-(\d{5})-\d+\.parquet",
                                 os.path.basename(f)).group(1))
             for f in info["snapshot"]["files"]}
@@ -315,8 +362,8 @@ def test_vacuum_removes_unlisted_files_in_live_snap_dirs(spark, pages_dir,
     invisible to reads and is deleted by ``vacuum()``."""
     import shutil
     out = str(tmp_path / "out")
-    info = run_extraction(spark, spark.read.parquet(pages_dir), out,
-                          num_partitions=2)
+    info = run_extraction(
+        spark, spark.read.parquet(pages_dir).repartition(2, "url"), out)
     tbl = SnapshotTable(os.path.join(out, "extracted"))
     listed = info["snapshot"]["files"]
     stray = os.path.join(os.path.dirname(listed[0]), "part-00000-999.parquet")
@@ -368,10 +415,10 @@ def test_salt_and_order_invariance(spark, pages_dir):
     (FIXTURES.md §5: order independence + salt invariance)."""
     pages = spark.read.parquet(pages_dir)
     a = {r["url"]: (r["text"], r["n_blocks"], r["error"])
-         for r in extract_pages(pages, num_partitions=2).collect()}
+         for r in extract_pages(pages.repartition(2, "url")).collect()}
     shuffled = pages.orderBy(F.reverse(F.col("url")))
     b = {r["url"]: (r["text"], r["n_blocks"], r["error"])
-         for r in extract_pages(shuffled, num_partitions=7).collect()}
+         for r in extract_pages(shuffled.repartition(7, "url")).collect()}
     assert a == b
 
 

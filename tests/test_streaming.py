@@ -7,11 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from powerpoint_context_extractor_spark import corpus
-from powerpoint_context_extractor_spark.plans.flagship import write_pages_table
 from powerpoint_context_extractor_spark.sources.table_io import SnapshotTable
 from powerpoint_context_extractor_spark.streaming.ingest import (
     SESSION_GAP_S, sessionize, stream_extract, windowed_event_counts,
 )
+
+from .conftest import write_pages_table
 
 
 @pytest.fixture(scope="module")
@@ -22,17 +23,30 @@ def pages_dir(spark, tmp_path_factory):
 
 
 def test_stream_extract_exactly_once(spark, pages_dir, tmp_path):
+    """Each micro-batch commits through ``run_extraction``: task-written
+    files, lineage per epoch, and a replay that runs no kernel on the
+    committed pages, so it commits no lineage row."""
+    import re
     out = str(tmp_path / "out")
     cp = str(tmp_path / "cp")
+    extracted = SnapshotTable(os.path.join(out, "extracted"))
+    lineage = SnapshotTable(os.path.join(out, "lineage"))
     stream_extract(spark, pages_dir, out, cp)
-    tbl = SnapshotTable(os.path.join(out, "extracted")).read(spark)
+    tbl = extracted.read(spark)
     assert tbl.count() == 120
     assert tbl.select("url").distinct().count() == 120
+    lineage_snaps = lineage.snapshots()
+    assert lineage_snaps
     # restart with a FRESH checkpoint (worst case: full replay) —
     # resume anti-join keeps output exactly-once
     stream_extract(spark, pages_dir, out, str(tmp_path / "cp2"))
-    tbl2 = SnapshotTable(os.path.join(out, "extracted")).read(spark)
+    tbl2 = extracted.read(spark)
     assert tbl2.count() == 120
+    assert lineage.snapshots() == lineage_snaps
+    assert lineage.read(spark).agg(F.sum("row_count")).first()[0] == 120
+    for f in extracted.data_files():
+        assert re.fullmatch(r"part-\d{5}-\d+\.parquet",
+                            os.path.basename(f)), f
 
 
 def test_stream_matches_batch_extraction(spark, pages_dir, tmp_path):

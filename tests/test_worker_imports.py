@@ -80,7 +80,7 @@ def test_python_tasks_start_without_zip_importers(spark):
     pages = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
                                   "url string, html binary")
     # more tasks than cores, so every reused worker runs the package
-    assert extract_pages(pages, num_partitions=16).count() == len(rows)
+    assert extract_pages(pages.repartition(16, "url")).count() == len(rows)
 
     def zip_importers_at_task_start(batches):
         import sys
