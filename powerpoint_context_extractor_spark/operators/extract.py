@@ -1,4 +1,4 @@
-"""The two Python crossings, both ``mapInArrow`` with no pandas layer.
+"""The Python crossings, all ``mapInArrow`` with no pandas layer.
 
 - ``extract_pages`` is the hot one: the Spark re-expression of the
   reference's whole extraction dataflow (the notes/animations/slides
@@ -10,19 +10,24 @@
   ``write_extracted`` is the same crossing with the sink inside the
   task: each task writes its output batches to one parquet file where
   they are built and returns one summary row instead of the batches.
-- ``row_map`` is the generic one every other per-row Python step uses:
-  a per-row function, batched over Arrow, 0..n output rows per input
-  row.
+- ``partition_map`` is the generic one every other Python step uses:
+  a function over one task's rows, read across its Arrow batches in
+  partition order, yielding 0..n output rows. Running counters
+  (``sampling``) and the file sinks
+  (``sources/artifact_sink.write_files``) use it as is.
+- ``row_map`` is ``partition_map`` per row, after the input spread:
+  a per-row function, 0..n output rows per input row.
 
-Both crossings spread a small input one way: ``_spread_small_input``.
+``extract_pages`` and ``row_map`` spread a small input one way:
+``_spread_small_input``; ``partition_map`` never spreads.
 
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*. ``_spread_small_input`` adds a
   hash spread on the unique key (``url`` here) only when the input has
-  fewer parquet row groups than cores. urls are unique, so hash(url) is
-  uniform even when hosts are Zipf-skewed — host skew matters for
-  host-level *aggregates* (see operators/textstats.host_stats_salted),
-  not for this map.
+  fewer parquet row groups, or plans fewer scan splits, than cores.
+  urls are unique, so hash(url) is uniform even when hosts are
+  Zipf-skewed — host skew matters for host-level *aggregates* (see
+  operators/textstats.host_stats_salted), not for this map.
 - the input projection is exactly (url, html, text): Catalyst prunes
   the parquet scan to those columns (F7).
 - J2 preference-merge (reference `notes/extractor.py:171-174`) runs
@@ -166,71 +171,108 @@ def _write_batches(out_dir, batches):
 
 def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Scale-adaptive parallelism guard (r8, guide §2.5 "input skew"):
-    a parquet ROW GROUP is the minimum scan-task unit, so a file with
-    one giant row group scans as one working task no matter how small
-    the byte-split size is configured — ``getNumPartitions()`` still
-    reports many (empty) splits, which is why this checks footers, not
-    splits. Measured: flagship_extract at sf1.0 ran its whole 50k-doc
-    kernel map behind one core (9.0s for ~1.3s of spread kernel work).
+    hash-spread the rows of a local parquet scan over
+    ``defaultParallelism`` partitions by the unique ``key`` when the
+    scan would run on fewer tasks than cores. That happens two ways:
 
-    Detection is metadata-only and early-exits: if the scan has >=
-    cores input files there is nothing to do (each file is >= 1 row
-    group); otherwise read at most ``cores`` local parquet footers.
-    When under-parallel, hash-spread rows by the unique ``key`` —
-    deterministic per row (guide §2.5: never rand-derived), so task
-    retries are stable and the row set is unchanged. On a real corpus
-    the input has >= cores row groups and this is a no-op, keeping the
-    map-only no-payload-shuffle invariant."""
+    - a parquet ROW GROUP is the minimum scan-task unit, so a file with
+      one giant row group scans as one working task however many
+      (empty) byte splits it plans. With fewer files than cores, their
+      (fewer than ``cores``) local footers are read to count row
+      groups. Measured: flagship_extract at sf1.0 ran its whole 50k-doc
+      kernel map behind one core (9.0s for ~1.3s of spread kernel
+      work);
+    - Spark packs several small files into one scan split
+      (``spark.sql.files.openCostInBytes``), so a scan of more files
+      than cores can still plan fewer splits than cores. The planned
+      splits are counted only on a frame with no Exchange: there the
+      count is metadata-only, while under AQE an Exchange would run
+      its stages.
+
+    The spread is deterministic per row (guide §2.5: never
+    rand-derived), so task retries are stable and the row set is
+    unchanged. Non-file, remote and non-parquet inputs are left as
+    they are. On a real corpus every check passes and this is a no-op,
+    keeping the map-only no-payload-shuffle invariant."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — non-file source: leave as-is
         return df
-    if not files or len(files) >= target:
-        return df
     from urllib.parse import unquote, urlparse
-    import pyarrow.parquet as pq
-    groups = 0
+    paths = []
     for uri in files:
-        if groups >= target:
-            break
         parsed = urlparse(uri)
         if parsed.scheme not in ("file", "") or not uri.endswith(".parquet"):
             return df                     # remote/non-parquet: leave as-is
+        paths.append(unquote(parsed.path) or uri)
+    if not paths:
+        return df
+    if len(paths) < target:
+        import pyarrow.parquet as pq
         try:
-            groups += pq.ParquetFile(
-                unquote(parsed.path) or uri).metadata.num_row_groups
+            groups = sum(pq.ParquetFile(path).metadata.num_row_groups
+                         for path in paths)
         except Exception:  # noqa: BLE001 — unreadable footer: leave as-is
             return df
-    if groups >= target:
+        if groups < target:
+            return df.repartition(target, F.col(key))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan or df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, F.col(key))
 
 
-def row_map(df: DataFrame, fn, schema) -> DataFrame:
-    """The generic Python crossing: ``fn(*row)`` runs once per input
-    row, and every tuple it yields is one output row, so an input row
-    gives 0, 1 or n outputs. ``schema`` is a ``StructType`` or a DDL
-    string. Batches cross through ``mapInArrow`` with no pandas on
-    either side, and the input is first spread by
-    ``_spread_small_input`` on its first column."""
+def partition_map(df: DataFrame, fn, schema) -> DataFrame:
+    """The generic Python crossing, per task: ``fn(rows)`` gets the
+    task's rows as tuples, in partition order across all of its Arrow
+    batches, and every tuple it yields is one output row. ``schema`` is
+    a ``StructType`` or a DDL string. Batches cross through
+    ``mapInArrow`` with no pandas on either side; the outputs ``fn``
+    yields while it reads one input batch leave as one Arrow batch, so
+    output batches are bounded as the input's are. The input is never
+    spread: the caller chose its partitioning."""
     from pyspark.sql.pandas.types import to_arrow_schema
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
     arrow_schema = to_arrow_schema(schema)
 
-    def _batches(batches):
+    def _batch(rows):
         import pyarrow as pa
-        for rb in batches:
-            rows = [out for row in zip(*(c.to_pylist() for c in rb.columns))
-                    for out in fn(*row)]
-            cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema)
+        cols = zip(*rows)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema)
 
-    return _spread_small_input(df, df.columns[0]).mapInArrow(
-        _batches, schema=schema)
+    def _batches(batches):
+        turned = [False]                  # fn has read into a new batch
+
+        def _rows():
+            for rb in batches:
+                turned[0] = True
+                yield from zip(*(c.to_pylist() for c in rb.columns))
+
+        out = []
+        for row in fn(_rows()):
+            if turned[0] and out:
+                yield _batch(out)
+                out = []
+            turned[0] = False
+            out.append(row)
+        if out:
+            yield _batch(out)
+
+    return df.mapInArrow(_batches, schema=schema)
+
+
+def row_map(df: DataFrame, fn, schema) -> DataFrame:
+    """``partition_map`` per row: ``fn(*row)`` runs once per input row,
+    and every tuple it yields is one output row, so an input row gives
+    0, 1 or n outputs. The input is first spread by
+    ``_spread_small_input`` on its first column."""
+    return partition_map(_spread_small_input(df, df.columns[0]),
+                         lambda rows: (out for row in rows
+                                       for out in fn(*row)), schema)
 
 
 DOC_EXTRACT_SCHEMA = T.StructType([

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import portable_hash
+from .extract import partition_map
 
 
 def hash_split(docs: DataFrame, id_col: str = "doc_id",
@@ -285,13 +286,12 @@ def global_order_index(docs: DataFrame, order_cols: list,
     the order key (one skew-sampled shuffle; Spark's range sampler
     places boundaries, but the FINAL index is boundary-independent
     because ranges are disjoint and locally sorted); (2) local ranks
-    are assigned map-side inside Arrow batches (a running counter per
-    partition — no window, no second shuffle); (3) per-partition
+    are assigned map-side by one ``partition_map`` (a running counter
+    per partition — no window, no second shuffle); (3) per-partition
     counts (a tiny groupBy) turn into offsets with a window over the
     n_parts-row table, broadcast back. Requires the order key to be
     unique — pass the id as the last order column. Emits
     (id, global_idx)."""
-    import pandas as pd
     if not order_cols:
         raise ValueError("global_order_index: order_cols required")
     ranged = (docs.repartitionByRange(n_parts, *[F.col(c) for c in
@@ -299,20 +299,13 @@ def global_order_index(docs: DataFrame, order_cols: list,
               .sortWithinPartitions(*order_cols)
               .withColumn("_pid", F.spark_partition_id()))
 
-    def _local_rank(batches):
-        rank = 0                 # running counter across the
-        for pdf in batches:      # partition's Arrow batches
-            n = len(pdf)
-            yield pd.DataFrame({
-                "_pid": pdf["_pid"],
-                "id": pdf["__id"],
-                "_lr": range(rank, rank + n)})
-            rank += n
+    def _local_rank(rows):       # a running counter over the task
+        for rank, (pid, id_) in enumerate(rows):
+            yield pid, id_, rank
 
-    keyed = ranged.withColumn("__id", F.col(id_col))
     id_type = docs.schema[id_col].dataType.simpleString()
-    local = keyed.mapInPandas(
-        _local_rank, schema=f"_pid int, id {id_type}, _lr long")
+    local = partition_map(ranged.select("_pid", id_col), _local_rank,
+                          f"_pid int, id {id_type}, _lr long")
     from pyspark.sql import Window as W
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
     offsets = (counts
@@ -335,13 +328,12 @@ def global_running_offset(docs: DataFrame, order_cols: list,
     ``offset`` is the sum of values over all rows strictly before it.
 
     Same scale shape: range-partition + local sort (one skew-sampled
-    shuffle), per-partition exclusive prefix sums map-side inside
-    Arrow batches (a running accumulator, no window), per-partition
+    shuffle), per-partition exclusive prefix sums map-side in one
+    ``partition_map`` (a running accumulator, no window), per-partition
     TOTALS turned into partition base offsets with a window over the
     n_parts-row table, broadcast back. The order key must be unique
     (pass the id as the last order column). Emits (id, value, offset).
     """
-    import pandas as pd
     if not order_cols:
         raise ValueError("global_running_offset: order_cols required")
     ranged = (docs.repartitionByRange(n_parts, *[F.col(c) for c in
@@ -349,26 +341,16 @@ def global_running_offset(docs: DataFrame, order_cols: list,
               .sortWithinPartitions(*order_cols)
               .withColumn("_pid", F.spark_partition_id()))
 
-    def _local_cumsum(batches):
-        acc = 0                  # running sum across the
-        for pdf in batches:      # partition's Arrow batches
-            vals = pdf["__v"].astype("int64").tolist()
-            offs = []
-            for v in vals:
-                offs.append(acc)
-                acc += v
-            yield pd.DataFrame({
-                "_pid": pdf["_pid"],
-                "id": pdf["__id"],
-                "v": vals,
-                "_lo": offs})
+    def _local_cumsum(rows):     # a running sum over the task
+        acc = 0
+        for pid, id_, v in rows:
+            yield pid, id_, v, acc
+            acc += v
 
-    keyed = (ranged.withColumn("__id", F.col(id_col))
-             .withColumn("__v", F.col(value_col).cast("long")))
     id_type = docs.schema[id_col].dataType.simpleString()
-    local = keyed.mapInPandas(
-        _local_cumsum,
-        schema=f"_pid int, id {id_type}, v long, _lo long")
+    local = partition_map(
+        ranged.select("_pid", id_col, F.col(value_col).cast("long")),
+        _local_cumsum, f"_pid int, id {id_type}, v long, _lo long")
     from pyspark.sql import Window as W
     totals = local.groupBy("_pid").agg(F.sum("v").alias("_t"))
     offsets = (totals

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import global_order_index
+
 
 def _as_double(col: F.Column) -> F.Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -301,8 +303,8 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     when early ids are similar); each iteration is one broadcast-
     assignment pass plus one (K x dim)-row aggregate collected to the
     driver — a driver loop over ITERATIONS, not rows. At cluster scale
-    Rank selection is a distributed range-partitioned sort +
-    ``zipWithIndex`` (per-partition offsets from one count job), NOT a
+    Rank selection is ``sampling.global_order_index`` (a distributed
+    range-partitioned sort + per-partition offsets), NOT a
     ``row_number`` window — an unpartitioned window collapses the whole
     table into one task, which dies at cluster scale; this path never
     moves more than the K seed ids to the driver.
@@ -312,11 +314,9 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     n = base.count()
     ranks = sorted({min(int(i * n / n_centroids), n - 1)
                     for i in range(n_centroids)})
-    rank_set = set(ranks)
-    seed_ids = (base.select("_id").sort("_id").rdd
-                .map(lambda r: r[0]).zipWithIndex()
-                .filter(lambda t: t[1] in rank_set)
-                .map(lambda t: t[0]).collect())
+    seed_ids = [r["_id"] for r in
+                global_order_index(base.select("_id"), ["_id"], id_col="_id")
+                .filter(F.col("global_idx").isin(ranks)).collect()]
     # ranks are increasing in id order, so ordering seeds by id equals
     # ordering them by rank (what the SQL oracle mirrors)
     cents = [list(r["vq"]) for r in

@@ -1,22 +1,57 @@
-"""Binary artifact sink (SURVEY.md §2 S6): write one payload file per
-row with deterministic zero-padded names — the reference saves each
-extracted slide image as ``slide_{n:03d}_img_{m}.{ext}``
+"""Executor-side file sinks (SURVEY.md §2 S6): ``write_files`` is the
+one task-side writer the WARC, WET, WebDataset and artifact sinks
+share, and ``write_artifacts`` writes one payload file per row with
+deterministic zero-padded names — the reference saves each extracted
+slide image as ``slide_{n:03d}_img_{m}.{ext}``
 (`pptx_extractor/slides/extractor.py:258-279,332-346`).
 
 Spark shape: the *manifest* (filename, size, sha) is a pure built-in
 projection (oracle-checkable); the actual byte write runs executor-side
-via ``foreachPartition`` so no payload ever funnels through the driver.
-Filenames are derived from the row key alone, so re-running a partition
-(task retry / resume) rewrites the same bytes to the same path —
-idempotent, like the snapshot commit protocol in table_io.
+in one ``partition_map`` pass, so no payload ever funnels through the
+driver. File names are derived from the rows alone and each file is
+moved into place only once complete, so re-running a task (retry /
+resume) rewrites the same bytes to the same path — idempotent, like the
+snapshot commit protocol in table_io.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.extract import partition_map
+
+
+def write_files(rows: DataFrame, out_dir: str, write) -> list:
+    """Write files under ``out_dir`` from ``rows``, whose first column
+    names the file each row goes to. A task must get all rows of a
+    file, together and in write order (callers co-locate and sort
+    them). ``write(f, file_rows)`` writes one file's rows, without the
+    name column, to the open binary file ``f``. Each file is written to
+    a hidden temp name and ``os.replace``d into place, so a failing
+    ``write`` fails the job and leaves no file. Returns one
+    ``(file, rows)`` Row per file written."""
+    os.makedirs(out_dir, exist_ok=True)
+
+    def _task(task_rows):
+        attempt = TaskContext.get().taskAttemptId()
+        for name, group in itertools.groupby(task_rows, lambda r: r[0]):
+            tmp = os.path.join(out_dir, f".{name}.{attempt}.tmp")
+            seen = itertools.count()      # zip draws it once per row read
+            with open(tmp, "wb") as f:
+                try:
+                    write(f, (row[1:] for row, _ in zip(group, seen)))
+                except BaseException:
+                    os.remove(tmp)
+                    raise
+            os.replace(tmp, os.path.join(out_dir, name))
+            yield name, next(seen)
+
+    return partition_map(rows, _task, "file string, rows long").collect()
 
 
 def artifact_manifest(df: DataFrame, id_col: str, payload_col: str,
@@ -37,30 +72,16 @@ def write_artifacts(df: DataFrame, out_dir: str, id_col: str = "doc_id",
                     ext: str = "bin") -> int:
     """Write each payload to ``out_dir/<prefix>_<id padded>.<ext>``.
 
-    Executor-side, one file per row, no driver funnel; returns the
-    number of files written. ``out_dir`` must be a path visible to all
+    Executor-side, one file per row (``id_col`` must be unique), no
+    driver funnel; returns the number of files written, counted from
+    the written files' rows. ``out_dir`` must be a path visible to all
     executors (shared FS / object store in a real cluster)."""
-    os.makedirs(out_dir, exist_ok=True)
     named = df.select(
         F.format_string(f"{prefix}_%0{width}d.{ext}", F.col(id_col))
-        .alias("filename"),
-        F.col(payload_col).alias("payload"))
+        .alias("file"), F.col(payload_col).alias("payload"))
 
-    acc = df.sparkSession.sparkContext.accumulator(0)
+    def _write(f, rows):
+        for (payload,) in rows:
+            f.write(payload or b"")
 
-    def _write_partition(rows):
-        n = 0
-        for r in rows:
-            tmp = os.path.join(out_dir, f".{r['filename']}.tmp")
-            with open(tmp, "wb") as f:
-                f.write(bytes(r["payload"]) if r["payload"] is not None
-                        else b"")
-            os.replace(tmp, os.path.join(out_dir, r["filename"]))
-            n += 1
-        acc.add(n)
-
-    named.foreachPartition(_write_partition)
-    # single pass over the data; writes are idempotent per path, so a
-    # retried task re-writes identical bytes (count may overshoot on
-    # retry — informational only)
-    return acc.value
+    return sum(r["rows"] for r in write_files(named, out_dir, _write))

@@ -1,7 +1,7 @@
 """Distributed deterministic pages-table generator.
 
-``spark.range(n)`` -> Arrow-batched ``mapInPandas`` -> one page row per
-index via ``corpus.page_row`` (a pure function of (i, seed)), so the
+``spark.range(n)`` -> ``row_map`` (the Arrow crossing) -> one page row
+per index via ``corpus.page_row`` (a pure function of (i, seed)), so the
 corpus materializes in parallel across all cores and — unlike a
 driver-side loop — would scale to any size on a real cluster. Output is
 the BASELINE.json ``input_hint`` schema.
@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..operators.extract import row_map
 
 PAGES_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -29,17 +30,14 @@ def generate_pages_df(spark: SparkSession, n: int, seed: int = 42,
                       num_partitions: int | None = None) -> DataFrame:
     from ..corpus import page_row
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [page_row(int(i), seed=seed, min_paras=min_paras,
-                             max_paras=max_paras) for i in pdf["id"]]
-            out = pd.DataFrame(rows)
-            out["warc_ts"] = pd.to_datetime(out["warc_ts"], utc=True)
-            yield out[["url", "warc_ts", "html", "text", "lang"]]
+    def _row(i):
+        page = page_row(i, seed=seed, min_paras=min_paras,
+                        max_paras=max_paras)
+        yield tuple(page[f] for f in PAGES_SCHEMA.names)
 
     parts = num_partitions or spark.sparkContext.defaultParallelism
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        gen, schema=PAGES_SCHEMA)
+    return row_map(spark.range(0, n, numPartitions=parts), _row,
+                   PAGES_SCHEMA)
 
 
 def ensure_pages_dataset(spark: SparkSession, out_dir: str, n: int,

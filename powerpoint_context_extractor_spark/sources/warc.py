@@ -25,11 +25,12 @@ from __future__ import annotations
 import zlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.extract import row_map
+from .artifact_sink import write_files
 
 CRLF = "\r\n"
 _GZ_MAGIC = b"\x1f\x8b"
@@ -53,35 +54,38 @@ def build_record(url: str, date: str, body: bytes,
     return head + http + b"\r\n\r\n"
 
 
+def _member(raw: bytes, gzip_records: bool) -> bytes:
+    """One record as written: its own gzip member (the .warc.gz
+    layout) when ``gzip_records``, else the raw bytes."""
+    if not gzip_records:
+        return raw
+    co = zlib.compressobj(6, zlib.DEFLATED, 31)  # 31 = gzip wrap
+    return co.compress(raw) + co.flush()
+
+
 def build_warc(records, gzip_records: bool = True) -> bytes:
     """records: iterable of (url, date, body_bytes[, rec_type]). Emits a
     complete WARC file; ``gzip_records`` writes one gzip member per
     record (the .warc.gz layout)."""
-    out = bytearray()
-    for rec in records:
-        url, date, body = rec[0], rec[1], rec[2]
-        rec_type = rec[3] if len(rec) > 3 else "response"
-        raw = build_record(url, date, body, rec_type)
-        if gzip_records:
-            co = zlib.compressobj(6, zlib.DEFLATED, 31)  # 31 = gzip wrap
-            out += co.compress(raw) + co.flush()
-        else:
-            out += raw
-    return bytes(out)
+    return b"".join(_member(build_record(*rec), gzip_records)
+                    for rec in records)
 
 
 # ---------------------------------------------------------------------------
 # parsing (source)
 # ---------------------------------------------------------------------------
 
-def _gzip_members(data: bytes, chunk_size: int = 1 << 20) -> Iterator[bytes]:
-    """Iterate the concatenated gzip members of a .warc.gz — each
-    record is its own member, so this IS record splitting.
+def _gzip_member_spans(data: bytes,
+                       chunk_size: int = 1 << 20) -> Iterator[tuple]:
+    """(offset, length, inflated bytes) of each concatenated gzip member
+    of a .warc.gz — each record is its own member, so this IS record
+    splitting, and an indexer records the real spans. A truncated or
+    corrupt tail ends the iteration.
 
     ADVICE r3: tracks an OFFSET into one buffer and feeds the
     decompressor bounded ``chunk_size`` slices, so per-member input
-    cost is O(member + chunk) — the old ``data = d.unused_data`` loop
-    re-copied the whole remaining tail per member, O(members x
+    cost is O(member + chunk) — a ``data = d.unused_data`` loop
+    re-copies the whole remaining tail per member, O(members x
     file_size) memcpy on a real ~1 GiB Common Crawl file with tens of
     thousands of records."""
     view = memoryview(data)
@@ -98,9 +102,10 @@ def _gzip_members(data: bytes, chunk_size: int = 1 << 20) -> Iterator[bytes]:
             return                        # truncated/corrupt tail: stop
         if not d.eof:
             return                        # incomplete final member
-        yield bytes(out)
         # consumed = everything fed minus the final chunk's leftover
-        off = min(pos, n) - len(d.unused_data)
+        end = min(pos, n) - len(d.unused_data)
+        yield off, end - off, bytes(out)
+        off = end
 
 
 def _parse_plain(data: bytes) -> Iterator[tuple]:
@@ -134,7 +139,7 @@ def iter_warc_records(data: bytes) -> Iterator[tuple]:
     """(headers, payload) per record; auto-detects .warc.gz (per-record
     gzip members) vs plain WARC."""
     if data[:2] == _GZ_MAGIC:
-        for member in _gzip_members(data):
+        for _off, _len, member in _gzip_member_spans(data):
             yield from _parse_plain(member)
     else:
         yield from _parse_plain(data)
@@ -187,36 +192,26 @@ def write_documents_as_warc(docs: DataFrame, out_dir: str,
     files under ``out_dir``. Deterministic: file index = doc_id %
     n_files, records ordered by doc_id, WARC-Date derived from doc_id —
     so the resulting corpus is a pure function of the input table."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
     ext = "warc.gz" if gzip_records else "warc"
+    part = F.col("doc_id") % n_files
+    rows = (docs.select(F.format_string(f"part-%05d.{ext}", part)
+                        .alias("file"), part.alias("part"),
+                        "doc_id", "text")
+            .repartition(n_files, "file")
+            .sortWithinPartitions("file", "doc_id"))
 
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write(f, file_rows):
         from .. import corpus
-        part = int(key[0])
-        pdf = pdf.sort_values("doc_id")
-        recs = []
-        for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
-            recs.append((f"doc://{doc_id}",
-                         f"2024-01-01T00:00:{doc_id % 60:02d}Z",
-                         corpus.page_for_document(doc_id, text)))
-        # warcinfo header record first, like real CC files
-        recs.insert(0, (f"file://{part}", "2024-01-01T00:00:00Z",
-                        b"software: spark-graft", "warcinfo"))
-        path = os.path.join(out_dir, f"part-{part:05d}.{ext}")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(build_warc(recs, gzip_records=gzip_records))
-        os.replace(tmp, path)
-        return pd.DataFrame({"part": [part], "n": [len(pdf)]})
+        for i, (index, doc_id, text) in enumerate(file_rows):
+            if i == 0:            # warcinfo record first, like real CC files
+                f.write(_member(build_record(
+                    f"file://{index}", "2024-01-01T00:00:00Z",
+                    b"software: spark-graft", "warcinfo"), gzip_records))
+            f.write(_member(build_record(
+                f"doc://{doc_id}", f"2024-01-01T00:00:{doc_id % 60:02d}Z",
+                corpus.page_for_document(doc_id, text)), gzip_records))
 
-    (docs.select("doc_id", "text")
-     .withColumn("part", (F.col("doc_id") % n_files).cast("int"))
-     .groupBy("part").applyInPandas(_write, schema="part int, n long")
-     .collect())
+    write_files(rows, out_dir, _write)
 
 
 # ---------------------------------------------------------------------------
@@ -271,38 +266,21 @@ def write_extracted_as_wet(extracted: DataFrame, out_dir: str,
     one gzip member per conversion record (the CC layout). File index
     = portable hash of url % n_files; records ordered by url within a
     file — the output corpus is a pure function of the input rows, and
-    the writer is one applyInPandas pass (no driver collect of data,
+    the writer is one ``write_files`` pass (no driver collect of data,
     only the per-file manifest)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    os.makedirs(out_dir, exist_ok=True)
     ext = "wet.warc.gz" if gzip_records else "wet.warc"
+    part = F.pmod(F.xxhash64("url"), F.lit(n_files))
+    rows = (extracted.select(F.format_string(f"part-%05d.{ext}", part)
+                             .alias("file"), "url", "text")
+            .repartition(n_files, "file")
+            .sortWithinPartitions("file", "url"))
 
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(key[0])
-        pdf = pdf.sort_values("url")
-        recs = bytearray()
-        for url, text in zip(pdf["url"].tolist(), pdf["text"].tolist()):
-            raw = build_wet_record(url, "2024-01-01T00:00:00Z", text or "")
-            if gzip_records:
-                co = zlib.compressobj(6, zlib.DEFLATED, 31)
-                recs += co.compress(raw) + co.flush()
-            else:
-                recs += raw
-        path = os.path.join(out_dir, f"part-{part:05d}.{ext}")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(bytes(recs))
-        os.replace(tmp, path)
-        return pd.DataFrame({"part": [part], "n": [len(pdf)]})
+    def _write(f, file_rows):
+        for url, text in file_rows:
+            f.write(_member(build_wet_record(
+                url, "2024-01-01T00:00:00Z", text or ""), gzip_records))
 
-    (extracted.select("url", "text")
-     .withColumn("part", F.pmod(F.xxhash64("url"), F.lit(n_files))
-                 .cast("int"))
-     .groupBy("part").applyInPandas(_write, schema="part int, n long")
-     .collect())
+    write_files(rows, out_dir, _write)
 
 
 # ---------------------------------------------------------------------------
@@ -322,29 +300,6 @@ CDX_SCHEMA = T.StructType([
     T.StructField("length", T.LongType()),
     T.StructField("filename", T.StringType()),
 ])
-
-
-def _gzip_member_spans(data: bytes,
-                       chunk_size: int = 1 << 20) -> Iterator[tuple]:
-    """Like ``_gzip_members`` but yields (offset, length, bytes) so an
-    indexer can record real spans. Same O(member + chunk) cost."""
-    view = memoryview(data)
-    off, n = 0, len(data)
-    while n - off >= 2 and bytes(view[off:off + 2]) == _GZ_MAGIC:
-        d = zlib.decompressobj(31)
-        out = bytearray()
-        pos = off
-        try:
-            while not d.eof and pos < n:
-                out += d.decompress(view[pos:pos + chunk_size])
-                pos += chunk_size
-        except zlib.error:
-            return
-        if not d.eof:
-            return
-        end = min(pos, n) - len(d.unused_data)
-        yield off, end - off, bytes(out)
-        off = end
 
 
 def index_warc_files(spark: SparkSession, path: str,
@@ -381,8 +336,6 @@ def write_cdx(idx: DataFrame, out_dir: str, n_files: int = 4) -> None:
     """CDX sink: space-separated lines range-partitioned and SORTED by
     urlkey (the property Wayback binary search relies on): file k
     holds a contiguous urlkey range, sorted within. One write pass."""
-    from pyspark.sql import functions as F
-
     line = F.concat_ws(" ", "urlkey", "rec_ts", "url", "rec_type",
                        "digest", F.col("offset").cast("string"),
                        F.col("length").cast("string"), "filename")
@@ -395,8 +348,6 @@ def write_cdx(idx: DataFrame, out_dir: str, n_files: int = 4) -> None:
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     """CDX source: parse the space-separated lines back to typed rows
     (urlkey/url contain no spaces by construction — URL-encoded)."""
-    from pyspark.sql import functions as F
-
     parts = F.split(F.col("value"), " ")
     return (spark.read.text(path)
             .select(*[parts.getItem(i).alias(f.name)

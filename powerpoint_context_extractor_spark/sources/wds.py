@@ -14,11 +14,12 @@ oracle's projection), members are written in key order within a shard
 with zeroed mtime/uid/gid, so every shard is byte-reproducible.
 
 Scale shape: one ``repartition(n_shards, shard)`` shuffle co-locates
-each shard's members, then ``foreachPartition`` streams members into
-tars with O(1) memory per member; the read side parallelizes the
-shard FILE list (one task per shard — the same layout WARC/WET
-readers use), so a 100 TB corpus reads with shard-count parallelism
-and zero driver funneling.
+each shard's members, then the task-side writer every file sink shares
+(``artifact_sink.write_files``) streams members into tars with O(1)
+memory per member and moves each tar into place only once complete;
+the read side parallelizes the shard FILE list (one task per shard —
+the same layout WARC/WET readers use), so a 100 TB corpus reads with
+shard-count parallelism and zero driver funneling.
 
 Reference analog: the per-artifact output files the reference writes
 (`pptx_extractor/slides/extractor.py:258-279`), lifted to the sharded
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import portable_hash
 from ..operators.extract import row_map
+from .artifact_sink import write_files
 
 _SHARD_NAME = re.compile(r"shard-(\d{5})\.tar")
 
@@ -48,41 +50,24 @@ def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
     ``<key:012d>.txt`` member per row. Returns n_shards."""
     if n_shards <= 0:
         raise ValueError("write_wds_shards: n_shards must be > 0")
-    os.makedirs(out_dir, exist_ok=True)
     shard = portable_hash(
         F.format_string("wds%d", F.col(key_col))) % n_shards
-    rows = (df.select(F.col(key_col).alias("k"),
-                      F.col(text_col).alias("t"),
-                      shard.alias("s"))
-            .repartition(n_shards, "s")
-            .sortWithinPartitions("s", "k"))
+    rows = (df.select(F.format_string("shard-%05d.tar", shard).alias("file"),
+                      F.col(key_col).alias("k"), F.col(text_col).alias("t"))
+            .repartition(n_shards, "file")
+            .sortWithinPartitions("file", "k"))
 
-    def _write_partition(it):
-        cur_id, tf, tmp = None, None, None
+    def _write(f, shard_rows):
+        with tarfile.open(fileobj=f, mode="w") as tf:
+            for key, text in shard_rows:
+                data = (text or "").encode("utf-8")
+                info = tarfile.TarInfo(name=f"{key:012d}.txt")
+                info.size = len(data)
+                info.mtime = 0
+                info.uid = info.gid = 0
+                tf.addfile(info, io.BytesIO(data))
 
-        def _close():
-            nonlocal tf, tmp
-            if tf is not None:
-                tf.close()
-                final = os.path.join(out_dir, f"shard-{cur_id:05d}.tar")
-                os.replace(tmp, final)
-                tf = tmp = None
-
-        for r in it:
-            if r["s"] != cur_id:
-                _close()
-                cur_id = r["s"]
-                tmp = os.path.join(out_dir, f".shard-{cur_id:05d}.tmp")
-                tf = tarfile.open(tmp, "w")
-            data = (r["t"] or "").encode("utf-8")
-            info = tarfile.TarInfo(name=f"{r['k']:012d}.txt")
-            info.size = len(data)
-            info.mtime = 0
-            info.uid = info.gid = 0
-            tf.addfile(info, io.BytesIO(data))
-        _close()
-
-    rows.foreachPartition(_write_partition)
+    write_files(rows, out_dir, _write)
     return n_shards
 
 

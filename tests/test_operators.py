@@ -3701,6 +3701,43 @@ def test_row_map_fan_out_nulls_and_empty_partitions(spark):
                    (3, 2, 4, [3.0, 1.0])]
 
 
+def test_partition_map_counter_spans_batches_and_restarts_per_task(spark):
+    """``partition_map``: with 7-row Arrow batches each task's rows cross
+    in several batches, yet ``fn`` reads them as one stream in partition
+    order, so a running counter continues across batches and restarts
+    in each task; the input keeps its partitioning (no spread)."""
+    from pyspark import TaskContext
+
+    from powerpoint_context_extractor_spark.operators.extract import (
+        partition_map,
+    )
+
+    def _count(rows):
+        pid = TaskContext.get().partitionId()
+        for n, (i,) in enumerate(rows):
+            yield i, n, pid
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        out = partition_map(spark.range(0, 100, numPartitions=3), _count,
+                            "i long, n long, pid int")
+        assert out.rdd.getNumPartitions() == 3
+        got = out.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(r["i"] for r in got) == list(range(100))
+    by_pid = {}
+    for r in got:
+        by_pid.setdefault(r["pid"], []).append((r["i"], r["n"]))
+    assert len(by_pid) == 3
+    for rows in by_pid.values():
+        assert len(rows) > 7                    # several input batches
+        first = min(i for i, _n in rows)
+        assert sorted(rows) == [(first + n, n) for n in range(len(rows))]
+
+
 def test_row_map_spreads_single_row_group_parquet(spark, tmp_path):
     """``row_map`` and ``extract_pages`` apply ``_spread_small_input``:
     a one-file, single-row-group parquet input (one scan task) runs

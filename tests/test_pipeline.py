@@ -158,10 +158,19 @@ def _jobs_in_group(spark, group, fn):
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_run_extraction_spark_jobs(spark, pages_dir, tmp_path):
-    """The extraction write is the only Spark job of a fresh run, and the
-    resume probe infers no schema."""
+def test_run_extraction_spark_jobs(spark, tmp_path):
+    """The extraction write is the only Spark job of a fresh run over an
+    input that needs no spread, and the resume probe infers no schema.
+    (``pages_dir`` packs into fewer scan splits than cores, so it is
+    spread: see ``test_run_extraction_spreads_packed_small_files``.)"""
+    pages_dir = str(tmp_path / "pages")
+    rows = (list(corpus.generate_pages_rows(300, seed=42))
+            + corpus.fixture_pages())
+    write_pages_table(spark, rows, pages_dir,
+                      num_partitions=spark.sparkContext.defaultParallelism)
     pages = spark.read.parquet(pages_dir)
+    assert (pages.rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
     out = str(tmp_path / "out")
     _, n = _jobs_in_group(spark, "pcx-fresh", lambda: run_extraction(
         spark, pages, out, resume=False))
@@ -179,6 +188,23 @@ def test_run_extraction_spark_jobs(spark, pages_dir, tmp_path):
     info, n = _jobs_in_group(spark, "pcx-resume", lambda: run_extraction(
         spark, pages, out))
     assert info["snapshot"]["row_count"] == 0
+    assert n == 2
+
+
+def test_run_extraction_spreads_packed_small_files(spark, pages_dir,
+                                                  tmp_path):
+    """Six small files are more files than cores, but Spark packs them
+    into fewer scan splits than cores; the spread counts the planned
+    splits of the bare scan (no job), so every core gets a task file.
+    The spread's shuffle stage is the one job it adds (AQE runs it as
+    its own job)."""
+    pages = spark.read.parquet(pages_dir)
+    cores = spark.sparkContext.defaultParallelism
+    assert len(pages.inputFiles()) >= cores
+    assert pages.rdd.getNumPartitions() < cores
+    info, n = _jobs_in_group(spark, "pcx-packed", lambda: run_extraction(
+        spark, pages, str(tmp_path / "out"), resume=False))
+    assert len(info["snapshot"]["files"]) >= cores
     assert n == 2
 
 

@@ -3,7 +3,7 @@
 Pins the r6 UDTF seam to the batch hot path: a SQL user driving
 ``extract_page`` / ``extract_doc`` through a LATERAL join must get
 byte-identical extraction results to ``operators.extract``'s
-mapInArrow/mapInPandas implementations (SURVEY §4's optional
+mapInArrow implementations (SURVEY §4's optional
 EXTRACT(...) table function; reference single-entry-point analog
 `/root/reference/pptx_extractor/core/extractor.py:36-88`).
 """

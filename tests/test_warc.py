@@ -21,7 +21,7 @@ def test_warc_roundtrip_plain_and_gz():
         assert got == [(u, b) for u, _d, b in recs], gz
     # .warc.gz really is one gzip member per record, not one stream
     gz_data = warc.build_warc(recs, gzip_records=True)
-    assert len(list(warc._gzip_members(gz_data))) == 2
+    assert len(list(warc._gzip_member_spans(gz_data))) == 2
 
 
 def test_warc_error_tolerance():
@@ -129,12 +129,19 @@ def test_gzip_member_iterator_offset_tracking():
     for m in members:
         co = zlib.compressobj(6, zlib.DEFLATED, 31)
         buf += co.compress(m) + co.flush()
+    def inflated(data, **kw):
+        return [m for _off, _len, m in warc._gzip_member_spans(data, **kw)]
+
     # chunk far smaller than a member AND far larger than one: both ok
     for cs in (512, 4096, 1 << 26):
-        assert list(warc._gzip_members(bytes(buf), chunk_size=cs)) == members
-    assert list(warc._gzip_members(bytes(buf) + b"garbage")) == members
-    assert list(warc._gzip_members(bytes(buf[:-10]))) == members[:-1]
-    assert list(warc._gzip_members(b"")) == []
+        assert inflated(bytes(buf), chunk_size=cs) == members
+    assert inflated(bytes(buf) + b"garbage") == members
+    assert inflated(bytes(buf[:-10])) == members[:-1]
+    assert inflated(b"") == []
+    # the spans tile the buffer: each member starts where the last ended
+    spans = [(off, ln) for off, ln, _m in warc._gzip_member_spans(bytes(buf))]
+    assert spans[0][0] == 0 and sum(ln for _o, ln in spans) == len(buf)
+    assert all(a + la == b for (a, la), (b, _lb) in zip(spans, spans[1:]))
 
 
 def test_whole_file_gzip_warc_parses_all_records():
