@@ -4616,10 +4616,10 @@ def oracle_sql() -> dict[str, str]:
         s1 AS (
           SELECT doc_id,
                  len(regexp_extract_all(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
                    AS n_email,
                  regexp_replace(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
                    '<EMAIL>', 'g') AS t
           FROM v
         ),
@@ -4636,9 +4636,9 @@ def oracle_sql() -> dict[str, str]:
         s3 AS (
           SELECT doc_id, n_email, n_phone,
                  len(regexp_extract_all(t,
-                   '\\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\\b')) AS n_ip,
+                   '\\b(?:[0-9]{1,3}\\.){3}[0-9]{1,3}\\b')) AS n_ip,
                  regexp_replace(t,
-                   '\\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\\b',
+                   '\\b(?:[0-9]{1,3}\\.){3}[0-9]{1,3}\\b',
                    '<IP>', 'g') AS t
           FROM s2
         )

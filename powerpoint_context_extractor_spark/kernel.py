@@ -23,7 +23,11 @@ Design contract (frozen; golden fixtures under tests/fixtures/ pin it):
   oracle). At each ``<`` plus a letter it takes one of three steps: a
   leaf element ``<name attrs>text</name>`` in one regex match, a start
   tag with simple attributes in one match, or the general port of
-  html.parser's start-tag parse.
+  html.parser's start-tag parse. A start tag that opens a dropped
+  subtree first tries ``_skip_dropped``, which jumps past the whole
+  subtree in one regex match when its body is well-nested simple markup
+  (where the loop would only push and pop drop frames); any other body
+  takes the tag-by-tag loop, which stays the reference.
 * Traversal is strictly document order; every candidate block gets a
   monotonically increasing ``block_id`` whether or not it is kept, so
   IDs are stable under classification-rule changes.
@@ -121,6 +125,14 @@ class KernelResult:
 
 
 def _is_boiler_attrs(attrs) -> bool:
+    """Whether a class or id value holds a BOILER_TOKENS token. ``attrs``
+    is [(name, value)] or a raw _TAG_STEP attribute run; a run is parsed
+    only when it mentions class or id, the only two keys read here."""
+    if isinstance(attrs, str):
+        low = attrs.lower()
+        if "class" not in low and "id" not in low:
+            return False
+        attrs = _simple_attrs(attrs)
     for k, v in attrs:
         if k in ("class", "id") and v:
             for token in v.replace("-", " ").replace("_", " ").lower().split():
@@ -167,6 +179,16 @@ def _assemble(url: str, kept: list) -> KernelResult:
 #      taken by one findall;
 #   3. anything else: the port of html.parser's start-tag endgame
 #      (_STARTTAG_END, _TAGNAME, _ATTRFIND; CPython, PSF license).
+# A start tag's attributes are parsed only when its class or id can still
+# decide whether it is dropped. A start tag that opens the outermost drop
+# frame (DROP_TAGS or a boilerplate class/id; not self-closing, not
+# script/style) first tries _skip_dropped: one _DROPPED_BODY match proves
+# where the frame closes and the loop jumps there. It proves it only for
+# a well-nested body of text, simple lower-case tags and script/style
+# raw text, closed by a bare '</name>': there the loop would only push
+# and pop drop frames, each end tag popping the frame just above it.
+# Anything else (comments, '<!', '<?', a lone '<', upper-case names,
+# other attributes, a stray or outer end tag) takes the loop as before.
 # ---------------------------------------------------------------------------
 
 # name, name="v" or name='v' with no '&' in v, so the value needs no
@@ -215,6 +237,43 @@ _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script\s*>", re.I),
     "style": re.compile(r"</\s*style\s*>", re.I),
 }
+
+
+def _dropped_body(depth: int):
+    """The body of a drop frame that _skip_dropped accepts, elements
+    nested up to ``depth`` deep. Each level is a possessive run of text,
+    void tags, script/style raw text and elements; level k captures its
+    element's name as group k and needs the same bare '</name>' back, so
+    the first end tag that does not close the innermost open element ends
+    the match. Alternatives are tried in order, and a void or
+    script/style tag that its own branch refuses, the element branch
+    refuses too. A self-closing tag is a no-op there as in the loop
+    (push, then pop the frame just pushed)."""
+    attrs = r"(?:[ \t\n\r\f]+" + _SIMPLE_ATTR + r")*+[ \t\n\r\f]*+"
+    void = "<(?:" + "|".join(sorted(VOID_TAGS)) + ")" + attrs + "/?>"
+    raw = "|".join(
+        f"<{t}{attrs}>(?i:(?:[^<]++|<(?!/\\s*{t}\\s*>))*+</\\s*{t}\\s*>)"
+        for t in sorted(_CDATA_CLOSE))
+    body = "[^<]*+"
+    for k in range(depth, 0, -1):
+        body = (f"(?:[^<]++|{void}|{raw}|<([a-z][a-z0-9]*){attrs}"
+                f"(?:/>|>{body}</\\{k}>))*+")
+    return re.compile(body)
+
+
+# 8 levels: header > nav > ul > li > ul > li > a, a two-level menu, is 6
+_DROPPED_BODY = _dropped_body(8).match
+
+
+def _skip_dropped(s: str, pos: int, tag: str) -> int:
+    """Where the loop would close the drop frame that the start tag
+    ``tag`` opened just before ``pos``: the index past its '</tag>', or
+    -1 when the body is not one _DROPPED_BODY can prove. The match ends
+    at the first end tag that does not close the innermost element, so it
+    never scans past the place where the frame really closes."""
+    q = _DROPPED_BODY(s, pos).end()
+    close = "</" + tag + ">"
+    return q + len(close) if s.startswith(close, q) else -1
 
 
 def _simple_attrs(attrs: str) -> list:
@@ -372,7 +431,7 @@ def _fast_extract(s: str) -> list:
     cdata_close = _CDATA_CLOSE
     is_boiler = _is_boiler_attrs
     tag_step = _TAG_STEP.match
-    simple_attrs = _simple_attrs
+    skip_dropped = _skip_dropped
     block_text = _block_text
     while i < n:
         lt = find("<", i)
@@ -405,9 +464,9 @@ def _fast_extract(s: str) -> list:
             if m is not None:
                 # ---- steps 1 and 2: leaf element or simple start tag
                 # (what the generic endgame below gives for this shape)
+                # attrs stays the raw run: is_boiler parses it if needed
                 tag, attrs, leaf = m.groups()
                 tag = tag.lower()
-                attrs = simple_attrs(attrs) if attrs else []
                 if leaf is None:
                     endpos = m.end()
                     selfclose = s[endpos - 2] == "/"
@@ -470,6 +529,12 @@ def _fast_extract(s: str) -> list:
                 if blk_tag is not None:
                     _flush()
                 if leaf is None:
+                    if not (drop_depth or selfclose
+                            or tag in cdata_close):
+                        q = skip_dropped(s, endpos, tag)
+                        if q >= 0:
+                            i = q
+                            continue
                     drop_depth += 1
                     stack.append([tag, True, 0,
                                   stack[-1][3] if stack else ""])
@@ -1499,14 +1564,8 @@ def _error_result(url: str, error: str) -> KernelResult:
                         n_blocks=0, error=error)
 
 
-def extract_document(url: str, content: bytes | None,
-                     fallback_text: str | None = None) -> KernelResult:
-    """Extract one document. Never raises.
-
-    ``fallback_text`` mirrors the reference's dual-path preference merge
-    (`notes/extractor.py:171-174`): it is NOT used here — the pipeline
-    exposes it as a separate column and coalesces downstream (J2).
-    """
+def extract_document(url: str, content: bytes | None) -> KernelResult:
+    """Extract one document. Never raises."""
     if content is None:
         return _error_result(url, "null_content")
     try:

@@ -4,13 +4,17 @@ These pin the frozen extraction contract (kernel.py docstring); golden
 fixture files pin the broader corpus in test_goldens.py.
 """
 
+import gc
 import random
+import re
+import time
 
 from powerpoint_context_extractor_spark import corpus, kernel
 from powerpoint_context_extractor_spark.kernel import (
     extract_document, render_wdoc,
 )
 
+from .cms_pages import cms_page
 from .html_reference import extract_html_reference
 
 
@@ -598,6 +602,33 @@ if _HYP:
 # ---- fast-engine differential contract: the fast tokenizer must be
 # byte-identical to the stdlib html.parser reference engine ----
 
+# Drop subtrees for kernel._skip_dropped, each with the index it must
+# return: the end of the subtree where the body proves where the loop
+# closes the frame, else -1. Each line is a shape on which a skip that
+# searched for '</name>' or counted '<name' prefixes would go wrong.
+_SKIP_CASES = [
+    ('<nav><a href="/">x</a></NAV>', -1),
+    ("<nav>x</nav >", -1),
+    ("<nav>x</nav x>", -1),
+    ("<nav>a<navx>b</nav>", -1),                 # </nav> closes navx too
+    ("<nav><navx>b</navx></nav>", 25),
+    ('<nav><a title="</nav>">x</a></nav>', 34),
+    ("<nav><nav>x</nav>y</nav>", 24),
+    ('<div class="ad"><div>x</div>', -1),         # ad div never closes
+    ('<div class="ad"><div class="inner">x</div></div>', 48),
+    ("<footer><script>w('</footer>')</script>f</footer>", 49),
+    ("<footer><style>a{}</STYLE >b</footer>", 37),
+    ("<footer><script>w('</footer>')</footer>", -1),  # script never closes
+    ("<nav>x</body></nav>", -1),                 # pops frames outside
+    ("<aside><p>x</main>y</p></aside>", -1),
+    ("<nav><!-- </nav> --></nav>", -1),
+    ("<nav>a < b</nav>", -1),
+    ("<nav><A href='/'>x</A></nav>", -1),
+    ("<nav><a href=/>x</a></nav>", -1),
+    ('<nav><a href="/?a=1&b=2">x</a></nav>', -1),
+    ("<nav><br><img src='x'/><p/>x<hr></nav>", 38),
+]
+
 _SOUP_CASES = [
     "", "<", "<p", "<p ", "<p class", '<p class="x', "x<", "a < b", "a <3 b",
     "<>", "</>", "</ >", "</ p>", "</p junk>", "</p", "<!", "<!-", "<!--",
@@ -633,7 +664,8 @@ _SOUP_CASES = [
     '<li><a href="x">all link</a></li>',
     # a charref that decodes to nothing opens no block
     "<div>&#1;</div><p>x</p>", "&#1;<p>x</p>", "<p>a</p><b>&#1;</b><p>x</p>",
-]
+] + [f"<body><main><p>a</p>{h}<p>b</p></main><p>c</p></body>"
+     for h, _ in _SKIP_CASES]
 
 
 def _both(t):
@@ -699,7 +731,14 @@ if _HYP:
             '<p title="x>y">t</p>', "<br>x</br>", "<title>x</title>",
             "<script>x</script>", "<div>text</div>",
             '<li><a href="x">all link</a></li>', "&#1;", "<b>", "</b>",
-            "<p class='a' id=\"b\" hidden/>"]))
+            "<p class='a' id=\"b\" hidden/>",
+            # the dropped-subtree skip: close forms, look-alike names,
+            # markup in attribute values and raw text, outer end tags
+            "</NAV>", "</nav >", "</nav x>", "<navx>", "</navx>",
+            '<a title="</nav>">', "<div class=\"ad\"><div>",
+            "<footer><script>w('</footer>')</script>", "</footer>",
+            "<footer>", "<aside class='sidebar'>", "</aside>", "</body>",
+            "<div class='ad-slot'><div class='inner'>x</div></div>"]))
 
     @settings(max_examples=400, deadline=None)
     @given(st.lists(_FRAG, max_size=25).map("".join))
@@ -707,6 +746,77 @@ if _HYP:
         a, b = _both(t)
         assert (a.text, a.title, a.spans, a.n_blocks) == \
                (b.text, b.title, b.spans, b.n_blocks), repr(t)
+
+
+def test_skip_dropped_proves_or_refuses():
+    """The five boilerplate regions of every cc_mixed page are skipped
+    whole; each hazard returns -1 or the exact end of its subtree."""
+    regions = [m.group() for m in re.finditer(
+        r"<(nav|header|div|aside|footer)\b.*?</\1>",
+        corpus._BOILER + corpus._FOOTER)]
+    assert len(regions) == 5
+    cases = [(r, len(r)) for r in regions] + _SKIP_CASES
+    for html, want in cases:
+        tag = re.match(r"<([a-z]+)", html).group(1)
+        assert kernel._skip_dropped(html, html.index(">") + 1, tag) == want, \
+            html
+        if want > 0:
+            assert html.endswith(f"</{tag}>"), html
+
+
+def test_fast_engine_matches_stdlib_on_cms_pages(monkeypatch):
+    """CMS-shaped pages: the skip takes every dropped region (head,
+    header, ad slot, sidebar, footer) and the output stays the
+    reference's."""
+    seen = []
+    skip = kernel._skip_dropped
+
+    def spy(s, pos, tag):
+        q = skip(s, pos, tag)
+        seen.append((tag, q))
+        return q
+
+    monkeypatch.setattr(kernel, "_skip_dropped", spy)
+    for i in range(30):
+        t = cms_page(i, seed=7)
+        a, b = _both(t)
+        assert (a.text, a.title, a.spans, a.n_blocks) == \
+               (b.text, b.title, b.spans, b.n_blocks), i
+        assert a.n_blocks > 10
+    assert sorted({tag for tag, _ in seen}) == \
+        ["aside", "div", "footer", "head", "header"]
+    assert len(seen) == 5 * 30 and all(q > 0 for _, q in seen)
+
+
+def test_dropped_subtree_skip_stays_linear(monkeypatch):
+    """Hostile pages that open a drop frame and close it through an outer
+    end tag, 4x longer, cost at most 6x the CPU (linear is 4x), and no
+    regex is compiled while they run (none keyed by tag name)."""
+    compiled = []
+    compile_ = re._compile
+    monkeypatch.setattr(re, "_compile",
+                        lambda *a: compiled.append(a) or compile_(*a))
+
+    def cpu(page):
+        # the collector's passes cost what the rest of the process holds
+        gc.collect()
+        gc.disable()
+        try:
+            t = time.process_time()
+            kernel.extract_html("u", page)
+            return time.process_time() - t
+        finally:
+            gc.enable()
+
+    for make in (lambda n: "<div><nav>x</div>" * n,
+                 lambda n: "".join(f'<b><x{i} class="ad">y</b>'
+                                   for i in range(n))):
+        pages = make(3000), make(12000)
+        # interleaved minimums, so a burst of host load hits both sizes
+        small, large = map(min, zip(*([cpu(p) for p in pages]
+                                      for _ in range(5))))
+        assert large <= 6 * small, (small, large)
+    assert compiled == []
 
 
 def test_fast_engine_comment_close_matches_stdlib():
