@@ -21,6 +21,15 @@
 ``extract_pages`` and ``row_map`` spread a small input one way:
 ``_spread_small_input``; ``partition_map`` never spreads.
 
+Both batch loops, the kernel's and ``partition_map``'s, call
+``_freeze_worker_heap`` on a task's first input batch. In a Python
+worker that moves the import-time heap (pyspark, pyarrow, pandas: ~74k
+objects) into the collector's permanent generation once per process,
+so the full ``gc.collect()`` that PySpark's daemon runs after every
+task of a reused worker stops walking it (on a 4-core host: 43-126 ms
+per task before, under 0.3 ms after). The driver's heap is never
+frozen.
+
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*. ``_spread_small_input`` adds a
   hash spread on the unique key (``url`` here) only when the input has
@@ -39,6 +48,7 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import functools
+import gc
 import itertools
 import os
 import time
@@ -95,6 +105,27 @@ def _summary_arrow_schema():
     return to_arrow_schema(WRITE_SUMMARY_SCHEMA)
 
 
+def _freeze_worker_heap() -> None:
+    """In a Python worker (a task is running), freeze the heap once per
+    process; elsewhere, do nothing."""
+    if TaskContext.get() is not None:
+        _freeze_import_heap()
+
+
+@functools.cache
+def _freeze_import_heap() -> None:
+    """``gc.freeze()`` after pyarrow's lazy pandas import, which its
+    first conversion would otherwise run after the freeze: pandas is
+    about half of the worker's import-time objects. Frozen objects are
+    still freed by refcounting, but a frozen cycle is never collected:
+    that bounds the leak to what the first task held when its first
+    batch arrived, once per worker. ``gc.freeze()`` itself is O(1), and
+    no collection runs before it."""
+    import pyarrow as pa
+    pa.array([], pa.int64())
+    gc.freeze()
+
+
 def _kernel_batches_arrow(batches):
     """The extraction kernel over Arrow RecordBatches in and out: no
     pandas layer on either side."""
@@ -103,6 +134,7 @@ def _kernel_batches_arrow(batches):
     pid = ctx.partitionId() if ctx is not None else -1
     schema = _arrow_out_schema()
     for rb in batches:
+        _freeze_worker_heap()
         names = rb.schema.names
         urls = rb.column(names.index("url")).to_pylist()
         htmls = rb.column(names.index("html")).to_pylist()
@@ -145,7 +177,6 @@ def _write_batches(out_dir, batches):
     one ``WRITE_SUMMARY_SCHEMA`` row, or nothing for an empty task.
     ``wall_ms`` runs from the first input batch to the writer's close."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     batches = iter(batches)
     first = next(batches, None)
     if first is None:
@@ -161,7 +192,7 @@ def _write_batches(out_dir, batches):
             w.write_batch(rb)
             rows += rb.num_rows
             ok += rb.column("error").null_count
-            n_bytes += pc.sum(rb.column("in_bytes")).as_py() or 0
+            n_bytes += sum(rb.column("in_bytes").to_pylist())
     wall_ms = int((time.monotonic() - t0) * 1000)
     yield pa.RecordBatch.from_pylist(
         [{"partition_id": ctx.partitionId(), "file": name, "rows": rows,
@@ -249,6 +280,7 @@ def partition_map(df: DataFrame, fn, schema) -> DataFrame:
 
         def _rows():
             for rb in batches:
+                _freeze_worker_heap()
                 turned[0] = True
                 yield from zip(*(c.to_pylist() for c in rb.columns))
 

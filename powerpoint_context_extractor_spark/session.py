@@ -1,10 +1,12 @@
 """SparkSession factory with the engine's standard knobs.
 
-Local-mode defaults sized for this sandbox (32 cores / 128 GiB, see
-SURVEY.md §7); on a real cluster the same knobs apply per-executor and
-AQE re-plans at runtime. Arrow batches are bounded by *records* here —
-multi-MB ``html`` blobs mean records-per-batch is the effective bytes
-bound (SURVEY.md §4 "Vectorization").
+Local-mode defaults are sized to the host: one task slot per core this
+process may run on (``SPARK_GRAFT_CPUS`` overrides the count) and a
+driver heap of half the physical memory, capped at 48 GiB. On a real
+cluster the same knobs apply per-executor and AQE re-plans at runtime.
+Arrow batches are bounded by *records* here — multi-MB ``html`` blobs
+mean records-per-batch is the effective bytes bound (SURVEY.md §4
+"Vectorization").
 """
 
 from __future__ import annotations
@@ -44,16 +46,28 @@ def _gc_opts(driver_memory: str) -> str:
     return opts
 
 
+def _host_heap() -> str:
+    """Half of physical memory in whole GiB, at least 1g and at most 48g."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, total // 2 ** 31))}g"
+
+
 def get_spark(app: str = "pcx-extract", master: str | None = None,
               shuffle_partitions: int | None = None,
               arrow_batch: int = DEFAULT_ARROW_BATCH,
               arrow_bytes: str = DEFAULT_ARROW_BYTES,
-              driver_memory: str = "48g",
+              driver_memory: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    """``extra_conf`` entries are applied at BUILDER time — the seam for
-    core (non-SQL) confs like ``spark.python.worker.reuse`` that
-    ``spark.conf.set`` rejects after startup (perfbench/harness.py)."""
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    """``master`` defaults to ``local[N]`` over the host's usable cores
+    and ``driver_memory`` to ``_host_heap()``. ``extra_conf`` entries
+    are applied at BUILDER time — the seam for core (non-SQL) confs like
+    ``spark.python.worker.reuse`` that ``spark.conf.set`` rejects after
+    startup (perfbench/harness.py)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or (
+        len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+        else os.cpu_count())
+    master = master or f"local[{cpus}]"
+    driver_memory = driver_memory or _host_heap()
     if shuffle_partitions is None:
         n = master.split("[")[-1].rstrip("]*")
         shuffle_partitions = int(n) if n.isdigit() else 32

@@ -1,17 +1,25 @@
-"""The package's ``ZipImporterShedder``: PySpark runs
-``importlib.invalidate_caches()`` at the start of every Python task, and
-no task may pay for re-reading the zip archives on ``sys.path``."""
+"""What a reused Python worker pays around each task. PySpark runs
+``importlib.invalidate_caches()`` at the start of every task, and no
+task may pay for re-reading the zip archives on ``sys.path`` (the
+package's ``ZipImporterShedder``); it runs a full ``gc.collect()`` after
+every task, and no collection may walk the worker's import-time heap
+(``operators.extract._freeze_worker_heap``)."""
 
+import gc
 import importlib
 import importlib.machinery
 import sys
 import zipfile
 import zipimport
 
+import pyarrow as pa
 import pytest
 
 from powerpoint_context_extractor_spark import ZipImporterShedder, corpus
-from powerpoint_context_extractor_spark.operators.extract import extract_pages
+from powerpoint_context_extractor_spark.operators.extract import (
+    _kernel_batches_arrow,
+    extract_pages,
+)
 
 PKG = "pcx_zip_probe"
 
@@ -96,3 +104,40 @@ def test_python_tasks_start_without_zip_importers(spark):
     got = (spark.range(0, 4, numPartitions=4)
            .mapInArrow(zip_importers_at_task_start, "n long").collect())
     assert [r.n for r in got] == [0, 0, 0, 0]
+
+
+def test_reused_workers_collect_without_the_import_heap(spark):
+    rows = corpus.fixture_pages()
+    pages = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
+                                  "url string, html binary")
+    assert extract_pages(pages.repartition(16, "url")).count() == len(rows)
+
+    def gc_heap_at_task_start(batches):
+        import gc
+        import sys
+
+        import pyarrow as pa
+        walked = {id(o) for o in gc.get_objects()}
+        # namespaces every worker holds before its first batch
+        spaces = [sys.modules[m].__dict__ for m in
+                  ("pyspark.worker", "pyarrow.lib", "pandas.core.frame")]
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "frozen": [gc.get_freeze_count()],
+            "walked": [sum(id(d) in walked for d in spaces)]})
+
+    got = (spark.range(0, 4, numPartitions=4)
+           .mapInArrow(gc_heap_at_task_start, "frozen long, walked long")
+           .collect())
+    assert len(got) == 4
+    for r in got:
+        assert r.frozen >= 20_000, r
+        assert r.walked == 0, r
+
+    # the driver's heap is never frozen
+    before = gc.get_freeze_count()
+    batch = pa.RecordBatch.from_pylist(
+        [{"url": rows[0]["url"], "html": rows[0]["html"]}])
+    assert sum(rb.num_rows for rb in _kernel_batches_arrow([batch])) == 1
+    assert gc.get_freeze_count() == before
