@@ -2991,7 +2991,7 @@ def _s6_artifact_manifest(spark, sf_dir):
     """Binary artifact sink plan (reference slide-image save,
     `slides/extractor.py:332-346`): deterministic zero-padded filename
     + size + sha per payload. The byte-writing sink itself
-    (sources/artifact_sink.write_artifacts) is pytest-verified."""
+    (sources/artifact_sink.write_files) is pytest-verified."""
     from powerpoint_context_extractor_spark.sources.artifact_sink import (
         artifact_manifest,
     )
@@ -3029,7 +3029,7 @@ def _a_exact_stats(spark, sf_dir):
 
 def _w_sessionize_batch(spark, sf_dir):
     """Batch sessionization (lag + cumulative gap-count window — the
-    batch twin of streaming/ingest.sessionize): session ordinal per
+    batch twin of tests/test_streaming.sessionize): session ordinal per
     event, 1800s gap rule."""
     e = _t(spark, sf_dir, "events")
     # exact integer microseconds on both engines (DuckDB epoch()

@@ -12,8 +12,8 @@ Two generation modes:
    whose extracted output is a pure SQL-expressible function of the
    input text (title ``# Doc {id}`` + 20-token paragraphs). This is what
    lets DuckDB act as an oracle for the real extraction kernel.
-2. ``fixture_pages()`` / ``generate_pages_rows()`` — edge-case fixture
-   classes (FIXTURES.md §1) and the bulk skewed corpus for bench runs.
+2. ``fixture_pages()`` / ``page_row()`` — edge-case fixture classes
+   (FIXTURES.md §1) and the bulk skewed corpus for bench runs.
 
 Everything is seeded; no wall clock, no global RNG.
 """
@@ -30,9 +30,7 @@ __all__ = [
     "page_for_document",
     "CJK_KINDS",
     "cjk_page_for_document",
-    "expected_text_for_document",
     "fixture_pages",
-    "generate_pages_rows",
     "FIXTURE_CLASSES",
     "EPOCH",
 ]
@@ -73,8 +71,8 @@ def _chunks(tokens, n):
 
 def page_for_document(doc_id: int, text: str) -> bytes:
     """Wrap a testdata ``documents`` row into a full page. The kernel's
-    output over this page is exactly ``expected_text_for_document`` —
-    i.e. reconstructible in ANSI SQL, which is what makes the flagship
+    output over this page is exactly ``# Doc {doc_id}`` plus the text in
+    ``PARA_TOKENS``-token paragraphs — reconstructible in ANSI SQL, which is what makes the flagship
     extraction query DuckDB-oracle-able."""
     tokens = text.split(" ") if text else []
     paras = "".join(
@@ -153,14 +151,6 @@ def cjk_page_for_document(doc_id: int, text: str) -> bytes:
     # ©) are emitted as numeric character references, exactly what real
     # legacy-charset pages do; the kernel's entity decoder handles them.
     return html.encode(codec, errors="xmlcharrefreplace")
-
-
-def expected_text_for_document(doc_id: int, text: str) -> str:
-    """Pure-Python mirror of the SQL oracle (tests assert kernel == this)."""
-    tokens = text.split(" ") if text else []
-    parts = [f"# Doc {doc_id}"]
-    parts.extend(" ".join(c) for c in _chunks(tokens, PARA_TOKENS))
-    return "\n\n".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -362,13 +352,3 @@ def page_row(i: int, seed: int = 42, n_hosts: int = 50,
         "text": _sentence(rng, 8),
         "lang": lang,
     }
-
-
-def generate_pages_rows(n: int, seed: int = 42, n_hosts: int = 50,
-                        min_paras: int = 2, max_paras: int = 8):
-    """Yield n page rows. Host 0 receives ~30% of urls (skew/salting
-    tests, SURVEY.md §2.10 U5); ~5% WDOC + ~3% PDF binary payloads;
-    ~2% malformed HTML; ~3% legacy-charset (cp1252/utf-16/BOM)."""
-    for i in range(n):
-        yield page_row(i, seed=seed, n_hosts=n_hosts,
-                       min_paras=min_paras, max_paras=max_paras)

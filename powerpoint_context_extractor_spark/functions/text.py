@@ -9,35 +9,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: chars the reference's sanitize_filename maps to '_'
-#: (`pptx_extractor/utils/common.py:49-64`)
-_INVALID = '<>:"/\\|?* '
-
-
-def sanitize_filename(col: Column, max_len: int = 100) -> Column:
-    """Translate invalid filename chars to '_' and cap length."""
-    return F.substring(
-        F.translate(col, _INVALID, "_" * len(_INVALID)), 1, max_len)
-
-
-def zero_pad(col: Column, prefix: str = "", width: int = 3) -> Column:
-    """``slide_{n:03d}``-style deterministic naming
-    (`slides/extractor.py:337`)."""
-    return F.format_string(f"{prefix}%0{width}d", col)
-
 
 def cents(col: Column) -> Column:
     """Cross-engine-exact money: per-row round to integer cents before
     aggregation (the repo-wide oracle convention)."""
     return F.round(col * 100).cast("long")
-
-
-def ms_label(ms: Column) -> Column:
-    """Unit formatting with branch (`animations/extractor.py:374-397`
-    analog) — integer-only printf so engines agree byte-for-byte."""
-    return (F.when(ms >= 100000,
-                   F.format_string("%d s", (ms / 1000).cast("long")))
-            .otherwise(F.format_string("%d ms", ms)))
 
 
 def portable_hash(col: Column, hex_chars: int = 8,

@@ -153,10 +153,6 @@ def _build_decoder(bits: list, vals: list) -> dict:
     return out
 
 
-_DC_DECODE = _build_decoder(_DC_BITS, _DC_VALS)
-_AC_DECODE = _build_decoder(_AC_BITS, _AC_VALS)
-
-
 def _rnd10k(n: int) -> int:
     """FROZEN half-away-from-zero rounding of n/10000 — the integer
     seam that makes color fixture decodes SQL-oracle-able."""

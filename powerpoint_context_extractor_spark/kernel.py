@@ -67,7 +67,6 @@ __all__ = [
     "render_wdoc",
     "render_pdf",
     "render_pdf_pages",
-    "render_pdf_incremental",
     "KernelResult",
     "WDOC_MAGIC",
     "PDF_MAGIC",
@@ -986,9 +985,10 @@ def extract_wdoc(url: str, payload: bytes) -> KernelResult:
 # incremental updates (appended objects + /Prev trailer chains, PDF
 # 32000 §7.5.6) resolve correctly — the object pass is file-order
 # newest-wins, which IS the update-chain semantics, and the trailer
-# /Root search uses the LAST trailer (render_pdf_incremental + tests
-# pin it). Remaining out-of-subset features (documented, raise into
-# the F6 error column): encryption, non-Flate filters.
+# /Root search uses the LAST trailer (tests/test_kernel.py's
+# render_pdf_incremental pins it). Remaining out-of-subset features
+# (documented, raise into the F6 error column): encryption, non-Flate
+# filters.
 # ---------------------------------------------------------------------------
 
 PDF_PAGE_H = 792  # US-Letter height in points; device y points up
@@ -1083,41 +1083,6 @@ def _pdf_content_obj(blocks, *, compress: bool = False,
         filt = b" /Filter /FlateDecode"
     return (b"<< /Length " + str(len(content)).encode() + filt
             + b" >>\nstream\n" + content + b"\nendstream")
-
-
-def render_pdf_incremental(pages, updated_pages, *,
-                           compress: bool = False) -> bytes:
-    """Incremental-update layout (PDF 32000 §7.5.6 — the r3 'Prev
-    chain' open end): the base file from ``render_pdf_pages`` is kept
-    byte-identical and an update section is APPENDED — re-written
-    content-stream objects for ``updated_pages`` ({page_index:
-    blocks}), a second xref section covering only those objects, and a
-    new trailer whose ``/Prev`` points at the original xref. This is
-    what every PDF editor's "save" writes. The kernel's object-level
-    pass resolves duplicate object numbers newest-in-file-order, which
-    is exactly the update-chain semantics, so extraction shows the
-    UPDATED content (pinned by tests)."""
-    base = render_pdf_pages(pages, compress=compress)
-    npg = len(pages)
-    m = re.search(rb"startxref\r?\n(\d+)", base)
-    prev_at = int(m.group(1))
-    buf = bytearray(base)
-    offsets: dict = {}
-    for idx, blocks in sorted(updated_pages.items()):
-        objnum = 3 + npg + idx            # the page's content stream
-        offsets[objnum] = len(buf)
-        buf += (f"{objnum} 0 obj\n".encode()
-                + _pdf_content_obj(blocks, compress=compress)
-                + b"\nendobj\n")
-    xref_at = len(buf)
-    buf += b"xref\n"
-    for objnum in sorted(offsets):        # one subsection per object
-        buf += (f"{objnum} 1\n".encode()
-                + f"{offsets[objnum]:010d} 00000 n \n".encode())
-    size = 5 + 2 * npg                    # base object count + 1
-    buf += (f"trailer\n<< /Size {size} /Root 1 0 R /Prev {prev_at} >>\n"
-            f"startxref\n{xref_at}\n%%EOF\n").encode()
-    return bytes(buf)
 
 
 def render_pdf_pages(pages, *, compress: bool = False,

@@ -53,14 +53,6 @@ def shingles_col(text_col: str = "text", k: int = 3) -> F.Column:
         .otherwise(F.array(F.concat_ws(" ", toks))))
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Hash-groupBy exact dedup: one combiner-friendly shuffle."""
-    return (docs.groupBy(F.sha2(F.col(text_col), 256).alias("text_sha"))
-            .agg(F.min(id_col).alias("canonical_id"),
-                 F.count(F.lit(1)).alias("dup_count")))
-
-
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """doc -> 8 minhash values (columns m0..m7)."""

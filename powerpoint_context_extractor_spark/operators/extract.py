@@ -1,34 +1,36 @@
-"""The Python crossings, all ``mapInArrow`` with no pandas layer.
+"""The Python crossings, all ``mapInArrow`` with no pandas layer, on one
+batch loop.
 
-- ``extract_pages`` is the hot one: the Spark re-expression of the
-  reference's whole extraction dataflow (the notes/animations/slides
-  extractors are collectively one UDTF: document in, records out —
-  SURVEY.md §2.10 U2). One Python call per Arrow batch, the pure kernel
-  does the per-document work, exactly as the reference amortizes one
-  ``zipfile.ZipFile`` open across all members (`notes/extractor.py:29`).
-  It also carries per-task state: a partition-id column.
-  ``write_extracted`` is the same crossing with the sink inside the
-  task: each task writes its output batches to one parquet file where
-  they are built and returns one summary row instead of the batches.
-- ``partition_map`` is the generic one every other Python step uses:
-  a function over one task's rows, read across its Arrow batches in
-  partition order, yielding 0..n output rows. Running counters
-  (``sampling``) and the file sinks
-  (``sources/artifact_sink.write_files``) use it as is.
+- ``partition_map`` is the generic crossing: a function over one
+  task's rows, read across its Arrow batches in partition order,
+  yielding 0..n output rows. Running counters (``sampling``) and the
+  file sinks (``sources/artifact_sink.write_files``) use it as is.
 - ``row_map`` is ``partition_map`` per row, after the input spread:
   a per-row function, 0..n output rows per input row.
+- ``extract_pages`` is the hot one: ``partition_map`` of the kernel
+  per page (``_extract_rows``), the Spark re-expression of the
+  reference's whole extraction dataflow (the notes/animations/slides
+  extractors are collectively one UDTF: document in, records out —
+  SURVEY.md §2.10 U2). The pure kernel does the per-document work
+  inside one Python call per Arrow batch, as the reference amortizes
+  one ``zipfile.ZipFile`` open across all members
+  (`notes/extractor.py:29`). It also carries per-task state: a
+  partition-id column. ``write_extracted`` runs the same kernel loop
+  (``_kernel_batches_arrow``) with the sink inside the task: each task
+  writes its output batches to one parquet file where they are built
+  and returns one summary row instead of the batches.
 
 ``extract_pages`` and ``row_map`` spread a small input one way:
 ``_spread_small_input``; ``partition_map`` never spreads.
 
-Both batch loops, the kernel's and ``partition_map``'s, call
-``_freeze_worker_heap`` on a task's first input batch. In a Python
-worker that moves the import-time heap (pyspark, pyarrow, pandas: ~74k
-objects) into the collector's permanent generation once per process,
-so the full ``gc.collect()`` that PySpark's daemon runs after every
-task of a reused worker stops walking it (on a 4-core host: 43-126 ms
-per task before, under 0.3 ms after). The driver's heap is never
-frozen.
+``_map_batches`` is the one batch loop: it turns Arrow batches into
+row tuples, builds the output batches, and calls
+``_freeze_worker_heap`` on each input batch. In a Python worker that
+moves the import-time heap (pyspark, pyarrow, pandas: ~74k objects)
+into the collector's permanent generation once per process, so the
+full ``gc.collect()`` that PySpark's daemon runs after every task of a
+reused worker stops walking it (on a 4-core host: 43-126 ms per task
+before, under 0.3 ms after). The driver's heap is never frozen.
 
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*. ``_spread_small_input`` adds a
@@ -57,6 +59,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel import extract_document
 from ..sources.table_io import parquet_writer
@@ -93,18 +96,6 @@ WRITE_SUMMARY_SCHEMA = T.StructType([
 ])
 
 
-@functools.cache
-def _arrow_out_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-    return to_arrow_schema(EXTRACTED_SCHEMA)
-
-
-@functools.cache
-def _summary_arrow_schema():
-    from pyspark.sql.pandas.types import to_arrow_schema
-    return to_arrow_schema(WRITE_SUMMARY_SCHEMA)
-
-
 def _freeze_worker_heap() -> None:
     """In a Python worker (a task is running), freeze the heap once per
     process; elsewhere, do nothing."""
@@ -126,49 +117,68 @@ def _freeze_import_heap() -> None:
     gc.freeze()
 
 
-def _kernel_batches_arrow(batches):
-    """The extraction kernel over Arrow RecordBatches in and out: no
-    pandas layer on either side."""
+def _arrow_batch(rows, arrow_schema):
+    """One Arrow batch of ``rows``, tuples in ``arrow_schema`` order."""
     import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema)
+
+
+def _map_batches(batches, fn, arrow_schema):
+    """The batch loop of every crossing: ``fn(rows)`` gets one task's
+    rows as tuples, in partition order across all of its Arrow
+    ``batches``, and the tuples it yields while it reads one input
+    batch leave as one output batch of ``arrow_schema``."""
+    turned = False                        # fn has read into a new batch
+
+    def _rows():
+        nonlocal turned
+        for rb in batches:
+            _freeze_worker_heap()
+            turned = True
+            yield from zip(*(c.to_pylist() for c in rb.columns))
+
+    out = []
+    for row in fn(_rows()):
+        if turned and out:
+            yield _arrow_batch(out, arrow_schema)
+            out = []
+        turned = False
+        out.append(row)
+    if out:
+        yield _arrow_batch(out, arrow_schema)
+
+
+def _extract_rows(rows):
+    """The kernel per page: (url, html[, text]) rows in, one
+    ``EXTRACTED_SCHEMA`` tuple out per row. An error row falls back to
+    the page's pre-extracted ``text`` (J2) when there is one."""
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
-    schema = _arrow_out_schema()
-    for rb in batches:
-        _freeze_worker_heap()
-        names = rb.schema.names
-        urls = rb.column(names.index("url")).to_pylist()
-        htmls = rb.column(names.index("html")).to_pylist()
-        fallbacks = (rb.column(names.index("text")).to_pylist()
-                     if "text" in names else [None] * len(urls))
-        out = {k: [] for k in ("url", "title", "text", "spans", "n_blocks",
-                               "error", "text_source", "charset", "in_bytes")}
-        for url, html, fb in zip(urls, htmls, fallbacks):
-            r = extract_document(url, html)
-            out["url"].append(url)
-            out["title"].append(r.title)
-            if r.error is None:
-                out["text"].append(r.text)
-                out["text_source"].append("kernel")
-            else:
-                out["text"].append(fb)
-                out["text_source"].append("fallback" if fb is not None else None)
-            out["spans"].append(r.spans)
-            out["n_blocks"].append(r.n_blocks)
-            out["error"].append(r.error)
-            out["charset"].append(r.charset)
-            out["in_bytes"].append(len(html) if html is not None else 0)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out["url"], schema.field(0).type),
-             pa.array(out["title"], schema.field(1).type),
-             pa.array(out["text"], schema.field(2).type),
-             pa.array(out["spans"], schema.field(3).type),
-             pa.array(out["n_blocks"], schema.field(4).type),
-             pa.array(out["error"], schema.field(5).type),
-             pa.array(out["text_source"], schema.field(6).type),
-             pa.array(out["charset"], schema.field(7).type),
-             pa.array([pid] * len(urls), schema.field(8).type),
-             pa.array(out["in_bytes"], schema.field(9).type)],
-            schema=schema)
+    rows = iter(rows)
+    first = next(rows, None)
+    if first is None:
+        return
+    rows = itertools.chain([first], rows)
+    if len(first) == 2:                   # no text column
+        rows = ((url, html, None) for url, html in rows)
+    for url, html, fallback in rows:
+        r = extract_document(url, html)
+        if r.error is None:
+            text, source = r.text, "kernel"
+        else:
+            text = fallback
+            source = "fallback" if fallback is not None else None
+        yield (url, r.title, text, r.spans, r.n_blocks, r.error, source,
+               r.charset, pid, len(html) if html is not None else 0)
+
+
+def _kernel_batches_arrow(batches):
+    """The kernel's entry into the batch loop: (url, html[, text])
+    RecordBatches in, ``EXTRACTED_SCHEMA`` RecordBatches out."""
+    return _map_batches(batches, _extract_rows,
+                        to_arrow_schema(EXTRACTED_SCHEMA))
 
 
 def _write_batches(out_dir, batches):
@@ -176,7 +186,6 @@ def _write_batches(out_dir, batches):
     ``<out_dir>/part-<partition:05d>-<taskAttemptId>.parquet``; yields
     one ``WRITE_SUMMARY_SCHEMA`` row, or nothing for an empty task.
     ``wall_ms`` runs from the first input batch to the writer's close."""
-    import pyarrow as pa
     batches = iter(batches)
     first = next(batches, None)
     if first is None:
@@ -186,7 +195,7 @@ def _write_batches(out_dir, batches):
     name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
     path = os.path.join(out_dir, name)
     rows = ok = n_bytes = 0
-    with parquet_writer(path, _arrow_out_schema(),
+    with parquet_writer(path, to_arrow_schema(EXTRACTED_SCHEMA),
                         stats_skip=("text",)) as w:
         for rb in _kernel_batches_arrow(itertools.chain([first], batches)):
             w.write_batch(rb)
@@ -194,10 +203,9 @@ def _write_batches(out_dir, batches):
             ok += rb.column("error").null_count
             n_bytes += sum(rb.column("in_bytes").to_pylist())
     wall_ms = int((time.monotonic() - t0) * 1000)
-    yield pa.RecordBatch.from_pylist(
-        [{"partition_id": ctx.partitionId(), "file": name, "rows": rows,
-          "ok": ok, "in_bytes": n_bytes, "wall_ms": wall_ms}],
-        schema=_summary_arrow_schema())
+    yield _arrow_batch(
+        [(ctx.partitionId(), name, rows, ok, n_bytes, wall_ms)],
+        to_arrow_schema(WRITE_SUMMARY_SCHEMA))
 
 
 def _spread_small_input(df: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -263,38 +271,12 @@ def partition_map(df: DataFrame, fn, schema) -> DataFrame:
     yields while it reads one input batch leave as one Arrow batch, so
     output batches are bounded as the input's are. The input is never
     spread: the caller chose its partitioning."""
-    from pyspark.sql.pandas.types import to_arrow_schema
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
     arrow_schema = to_arrow_schema(schema)
-
-    def _batch(rows):
-        import pyarrow as pa
-        cols = zip(*rows)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
-            schema=arrow_schema)
-
-    def _batches(batches):
-        turned = [False]                  # fn has read into a new batch
-
-        def _rows():
-            for rb in batches:
-                _freeze_worker_heap()
-                turned[0] = True
-                yield from zip(*(c.to_pylist() for c in rb.columns))
-
-        out = []
-        for row in fn(_rows()):
-            if turned[0] and out:
-                yield _batch(out)
-                out = []
-            turned[0] = False
-            out.append(row)
-        if out:
-            yield _batch(out)
-
-    return df.mapInArrow(_batches, schema=schema)
+    return df.mapInArrow(
+        lambda batches: _map_batches(batches, fn, arrow_schema),
+        schema=schema)
 
 
 def row_map(df: DataFrame, fn, schema) -> DataFrame:
@@ -450,9 +432,8 @@ def _narrow(pages: DataFrame) -> DataFrame:
 
 def extract_pages(pages: DataFrame) -> DataFrame:
     """pages(url, html[, text]) -> extracted (EXTRACTED_SCHEMA), through
-    one ``mapInArrow`` crossing."""
-    return _narrow(pages).mapInArrow(_kernel_batches_arrow,
-                                     schema=EXTRACTED_SCHEMA)
+    one ``partition_map`` crossing."""
+    return partition_map(_narrow(pages), _extract_rows, EXTRACTED_SCHEMA)
 
 
 def write_extracted(narrow: DataFrame, out_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ has to happen below the scan, which is what this layout buys.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -43,16 +43,3 @@ def zorder_key(cols: list, bits: int = 16) -> Column:
     return F.expr(" + ".join(terms))
 
 
-def zorder_write(df: DataFrame, path: str, cols: list, bits: int = 16,
-                 n_files: int = 8) -> None:
-    """Write ``df`` clustered on the Z-order key of ``cols``:
-    range-partition by the key (one skew-balanced shuffle — Spark
-    samples the key distribution) and sort within partitions, so
-    every output file covers a small hyper-rectangle of the key
-    space and footer min/max stats prune on EVERY interleaved
-    column. The key column itself is dropped from the output."""
-    keyed = df.withColumn("_zkey", zorder_key(cols, bits))
-    (keyed.repartitionByRange(n_files, "_zkey")
-     .sortWithinPartitions("_zkey")
-     .drop("_zkey")
-     .write.mode("overwrite").parquet(path))

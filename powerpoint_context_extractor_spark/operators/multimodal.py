@@ -23,12 +23,11 @@ from pyspark.sql import types as T
 from .extract import row_map
 from ..avi import (decode_avi, decode_bmp, render_avi,
                    render_avi_mjpeg, render_avi_rle8, render_bmp)
-from ..jpeg import (QTABLE, decode_jpeg, decode_jpeg_gray,
+from ..jpeg import (decode_jpeg, decode_jpeg_gray,
                     render_jpeg_color, render_jpeg_gray,
                     render_jpeg_color_progressive,
                     render_jpeg_gray_progressive,
-                    render_jpeg_gray_progressive_sa, rgb_from_ycbcr,
-                    ycbcr_from_rgb)
+                    render_jpeg_gray_progressive_sa)
 from ..flac import decode_flac, render_flac
 from ..gif import (decode_gif, decode_gif_frames, lzw_encode,
                    probe_gif_animation, render_gif, render_gif_animation)
@@ -234,14 +233,6 @@ PNG_PALETTE = [((j * 37) % 256, (j * 59) % 256, (j * 83) % 256)
                for j in range(16)]
 
 
-def png_channels_for_doc(doc_id: int) -> int:
-    """DECODED channel count under the frozen doc_id % 4 rule (r6
-    widens r5's % 3): 0 -> grayscale (1), 1 -> RGB truecolor (3),
-    2 -> indexed palette (decodes to RGB, 3), 3 -> RGBA (4)."""
-    k = doc_id % 4
-    return 1 if k == 0 else (4 if k == 3 else 3)
-
-
 def png_payload_for_doc(doc_id: int) -> bytes:
     """Deterministic 16x8 PNG under the frozen doc_id % 4 rule (r6
     adds RGBA color type 6 to r5's gray/RGB/palette triple):
@@ -348,18 +339,6 @@ def jpeg_block_value(doc_id: int, b: int) -> int:
     return (doc_id * 29 + b * 97) % 256
 
 
-def jpeg_reconstructed_value(v: int) -> int:
-    """The decoded pixel of a constant block of value ``v`` under the
-    frozen Annex-K table (q00 = 16): DC = half-away(64*(v-128)/128),
-    pixel = clamp(2*DC + 128). Mirrored verbatim in the SQL oracle."""
-    s = 64 * (v - 128)
-    d = 8 * QTABLE[0]
-    dcq = (2 * abs(s) + d) // (2 * d)
-    dcq = dcq if s >= 0 else -dcq
-    rec = (QTABLE[0] * dcq) // 8 + 128
-    return 0 if rec < 0 else (255 if rec > 255 else rec)
-
-
 def _jpeg_gray_pixels(doc_id: int) -> bytes:
     """The 16x8 gray fixture: block b constant at
     ``jpeg_block_value(doc_id, b)``."""
@@ -434,17 +413,6 @@ def _jpeg_color_pixels(seed: int) -> bytes:
 def jpeg_color_payload_for_doc(doc_id: int) -> bytes:
     """Deterministic 32x16 MCU-constant baseline YCbCr 4:2:0 JPEG."""
     return render_jpeg_color(JPEG_C_W, JPEG_C_H, _jpeg_color_pixels(doc_id))
-
-
-def jpeg_color_reconstructed_rgb(doc_id: int, m: int) -> tuple:
-    """Analytic decode of MCU m: rgb -> frozen integer YCbCr ->
-    DC-quantized channel reconstruction (jpeg_reconstructed_value, the
-    same q00=16 seam as the gray contract) -> frozen inverse
-    conversion. Mirrored verbatim in the SQL oracle."""
-    y, cb, cr = ycbcr_from_rgb(*jpeg_color_mcu_rgb(doc_id, m))
-    return rgb_from_ycbcr(jpeg_reconstructed_value(y),
-                          jpeg_reconstructed_value(cb),
-                          jpeg_reconstructed_value(cr))
 
 
 JPEG_COLOR_FEATURE_SCHEMA = T.StructType([

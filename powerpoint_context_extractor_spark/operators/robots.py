@@ -17,9 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_EMPTY = "array()"
-
-
 def parse_disallow_rules(robots: DataFrame, host_col: str = "host",
                          body_col: str = "robots_txt") -> DataFrame:
     """(host, robots_txt) -> (host, rules array<string>): the trimmed

@@ -48,23 +48,6 @@ def hll_registers(df: DataFrame, key_col: str, p: int = 8) -> DataFrame:
             .agg(F.max("_rho").alias("max_rho")))
 
 
-def hll_estimate(registers: dict, p: int = 8) -> float:
-    """Classic HLL estimate from a {register: max_rho} dict (small-
-    range linear-counting correction included). Driver-side float
-    math by design — the cross-engine contract stops at the integer
-    registers."""
-    import math
-    m = 1 << p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    s = sum(2.0 ** -registers.get(r, 0) for r in range(m))
-    est = alpha * m * m / s
-    if est <= 2.5 * m:
-        zeros = m - len([r for r in registers if registers[r] > 0])
-        if zeros:
-            est = m * math.log(m / zeros)
-    return est
-
-
 def theta_sketch(df: DataFrame, key_col: str, group_col: str,
                  k: int = 32) -> DataFrame:
     """KMV/theta sketch (Bar-Yossef et al. 2002 / DataSketches theta,
@@ -133,21 +116,6 @@ def count_min_sketch(df: DataFrame, key_col: str, w: int = 256,
             .select(F.col("row").cast("long"), cell.alias("col"))
             .groupBy("row", "col")
             .agg(F.count(F.lit(1)).alias("cnt")))
-
-
-def count_min_estimate(cells: dict, key: str, w: int = 256,
-                       d: int = 4) -> int:
-    """Point estimate from a {(row, col): cnt} dict — driver-side
-    mirror of the same md5 seam (pytest pins est >= truth and
-    tightness on a skewed stream)."""
-    import hashlib
-    est = None
-    for j in range(d):
-        h = int(hashlib.md5(f"cm{j}|{key}".encode()).hexdigest()[:8],
-                16) % w
-        c = cells.get((j, h), 0)
-        est = c if est is None else min(est, c)
-    return est or 0
 
 
 def theta_intersect(df: DataFrame, key_col: str, group_col: str,

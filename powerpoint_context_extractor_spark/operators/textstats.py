@@ -469,26 +469,6 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
     return row_map(docs.select(id_col, text_col), _row, schema)
 
 
-def detect_heavy_hitters(df: DataFrame, key_col: str,
-                         fraction_threshold: float = 0.1,
-                         sample_fraction: float | None = None) -> list:
-    """Heavy-hitter keys holding > ``fraction_threshold`` of rows —
-    the salting trigger (U5). At scale, pass ``sample_fraction`` so the
-    detector reads a cheap sample instead of the full table; candidates
-    only (sampling can over/under-shoot slightly, fine for a heuristic
-    whose only effect is extra salt)."""
-    src = df.select(key_col)
-    if sample_fraction:
-        src = src.sample(fraction=sample_fraction, seed=42)
-    total = src.count()
-    if total == 0:
-        return []
-    hits = (src.groupBy(key_col).count()
-            .filter(F.col("count") > total * fraction_threshold)
-            .orderBy(F.col("count").desc(), F.col(key_col)))
-    return [r[key_col] for r in hits.collect()]
-
-
 def host_stats_salted(events: DataFrame, key_col: str = "event_type",
                       n_salts: int = 8) -> DataFrame:
     """Skew-safe two-stage aggregation (U5): partial agg on

@@ -19,7 +19,6 @@ Canonical form (frozen; the contract query pins it):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _TRACK = r"(utm_[^=&#]*|gclid|fbclid)"
@@ -40,11 +39,6 @@ def canonical_url(col: F.Column) -> F.Column:
     u = F.regexp_replace(u, r"\?" + _TRACK + r"=[^&#]*$", "")
     u = F.regexp_replace(u, r"[?&]$", "")
     return u
-
-
-def canonicalize_urls(df: DataFrame, url_col: str = "url",
-                      out_col: str = "canon_url") -> DataFrame:
-    return df.withColumn(out_col, canonical_url(F.col(url_col)))
 
 
 # Frozen public-suffix subset (r4): the host-level grouping key every
@@ -84,11 +78,6 @@ def registrable_domain(col: F.Column) -> F.Column:
     return F.array_join(F.slice(labels, n - take + 1, take), ".")
 
 
-def registrable_domains(df: DataFrame, host_col: str = "host",
-                        out_col: str = "etld1") -> DataFrame:
-    return df.withColumn(out_col, registrable_domain(F.col(host_col)))
-
-
 # --- SURT (Sort-friendly URI Reordering Transform) — the CDX urlkey --------
 #
 # Frozen contract (pinned by the web_cdx_index oracle + the
@@ -97,20 +86,10 @@ def registrable_domains(df: DataFrame, host_col: str = "host",
 # joined by ",", append ")" + the path/query remainder verbatim.
 # `https://www.News.example/Docs/5?q=1` -> `example,news)/Docs/5?q=1`.
 
-def surt_key(col: F.Column) -> F.Column:
-    """Column expression: SURT urlkey of a URL (pure codegen)."""
-    host = F.regexp_replace(
-        F.lower(F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)),
-        r"^www\.", "")
-    rest = F.regexp_replace(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*", "")
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    return F.concat(rev, F.lit(")"), rest)
-
-
 def surt_key_py(url: str) -> str:
-    """Python twin of ``surt_key`` for file-side indexers (CDX lines
-    are built inside a row_map); equality with the Spark expression
-    is pytest-pinned."""
+    """SURT urlkey of a URL, for file-side indexers (CDX lines are built
+    inside a row_map); equality with a Spark-expression twin is
+    pytest-pinned."""
     import re
     m = re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", url)
     if not m:

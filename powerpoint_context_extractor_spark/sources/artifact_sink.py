@@ -1,6 +1,6 @@
 """Executor-side file sinks (SURVEY.md §2 S6): ``write_files`` is the
-one task-side writer the WARC, WET, WebDataset and artifact sinks
-share, and ``write_artifacts`` writes one payload file per row with
+one task-side writer the WARC, WET and WebDataset sinks share, and
+``artifact_manifest`` plans one payload file per row with
 deterministic zero-padded names — the reference saves each extracted
 slide image as ``slide_{n:03d}_img_{m}.{ext}``
 (`pptx_extractor/slides/extractor.py:258-279,332-346`).
@@ -64,24 +64,3 @@ def artifact_manifest(df: DataFrame, id_col: str, payload_col: str,
         .alias("filename"),
         F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
         F.sha2(F.col(payload_col), 256).alias("payload_sha"))
-
-
-def write_artifacts(df: DataFrame, out_dir: str, id_col: str = "doc_id",
-                    payload_col: str = "payload",
-                    prefix: str = "artifact", width: int = 5,
-                    ext: str = "bin") -> int:
-    """Write each payload to ``out_dir/<prefix>_<id padded>.<ext>``.
-
-    Executor-side, one file per row (``id_col`` must be unique), no
-    driver funnel; returns the number of files written, counted from
-    the written files' rows. ``out_dir`` must be a path visible to all
-    executors (shared FS / object store in a real cluster)."""
-    named = df.select(
-        F.format_string(f"{prefix}_%0{width}d.{ext}", F.col(id_col))
-        .alias("file"), F.col(payload_col).alias("payload"))
-
-    def _write(f, rows):
-        for (payload,) in rows:
-            f.write(payload or b"")
-
-    return sum(r["rows"] for r in write_files(named, out_dir, _write))

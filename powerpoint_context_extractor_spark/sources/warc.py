@@ -63,14 +63,6 @@ def _member(raw: bytes, gzip_records: bool) -> bytes:
     return co.compress(raw) + co.flush()
 
 
-def build_warc(records, gzip_records: bool = True) -> bytes:
-    """records: iterable of (url, date, body_bytes[, rec_type]). Emits a
-    complete WARC file; ``gzip_records`` writes one gzip member per
-    record (the .warc.gz layout)."""
-    return b"".join(_member(build_record(*rec), gzip_records)
-                    for rec in records)
-
-
 # ---------------------------------------------------------------------------
 # parsing (source)
 # ---------------------------------------------------------------------------
@@ -356,17 +348,3 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
             .withColumn("length", F.col("length").cast("long")))
 
 
-def fetch_cdx_record(warc_dir: str, filename: str, offset: int,
-                     length: int) -> tuple:
-    """Ranged fetch through a CDX entry: read ONLY [offset, offset+
-    length) of the named file, inflate that single member, parse the
-    one record. The pytest uses this to pin that recorded spans are
-    real."""
-    import os
-    with open(os.path.join(warc_dir, filename), "rb") as f:
-        f.seek(offset)
-        member = f.read(length)
-    recs = list(_parse_plain(zlib.decompress(member, 31)))
-    if len(recs) != 1:
-        raise ValueError(f"cdx: span holds {len(recs)} records, not 1")
-    return recs[0]

@@ -3,23 +3,17 @@
 The reference is strictly batch (SURVEY.md §2.9); the target adds the
 natural streaming surface:
 
-* ``stream_extract``: file-source pages -> ``foreachBatch`` that runs
-  ``plans.flagship.run_extraction`` on each micro-batch: the resume
-  anti-join before the kernel, task-written snapshot files and one
-  lineage snapshot per epoch, so a replayed micro-batch runs no kernel
-  on committed pages and stays exactly-once (at-least-once delivery +
-  idempotent commit).
-* ``windowed_event_counts``: watermark + tumbling-window agg — the
-  deterministic demo (complete output over a bounded backlog equals
-  the batch date_trunc aggregation, which is its DuckDB oracle).
-* ``sessionize``: applyInPandasWithState custom stateful operator —
-  gap-based sessions per user.
 * ``stream_extract_warc``: .warc.gz files arriving in a directory ->
-  gzip-member record split -> the same per-epoch ``run_extraction``
-  (the live Common-Crawl ingestion shape).
-* ``stream_windowed_counts_to_table`` / ``sessionize_to_table``: the
-  production table-sink variants (append-mode watermarked windows;
-  update-mode sessions with post-stream keyed compaction).
+  gzip-member record split -> ``foreachBatch`` that runs
+  ``plans.flagship.run_extraction`` on each micro-batch (the live
+  Common-Crawl ingestion shape): the resume anti-join before the
+  kernel, task-written snapshot files and one lineage snapshot per
+  epoch, so a replayed micro-batch runs no kernel on committed pages
+  and stays exactly-once (at-least-once delivery + idempotent commit).
+* ``stream_windowed_counts_to_table``: append-mode watermarked window
+  counts committed per micro-batch into a snapshot table.
+* ``stream_interval_join``: a watermarked stream-stream interval join.
+* ``stream_sketch_counts``: a count-min sketch folded per micro-batch.
 """
 
 from __future__ import annotations
@@ -27,15 +21,12 @@ from __future__ import annotations
 import hashlib
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.extract import row_map
 from ..plans.flagship import run_extraction
-from ..sources.pagegen import PAGES_SCHEMA
 from ..sources.table_io import SnapshotTable
 
 
@@ -92,43 +83,6 @@ def _extract_epochs(pages: DataFrame, out_root: str, checkpoint_dir: str,
     q.awaitTermination()
 
 
-def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
-                   checkpoint_dir: str, run_id: str = "stream") -> None:
-    """Ingest a pages directory as a bounded stream (availableNow) and
-    commit extraction output per micro-batch through ``run_extraction``,
-    exactly-once."""
-    stream = (spark.readStream.schema(PAGES_SCHEMA)
-              .option("maxFilesPerTrigger", 4)
-              .parquet(pages_dir))
-    _extract_epochs(stream, out_root, checkpoint_dir, run_id)
-
-
-def windowed_event_counts(spark: SparkSession, events_dir: str,
-                          window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window counts over a bounded event stream; returns the
-    final (complete-mode) result as a batch DataFrame. Epoch-aligned
-    windows == date_trunc in the oracle."""
-    events_dir = _as_stream_dir(events_dir)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (spark.readStream.schema(schema).parquet(events_dir)
-              # watermarks need TIMESTAMP (ltz); testdata parquet is NTZ.
-              # session tz is pinned UTC so the cast is value-preserving.
-              .withColumn("ts", F.col("ts").cast("timestamp")))
-    agg = (stream
-           .withWatermark("ts", watermark)
-           .groupBy(F.window("ts", window).alias("w"), "event_type")
-           .agg(F.count(F.lit(1)).alias("n")))
-    name = f"win_{_stable_tag(events_dir)}"
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT w.start AS win_start, event_type, n FROM {name}")
-
-
 def _write_time_ordered_files(spark: SparkSession, src_parquet: str,
                               dest_dir: str, n_files: int = 4,
                               ts_col: str = "ts") -> None:
@@ -146,8 +100,8 @@ def _write_time_ordered_files(spark: SparkSession, src_parquet: str,
     split being time-contiguous and replayed in order, which any range
     partitioning satisfies (exact boundaries are NOT part of the
     contract — the windowed-count oracle derives from the global max
-    event time, and sessionize state is order-insensitive within a
-    time-contiguous replay)."""
+    event time, and a per-user session state is order-insensitive
+    within a time-contiguous replay)."""
     import shutil
 
     df = (spark.read.parquet(src_parquet)
@@ -222,133 +176,6 @@ def stream_windowed_counts_to_table(spark: SparkSession, events_parquet: str,
         return spark.createDataFrame(
             [], "win_start timestamp, event_type string, n long")
     return res.select("win_start", "event_type", "n")
-
-
-SESSION_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("n_sessions", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-])
-
-_STATE_SCHEMA = T.StructType([
-    T.StructField("last_ts", T.DoubleType()),
-    T.StructField("n_sessions", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-])
-
-SESSION_GAP_S = 1800.0
-
-
-def _session_fn(key, pdfs, state: GroupState):
-    (user_id,) = key
-    if state.exists:
-        last_ts, n_sessions, n_events = state.get
-    else:
-        last_ts, n_sessions, n_events = -1.0, 0, 0
-    for pdf in pdfs:
-        for ts in sorted(pdf["ts_s"].tolist()):
-            if last_ts < 0 or ts - last_ts > SESSION_GAP_S:
-                n_sessions += 1
-            last_ts = ts
-            n_events += 1
-    state.update((last_ts, n_sessions, n_events))
-    yield pd.DataFrame({"user_id": [user_id], "n_sessions": [n_sessions],
-                        "n_events": [n_events]})
-
-
-def sessionize(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Custom stateful operator: gap-based session counting per user via
-    applyInPandasWithState (update mode; final state after a bounded
-    backlog is deterministic)."""
-    events_dir = _as_stream_dir(events_dir)
-    schema = spark.read.parquet(events_dir).schema
-    stream = (spark.readStream.schema(schema).parquet(events_dir)
-              .withColumn("ts_s",
-                          F.col("ts").cast("timestamp").cast("double"))
-              .select("user_id", "ts_s"))
-    out = (stream.groupBy("user_id")
-           .applyInPandasWithState(_session_fn, SESSION_SCHEMA, _STATE_SCHEMA,
-                                   "update", GroupStateTimeout.NoTimeout))
-    name = f"sess_{_stable_tag(events_dir)}"
-    q = (out.writeStream.outputMode("update")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    # update mode may emit a row per micro-batch; keep the final one
-    from pyspark.sql import Window as W
-    res = spark.sql(f"SELECT * FROM {name}")
-    w = F.row_number().over(
-        W.partitionBy("user_id").orderBy(F.col("n_events").desc()))
-    return (res.withColumn("rn", w).filter(F.col("rn") == 1)
-            .select("user_id", "n_sessions", "n_events"))
-
-
-def sessionize_to_table(spark: SparkSession, events_parquet: str,
-                        out_root: str, n_files: int = 4,
-                        run_id: str = "sessstream") -> DataFrame:
-    """PRODUCTION shape of sessionize: update-mode state rows are
-    committed per micro-batch into a snapshot table (run_id carries the
-    epoch). The memory-sink ``sessionize`` stays as the test harness.
-
-    After the stream drains, a keyed table compaction always runs: one
-    row per user survives (newest epoch) and the replaced snapshots are
-    superseded by a single manifest line, so the result is a plain
-    read — without it the table grows one row per (user, epoch)
-    forever (r3 open end). On a live deployment the same call runs
-    periodically from a maintenance job; vacuum() reclaims the replaced
-    files after the in-flight-reader grace window."""
-    stream_dir = os.path.join(out_root, "backlog")
-    _write_time_ordered_files(spark, events_parquet, stream_dir, n_files)
-    table = SnapshotTable(os.path.join(out_root, "sessions"))
-    schema = spark.read.parquet(stream_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(stream_dir)
-              .withColumn("ts_s", F.col("ts").cast("timestamp").cast("double"))
-              .select("user_id", "ts_s"))
-    out = (stream.groupBy("user_id")
-           .applyInPandasWithState(_session_fn, SESSION_SCHEMA, _STATE_SCHEMA,
-                                   "update", GroupStateTimeout.NoTimeout))
-
-    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        table.append(batch_df.withColumn("epoch", F.lit(epoch_id)),
-                     run_id=f"{run_id}-epoch{epoch_id}")
-
-    q = (out.writeStream.outputMode("update")
-         .foreachBatch(commit_batch)
-         .option("checkpointLocation", os.path.join(out_root, "ck"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    table.compact(spark, run_id=f"{run_id}-compact",
-                  key_col="user_id", order_col="epoch")
-    return table.read(spark).select("user_id", "n_sessions", "n_events")
-
-
-def stream_dedup_exact(spark: SparkSession, docs_dir: str,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Streaming exact-dedup gate: emit each distinct content hash at
-    most once across ALL micro-batches (stateful ``dropDuplicates`` —
-    the don't-retrain-on-seen-content filter in a live ingestion
-    pipeline). State is keyed by the 32-byte hash, not the payload, so
-    it stays bounded by distinct-content count at 100 TB. Over a
-    bounded backlog the emitted hash-set equals the batch DISTINCT
-    (order within a duplicate group is intentionally not part of the
-    contract); tests pin stream == batch."""
-    docs_dir = _as_stream_dir(docs_dir)
-    schema = spark.read.parquet(docs_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(docs_dir)
-              .select(F.sha2(F.col(text_col), 256).alias("text_sha")))
-    uniq = stream.dropDuplicates(["text_sha"])
-    name = f"dedup_{_stable_tag(docs_dir)}"
-    q = (uniq.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return spark.sql(f"SELECT text_sha FROM {name}")
 
 
 def stream_extract_warc(spark: SparkSession, warc_dir: str, out_root: str,

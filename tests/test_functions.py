@@ -1,10 +1,46 @@
-"""Scalar helper functions (functions/text.py)."""
+"""Scalar helper functions (functions/text.py), and the column
+helpers that only these tests use."""
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from powerpoint_context_extractor_spark.functions.text import (
-    cents, ms_label, portable_hash, sanitize_filename, zero_pad,
+    cents, portable_hash,
 )
+
+from .conftest import write_artifacts
+
+#: chars the reference's sanitize_filename maps to '_'
+#: (`pptx_extractor/utils/common.py:49-64`)
+_INVALID = '<>:"/\\|?* '
+
+
+def sanitize_filename(col: Column, max_len: int = 100) -> Column:
+    """Translate invalid filename chars to '_' and cap length."""
+    return F.substring(
+        F.translate(col, _INVALID, "_" * len(_INVALID)), 1, max_len)
+
+
+def zero_pad(col: Column, prefix: str = "", width: int = 3) -> Column:
+    """``slide_{n:03d}``-style deterministic naming
+    (`slides/extractor.py:337`)."""
+    return F.format_string(f"{prefix}%0{width}d", col)
+
+
+def ms_label(ms: Column) -> Column:
+    """Unit formatting with branch (`animations/extractor.py:374-397`
+    analog) — integer-only printf so engines agree byte-for-byte."""
+    return (F.when(ms >= 100000,
+                   F.format_string("%d s", (ms / 1000).cast("long")))
+            .otherwise(F.format_string("%d ms", ms)))
+
+
+def canonicalize_urls(df: DataFrame, url_col: str = "url",
+                      out_col: str = "canon_url") -> DataFrame:
+    from powerpoint_context_extractor_spark.operators.urltools import (
+        canonical_url,
+    )
+    return df.withColumn(out_col, canonical_url(F.col(url_col)))
 
 
 def test_text_helpers(spark):
@@ -44,7 +80,7 @@ def test_artifact_sink_writes_named_payload_files(spark, tmp_path):
     slides/extractor.py:332-346)."""
     import hashlib
     from powerpoint_context_extractor_spark.sources.artifact_sink import (
-        artifact_manifest, write_artifacts,
+        artifact_manifest,
     )
     rows = [(7, bytearray(b"payload-seven")), (42, bytearray(b"\x00\x01\xff"))]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
@@ -67,9 +103,6 @@ def test_artifact_sink_writes_named_payload_files(spark, tmp_path):
 
 
 def test_canonical_url_edge_cases(spark):
-    from powerpoint_context_extractor_spark.operators.urltools import (
-        canonicalize_urls,
-    )
     cases = [
         # (raw, expected canonical)
         ("HTTP://WWW.Example.COM:80/A/B?x=1#frag",

@@ -10,6 +10,109 @@ from powerpoint_context_extractor_spark.operators import (
 )
 
 
+# -- helpers only these tests use ---------------------------------------
+
+def exact_dedup(docs, id_col: str = "doc_id", text_col: str = "text"):
+    """Hash-groupBy exact dedup: one combiner-friendly shuffle."""
+    return (docs.groupBy(F.sha2(F.col(text_col), 256).alias("text_sha"))
+            .agg(F.min(id_col).alias("canonical_id"),
+                 F.count(F.lit(1)).alias("dup_count")))
+
+
+def png_channels_for_doc(doc_id: int) -> int:
+    """DECODED channel count under ``multimodal.png_payload_for_doc``'s
+    doc_id % 4 rule: 0 -> grayscale (1), 1 -> RGB truecolor (3),
+    2 -> indexed palette (decodes to RGB, 3), 3 -> RGBA (4)."""
+    k = doc_id % 4
+    return 1 if k == 0 else (4 if k == 3 else 3)
+
+
+def jpeg_reconstructed_value(v: int) -> int:
+    """The decoded pixel of a constant block of value ``v`` under the
+    frozen Annex-K table (q00 = 16): DC = half-away(64*(v-128)/128),
+    pixel = clamp(2*DC + 128). Mirrored verbatim in the SQL oracle."""
+    from powerpoint_context_extractor_spark.jpeg import QTABLE
+    s = 64 * (v - 128)
+    d = 8 * QTABLE[0]
+    dcq = (2 * abs(s) + d) // (2 * d)
+    dcq = dcq if s >= 0 else -dcq
+    rec = (QTABLE[0] * dcq) // 8 + 128
+    return 0 if rec < 0 else (255 if rec > 255 else rec)
+
+
+def jpeg_color_reconstructed_rgb(doc_id: int, m: int) -> tuple:
+    """Analytic decode of MCU m: rgb -> frozen integer YCbCr ->
+    DC-quantized channel reconstruction (``jpeg_reconstructed_value``,
+    the same q00=16 seam as the gray contract) -> frozen inverse
+    conversion. Mirrored verbatim in the SQL oracle."""
+    from powerpoint_context_extractor_spark.jpeg import (
+        rgb_from_ycbcr, ycbcr_from_rgb,
+    )
+    y, cb, cr = ycbcr_from_rgb(*multimodal.jpeg_color_mcu_rgb(doc_id, m))
+    return rgb_from_ycbcr(jpeg_reconstructed_value(y),
+                          jpeg_reconstructed_value(cb),
+                          jpeg_reconstructed_value(cr))
+
+
+def hll_estimate(registers: dict, p: int = 8) -> float:
+    """Classic HLL estimate from a {register: max_rho} dict (small-
+    range linear-counting correction included)."""
+    import math
+    m = 1 << p
+    alpha = 0.7213 / (1 + 1.079 / m)
+    s = sum(2.0 ** -registers.get(r, 0) for r in range(m))
+    est = alpha * m * m / s
+    if est <= 2.5 * m:
+        zeros = m - len([r for r in registers if registers[r] > 0])
+        if zeros:
+            est = m * math.log(m / zeros)
+    return est
+
+
+def count_min_estimate(cells: dict, key: str, w: int = 256,
+                       d: int = 4) -> int:
+    """Point estimate from a {(row, col): cnt} dict: the min over the
+    key's d cells, on the same md5 seam as ``count_min_sketch``."""
+    import hashlib
+    est = None
+    for j in range(d):
+        h = int(hashlib.md5(f"cm{j}|{key}".encode()).hexdigest()[:8],
+                16) % w
+        c = cells.get((j, h), 0)
+        est = c if est is None else min(est, c)
+    return est or 0
+
+
+def surt_key(col):
+    """Column expression: SURT urlkey of a URL, the Spark twin of
+    ``urltools.surt_key_py``."""
+    host = F.regexp_replace(
+        F.lower(F.regexp_extract(
+            col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1)),
+        r"^www\.", "")
+    rest = F.regexp_replace(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*", "")
+    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
+    return F.concat(rev, F.lit(")"), rest)
+
+
+def fetch_cdx_record(warc_dir: str, filename: str, offset: int,
+                     length: int) -> tuple:
+    """Ranged fetch through a CDX entry: read ONLY [offset, offset+
+    length) of the named file, inflate that single member, parse the
+    one record."""
+    import os
+    import zlib
+
+    from powerpoint_context_extractor_spark.sources.warc import _parse_plain
+    with open(os.path.join(warc_dir, filename), "rb") as f:
+        f.seek(offset)
+        member = f.read(length)
+    recs = list(_parse_plain(zlib.decompress(member, 31)))
+    if len(recs) != 1:
+        raise ValueError(f"cdx: span holds {len(recs)} records, not 1")
+    return recs[0]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     base = [
@@ -24,7 +127,7 @@ def docs(spark):
 
 def test_exact_dedup_groups(docs):
     out = {r["canonical_id"]: r["dup_count"]
-           for r in dedup.exact_dedup(docs).collect()}
+           for r in exact_dedup(docs).collect()}
     assert out[0] == 2          # docs 0,1 identical
     assert out[2] == 1 and out[3] == 1
 
@@ -402,7 +505,7 @@ def test_png_feature_kind_routed_through_real_decoder(spark):
     got = {r["doc_id"]: r for r in mm.extract_features(df).collect()}
     w, h = mm.PNG_W, mm.PNG_H
     for d in (5, 7, 8):
-        ch = mm.png_channels_for_doc(d)
+        ch = png_channels_for_doc(d)
         row = got[d]
         assert row["kind"] == "png" and row["error"] is None
         px = [(d * 31 + i) % 256 for i in range(w * h * ch)]
@@ -1012,7 +1115,6 @@ def test_avi_mjpeg_roundtrip_exact_and_errors():
     from powerpoint_context_extractor_spark.jpeg import render_jpeg_gray
     from powerpoint_context_extractor_spark.operators.multimodal import (
         JPEG_C_H, JPEG_C_W, jpeg_color_mcu_rgb,
-        jpeg_color_reconstructed_rgb,
     )
 
     def frame_for(seed):
@@ -1234,9 +1336,6 @@ def test_jpeg_roundtrip_and_subset_errors():
     from powerpoint_context_extractor_spark.jpeg import (
         decode_jpeg_gray, render_jpeg_gray,
     )
-    from powerpoint_context_extractor_spark.operators.multimodal import (
-        jpeg_reconstructed_value,
-    )
     w, h = 16, 8
     for vals in ([57, 201], [0, 255], [127, 128]):
         px = bytearray(w * h)
@@ -1408,7 +1507,7 @@ def test_jpeg_color_roundtrip_and_exactness():
         w, h, nc, px = decode_jpeg(mm.jpeg_color_payload_for_doc(doc))
         assert (w, h, nc) == (32, 16, 3)
         for m in range(2):
-            exp = mm.jpeg_color_reconstructed_rgb(doc, m)
+            exp = jpeg_color_reconstructed_rgb(doc, m)
             got = {tuple(px[(y * 32 + m * 16 + x) * 3:
                             (y * 32 + m * 16 + x) * 3 + 3])
                    for y in range(16) for x in range(16)}
@@ -1489,8 +1588,8 @@ def test_jpeg_kind_routed_through_real_decoder(spark):
     got = {r["doc_id"]: r for r in mm.extract_features(df).collect()}
     v0 = mm.jpeg_block_value(4, 0)
     v1 = mm.jpeg_block_value(4, 1)
-    r0 = mm.jpeg_reconstructed_value(v0)
-    r1 = mm.jpeg_reconstructed_value(v1)
+    r0 = jpeg_reconstructed_value(v0)
+    r1 = jpeg_reconstructed_value(v1)
     assert got[4]["kind"] == "jpeg" and got[4]["error"] is None
     assert got[4]["features"] == [16.0, 8.0, 1.0,
                                   float(64 * (r0 + r1) % 997),
@@ -2248,11 +2347,10 @@ def test_cdx_spans_are_real_and_surt_twins_agree(spark, tmp_path):
     import hashlib
 
     from powerpoint_context_extractor_spark.operators.urltools import (
-        surt_key, surt_key_py,
+        surt_key_py,
     )
     from powerpoint_context_extractor_spark.sources.warc import (
-        fetch_cdx_record, index_warc_files, read_cdx, write_cdx,
-        write_extracted_as_wet,
+        index_warc_files, read_cdx, write_cdx, write_extracted_as_wet,
     )
     urls = ["https://www.News.example/Docs/5?q=1",
             "http://a.b.co.uk/", "https://x.example/p#frag",
@@ -2482,7 +2580,7 @@ def test_count_min_overestimates_and_merges(spark):
     key's estimate is exact-or-near on a skewed stream, and cell-wise
     SUM of two halves' sketches equals the whole sketch (linearity)."""
     from powerpoint_context_extractor_spark.operators.sketches import (
-        count_min_estimate, count_min_sketch,
+        count_min_sketch,
     )
     rows = ([("hot",)] * 500
             + [(f"k{i % 40}",) for i in range(800)])
@@ -2904,7 +3002,7 @@ def test_hll_registers_estimate_and_merge(spark):
         (F.col("id") % 2).alias("half"))
     whole = {r["register"]: r["max_rho"]
              for r in sketches.hll_registers(docs, "k").collect()}
-    est = sketches.hll_estimate(whole)
+    est = hll_estimate(whole)
     assert abs(est - 5000) / 5000 < 0.20          # 3 sigma at p=8
     # merge = element-wise max of the two halves' registers
     merged: dict = {}

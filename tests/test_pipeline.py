@@ -15,13 +15,13 @@ from powerpoint_context_extractor_spark.operators.extract import (
 from powerpoint_context_extractor_spark.plans.flagship import run_extraction
 from powerpoint_context_extractor_spark.sources.table_io import SnapshotTable
 
-from .conftest import write_pages_table
+from .conftest import generate_pages_rows, write_pages_table
 
 
 @pytest.fixture(scope="module")
 def pages_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("pages"))
-    rows = list(corpus.generate_pages_rows(300, seed=42)) + corpus.fixture_pages()
+    rows = list(generate_pages_rows(300, seed=42)) + corpus.fixture_pages()
     write_pages_table(spark, rows, d, num_partitions=6)
     return d
 
@@ -44,6 +44,58 @@ def test_spark_matches_kernel_byte_identical(spark, pages_dir):
             assert g["error"] == expected.error
             assert g["text"] == src["text"]                  # J2 fallback
             assert g["text_source"] == "fallback"
+
+
+def test_kernel_batches_bookkeeping_columns():
+    """``_kernel_batches_arrow`` in the driver: one output batch per
+    input batch, and every column of every row is the kernel's result
+    plus the J2 fallback, ``partition_id`` -1 outside a task and
+    ``in_bytes`` the payload length (0 for a null payload)."""
+    import pyarrow as pa
+
+    from powerpoint_context_extractor_spark.operators.extract import (
+        _kernel_batches_arrow,
+    )
+    flate = (b"%PDF-1.4\n1 0 obj << /Length 99 /Filter /FlateDecode >>\n"
+             b"stream\nxx\nendstream\nendobj\n")
+    rows = [
+        ("https://a.example/html", b"<html><body><h1>T</h1><p>one two</p>"
+         b"</body></html>", "pre-extracted html"),
+        ("https://a.example/pdf", flate, "pre-extracted pdf"),
+        ("https://a.example/wdoc", b"%WDOC1\nnotanumber\n", None),
+        ("https://a.example/null", None, "pre-extracted null"),
+    ]
+    schema = pa.schema([("url", pa.string()), ("html", pa.binary()),
+                        ("text", pa.string())])
+    batches = [pa.RecordBatch.from_pylist(
+        [dict(zip(schema.names, r)) for r in part], schema=schema)
+        for part in (rows[:1], rows[1:])]
+    out = list(_kernel_batches_arrow(iter(batches)))
+    assert [rb.num_rows for rb in out] == [1, 3]
+    assert all(rb.schema.names == EXTRACTED_SCHEMA.names for rb in out)
+    got = [r for rb in out for r in rb.to_pylist()]
+    assert [r["url"] for r in got] == [r[0] for r in rows]
+    for g, (url, html, fallback) in zip(got, rows):
+        want = extract_document(url, html)
+        assert g["title"] == want.title, url
+        assert g["spans"] == want.spans, url
+        assert g["n_blocks"] == want.n_blocks, url
+        assert g["error"] == want.error, url
+        assert g["charset"] == want.charset, url
+        assert g["partition_id"] == -1, url
+        assert g["in_bytes"] == (len(html) if html is not None else 0), url
+        if want.error is None:
+            assert (g["text"], g["text_source"]) == (want.text, "kernel"), url
+        elif fallback is None:
+            assert (g["text"], g["text_source"]) == (None, None), url
+        else:
+            assert (g["text"], g["text_source"]) == (fallback,
+                                                     "fallback"), url
+    # one row of each kind
+    assert got[0]["error"] is None and got[0]["text"]
+    assert got[1]["error"] is not None and got[1]["text"] == rows[1][2]
+    assert got[2]["error"] is not None and got[2]["text_source"] is None
+    assert got[3]["error"] == "null_content" and got[3]["in_bytes"] == 0
 
 
 def test_mixed_corpus_zero_decode_errors(spark, pages_dir):
@@ -164,7 +216,7 @@ def test_run_extraction_spark_jobs(spark, tmp_path):
     (``pages_dir`` packs into fewer scan splits than cores, so it is
     spread: see ``test_run_extraction_spreads_packed_small_files``.)"""
     pages_dir = str(tmp_path / "pages")
-    rows = (list(corpus.generate_pages_rows(300, seed=42))
+    rows = (list(generate_pages_rows(300, seed=42))
             + corpus.fixture_pages())
     write_pages_table(spark, rows, pages_dir,
                       num_partitions=spark.sparkContext.defaultParallelism)
@@ -222,7 +274,7 @@ def test_run_extraction_spreads_a_single_row_group_input(spark, pages_dir,
     assert len(base["snapshot"]["files"]) >= 4
     path = str(tmp_path / "single.parquet")
     rows = [dict(r, url=r["url"] + "-single")
-            for r in corpus.generate_pages_rows(60, seed=9)]
+            for r in generate_pages_rows(60, seed=9)]
     pq.write_table(pa.Table.from_pylist(rows), path)
     assert pq.ParquetFile(path).metadata.num_row_groups == 1
     info = run_extraction(spark, spark.read.parquet(path), out, resume=True)
@@ -241,7 +293,7 @@ def test_flagship_cli(spark, tmp_path, monkeypatch):
 
     from powerpoint_context_extractor_spark.plans import flagship
     pages, out = str(tmp_path / "pages"), str(tmp_path / "out")
-    write_pages_table(spark, corpus.generate_pages_rows(20, seed=3), pages, 2)
+    write_pages_table(spark, generate_pages_rows(20, seed=3), pages, 2)
     argv = ["flagship", "--pages", pages, "--out", out,
             "--master", spark.sparkContext.master]
     for extra in ([], [], ["--no-resume"]):
@@ -425,10 +477,21 @@ def test_mixed_writer_extracted_table(spark, pages_dir, tmp_path):
     assert tbl.read_evolved(spark).count() == n_urls
 
 
+def detect_heavy_hitters(df, key_col: str,
+                         fraction_threshold: float = 0.1) -> list:
+    """Keys holding > ``fraction_threshold`` of ``df``'s rows — the
+    salting trigger (U5)."""
+    src = df.select(key_col)
+    total = src.count()
+    if total == 0:
+        return []
+    hits = (src.groupBy(key_col).count()
+            .filter(F.col("count") > total * fraction_threshold)
+            .orderBy(F.col("count").desc(), F.col(key_col)))
+    return [r[key_col] for r in hits.collect()]
+
+
 def test_heavy_hitter_detection_on_skewed_hosts(spark, pages_dir):
-    from powerpoint_context_extractor_spark.operators.textstats import (
-        detect_heavy_hitters,
-    )
     pages = spark.read.parquet(pages_dir)
     hosts = pages.select(
         F.regexp_extract("url", r"https://([^./]+)\.", 1).alias("host"))

@@ -15,6 +15,20 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def zorder_write(df, path: str, cols: list, bits: int = 16,
+                 n_files: int = 8) -> None:
+    """Write ``df`` clustered on ``layout.zorder_key`` of ``cols``:
+    range-partition by the key and sort within partitions, so every
+    output file covers a small hyper-rectangle of the key space. The
+    key column itself is dropped from the output."""
+    from powerpoint_context_extractor_spark.operators import layout
+    keyed = df.withColumn("_zkey", layout.zorder_key(cols, bits))
+    (keyed.repartitionByRange(n_files, "_zkey")
+     .sortWithinPartitions("_zkey")
+     .drop("_zkey")
+     .write.mode("overwrite").parquet(path))
+
+
 @pytest.fixture(scope="module")
 def sf(sf_dir):
     return sf_dir
@@ -525,7 +539,7 @@ def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
         assert r["z"] == want
     # layout: z-order vs linear x-sort, 8 files each
     zdir, ldir = str(tmp_path / "z"), str(tmp_path / "l")
-    layout.zorder_write(df, zdir, ["x", "y"], bits=6, n_files=8)
+    zorder_write(df, zdir, ["x", "y"], bits=6, n_files=8)
     (df.repartitionByRange(8, "x").sortWithinPartitions("x")
      .write.mode("overwrite").parquet(ldir))
 

@@ -7,13 +7,12 @@ import os
 
 import pytest
 
-from powerpoint_context_extractor_spark.sources.artifact_sink import (
-    write_artifacts,
-)
 from powerpoint_context_extractor_spark.sources.warc import (
     write_documents_as_warc, write_extracted_as_wet,
 )
 from powerpoint_context_extractor_spark.sources.wds import write_wds_shards
+
+from .conftest import write_artifacts
 
 _TEXTS = ["plain ascii", "accents é ü and 中文", "", "two\nlines\r\n",
           "x" * 300]

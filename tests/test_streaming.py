@@ -1,24 +1,196 @@
 """Structured Streaming tests: exactly-once stream ingestion, windowed
-aggregation == batch equivalence, custom stateful sessionization."""
+aggregation == batch equivalence, custom stateful sessionization.
+
+The streams that only these tests run (``stream_extract``,
+``windowed_event_counts``, ``stream_dedup_exact`` and the
+``applyInPandasWithState`` sessionizers) are defined here, over the
+package's stream helpers."""
 
 import os
 
 import pytest
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from powerpoint_context_extractor_spark import corpus
+from powerpoint_context_extractor_spark.sources.pagegen import PAGES_SCHEMA
 from powerpoint_context_extractor_spark.sources.table_io import SnapshotTable
 from powerpoint_context_extractor_spark.streaming.ingest import (
-    SESSION_GAP_S, sessionize, stream_extract, windowed_event_counts,
+    _as_stream_dir, _extract_epochs, _stable_tag, _write_time_ordered_files,
 )
 
-from .conftest import write_pages_table
+from .conftest import generate_pages_rows, write_pages_table
+
+
+def stream_extract(spark: SparkSession, pages_dir: str, out_root: str,
+                   checkpoint_dir: str, run_id: str = "stream") -> None:
+    """Ingest a pages directory as a bounded stream (availableNow) and
+    commit extraction output per micro-batch through ``run_extraction``,
+    exactly-once."""
+    stream = (spark.readStream.schema(PAGES_SCHEMA)
+              .option("maxFilesPerTrigger", 4)
+              .parquet(pages_dir))
+    _extract_epochs(stream, out_root, checkpoint_dir, run_id)
+
+
+def windowed_event_counts(spark: SparkSession, events_dir: str,
+                          window: str = "1 hour",
+                          watermark: str = "2 hours") -> DataFrame:
+    """Tumbling-window counts over a bounded event stream; returns the
+    final (complete-mode) result as a batch DataFrame. Epoch-aligned
+    windows == date_trunc in the oracle."""
+    events_dir = _as_stream_dir(events_dir)
+    schema = spark.read.parquet(events_dir).schema
+    stream = (spark.readStream.schema(schema).parquet(events_dir)
+              # watermarks need TIMESTAMP (ltz); testdata parquet is NTZ.
+              # session tz is pinned UTC so the cast is value-preserving.
+              .withColumn("ts", F.col("ts").cast("timestamp")))
+    agg = (stream
+           .withWatermark("ts", watermark)
+           .groupBy(F.window("ts", window).alias("w"), "event_type")
+           .agg(F.count(F.lit(1)).alias("n")))
+    name = f"win_{_stable_tag(events_dir)}"
+    q = (agg.writeStream.outputMode("complete")
+         .format("memory").queryName(name)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return spark.sql(
+        f"SELECT w.start AS win_start, event_type, n FROM {name}")
+
+
+def stream_dedup_exact(spark: SparkSession, docs_dir: str,
+                       id_col: str = "doc_id",
+                       text_col: str = "text") -> DataFrame:
+    """Streaming exact-dedup gate: emit each distinct content hash at
+    most once across ALL micro-batches (stateful ``dropDuplicates``).
+    State is keyed by the 32-byte hash, not the payload. Over a
+    bounded backlog the emitted hash-set equals the batch DISTINCT."""
+    docs_dir = _as_stream_dir(docs_dir)
+    schema = spark.read.parquet(docs_dir).schema
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(docs_dir)
+              .select(F.sha2(F.col(text_col), 256).alias("text_sha")))
+    uniq = stream.dropDuplicates(["text_sha"])
+    name = f"dedup_{_stable_tag(docs_dir)}"
+    q = (uniq.writeStream.outputMode("append")
+         .format("memory").queryName(name)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return spark.sql(f"SELECT text_sha FROM {name}")
+
+
+SESSION_SCHEMA = T.StructType([
+    T.StructField("user_id", T.LongType()),
+    T.StructField("n_sessions", T.LongType()),
+    T.StructField("n_events", T.LongType()),
+])
+
+_STATE_SCHEMA = T.StructType([
+    T.StructField("last_ts", T.DoubleType()),
+    T.StructField("n_sessions", T.LongType()),
+    T.StructField("n_events", T.LongType()),
+])
+
+SESSION_GAP_S = 1800.0
+
+
+def _sessions(events: DataFrame) -> DataFrame:
+    """Gap-based session counts per user over an event stream
+    (user_id, ts_s): ``applyInPandasWithState`` in update mode."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    # nested, so cloudpickle ships it by value: workers do not import
+    # this test module
+    def _session_fn(key, pdfs, state):
+        import pandas as pd
+        (user_id,) = key
+        if state.exists:
+            last_ts, n_sessions, n_events = state.get
+        else:
+            last_ts, n_sessions, n_events = -1.0, 0, 0
+        for pdf in pdfs:
+            for ts in sorted(pdf["ts_s"].tolist()):
+                if last_ts < 0 or ts - last_ts > SESSION_GAP_S:
+                    n_sessions += 1
+                last_ts = ts
+                n_events += 1
+        state.update((last_ts, n_sessions, n_events))
+        yield pd.DataFrame({"user_id": [user_id],
+                            "n_sessions": [n_sessions],
+                            "n_events": [n_events]})
+
+    return (events.groupBy("user_id")
+            .applyInPandasWithState(_session_fn, SESSION_SCHEMA,
+                                    _STATE_SCHEMA, "update",
+                                    GroupStateTimeout.NoTimeout))
+
+
+def _event_seconds(stream: DataFrame) -> DataFrame:
+    return (stream.withColumn(
+        "ts_s", F.col("ts").cast("timestamp").cast("double"))
+        .select("user_id", "ts_s"))
+
+
+def sessionize(spark: SparkSession, events_dir: str) -> DataFrame:
+    """Custom stateful operator: gap-based session counting per user via
+    applyInPandasWithState (update mode; final state after a bounded
+    backlog is deterministic)."""
+    from pyspark.sql import Window as W
+    events_dir = _as_stream_dir(events_dir)
+    schema = spark.read.parquet(events_dir).schema
+    out = _sessions(_event_seconds(
+        spark.readStream.schema(schema).parquet(events_dir)))
+    name = f"sess_{_stable_tag(events_dir)}"
+    q = (out.writeStream.outputMode("update")
+         .format("memory").queryName(name)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    # update mode may emit a row per micro-batch; keep the final one
+    res = spark.sql(f"SELECT * FROM {name}")
+    w = F.row_number().over(
+        W.partitionBy("user_id").orderBy(F.col("n_events").desc()))
+    return (res.withColumn("rn", w).filter(F.col("rn") == 1)
+            .select("user_id", "n_sessions", "n_events"))
+
+
+def sessionize_to_table(spark: SparkSession, events_parquet: str,
+                        out_root: str, n_files: int = 4,
+                        run_id: str = "sessstream") -> DataFrame:
+    """Table-sink sessionize: update-mode state rows are committed per
+    micro-batch into a snapshot table (run_id carries the epoch). After
+    the stream drains, a keyed table compaction keeps one row per user
+    (newest epoch), superseding the replaced snapshots with a single
+    manifest line."""
+    stream_dir = os.path.join(out_root, "backlog")
+    _write_time_ordered_files(spark, events_parquet, stream_dir, n_files)
+    table = SnapshotTable(os.path.join(out_root, "sessions"))
+    schema = spark.read.parquet(stream_dir).schema
+    out = _sessions(_event_seconds(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(stream_dir)))
+
+    def commit_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        table.append(batch_df.withColumn("epoch", F.lit(epoch_id)),
+                     run_id=f"{run_id}-epoch{epoch_id}")
+
+    q = (out.writeStream.outputMode("update")
+         .foreachBatch(commit_batch)
+         .option("checkpointLocation", os.path.join(out_root, "ck"))
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    table.compact(spark, run_id=f"{run_id}-compact",
+                  key_col="user_id", order_col="epoch")
+    return table.read(spark).select("user_id", "n_sessions", "n_events")
 
 
 @pytest.fixture(scope="module")
 def pages_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("stream_pages"))
-    write_pages_table(spark, corpus.generate_pages_rows(120, seed=7), d, 6)
+    write_pages_table(spark, generate_pages_rows(120, seed=7), d, 6)
     return d
 
 
@@ -96,9 +268,6 @@ def test_stream_dedup_exact_equals_batch_distinct(spark, sf_dir):
     """The streaming dedup gate's emitted hash-set over a bounded
     backlog equals the batch DISTINCT — each content hash exactly
     once."""
-    from powerpoint_context_extractor_spark.streaming.ingest import (
-        stream_dedup_exact,
-    )
     docs = f"{sf_dir}/documents.parquet"
     streamed = [r["text_sha"]
                 for r in stream_dedup_exact(spark, docs).collect()]
@@ -194,9 +363,6 @@ def test_stream_window_counts_million_row_backlog(spark, tmp_path):
 def test_sessionize_to_table_equals_memory_harness(spark, sf_dir, tmp_path):
     """The table-backed production sessionize equals the memory-sink
     harness (same stateful operator, different sink)."""
-    from powerpoint_context_extractor_spark.streaming.ingest import (
-        sessionize, sessionize_to_table,
-    )
     ev = f"{sf_dir}/events.parquet"
     tab = {r["user_id"]: (r["n_sessions"], r["n_events"])
            for r in sessionize_to_table(spark, ev, str(tmp_path / "s")).collect()}
@@ -205,9 +371,6 @@ def test_sessionize_to_table_equals_memory_harness(spark, sf_dir, tmp_path):
     assert tab == mem
     # the post-stream compaction leaves exactly one live row per user (the
     # (user, epoch) growth from update-mode commits is folded away)
-    from powerpoint_context_extractor_spark.sources.table_io import (
-        SnapshotTable,
-    )
     stable = SnapshotTable(str(tmp_path / "s" / "sessions"))
     assert len(stable.snapshots()) == 1
     assert stable.read(spark).count() == len(tab)

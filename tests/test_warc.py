@@ -7,12 +7,20 @@ import os
 from powerpoint_context_extractor_spark.sources import warc
 
 
+def build_warc(records, gzip_records: bool = True) -> bytes:
+    """records: iterable of (url, date, body_bytes[, rec_type]). Emits a
+    complete WARC file; ``gzip_records`` writes one gzip member per
+    record (the .warc.gz layout)."""
+    return b"".join(warc._member(warc.build_record(*rec), gzip_records)
+                    for rec in records)
+
+
 def test_warc_roundtrip_plain_and_gz():
     recs = [("doc://1", "2024-01-01T00:00:01Z", b"<h1>One</h1>"),
             ("doc://2", "2024-01-01T00:00:02Z",
              b"<p>bait: WARC/1.0 endstream \r\n\r\n inside body</p>")]
     for gz in (False, True):
-        data = warc.build_warc(
+        data = build_warc(
             [("file://0", "d", b"software: x", "warcinfo")] + recs,
             gzip_records=gz)
         got = [(h["warc-target-uri"], warc.http_body(p))
@@ -20,13 +28,13 @@ def test_warc_roundtrip_plain_and_gz():
                if h.get("warc-type") == "response"]
         assert got == [(u, b) for u, _d, b in recs], gz
     # .warc.gz really is one gzip member per record, not one stream
-    gz_data = warc.build_warc(recs, gzip_records=True)
+    gz_data = build_warc(recs, gzip_records=True)
     assert len(list(warc._gzip_member_spans(gz_data))) == 2
 
 
 def test_warc_error_tolerance():
     recs = [("doc://1", "d", b"<p>a</p>"), ("doc://2", "d", b"<p>b</p>")]
-    data = warc.build_warc(recs, gzip_records=True)
+    data = build_warc(recs, gzip_records=True)
     # truncated final member: earlier records still parse, no raise
     partial = list(warc.iter_warc_records(data[:len(data) - 8]))
     assert 1 <= len(partial) < 2 or partial[0][0]["warc-target-uri"] == "doc://1"
@@ -111,7 +119,7 @@ if HAVE_HYP:
         order, under both layouts (Content-Length framing, not
         delimiter scanning)."""
         rows = [(u, "2024-01-01T00:00:00Z", b) for u, b in recs]
-        data = warc.build_warc(rows, gzip_records=gz)
+        data = build_warc(rows, gzip_records=gz)
         got = [(h["warc-target-uri"], warc.http_body(p))
                for h, p in warc.iter_warc_records(data)]
         assert got == [(u, b) for u, b in recs]
@@ -153,7 +161,7 @@ def test_whole_file_gzip_warc_parses_all_records():
 
     rows = [(f"doc://{i}", "2024-01-01T00:00:00Z", f"body {i}".encode())
             for i in range(5)]
-    plain = warc.build_warc(rows, gzip_records=False)
+    plain = build_warc(rows, gzip_records=False)
     co = zlib.compressobj(6, zlib.DEFLATED, 31)
     whole = co.compress(plain) + co.flush()
     got = [(h["warc-target-uri"], warc.http_body(p))
@@ -175,7 +183,7 @@ def test_wet_roundtrip_unicode_and_type_filter(spark, tmp_path):
             for r in warc.read_wet(spark, out).collect()}
     assert back == dict(rows)
     # a WARC with response + warcinfo records yields NO wet rows
-    mixed = warc.build_warc(
+    mixed = build_warc(
         [("file://0", "2024-01-01T00:00:00Z", b"software: x", "warcinfo"),
          ("http://b/1", "2024-01-01T00:00:00Z", b"<p>html</p>")])
     p = tmp_path / "mixed" ; p.mkdir()
