@@ -38,72 +38,103 @@ def _row_stride(width: int) -> int:
     return (width * 3 + 3) & ~3
 
 
+def _chunk(cid: bytes, body: bytes) -> bytes:
+    return cid + struct.pack("<I", len(body)) + body
+
+
+def _bitmap_info(width: int, height: int, bitcount: int, compression: int,
+                 size_image: int = 0, colors_used: int = 0) -> bytes:
+    """The 40-byte BITMAPINFOHEADER (one plane, no resolution)."""
+    return struct.pack("<IiiHHIIiiII", 40, width, height, 1, bitcount,
+                       compression, size_image, 0, 0, colors_used, 0)
+
+
+def _to_dib(width: int, height: int, rgb: bytes) -> bytes:
+    """Top-down RGB -> 24-bit DIB rows: BGR, bottom-up, 4-byte padded."""
+    stride = _row_stride(width)
+    rows = []
+    for y in range(height - 1, -1, -1):              # bottom-up
+        row = bytearray()
+        for x in range(width):
+            r, g, b = rgb[(y * width + x) * 3:(y * width + x) * 3 + 3]
+            row += bytes((b, g, r))                  # BGR
+        row += b"\x00" * (stride - width * 3)        # 4-byte pad
+        rows.append(bytes(row))
+    return b"".join(rows)
+
+
+def _from_dib(data: bytes, off: int, width: int, height: int,
+              top_down: bool = False) -> bytes:
+    """24-bit DIB rows at ``data[off:]`` -> top-down RGB bytes."""
+    stride = _row_stride(width)
+    rgb = bytearray(width * height * 3)
+    for y in range(height):
+        row = off + (y if top_down else height - 1 - y) * stride
+        for x in range(width):
+            b, g, r = data[row + x * 3:row + x * 3 + 3]
+            dst = (y * width + x) * 3
+            rgb[dst:dst + 3] = bytes((r, g, b))      # BGR -> RGB
+    return bytes(rgb)
+
+
+def _check_stream(width: int, height: int, fps: int, frames: list) -> None:
+    if width <= 0 or height <= 0 or fps <= 0 or not frames:
+        raise ValueError("avi: need positive dims/fps and >= 1 frame")
+
+
+def _render_container(width: int, height: int, fps: int, handler: bytes,
+                      strf: bytes, chunk_id: bytes, chunks: list) -> bytes:
+    """RIFF('AVI ') around encoded frame ``chunks``: LIST('hdrl') with
+    the 'avih' main header (AVIF_HASINDEX) and the mandatory
+    LIST('strl') 'strh'/'strf' stream headers, LIST('movi') with one
+    word-aligned ``chunk_id`` chunk per frame, and the 'idx1' index.
+    The suggested buffer size is the largest chunk."""
+    bufsz = max(len(c) for c in chunks)
+    avih = struct.pack(
+        "<IIIIIIIIIIIIII",
+        1_000_000 // fps,          # dwMicroSecPerFrame
+        bufsz * fps,               # dwMaxBytesPerSec
+        0, 0x10,                   # padding, dwFlags=AVIF_HASINDEX
+        len(chunks), 0, 1, bufsz,
+        width, height, 0, 0, 0, 0)
+    strh = struct.pack(
+        "<4s4sIHHIIIIIIIIhhhh",
+        b"vids", handler, 0, 0, 0, 0,
+        1, fps,                    # dwScale/dwRate -> fps
+        0, len(chunks), bufsz, 0, 0,
+        0, 0, width, height)       # rcFrame
+    strl = _chunk(b"LIST", b"strl" + _chunk(b"strh", strh)
+                  + _chunk(b"strf", strf))
+    hdrl = _chunk(b"LIST", b"hdrl" + _chunk(b"avih", avih) + strl)
+    movi = bytearray(b"movi")
+    index = bytearray()
+    for c in chunks:
+        # idx1 offsets point at the chunk id, relative to the 'movi'
+        # fourcc position (the convention most players expect): the
+        # first chunk sits at +4, right after the 'movi' fourcc
+        index += struct.pack("<4sIII", chunk_id, 0x10,   # AVIIF_KEYFRAME
+                             len(movi), len(c))
+        movi += _chunk(chunk_id, c)
+        if len(c) % 2:
+            movi += b"\x00"                          # word alignment
+    return _chunk(b"RIFF", b"AVI " + hdrl + _chunk(b"LIST", bytes(movi))
+                  + _chunk(b"idx1", bytes(index)))
+
+
 def render_avi(width: int, height: int, frames: list,
                fps: int = 10) -> bytes:
     """Encode ``frames`` (each top-down RGB bytes, len w*h*3) as an
     uncompressed-DIB AVI."""
-    if width <= 0 or height <= 0 or fps <= 0 or not frames:
-        raise ValueError("avi: need positive dims/fps and >= 1 frame")
-    stride = _row_stride(width)
+    _check_stream(width, height, fps, frames)
     dibs = []
     for f in frames:
         if len(f) != width * height * 3:
             raise ValueError("avi: frame length != width*height*3")
-        rows = []
-        for y in range(height - 1, -1, -1):          # bottom-up
-            row = bytearray()
-            for x in range(width):
-                r, g, b = f[(y * width + x) * 3:(y * width + x) * 3 + 3]
-                row += bytes((b, g, r))              # BGR
-            row += b"\x00" * (stride - width * 3)    # 4-byte pad
-            rows.append(bytes(row))
-        dibs.append(b"".join(rows))
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps,          # dwMicroSecPerFrame
-        stride * height * fps,     # dwMaxBytesPerSec
-        0, 0x10,                   # padding, dwFlags=AVIF_HASINDEX
-        len(frames), 0, 1, stride * height,
-        width, height, 0, 0, 0, 0)
-    # mandatory per-stream headers (r5 ADVICE #2): LIST('strl') with an
-    # 'strh' (vids/DIB) and an 'strf' BITMAPINFOHEADER
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"DIB ", 0, 0, 0, 0,
-        1, fps,                    # dwScale/dwRate -> fps
-        0, len(frames), stride * height, 0, 0,
-        0, 0, width, height)       # rcFrame
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 24,  # BITMAPINFOHEADER, 24bpp
-        0,                         # BI_RGB (uncompressed)
-        stride * height, 0, 0, 0, 0)
-    strl_body = (b"strl"
-                 + b"strh" + struct.pack("<I", len(strh)) + strh
-                 + b"strf" + struct.pack("<I", len(strf)) + strf)
-    strl = b"LIST" + struct.pack("<I", len(strl_body)) + strl_body
-    hdrl_body = (b"hdrl"
-                 + b"avih" + struct.pack("<I", len(avih)) + avih
-                 + strl)
-    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-    movi_body = bytearray(b"movi")
-    idx_entries = []
-    for d in dibs:
-        # idx1 offsets point at the chunk id, relative to the 'movi'
-        # fourcc position (the convention most players expect): the
-        # first chunk sits at +4, right after the 'movi' fourcc
-        idx_entries.append((len(movi_body), len(d)))
-        movi_body += b"00db" + struct.pack("<I", len(d)) + d
-        if len(d) % 2:
-            movi_body += b"\x00"                     # word alignment
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + bytes(movi_body)
-    # idx1 chunk backs the AVIF_HASINDEX flag set in avih
-    idx_body = b"".join(
-        struct.pack("<4sIII", b"00db", 0x10, off, ln)   # AVIIF_KEYFRAME
-        for off, ln in idx_entries)
-    idx1 = b"idx1" + struct.pack("<I", len(idx_body)) + idx_body
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+        dibs.append(_to_dib(width, height, f))
+    strf = _bitmap_info(width, height, 24, 0,        # BI_RGB
+                        _row_stride(width) * height)
+    return _render_container(width, height, fps, b"DIB ", strf, b"00db",
+                             dibs)
 
 
 # --- BI_RLE8 compressed frames (r6) ----------------------------------------
@@ -208,8 +239,7 @@ def render_avi_rle8(width: int, height: int, frames: list, palette: list,
     (BGR0 order), frames go in '00dc' (compressed) chunks, and the
     idx1 index backs AVIF_HASINDEX exactly like the uncompressed
     writer."""
-    if width <= 0 or height <= 0 or fps <= 0 or not frames:
-        raise ValueError("avi: need positive dims/fps and >= 1 frame")
+    _check_stream(width, height, fps, frames)
     if not 1 <= len(palette) <= 256:
         raise ValueError("avi: palette must have 1..256 entries")
     comp = []
@@ -217,45 +247,11 @@ def render_avi_rle8(width: int, height: int, frames: list, palette: list,
         if any(b >= len(palette) for b in f):
             raise ValueError("avi: palette index out of range")
         comp.append(rle8_encode_frame(width, height, f))
-    bufsz = max(len(c) for c in comp)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, bufsz * fps, 0, 0x10,      # AVIF_HASINDEX
-        len(frames), 0, 1, bufsz,
-        width, height, 0, 0, 0, 0)
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MRLE", 0, 0, 0, 0,
-        1, fps, 0, len(frames), bufsz, 0, 0,
-        0, 0, width, height)
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 8,                     # 8bpp
-        1,                                           # BI_RLE8
-        0, 0, 0, len(palette), 0)
+    strf = _bitmap_info(width, height, 8, 1, 0,      # 8bpp BI_RLE8
+                        len(palette))
     strf += b"".join(bytes((b, g, r, 0)) for r, g, b in palette)
-    strl_body = (b"strl"
-                 + b"strh" + struct.pack("<I", len(strh)) + strh
-                 + b"strf" + struct.pack("<I", len(strf)) + strf)
-    strl = b"LIST" + struct.pack("<I", len(strl_body)) + strl_body
-    hdrl_body = (b"hdrl"
-                 + b"avih" + struct.pack("<I", len(avih)) + avih
-                 + strl)
-    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-    movi_body = bytearray(b"movi")
-    idx_entries = []
-    for c in comp:
-        idx_entries.append((len(movi_body), len(c)))
-        movi_body += b"00dc" + struct.pack("<I", len(c)) + c
-        if len(c) % 2:
-            movi_body += b"\x00"
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + bytes(movi_body)
-    idx_body = b"".join(
-        struct.pack("<4sIII", b"00dc", 0x10, off, ln)
-        for off, ln in idx_entries)
-    idx1 = b"idx1" + struct.pack("<I", len(idx_body)) + idx_body
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _render_container(width, height, fps, b"MRLE", strf, b"00dc",
+                             comp)
 
 
 def render_avi_mjpeg(width: int, height: int, frames: list,
@@ -266,51 +262,15 @@ def render_avi_mjpeg(width: int, height: int, frames: list,
     legacy-camera/compressed-AVI shape decoders actually meet. Dims
     must satisfy the color-JPEG subset (multiples of 16)."""
     from .jpeg import render_jpeg_color
-    if width <= 0 or height <= 0 or fps <= 0 or not frames:
-        raise ValueError("avi: need positive dims/fps and >= 1 frame")
+    _check_stream(width, height, fps, frames)
     comp = []
     for f in frames:
         if len(f) != width * height * 3:
             raise ValueError("avi: frame length != width*height*3")
         comp.append(render_jpeg_color(width, height, bytes(f)))
-    bufsz = max(len(c) for c in comp)
-    avih = struct.pack(
-        "<IIIIIIIIIIIIII",
-        1_000_000 // fps, bufsz * fps, 0, 0x10,      # AVIF_HASINDEX
-        len(frames), 0, 1, bufsz,
-        width, height, 0, 0, 0, 0)
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIIIhhhh",
-        b"vids", b"MJPG", 0, 0, 0, 0,
-        1, fps, 0, len(frames), bufsz, 0, 0,
-        0, 0, width, height)
-    strf = struct.pack(
-        "<IiiHHIIiiII",
-        40, width, height, 1, 24,
-        MJPG_FOURCC,                                 # biCompression
-        0, 0, 0, 0, 0)
-    strl_body = (b"strl"
-                 + b"strh" + struct.pack("<I", len(strh)) + strh
-                 + b"strf" + struct.pack("<I", len(strf)) + strf)
-    strl = b"LIST" + struct.pack("<I", len(strl_body)) + strl_body
-    hdrl_body = (b"hdrl"
-                 + b"avih" + struct.pack("<I", len(avih)) + avih
-                 + strl)
-    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-    movi_body = bytearray(b"movi")
-    idx_entries = []
-    for c in comp:
-        idx_entries.append((len(movi_body), len(c)))
-        movi_body += b"00dc" + struct.pack("<I", len(c)) + c
-        if len(c) % 2:
-            movi_body += b"\x00"
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + bytes(movi_body)
-    idx_body = b"".join(
-        struct.pack("<4sIII", b"00dc", 0x10, off, ln)
-        for off, ln in idx_entries)
-    idx1 = b"idx1" + struct.pack("<I", len(idx_body)) + idx_body
-    body = b"AVI " + hdrl + movi + idx1
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    strf = _bitmap_info(width, height, 24, MJPG_FOURCC)
+    return _render_container(width, height, fps, b"MJPG", strf, b"00dc",
+                             comp)
 
 
 def decode_avi(data: bytes) -> tuple:
@@ -383,7 +343,6 @@ def decode_avi(data: bytes) -> tuple:
     stride = _row_stride(width)
     out = []
     for kind, body_start, ln in frames:
-        rgb = bytearray(width * height * 3)
         if kind == "dc" and compression == MJPG_FOURCC:
             from .jpeg import decode_jpeg
             fw, fh, nc, px = decode_jpeg(data[body_start:body_start + ln])
@@ -395,6 +354,7 @@ def decode_avi(data: bytes) -> tuple:
                 out.append(bytes(v for p in px for v in (p, p, p)))
             continue
         if kind == "dc":
+            rgb = bytearray(width * height * 3)
             idx = rle8_decode_frame(width, height,
                                     data[body_start:body_start + ln])
             for p, j in enumerate(idx):
@@ -405,14 +365,7 @@ def decode_avi(data: bytes) -> tuple:
             continue
         if ln != stride * height:
             raise ValueError("avi: frame size != stride*height")
-        dib = data[body_start:body_start + ln]
-        for y in range(height):
-            src_row = (height - 1 - y) * stride      # bottom-up -> top
-            for x in range(width):
-                b, g, r = dib[src_row + x * 3:src_row + x * 3 + 3]
-                dst = (y * width + x) * 3
-                rgb[dst:dst + 3] = bytes((r, g, b))  # BGR -> RGB
-        out.append(bytes(rgb))
+        out.append(_from_dib(data, body_start, width, height))
     return width, height, fps, out
 
 
@@ -424,20 +377,11 @@ def render_bmp(width: int, height: int, pixels: bytes) -> bytes:
         raise ValueError("bmp: bad dimensions")
     if len(pixels) != width * height * 3:
         raise ValueError("bmp: pixels length != width*height*3")
-    stride = _row_stride(width)
-    dib = bytearray()
-    for y in range(height - 1, -1, -1):
-        row = bytearray()
-        for x in range(width):
-            r, g, b = pixels[(y * width + x) * 3:(y * width + x) * 3 + 3]
-            row += bytes((b, g, r))
-        row += b"\x00" * (stride - width * 3)
-        dib += row
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
-                       stride * height, 0, 0, 0, 0)
+    dib = _to_dib(width, height, pixels)
+    info = _bitmap_info(width, height, 24, 0, _row_stride(width) * height)
     off = 14 + len(info)
     hdr = struct.pack("<2sIHHI", b"BM", off + len(dib), 0, 0, off)
-    return hdr + info + bytes(dib)
+    return hdr + info + dib
 
 
 def decode_bmp(data: bytes) -> tuple:
@@ -456,15 +400,6 @@ def decode_bmp(data: bytes) -> tuple:
         raise ValueError("bmp: bad dimensions")
     top_down = height < 0
     height = abs(height)
-    stride = _row_stride(width)
-    if off + stride * height > len(data):
+    if off + _row_stride(width) * height > len(data):
         raise ValueError("bmp: truncated pixel data")
-    rgb = bytearray(width * height * 3)
-    for y in range(height):
-        src_y = y if top_down else height - 1 - y
-        row = off + src_y * stride
-        for x in range(width):
-            b, g, r = data[row + x * 3:row + x * 3 + 3]
-            dst = (y * width + x) * 3
-            rgb[dst:dst + 3] = bytes((r, g, b))
-    return width, height, 3, bytes(rgb)
+    return width, height, 3, _from_dib(data, off, width, height, top_down)

@@ -4,27 +4,21 @@ SURVEY.md §4 flags an optional ``EXTRACT(...)`` table function so SQL
 users can drive the flagship path without touching the DataFrame API —
 the reference exposes its extraction through a single callable the
 same way (`/root/reference/pptx_extractor/core/extractor.py:36-88`
-is the one entry point everything else drives). This registers two
-Arrow-optimized Python UDTFs:
-
-- ``extract_page(url, html)`` — the production shape: run the real
-  kernel over raw page bytes, one output row per page with the same
-  core columns as ``operators.extract.extract_pages``.
-- ``extract_doc(doc_id, text)`` — the flagship-demo shape: wrap a
-  testdata ``documents`` row via ``corpus.page_for_document`` and
-  extract, mirroring ``extract_wrapped_documents`` exactly (same
-  SQL oracle grades both).
+is the one entry point everything else drives). This registers one
+Arrow-optimized Python UDTF, ``extract_doc(doc_id, text)``: wrap a
+testdata ``documents`` row via ``corpus.page_for_document`` and
+extract, mirroring ``extract_wrapped_documents`` exactly (the same SQL
+oracle grades both).
 
 Use from SQL with a LATERAL join::
 
-    SELECT e.* FROM pages p, LATERAL extract_page(p.url, p.html) e
+    SELECT e.* FROM documents d, LATERAL extract_doc(d.doc_id, d.text) e
 
-Scale note (100 TB): the UDTFs are registered with ``useArrow=True``
+Scale note (100 TB): the UDTF is registered with ``useArrow=True``
 (Arrow-batched transfer), but per-row ``eval`` dispatch still costs
 more Python-boundary overhead than the ``mapInArrow`` flagship path —
 this surface is the SQL *convenience* seam; batch jobs should keep
-using ``operators.extract.extract_pages``. Semantics are identical,
-pinned by the shared driver oracle.
+using ``operators.extract.extract_pages``.
 """
 
 from __future__ import annotations
@@ -32,20 +26,6 @@ from __future__ import annotations
 from pyspark.sql.functions import udtf
 
 __all__ = ["register_sql_extraction"]
-
-
-_EXTRACT_PAGE_SCHEMA = ("url string, title string, text string, "
-                        "n_blocks bigint, error string")
-
-
-class _ExtractPage:
-    """UDTF body for extract_page(url, html)."""
-
-    def eval(self, url, html):  # noqa: ANN001 — UDTF protocol
-        from ..kernel import extract_document
-        raw = bytes(html) if html is not None else b""
-        r = extract_document(url, raw)
-        yield url, r.title, r.text, r.n_blocks, r.error
 
 
 class _ExtractDoc:
@@ -60,12 +40,8 @@ class _ExtractDoc:
 
 
 def register_sql_extraction(spark) -> None:
-    """Register the kernel UDTFs on ``spark`` (idempotent — Spark
+    """Register the kernel UDTF on ``spark`` (idempotent — Spark
     replaces same-name registrations)."""
-    spark.udtf.register(
-        "extract_page",
-        udtf(_ExtractPage, returnType=_EXTRACT_PAGE_SCHEMA,
-             useArrow=True))
     spark.udtf.register(
         "extract_doc",
         udtf(_ExtractDoc,

@@ -168,6 +168,31 @@ def _pad_palette(palette: list) -> tuple:
     return full, bits
 
 
+def _screen(sw: int, sh: int, palette: list) -> tuple:
+    """GIF89a header, logical screen descriptor and global color table
+    -> (bytearray, table bits)."""
+    full, bits = _pad_palette(palette)
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HHBBB", sw, sh, 0x80 | ((bits - 1) << 4)
+                       | (bits - 1), 0, 0)
+    for r, g, b in full:
+        out += bytes((r, g, b))
+    return out, bits
+
+
+def _image_data(indices: bytes, min_code: int) -> bytes:
+    """LZW min code size, the compressed indices in <=255-byte
+    sub-blocks, and the block terminator."""
+    out = bytearray((min_code,))
+    comp = lzw_encode(indices, min_code)
+    for i in range(0, len(comp), 255):
+        chunk = comp[i:i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out.append(0)
+    return bytes(out)
+
+
 def render_gif(w: int, h: int, indices: bytes, palette: list,
                interlaced: bool = False) -> bytes:
     """Single-frame GIF89a with a global color table."""
@@ -175,12 +200,7 @@ def render_gif(w: int, h: int, indices: bytes, palette: list,
         raise ValueError("render_gif: need w*h palette indices")
     if any(i >= len(palette) for i in indices):
         raise ValueError("render_gif: index beyond palette")
-    full, bits = _pad_palette(palette)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4)
-                       | (bits - 1), 0, 0)
-    for r, g, b in full:
-        out += bytes((r, g, b))
+    out, bits = _screen(w, h, palette)
     out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h,
                        0x40 if interlaced else 0)
     if interlaced:
@@ -189,14 +209,8 @@ def render_gif(w: int, h: int, indices: bytes, palette: list,
         data = b"".join(rows)
     else:
         data = indices
-    min_code = max(2, bits)
-    out.append(min_code)
-    comp = lzw_encode(data, min_code)
-    for i in range(0, len(comp), 255):
-        chunk = comp[i:i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
+    out += _image_data(data, max(2, bits))
+    out += b"\x3b"
     return bytes(out)
 
 
@@ -215,55 +229,96 @@ def _read_subblocks(data: bytes, pos: int) -> tuple:
         pos += n
 
 
-def decode_gif(data: bytes) -> tuple:
-    """-> (width, height, 3, rgb_bytes) for the first image frame."""
+def _color_table(data: bytes, pos: int, packed: int) -> tuple:
+    """(list of RGB tuples or None, position after it) for a descriptor
+    whose packed byte flags a table in bit 0x80."""
+    if not packed & 0x80:
+        return None, pos
+    n = 2 << (packed & 0x07)
+    return ([tuple(data[pos + 3 * j:pos + 3 * j + 3]) for j in range(n)],
+            pos + 3 * n)
+
+
+def _screen_descriptor(data: bytes) -> tuple:
+    """-> (sw, sh, bg_index, global table or None, first block pos)."""
     if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("gif: bad signature")
-    sw, sh, packed, _bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = [tuple(data[pos + 3 * j:pos + 3 * j + 3]) for j in range(n)]
-        pos += 3 * n
+    sw, sh, packed, bg, _aspect = struct.unpack("<HHBBB", data[6:13])
+    gct, pos = _color_table(data, 13, packed)
+    return sw, sh, bg, gct, pos
+
+
+_NO_CONTROL = (0, 0, None)
+
+
+def _blocks(data: bytes, pos: int, gct):
+    """Lazy walk of the blocks after the logical screen, per spec
+    framing. Yields ``("loops", n)`` for a NETSCAPE2.0 extension and
+    ``("image", (desc, pal, min_code, lzw, control))`` for each image
+    block: ``desc`` is (left, top, w, h, packed), ``pal`` the local
+    color table, else ``gct`` (None when neither exists), ``lzw`` the
+    joined sub-blocks and ``control`` the (disposal, delay_cs,
+    transparent index or None) of the graphic-control extension before
+    the image. Other extensions are skipped; the walk ends at the
+    trailer or the end of the data."""
+    control = _NO_CONTROL
     while pos < len(data):
         block = data[pos]
         pos += 1
         if block == 0x3B:                      # trailer
-            break
+            return
         if block == 0x21:                      # extension: label + subs
             if pos >= len(data):
                 raise ValueError("gif: truncated extension")
-            _, pos = _read_subblocks(data, pos + 1)
+            label = data[pos]
+            body, pos = _read_subblocks(data, pos + 1)
+            if label == 0xF9 and len(body) >= 4:
+                control = ((body[0] >> 2) & 0x07, body[1] | (body[2] << 8),
+                           body[3] if body[0] & 0x01 else None)
+            elif label == 0xFF and body[:11] == b"NETSCAPE2.0" \
+                    and len(body) >= 14:
+                yield "loops", body[12] | (body[13] << 8)
             continue
         if block != 0x2C:
             raise ValueError(f"gif: unknown block 0x{block:02x}")
         if len(data) < pos + 9:
             raise ValueError("gif: truncated image descriptor")
-        left, top, w, h, ipacked = struct.unpack("<HHHHB",
-                                                 data[pos:pos + 9])
-        pos += 9
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            pal = [tuple(data[pos + 3 * j:pos + 3 * j + 3])
-                   for j in range(n)]
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("gif: image without any color table")
+        desc = struct.unpack("<HHHHB", data[pos:pos + 9])
+        lct, pos = _color_table(data, pos + 9, desc[4])
         if pos >= len(data):
             raise ValueError("gif: truncated image data")
         min_code = data[pos]
-        if not 2 <= min_code <= 11:
-            raise ValueError("gif: bad LZW min code size")
-        comp, pos = _read_subblocks(data, pos + 1)
-        idx = lzw_decode(comp, min_code, w * h)
-        if ipacked & 0x40:
-            rows = [idx[r * w:(r + 1) * w] for r in range(h)]
-            ordered: list = [b""] * h
-            for stored, y in enumerate(_interlaced_row_order(h)):
-                ordered[y] = rows[stored]
-            idx = b"".join(ordered)
+        lzw, pos = _read_subblocks(data, pos + 1)
+        yield "image", (desc, lct or gct, min_code, lzw, control)
+        control = _NO_CONTROL
+
+
+def _image_indices(image: tuple) -> bytes:
+    """Palette indices of one walked image block, in display row
+    order."""
+    (_left, _top, w, h, packed), pal, min_code, lzw, _control = image
+    if pal is None:
+        raise ValueError("gif: image without any color table")
+    if not 2 <= min_code <= 11:
+        raise ValueError("gif: bad LZW min code size")
+    idx = lzw_decode(lzw, min_code, w * h)
+    if packed & 0x40:
+        rows = [idx[r * w:(r + 1) * w] for r in range(h)]
+        ordered: list = [b""] * h
+        for stored, y in enumerate(_interlaced_row_order(h)):
+            ordered[y] = rows[stored]
+        idx = b"".join(ordered)
+    return idx
+
+
+def decode_gif(data: bytes) -> tuple:
+    """-> (width, height, 3, rgb_bytes) for the first image frame."""
+    _sw, _sh, _bg, gct, pos = _screen_descriptor(data)
+    for kind, image in _blocks(data, pos, gct):
+        if kind != "image":
+            continue
+        idx = _image_indices(image)
+        (_left, _top, w, h, _packed), pal = image[:2]
         rgb = bytearray(w * h * 3)
         npal = len(pal)
         for i, v in enumerate(idx):
@@ -286,12 +341,7 @@ def render_gif_animation(sw: int, sh: int, frames: list, palette: list,
     carrying ``delays[i]`` (centiseconds), ``disposals[i]`` (0..3)
     and the shared ``transparent`` index; a NETSCAPE2.0 loop block is
     written unless ``loops`` is None. One global color table."""
-    full, bits = _pad_palette(palette)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", sw, sh,
-                       0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-    for r, g, b in full:
-        out += bytes((r, g, b))
+    out, bits = _screen(sw, sh, palette)
     if loops is not None:
         out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01"
         out += struct.pack("<H", loops) + b"\x00"
@@ -307,13 +357,7 @@ def render_gif_animation(sw: int, sh: int, frames: list, palette: list,
         out += struct.pack("<BBBBHBB", 0x21, 0xF9, 4, gce_packed,
                            delays[i], transparent or 0, 0)
         out += struct.pack("<BHHHHB", 0x2C, left, top, w, h, 0)
-        out.append(min_code)
-        comp = lzw_encode(idx, min_code)
-        for j in range(0, len(comp), 255):
-            chunk = comp[j:j + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
+        out += _image_data(idx, min_code)
     out += b"\x3b"
     return bytes(out)
 
@@ -339,95 +383,42 @@ def decode_gif_frames(data: bytes) -> tuple:
 
     Single-frame stills decode identically to ``decode_gif`` (same
     LZW + interlace machinery)."""
-    if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("gif: bad signature")
-    sw, sh, packed, bg, _aspect = struct.unpack("<HHBBB", data[6:13])
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = [tuple(data[pos + 3 * j:pos + 3 * j + 3]) for j in range(n)]
-        pos += 3 * n
+    sw, sh, bg, gct, pos = _screen_descriptor(data)
     bg_rgb = bytes(gct[bg]) if gct is not None and bg < len(gct) \
         else b"\x00\x00\x00"
     canvas = bytearray(bg_rgb * (sw * sh))
     frames: list = []
     delays: list = []
     loops = -1
-    pend_delay = 0
-    pend_disposal = 0
-    pend_transparent: int | None = None
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            if pos >= len(data):
-                raise ValueError("gif: truncated extension")
-            label = data[pos]
-            body, pos = _read_subblocks(data, pos + 1)
-            if label == 0xF9 and len(body) >= 4:
-                pend_disposal = (body[0] >> 2) & 0x07
-                pend_delay = body[1] | (body[2] << 8)
-                pend_transparent = body[3] if body[0] & 0x01 else None
-            elif label == 0xFF and body[:11] == b"NETSCAPE2.0" \
-                    and len(body) >= 14:
-                loops = body[12] | (body[13] << 8)
+    for kind, image in _blocks(data, pos, gct):
+        if kind == "loops":
+            loops = image
             continue
-        if block != 0x2C:
-            raise ValueError(f"gif: unknown block 0x{block:02x}")
-        if len(data) < pos + 9:
-            raise ValueError("gif: truncated image descriptor")
-        left, top, w, h, ipacked = struct.unpack("<HHHHB",
-                                                 data[pos:pos + 9])
-        pos += 9
+        (left, top, w, h, _packed), pal, _mc, _lzw, control = image
+        disposal, delay, transparent = control
         if left + w > sw or top + h > sh:
             raise ValueError("gif: frame rect outside logical screen")
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x07)
-            pal = [tuple(data[pos + 3 * j:pos + 3 * j + 3])
-                   for j in range(n)]
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("gif: image without any color table")
-        if pos >= len(data):
-            raise ValueError("gif: truncated image data")
-        min_code = data[pos]
-        if not 2 <= min_code <= 11:
-            raise ValueError("gif: bad LZW min code size")
-        comp, pos = _read_subblocks(data, pos + 1)
-        idx = lzw_decode(comp, min_code, w * h)
-        if ipacked & 0x40:
-            rows = [idx[r * w:(r + 1) * w] for r in range(h)]
-            ordered: list = [b""] * h
-            for stored, y in enumerate(_interlaced_row_order(h)):
-                ordered[y] = rows[stored]
-            idx = b"".join(ordered)
-        saved = bytes(canvas) if pend_disposal == 3 else None
+        idx = _image_indices(image)
+        saved = bytes(canvas) if disposal == 3 else None
         npal = len(pal)
         for r in range(h):
             base = ((top + r) * sw + left) * 3
             row = idx[r * w:(r + 1) * w]
             for c, v in enumerate(row):
-                if v == pend_transparent:
+                if v == transparent:
                     continue
                 if v >= npal:
                     raise ValueError("gif: pixel index beyond color table")
                 o = base + 3 * c
                 canvas[o:o + 3] = bytes(pal[v])
         frames.append(bytes(canvas))
-        delays.append(pend_delay)
-        if pend_disposal == 2:                  # restore rect to bg
+        delays.append(delay)
+        if disposal == 2:                       # restore rect to bg
             for r in range(h):
                 base = ((top + r) * sw + left) * 3
                 canvas[base:base + 3 * w] = bg_rgb * w
-        elif pend_disposal == 3 and saved is not None:
+        elif disposal == 3 and saved is not None:
             canvas[:] = saved
-        pend_delay = 0
-        pend_disposal = 0
-        pend_transparent = None
     if not frames:
         raise ValueError("gif: no image blocks")
     return sw, sh, frames, delays, loops
@@ -442,46 +433,16 @@ def probe_gif_animation(data: bytes) -> tuple:
     contract; this is the bookkeeping pass an asset pipeline runs to
     split stills from animations. ``loops`` is -1 when no NETSCAPE
     extension is present (play once), 0 meaning loop forever."""
-    if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("gif: bad signature")
-    packed = data[10]
-    pos = 13
-    if packed & 0x80:
-        pos += 3 * (2 << (packed & 0x07))
+    _sw, _sh, _bg, gct, pos = _screen_descriptor(data)
     n_frames = 0
     total_delay = 0
-    pending_delay = 0
     loops = -1
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            if pos >= len(data):
-                raise ValueError("gif: truncated extension")
-            label = data[pos]
-            body, pos = _read_subblocks(data, pos + 1)
-            if label == 0xF9 and len(body) >= 4:
-                pending_delay = body[1] | (body[2] << 8)
-            elif label == 0xFF and body[:11] == b"NETSCAPE2.0" \
-                    and len(body) >= 14:
-                loops = body[12] | (body[13] << 8)
+    for kind, image in _blocks(data, pos, gct):
+        if kind == "loops":
+            loops = image
             continue
-        if block != 0x2C:
-            raise ValueError(f"gif: unknown block 0x{block:02x}")
-        if len(data) < pos + 9:
-            raise ValueError("gif: truncated image descriptor")
-        ipacked = data[pos + 8]
-        pos += 9
-        if ipacked & 0x80:
-            pos += 3 * (2 << (ipacked & 0x07))
-        if pos >= len(data):
-            raise ValueError("gif: truncated image data")
-        _, pos = _read_subblocks(data, pos + 1)    # skip LZW body
         n_frames += 1
-        total_delay += pending_delay
-        pending_delay = 0
+        total_delay += image[4][1]
     if n_frames == 0:
         raise ValueError("gif: no image blocks")
     return n_frames, total_delay, loops

@@ -380,11 +380,119 @@ def _seg(marker: int, body: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
 
-def _encode_block(w: "_BitWriter", block: list, prev_dc: int,
+# SOF component specs (id, HV sampling, quant table id) and DHT bodies
+_GRAY_COMPONENT = b"\x01\x11\x00"
+_YCC420_COMPONENTS = (b"\x01\x22\x00"                 # Y  2x2, qtab 0
+                      b"\x02\x11\x00"                 # Cb 1x1, qtab 0
+                      b"\x03\x11\x00")                # Cr 1x1, qtab 0
+_DHT_DC = b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS)
+_DHT_AC = b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS)
+_DHT_DC_C = b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C)
+_DHT_AC_C = b"\x11" + bytes(_AC_BITS_C) + bytes(_AC_VALS_C)
+
+
+def _prologue(sof: int, width: int, height: int, components: bytes,
+              tables: tuple) -> bytearray:
+    """SOI, JFIF APP0, the shared DQT (id 0), the ``sof`` frame header
+    over ``components`` and one DHT segment per body in ``tables``."""
+    out = bytearray(b"\xff\xd8")                       # SOI
+    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
+    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
+    out += _seg(sof, struct.pack(">BHHB", 8, height, width,
+                                 len(components) // 3) + components)
+    for body in tables:
+        out += _seg(0xC4, body)
+    return out
+
+
+def _zz_grid(plane, pw: int, phh: int) -> list:
+    """Quantized zigzag coefficients of every 8x8 block of a row-major
+    plane ``pw`` wide and ``phh`` high, raster order."""
+    return [_fdct_quant([plane[(by * 8 + y) * pw + bx * 8 + x]
+                         for y in range(8) for x in range(8)])
+            for by in range(phh // 8) for bx in range(pw // 8)]
+
+
+def _put_block(plane: bytearray, pw: int, oy: int, ox: int,
+               block: list) -> None:
+    for y in range(8):
+        row = (oy + y) * pw + ox
+        plane[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
+
+
+def _gray_blocks(width: int, height: int, pixels) -> list:
+    """Quantized zigzag blocks of a grayscale image, raster order, after
+    the subset checks (positive multiples of 8, w*h samples)."""
+    if width % 8 or height % 8 or width <= 0 or height <= 0:
+        raise ValueError("jpeg: dimensions must be positive multiples of 8")
+    if len(pixels) != width * height:
+        raise ValueError("jpeg: pixels length != width*height")
+    return _zz_grid(pixels, width, height)
+
+
+def _ycc420_blocks(width: int, height: int, rgb: bytes) -> tuple:
+    """Row-major RGB -> the quantized zigzag blocks of the Y, Cb and Cr
+    planes (raster order per plane), after the subset checks (positive
+    multiples of 16, w*h*3 bytes). Color conversion and the 2x2 chroma
+    average use the FROZEN integer rules (``ycbcr_from_rgb``; subsample
+    rounding is (sum + 2) // 4)."""
+    if width % 16 or height % 16 or width <= 0 or height <= 0:
+        raise ValueError("jpeg: color dims must be positive multiples of 16")
+    if len(rgb) != width * height * 3:
+        raise ValueError("jpeg: rgb length != width*height*3")
+    n = width * height
+    ys, cbs, crs = [0] * n, [0] * n, [0] * n
+    for i in range(n):
+        ys[i], cbs[i], crs[i] = ycbcr_from_rgb(
+            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
+    cw, ch = width // 2, height // 2
+    cb_s, cr_s = [0] * (cw * ch), [0] * (cw * ch)
+    for y in range(ch):
+        for x in range(cw):
+            idx = [(2 * y + dy) * width + 2 * x + dx
+                   for dy in (0, 1) for dx in (0, 1)]
+            cb_s[y * cw + x] = (sum(cbs[i] for i in idx) + 2) // 4
+            cr_s[y * cw + x] = (sum(crs[i] for i in idx) + 2) // 4
+    return (_zz_grid(ys, width, height), _zz_grid(cb_s, cw, ch),
+            _zz_grid(cr_s, cw, ch))
+
+
+def _ycc420_mcus(width: int, height: int, zz_y: list, zz_cb: list,
+                 zz_cr: list) -> list:
+    """Interleaved 4:2:0 MCUs in raster order, each the four Y blocks
+    (TL, TR, BL, BR) then Cb and Cr as (component, zz) pairs."""
+    nbx_y, nbx_c = width // 8, width // 16
+    return [[("y", zz_y[_mcu_block_idx(nbx_y, 2, 2, mx, my, j)])
+             for j in range(4)]
+            + [("cb", zz_cb[my * nbx_c + mx]),
+               ("cr", zz_cr[my * nbx_c + mx])]
+            for my in range(height // 16) for mx in range(width // 16)]
+
+
+def _rgb_from_planes(width: int, height: int, yp, cbp, crp) -> bytes:
+    """Y plane plus half-size chroma planes -> RGB (2x2 chroma
+    replication, frozen integer ``rgb_from_ycbcr``)."""
+    cw = width // 2
+    rgb = bytearray(width * height * 3)
+    for y in range(height):
+        for x in range(width):
+            ci = (y // 2) * cw + (x // 2)              # 2x2 replication
+            r8, g8, b8 = rgb_from_ycbcr(yp[y * width + x], cbp[ci], crp[ci])
+            o = (y * width + x) * 3
+            rgb[o], rgb[o + 1], rgb[o + 2] = r8, g8, b8
+    return bytes(rgb)
+
+
+# Annex K (DC, AC) codes by component: luma tables for Y, chroma for Cb/Cr
+_CODES = {"y": (_DC_CODES, _AC_CODES), "cb": (_DC_CODES_C, _AC_CODES_C),
+          "cr": (_DC_CODES_C, _AC_CODES_C)}
+
+
+def _encode_block(w: "_BitWriter", zz: list, prev_dc: int,
                   dc_codes: dict, ac_codes: dict) -> int:
-    """FDCT+quantize ``block`` and entropy-code it against ``prev_dc``;
-    returns the new DC predictor."""
-    zz = _fdct_quant(block)
+    """Entropy-code the quantized zigzag block ``zz`` against
+    ``prev_dc``; returns the new DC predictor."""
     diff = zz[0] - prev_dc
     size, mag = _magnitude(diff)
     code, ln = dc_codes[size]
@@ -411,6 +519,28 @@ def _encode_block(w: "_BitWriter", block: list, prev_dc: int,
     return zz[0]
 
 
+def _baseline_scan(mcus: list, restart_interval: int) -> bytes:
+    """Entropy-coded sequential scan over ``mcus`` (each a list of
+    (component, zz) blocks; DC predicted per component), with a
+    byte-aligned RSTm marker and predictor reset every
+    ``restart_interval`` MCUs."""
+    out = bytearray()
+    w = _BitWriter()
+    preds: dict = {}
+    rst = 0
+    for mcu, blocks in enumerate(mcus, 1):
+        for comp, zz in blocks:
+            preds[comp] = _encode_block(w, zz, preds.get(comp, 0),
+                                        *_CODES[comp])
+        if restart_interval and mcu % restart_interval == 0 \
+                and mcu < len(mcus):
+            out += w.flush() + bytes([0xFF, 0xD0 + rst])
+            rst = (rst + 1) % 8
+            w = _BitWriter()
+            preds = {}
+    return bytes(out + w.flush())
+
+
 def render_jpeg_gray(width: int, height: int, pixels: bytes,
                      restart_interval: int = 0) -> bytes:
     """Encode row-major grayscale bytes as baseline JFIF. Dimensions
@@ -418,39 +548,13 @@ def render_jpeg_gray(width: int, height: int, pixels: bytes,
     ``restart_interval`` > 0 emits a DRI segment and RSTm markers
     every that many MCUs (byte-aligned, DC predictor reset) — the
     common web shape that enables parallel/resilient decode."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC0, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF0, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
+    zzs = _gray_blocks(width, height, pixels)
+    out = _prologue(0xC0, width, height, _GRAY_COMPONENT,
+                    (_DHT_DC, _DHT_AC))
     if restart_interval:
         out += _seg(0xDD, struct.pack(">H", restart_interval))
     out += _seg(0xDA, b"\x01\x01\x00\x00\x3f\x00")     # SOS
-    w = _BitWriter()
-    prev_dc = 0
-    nb = (width // 8) * (height // 8)
-    mcu = rst = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            block = [pixels[(by * 8 + y) * width + bx * 8 + x]
-                     for y in range(8) for x in range(8)]
-            prev_dc = _encode_block(w, block, prev_dc,
-                                    _DC_CODES, _AC_CODES)
-            mcu += 1
-            if restart_interval and mcu % restart_interval == 0 \
-                    and mcu < nb:
-                out += w.flush() + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                w = _BitWriter()
-                prev_dc = 0
-    out += w.flush()
+    out += _baseline_scan([[("y", zz)] for zz in zzs], restart_interval)
     out += b"\xff\xd9"                                 # EOI
     return bytes(out)
 
@@ -459,67 +563,15 @@ def render_jpeg_color(width: int, height: int, rgb: bytes,
                       restart_interval: int = 0) -> bytes:
     """Encode row-major RGB bytes as baseline YCbCr 4:2:0 JFIF (r6).
     Dimensions must be multiples of 16 (full 4:2:0 MCUs only in the
-    subset). Color conversion and the 2x2 chroma average use the
-    FROZEN integer rules (``ycbcr_from_rgb``; subsample rounding is
-    (sum + 2) // 4), so constant-MCU fixtures stay oracle-exact."""
-    if width % 16 or height % 16 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: color dims must be positive multiples of 16")
-    if len(rgb) != width * height * 3:
-        raise ValueError("jpeg: rgb length != width*height*3")
-    n = width * height
-    ys, cbs, crs = [0] * n, [0] * n, [0] * n
-    for i in range(n):
-        ys[i], cbs[i], crs[i] = ycbcr_from_rgb(
-            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-    cw, ch = width // 2, height // 2
-    cb_s, cr_s = [0] * (cw * ch), [0] * (cw * ch)
-    for y in range(ch):
-        for x in range(cw):
-            idx = [(2 * y + dy) * width + 2 * x + dx
-                   for dy in (0, 1) for dx in (0, 1)]
-            cb_s[y * cw + x] = (sum(cbs[i] for i in idx) + 2) // 4
-            cr_s[y * cw + x] = (sum(crs[i] for i in idx) + 2) // 4
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0 (shared)
-    out += _seg(0xC0, struct.pack(">BHHB", 8, height, width, 3)
-                + b"\x01\x22\x00"                      # Y  2x2, qtab 0
-                + b"\x02\x11\x00"                      # Cb 1x1, qtab 0
-                + b"\x03\x11\x00")                     # Cr 1x1, qtab 0
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_BITS) + bytes(_AC_VALS))
-    out += _seg(0xC4, b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-    out += _seg(0xC4, b"\x11" + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
+    subset); the frozen color rules of ``_ycc420_blocks`` keep
+    constant-MCU fixtures oracle-exact."""
+    mcus = _ycc420_mcus(width, height, *_ycc420_blocks(width, height, rgb))
+    out = _prologue(0xC0, width, height, _YCC420_COMPONENTS,
+                    (_DHT_DC, _DHT_AC, _DHT_DC_C, _DHT_AC_C))
     if restart_interval:
         out += _seg(0xDD, struct.pack(">H", restart_interval))
     out += _seg(0xDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    w = _BitWriter()
-    pred = {"y": 0, "cb": 0, "cr": 0}
-    n_mcu = (height // 16) * (width // 16)
-    mcu = rst = 0
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for j in range(4):                         # Y blocks TL,TR,BL,BR
-                oy = my * 16 + (j // 2) * 8
-                ox = mx * 16 + (j % 2) * 8
-                block = [ys[(oy + y) * width + ox + x]
-                         for y in range(8) for x in range(8)]
-                pred["y"] = _encode_block(w, block, pred["y"],
-                                          _DC_CODES, _AC_CODES)
-            for key, plane in (("cb", cb_s), ("cr", cr_s)):
-                block = [plane[(my * 8 + y) * cw + mx * 8 + x]
-                         for y in range(8) for x in range(8)]
-                pred[key] = _encode_block(w, block, pred[key],
-                                          _DC_CODES_C, _AC_CODES_C)
-            mcu += 1
-            if restart_interval and mcu % restart_interval == 0 \
-                    and mcu < n_mcu:
-                out += w.flush() + bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                w = _BitWriter()
-                pred = {"y": 0, "cb": 0, "cr": 0}
-    out += w.flush()
+    out += _baseline_scan(mcus, restart_interval)
     out += b"\xff\xd9"                                 # EOI
     return bytes(out)
 
@@ -677,10 +729,8 @@ def decode_jpeg(data: bytes) -> tuple:
         for by in range(height // 8):
             for bx in range(width // 8):
                 zz, pred = _decode_block(r, dc_t, ac_t, pred)
-                block = _dequant_idct(zz, qt)
-                for y in range(8):
-                    row = (by * 8 + y) * width + bx * 8
-                    pixels[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
+                _put_block(pixels, width, by * 8, bx * 8,
+                           _dequant_idct(zz, qt))
                 mcu += 1
                 if restart_int and mcu % restart_int == 0 and mcu < nb:
                     r.restart(rst)            # aligns + resets DC pred
@@ -712,34 +762,20 @@ def decode_jpeg(data: bytes) -> tuple:
             for j in range(4):
                 zz, preds[y_id] = _decode_block(r, *tabs(y_id),
                                                 preds[y_id])
-                block = _dequant_idct(zz, qts[y_id])
-                oy, ox = my * 16 + (j // 2) * 8, mx * 16 + (j % 2) * 8
-                for y in range(8):
-                    row = (oy + y) * yw + ox
-                    planes[y_id][row:row + 8] = bytes(
-                        block[y * 8:(y + 1) * 8])
+                _put_block(planes[y_id], yw, my * 16 + (j // 2) * 8,
+                           mx * 16 + (j % 2) * 8, _dequant_idct(zz, qts[y_id]))
             for cid in (cb_id, cr_id):
                 zz, preds[cid] = _decode_block(r, *tabs(cid), preds[cid])
-                block = _dequant_idct(zz, qts[cid])
-                for y in range(8):
-                    row = (my * 8 + y) * cw + mx * 8
-                    planes[cid][row:row + 8] = bytes(
-                        block[y * 8:(y + 1) * 8])
+                _put_block(planes[cid], cw, my * 8, mx * 8,
+                           _dequant_idct(zz, qts[cid]))
             mcu += 1
             if restart_int and mcu % restart_int == 0 and mcu < n_mcu:
                 r.restart(rst)
                 rst = (rst + 1) % 8
                 for cid in preds:
                     preds[cid] = 0
-    rgb = bytearray(width * height * 3)
-    yp, cbp, crp = planes[y_id], planes[cb_id], planes[cr_id]
-    for y in range(height):
-        for x in range(width):
-            ci = (y // 2) * cw + (x // 2)              # 2x2 replication
-            r8, g8, b8 = rgb_from_ycbcr(yp[y * yw + x], cbp[ci], crp[ci])
-            o = (y * width + x) * 3
-            rgb[o], rgb[o + 1], rgb[o + 2] = r8, g8, b8
-    return width, height, 3, bytes(rgb)
+    return width, height, 3, _rgb_from_planes(
+        width, height, planes[y_id], planes[cb_id], planes[cr_id])
 
 
 def _first_ac_band(r: "_BitReader", ac_tab: dict, coefs: list,
@@ -824,6 +860,18 @@ def _refine_ac_band(r: "_BitReader", ac_tab: dict, coefs: list,
             eobrun -= 1
 
 
+def _plane_from_coefs(coefs: list, nbx: int, nby: int,
+                      qt: list) -> bytearray:
+    """Dequantize + IDCT a raster grid of coefficient blocks into one
+    plane ``nbx * 8`` wide."""
+    plane = bytearray(nbx * 8 * nby * 8)
+    for by in range(nby):
+        for bx in range(nbx):
+            _put_block(plane, nbx * 8, by * 8, bx * 8,
+                       _dequant_idct(coefs[by * nbx + bx], qt))
+    return plane
+
+
 def _decode_progressive_gray(width: int, height: int, comps: list,
                              qtabs: dict, huff: dict,
                              scans: list) -> tuple:
@@ -885,14 +933,7 @@ def _decode_progressive_gray(width: int, height: int, comps: list,
                 _first_ac_band(r, ac_t, coefs, nb, ss, se, al)
     if not seen_dc:
         raise ValueError("jpeg: progressive stream has no DC scan")
-    pixels = bytearray(width * height)
-    for by in range(nby):
-        for bx in range(nbx):
-            block = _dequant_idct(coefs[by * nbx + bx], qt)
-            for y in range(8):
-                row = (by * 8 + y) * width + bx * 8
-                pixels[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
-    return width, height, 1, bytes(pixels)
+    return width, height, 1, bytes(_plane_from_coefs(coefs, nbx, nby, qt))
 
 
 def decode_jpeg_gray(data: bytes) -> tuple:
@@ -917,6 +958,7 @@ def decode_jpeg_gray(data: bytes) -> tuple:
 _AC_PROG_BITS = [0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0, 0]
 _AC_PROG_VALS = list(range(255))
 _AC_PROG_CODES = _build_codes(_AC_PROG_BITS, _AC_PROG_VALS)
+_DHT_AC_PROG = b"\x10" + bytes(_AC_PROG_BITS) + bytes(_AC_PROG_VALS)
 
 
 def render_jpeg_gray_progressive(width: int, height: int,
@@ -928,81 +970,15 @@ def render_jpeg_gray_progressive(width: int, height: int,
     a block-constant fixture decodes to the identical integer pixels,
     which is what lets the progressive query share the baseline
     oracle."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    zzs = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            zzs.append(_fdct_quant(
-                [pixels[(by * 8 + y) * width + bx * 8 + x]
-                 for y in range(8) for x in range(8)]))
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF2, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
+    zzs = _gray_blocks(width, height, pixels)
+    out = _prologue(0xC2, width, height, _GRAY_COMPONENT,
+                    (_DHT_DC, _DHT_AC_PROG))
     # ---- scan 1: DC band (Ss=0, Se=0, Ah=Al=0) ----
     out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0]))
-    w = _BitWriter()
-    pred = 0
-    for zz in zzs:
-        size, mag = _magnitude(zz[0] - pred)
-        pred = zz[0]
-        code, ln = _DC_CODES[size]
-        w.put(code, ln)
-        if size:
-            w.put(mag, size)
-    out += w.flush()
+    out += _write_first_dc_scan((0, zz[0], _DC_CODES) for zz in zzs)
     # ---- scan 2: AC band 1..63 (Ah=Al=0), EOB runs span blocks ----
     out += _seg(0xDA, b"\x01\x01\x00" + bytes([1, 63, 0]))
-    w = _BitWriter()
-    eobrun = 0
-
-    def _flush_eob() -> None:
-        nonlocal eobrun
-        while eobrun:
-            chunk = min(eobrun, 32767)
-            rr = chunk.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(chunk - (1 << rr), rr)
-            eobrun -= chunk
-
-    for zz in zzs:
-        last = 0
-        for k in range(63, 0, -1):
-            if zz[k]:
-                last = k
-                break
-        if last == 0:
-            eobrun += 1
-            continue
-        _flush_eob()
-        run = 0
-        for k in range(1, last + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-            size, mag = _magnitude(zz[k])
-            code, ln = _AC_PROG_CODES[(run << 4) | size]
-            w.put(code, ln)
-            w.put(mag, size)
-            run = 0
-        if last < 63:
-            eobrun += 1
-    _flush_eob()
-    out += w.flush()
+    out += _write_first_ac_scan(zzs)
     out += b"\xff\xd9"                                 # EOI
     return bytes(out)
 
@@ -1022,86 +998,16 @@ def render_jpeg_gray_progressive_sa(width: int, height: int,
     AC — so a fixture decodes to the identical integer pixels as the
     baseline encoder, which is what lets the query share the baseline
     oracle."""
-    if width % 8 or height % 8 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: dimensions must be positive multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels length != width*height")
-    zzs = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            zzs.append(_fdct_quant(
-                [pixels[(by * 8 + y) * width + bx * 8 + x]
-                 for y in range(8) for x in range(8)]))
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 1)
-                + b"\x01\x11\x00")                     # SOF2, 1 comp
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
+    zzs = _gray_blocks(width, height, pixels)
+    out = _prologue(0xC2, width, height, _GRAY_COMPONENT,
+                    (_DHT_DC, _DHT_AC_PROG))
     # ---- scan 1: DC first, Al=1 (DPCM of dc >> 1, T.81 A.4 shift) ----
     out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0x01]))
-    w = _BitWriter()
-    pred = 0
-    for zz in zzs:
-        v = zz[0] >> 1
-        size, mag = _magnitude(v - pred)
-        pred = v
-        code, ln = _DC_CODES[size]
-        w.put(code, ln)
-        if size:
-            w.put(mag, size)
-    out += w.flush()
+    out += _write_first_dc_scan((0, zz[0] >> 1, _DC_CODES) for zz in zzs)
     # ---- scan 2: AC first, band 1..63, Al=1 (shifted magnitudes) ----
     out += _seg(0xDA, b"\x01\x01\x00" + bytes([1, 63, 0x01]))
-    w = _BitWriter()
-    eobrun = 0
-
-    def _flush_eob() -> None:
-        nonlocal eobrun
-        while eobrun:
-            chunk = min(eobrun, 32767)
-            rr = chunk.bit_length() - 1
-            code, ln = _AC_PROG_CODES[rr << 4]
-            w.put(code, ln)
-            if rr:
-                w.put(chunk - (1 << rr), rr)
-            eobrun -= chunk
-
-    def _shift1(v: int) -> int:
-        return -((-v) >> 1) if v < 0 else v >> 1
-
-    for zz in zzs:
-        sh = [_shift1(zz[k]) for k in range(64)]
-        last = 0
-        for k in range(63, 0, -1):
-            if sh[k]:
-                last = k
-                break
-        if last == 0:
-            eobrun += 1
-            continue
-        _flush_eob()
-        run = 0
-        for k in range(1, last + 1):
-            if sh[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = _AC_PROG_CODES[0xF0]        # ZRL
-                w.put(code, ln)
-                run -= 16
-            size, mag = _magnitude(sh[k])
-            code, ln = _AC_PROG_CODES[(run << 4) | size]
-            w.put(code, ln)
-            w.put(mag, size)
-            run = 0
-        if last < 63:
-            eobrun += 1
-    _flush_eob()
-    out += w.flush()
+    out += _write_first_ac_scan(
+        [[-((-v) >> 1) if v < 0 else v >> 1 for v in zz] for zz in zzs])
     # ---- scan 3: DC refinement, Ah=1 Al=0 (one raw bit per block) ----
     out += _seg(0xDA, b"\x01\x01\x00" + bytes([0, 0, 0x10]))
     w = _BitWriter()
@@ -1284,38 +1190,32 @@ def _decode_progressive_color(width: int, height: int, comps: list,
             band(r, ac_t, coefs[cid], nbx * nby, ss, se, al)
     if {c[0] for c in comps} - seen_dc:
         raise ValueError("jpeg: progressive stream has no DC scan")
-    planes = {}
-    for cid, hh, vv, _ in comps:
-        nbx, nby = grid[cid]
-        pw = nbx * 8
-        plane = bytearray(pw * nby * 8)
-        for by in range(nby):
-            for bx in range(nbx):
-                block = _dequant_idct(coefs[cid][by * nbx + bx],
-                                      qts[cid])
-                for y in range(8):
-                    row = (by * 8 + y) * pw + bx * 8
-                    plane[row:row + 8] = bytes(block[y * 8:(y + 1) * 8])
-        planes[cid] = plane
-    y_id, cb_id, cr_id = comps[0][0], comps[1][0], comps[2][0]
-    yp, cbp, crp = planes[y_id], planes[cb_id], planes[cr_id]
-    cw = width // 2
-    rgb = bytearray(width * height * 3)
-    for y in range(height):
-        for x in range(width):
-            ci = (y // 2) * cw + (x // 2)              # 2x2 replication
-            r8, g8, b8 = rgb_from_ycbcr(yp[y * width + x],
-                                        cbp[ci], crp[ci])
-            o = (y * width + x) * 3
-            rgb[o], rgb[o + 1], rgb[o + 2] = r8, g8, b8
-    return width, height, 3, bytes(rgb)
+    yp, cbp, crp = (_plane_from_coefs(coefs[c[0]], *grid[c[0]], qts[c[0]])
+                    for c in comps)
+    return width, height, 3, _rgb_from_planes(width, height, yp, cbp, crp)
+
+
+def _write_first_dc_scan(walk) -> bytes:
+    """Entropy body of a first-pass DC scan: ``walk`` yields
+    (component, point-transformed DC value, DC codes) in scan order,
+    DPCM-coded against one predictor per component."""
+    w = _BitWriter()
+    preds: dict = {}
+    for comp, v, codes in walk:
+        size, mag = _magnitude(v - preds.get(comp, 0))
+        preds[comp] = v
+        code, ln = codes[size]
+        w.put(code, ln)
+        if size:
+            w.put(mag, size)
+    return w.flush()
 
 
 def _write_first_ac_scan(zzs: list) -> bytes:
-    """Entropy body of a first-pass AC band-1..63 scan (Ah=Al=0) over
-    blocks in raster order, EOB runs batched across blocks — shared by
-    the progressive color encoder (uses the stream-defined 255-symbol
-    table, ``_AC_PROG_CODES``)."""
+    """Entropy body of a first-pass AC band-1..63 scan over blocks in
+    raster order (coefficients already point-transformed), EOB runs
+    batched across blocks, coded with the stream-defined 255-symbol
+    table ``_AC_PROG_CODES``."""
     w = _BitWriter()
     eobrun = 0
 
@@ -1368,69 +1268,16 @@ def render_jpeg_color_progressive(width: int, height: int,
     component (T.81 G.1; spectral selection, Ah=Al=0). Same frozen
     color conversion / subsample / coefficient math as the baseline
     color encoder, so any image decodes to the identical RGB bytes."""
-    if width % 16 or height % 16 or width <= 0 or height <= 0:
-        raise ValueError("jpeg: color dims must be positive multiples of 16")
-    if len(rgb) != width * height * 3:
-        raise ValueError("jpeg: rgb length != width*height*3")
-    n = width * height
-    ys, cbs, crs = [0] * n, [0] * n, [0] * n
-    for i in range(n):
-        ys[i], cbs[i], crs[i] = ycbcr_from_rgb(
-            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-    cw, ch = width // 2, height // 2
-    cb_s, cr_s = [0] * (cw * ch), [0] * (cw * ch)
-    for y in range(ch):
-        for x in range(cw):
-            idx = [(2 * y + dy) * width + 2 * x + dx
-                   for dy in (0, 1) for dx in (0, 1)]
-            cb_s[y * cw + x] = (sum(cbs[i] for i in idx) + 2) // 4
-            cr_s[y * cw + x] = (sum(crs[i] for i in idx) + 2) // 4
-
-    def _zz_grid(plane: list, pw: int, phh: int) -> list:
-        return [_fdct_quant([plane[(by * 8 + y) * pw + bx * 8 + x]
-                             for y in range(8) for x in range(8)])
-                for by in range(phh // 8) for bx in range(pw // 8)]
-
-    zz_y = _zz_grid(ys, width, height)
-    zz_cb = _zz_grid(cb_s, cw, ch)
-    zz_cr = _zz_grid(cr_s, cw, ch)
-    out = bytearray(b"\xff\xd8")                       # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    zz_q = bytes(QTABLE[_ZIGZAG[k]] for k in range(64))
-    out += _seg(0xDB, b"\x00" + zz_q)                  # DQT id 0 (shared)
-    out += _seg(0xC2, struct.pack(">BHHB", 8, height, width, 3)
-                + b"\x01\x22\x00"                      # Y  2x2, qtab 0
-                + b"\x02\x11\x00"                      # Cb 1x1, qtab 0
-                + b"\x03\x11\x00")                     # Cr 1x1, qtab 0
-    out += _seg(0xC4, b"\x00" + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, b"\x01" + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-    out += _seg(0xC4, b"\x10" + bytes(_AC_PROG_BITS)
-                + bytes(_AC_PROG_VALS))
+    zz_y, zz_cb, zz_cr = _ycc420_blocks(width, height, rgb)
+    out = _prologue(0xC2, width, height, _YCC420_COMPONENTS,
+                    (_DHT_DC, _DHT_DC_C, _DHT_AC_PROG))
     # ---- scan 1: interleaved DC (Ss=0, Se=0, Ah=Al=0) ----
     out += _seg(0xDA, b"\x03\x01\x00\x02\x10\x03\x10"
                 + bytes([0, 0, 0]))
-    w = _BitWriter()
-    nbx_y = width // 8
-    preds = {"y": 0, "cb": 0, "cr": 0}
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for j in range(4):
-                zz = zz_y[_mcu_block_idx(nbx_y, 2, 2, mx, my, j)]
-                size, mag = _magnitude(zz[0] - preds["y"])
-                preds["y"] = zz[0]
-                code, ln = _DC_CODES[size]
-                w.put(code, ln)
-                if size:
-                    w.put(mag, size)
-            for key, zzg in (("cb", zz_cb), ("cr", zz_cr)):
-                zz = zzg[my * (cw // 8) + mx]
-                size, mag = _magnitude(zz[0] - preds[key])
-                preds[key] = zz[0]
-                code, ln = _DC_CODES_C[size]
-                w.put(code, ln)
-                if size:
-                    w.put(mag, size)
-    out += w.flush()
+    out += _write_first_dc_scan(
+        (comp, zz[0], _CODES[comp][0])
+        for mcu in _ycc420_mcus(width, height, zz_y, zz_cb, zz_cr)
+        for comp, zz in mcu)
     # ---- scans 2-4: per-component AC band 1..63 (Ah=Al=0) ----
     for cid, zzg in ((1, zz_y), (2, zz_cb), (3, zz_cr)):
         out += _seg(0xDA, bytes([1, cid, 0x00]) + bytes([1, 63, 0]))

@@ -17,46 +17,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def parse_disallow_rules(robots: DataFrame, host_col: str = "host",
-                         body_col: str = "robots_txt") -> DataFrame:
-    """(host, robots_txt) -> (host, rules array<string>): the trimmed
-    ``Disallow:`` targets of every ``User-agent: *`` group, empty rules
-    (allow-all markers) removed.
+
+def _star_group_fold(body_col: str, init, update):
+    """Fold ``update(value, line, lower_line, in_star)`` over the
+    ``\\r?\\n``-split lines of ``body_col`` from ``init``; ``line`` is
+    trimmed and ``in_star`` says whether it sits in a ``User-agent: *``
+    group. Returns the final value column.
 
     State per line: (in_ua = previous line was a User-agent line,
-    star = current group's UA set includes '*', rules). Consecutive
+    star = current group's UA set includes '*', value). Consecutive
     User-agent lines OR into one group; any other directive closes the
     UA block but keeps the group; a later User-agent line starts a new
     group (resets star).
 
     Directive KEYS match case-insensitively (RFC 9309 §2.1 — r4 ADVICE
     #3: lowercase ``user-agent: *`` files are very common in real
-    crawls and their Disallow rules must not be silently ignored);
-    rule TARGETS keep their case (URL paths are case-sensitive)."""
+    crawls and their rules must not be silently ignored); rule TARGETS
+    keep their case (URL paths are case-sensitive)."""
     lines = F.split(F.col(body_col), r"\r?\n")
-    init = F.struct(
+    start = F.struct(
         F.lit(False).alias("in_ua"),
         F.lit(False).alias("star"),
-        F.array().cast("array<string>").alias("rules"))
+        init.alias("value"))
 
     def step(acc, ln):
         t = F.trim(ln)
         tl = F.lower(t)
         is_ua = tl.startswith("user-agent:")
         ua_star = F.trim(t.substr(F.lit(12), F.length(t))) == "*"
-        is_dis = tl.startswith("disallow:")
-        target = F.trim(t.substr(F.lit(10), F.length(t)))
         star = (F.when(is_ua & acc["in_ua"], acc["star"] | ua_star)
                 .when(is_ua, ua_star)
                 .otherwise(acc["star"]))
-        rules = (F.when(is_dis & acc["star"] & (target != ""),
-                        F.concat(acc["rules"], F.array(target)))
-                 .otherwise(acc["rules"]))
         return F.struct(is_ua.alias("in_ua"), star.alias("star"),
-                        rules.alias("rules"))
+                        update(acc["value"], t, tl, acc["star"])
+                        .alias("value"))
 
-    agg = F.aggregate(lines, init, step, lambda acc: acc["rules"])
-    return robots.select(F.col(host_col), agg.alias("rules"))
+    return F.aggregate(lines, start, step, lambda acc: acc["value"])
+
+
+def parse_disallow_rules(robots: DataFrame, host_col: str = "host",
+                         body_col: str = "robots_txt") -> DataFrame:
+    """(host, robots_txt) -> (host, rules array<string>): the trimmed
+    ``Disallow:`` targets of every ``User-agent: *`` group, empty rules
+    (allow-all markers) removed — :func:`parse_access_rules`' entries
+    with ``allow`` false, projected to ``rule``."""
+    rules = F.filter(F.col("rules"), lambda r: ~r["allow"])
+    return parse_access_rules(robots, host_col, body_col).select(
+        F.col(host_col),
+        F.transform(rules, lambda r: r["rule"]).alias("rules"))
 
 
 def apply_robots(pages: DataFrame, robots: DataFrame,
@@ -78,40 +86,23 @@ def parse_access_rules(robots: DataFrame, host_col: str = "host",
     """(host, robots_txt) -> (host, rules array<struct<rule, allow>>):
     BOTH ``Allow:`` and ``Disallow:`` targets of every
     ``User-agent: *`` group (r7 — the full RFC 9309 §2.2.2 access
-    model; :func:`parse_disallow_rules` remains the disallow-only
-    fast path). Same group-scoping state machine; empty targets are
-    dropped from both kinds (an empty Disallow is the allow-all
-    marker, an empty Allow is a no-op)."""
-    lines = F.split(F.col(body_col), r"\r?\n")
-    init = F.struct(
-        F.lit(False).alias("in_ua"),
-        F.lit(False).alias("star"),
-        F.array().cast("array<struct<rule:string,allow:boolean>>")
-        .alias("rules"))
+    model). Empty targets are dropped from both kinds (an empty
+    Disallow is the allow-all marker, an empty Allow is a no-op)."""
 
-    def step(acc, ln):
-        t = F.trim(ln)
-        tl = F.lower(t)
-        is_ua = tl.startswith("user-agent:")
-        ua_star = F.trim(t.substr(F.lit(12), F.length(t))) == "*"
+    def update(rules, t, tl, in_star):
         is_dis = tl.startswith("disallow:")
         is_alw = tl.startswith("allow:")
         target = F.when(
             is_dis, F.trim(t.substr(F.lit(10), F.length(t)))).otherwise(
             F.trim(t.substr(F.lit(7), F.length(t))))
-        star = (F.when(is_ua & acc["in_ua"], acc["star"] | ua_star)
-                .when(is_ua, ua_star)
-                .otherwise(acc["star"]))
         entry = F.struct(target.alias("rule"), is_alw.alias("allow"))
-        rules = (F.when((is_dis | is_alw) & acc["star"]
-                        & (target != ""),
-                        F.concat(acc["rules"], F.array(entry)))
-                 .otherwise(acc["rules"]))
-        return F.struct(is_ua.alias("in_ua"), star.alias("star"),
-                        rules.alias("rules"))
+        return (F.when((is_dis | is_alw) & in_star & (target != ""),
+                       F.concat(rules, F.array(entry)))
+                .otherwise(rules))
 
-    agg = F.aggregate(lines, init, step, lambda acc: acc["rules"])
-    return robots.select(F.col(host_col), agg.alias("rules"))
+    init = F.array().cast("array<struct<rule:string,allow:boolean>>")
+    return robots.select(F.col(host_col), _star_group_fold(
+        body_col, init, update).alias("rules"))
 
 
 def apply_robots_v2(pages: DataFrame, robots: DataFrame,
@@ -198,35 +189,19 @@ def parse_crawl_delay(robots: DataFrame, host_col: str = "host",
                       body_col: str = "robots_txt") -> DataFrame:
     """(host, robots_txt) -> (host, crawl_delay, has_delay): the
     ``Crawl-delay:`` seconds from ``User-agent: *`` groups — the same
-    group-scoping state machine as parse_disallow_rules (the
+    group-scoping state machine as parse_access_rules (the
     directive is de-facto, not RFC 9309, but the grouping rules it
     obeys in the wild are); the LAST in-scope value wins; non-numeric
     values are ignored; hosts without one get crawl_delay 0 /
     has_delay 0. Pure HOF aggregate, JVM codegen."""
-    lines = F.split(F.col(body_col), r"\r?\n")
-    init = F.struct(
-        F.lit(False).alias("in_ua"),
-        F.lit(False).alias("star"),
-        F.lit(-1).cast("long").alias("delay"))
 
-    def step(acc, ln):
-        t = F.trim(ln)
-        tl = F.lower(t)
-        is_ua = tl.startswith("user-agent:")
-        ua_star = F.trim(t.substr(F.lit(12), F.length(t))) == "*"
-        is_cd = tl.startswith("crawl-delay:")
+    def update(delay, t, tl, in_star):
         target = F.trim(t.substr(F.lit(13), F.length(t)))
-        num = target.rlike(r"^[0-9]+$")
-        star = (F.when(is_ua & acc["in_ua"], acc["star"] | ua_star)
-                .when(is_ua, ua_star)
-                .otherwise(acc["star"]))
-        delay = (F.when(is_cd & acc["star"] & num,
-                        target.cast("long"))
-                 .otherwise(acc["delay"]))
-        return F.struct(is_ua.alias("in_ua"), star.alias("star"),
-                        delay.alias("delay"))
+        return (F.when(tl.startswith("crawl-delay:") & in_star
+                       & target.rlike(r"^[0-9]+$"), target.cast("long"))
+                .otherwise(delay))
 
-    agg = F.aggregate(lines, init, step, lambda acc: acc["delay"])
+    agg = _star_group_fold(body_col, F.lit(-1).cast("long"), update)
     return robots.select(
         F.col(host_col),
         F.greatest(agg, F.lit(0)).cast("long").alias("crawl_delay"),

@@ -118,6 +118,37 @@ def count_min_sketch(df: DataFrame, key_col: str, w: int = 256,
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
+def _theta_pair(df: DataFrame, key_col: str, group_col: str, group_a: str,
+                group_b: str, k: int, how: str, n_col: str,
+                est_col: str) -> DataFrame:
+    """One row (``n_col``, theta, ``est_col``) from the two groups' KMV
+    sketches: theta = min of the groups' k-th smallest hashes (2^32
+    when a group holds < k distinct keys), ``n_col`` = A's retained
+    hashes below theta that ``how``-join B's, ``est_col`` = ``n_col``
+    * 2^32 div theta."""
+    sk = theta_sketch(
+        df.filter(F.col(group_col).isin(group_a, group_b)),
+        key_col, group_col, k=k)
+    thetas = (sk.groupBy(group_col)
+              .agg(F.coalesce(
+                  F.max(F.when(F.col("rank") == k, F.col("hval"))),
+                  F.lit(1 << 32)).alias("g_theta")))
+    theta = thetas.agg(F.min("g_theta").alias("theta"))
+    a = sk.filter(F.col(group_col) == group_a).select("hval")
+    b = sk.filter(F.col(group_col) == group_b).select("hval")
+    pairs = a.join(b, "hval", how).join(F.broadcast(theta))
+    # global agg (no groupBy) returns its one row even when the
+    # filtered frame is empty; the 1-row theta re-joins after, so the
+    # (0, theta, 0) disjoint case survives to the caller
+    n = (pairs.filter(F.col("hval") < F.col("theta"))
+         .agg(F.count(F.lit(1)).alias(n_col)))
+    return (n.join(F.broadcast(theta))
+            .select(F.col(n_col).cast("long"),
+                    F.col("theta").cast("long"),
+                    F.expr(f"{n_col} * 4294967296 div theta")
+                    .cast("long").alias(est_col)))
+
+
 def theta_intersect(df: DataFrame, key_col: str, group_col: str,
                     group_a: str, group_b: str, k: int = 32) -> DataFrame:
     """Set-intersection cardinality from two groups' KMV sketches
@@ -134,27 +165,8 @@ def theta_intersect(df: DataFrame, key_col: str, group_col: str,
     Scale shape: everything downstream of theta_sketch touches at
     most 2k rows — the sketches ARE the data exchanged; this is why
     sketch set-algebra replaces distinct-joins at 100 TB."""
-    sk = theta_sketch(
-        df.filter(F.col(group_col).isin(group_a, group_b)),
-        key_col, group_col, k=k)
-    thetas = (sk.groupBy(group_col)
-              .agg(F.coalesce(
-                  F.max(F.when(F.col("rank") == k, F.col("hval"))),
-                  F.lit(1 << 32)).alias("g_theta")))
-    theta = thetas.agg(F.min("g_theta").alias("theta"))
-    a = sk.filter(F.col(group_col) == group_a).select("hval")
-    b = sk.filter(F.col(group_col) == group_b).select("hval")
-    common = a.join(b, "hval").join(F.broadcast(theta))
-    # global agg (no groupBy) returns its one row even when the
-    # filtered frame is empty; the 1-row theta re-joins after, so the
-    # (0, theta, 0) disjoint case survives to the caller
-    n = (common.filter(F.col("hval") < F.col("theta"))
-         .agg(F.count(F.lit(1)).alias("n_common")))
-    return (n.join(F.broadcast(theta))
-            .select(F.col("n_common").cast("long"),
-                    F.col("theta").cast("long"),
-                    F.expr("n_common * 4294967296 div theta")
-                    .cast("long").alias("est_intersection")))
+    return _theta_pair(df, key_col, group_col, group_a, group_b, k,
+                       "inner", "n_common", "est_intersection")
 
 
 def theta_a_not_b(df: DataFrame, key_col: str, group_col: str,
@@ -172,21 +184,5 @@ def theta_a_not_b(df: DataFrame, key_col: str, group_col: str,
     Scale shape: identical to theta_intersect — everything downstream
     of theta_sketch touches at most 2k rows; the anti-join runs on
     the k-row sketches, never the data."""
-    sk = theta_sketch(
-        df.filter(F.col(group_col).isin(group_a, group_b)),
-        key_col, group_col, k=k)
-    thetas = (sk.groupBy(group_col)
-              .agg(F.coalesce(
-                  F.max(F.when(F.col("rank") == k, F.col("hval"))),
-                  F.lit(1 << 32)).alias("g_theta")))
-    theta = thetas.agg(F.min("g_theta").alias("theta"))
-    a = sk.filter(F.col(group_col) == group_a).select("hval")
-    b = sk.filter(F.col(group_col) == group_b).select("hval")
-    only = a.join(b, "hval", "left_anti").join(F.broadcast(theta))
-    n = (only.filter(F.col("hval") < F.col("theta"))
-         .agg(F.count(F.lit(1)).alias("n_a_only")))
-    return (n.join(F.broadcast(theta))
-            .select(F.col("n_a_only").cast("long"),
-                    F.col("theta").cast("long"),
-                    F.expr("n_a_only * 4294967296 div theta")
-                    .cast("long").alias("est_a_not_b")))
+    return _theta_pair(df, key_col, group_col, group_a, group_b, k,
+                       "left_anti", "n_a_only", "est_a_not_b")

@@ -12,9 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import P, portable_hash, tokens_col
 from .extract import row_map
-
-P = 1_000_000_007
 
 # marker-token sets per language (frozen; mirrored in oracle SQL)
 LANG_MARKERS = {
@@ -29,8 +28,14 @@ STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
 TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"  # BPE-ish: runs of letters/digits/punct
 
 
-def _toks(text_col: str) -> F.Column:
-    return F.split(F.col(text_col), " ")
+def _bigrams(toks: F.Column) -> F.Column:
+    """Adjacent token pairs joined by a space (empty under 2 tokens)."""
+    return F.when(
+        F.size(toks) >= 2,
+        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
+                    lambda k: F.concat_ws(" ", F.element_at(toks, k + 1),
+                                          F.element_at(toks, k + 2)))
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def token_counts(docs: DataFrame, id_col: str = "doc_id",
@@ -38,7 +43,7 @@ def token_counts(docs: DataFrame, id_col: str = "doc_id",
     """Whitespace tokens + BPE-ish regex tokens + char count."""
     return docs.select(
         F.col(id_col),
-        F.size(_toks(text_col)).cast("long").alias("ws_tokens"),
+        F.size(tokens_col(text_col)).cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all(F.col(text_col), F.lit(f"({TOKEN_RE})"), 1))
         .cast("long").alias("re_tokens"),
         F.length(F.col(text_col)).cast("long").alias("n_chars_actual"))
@@ -48,7 +53,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
             text_col: str = "text") -> DataFrame:
     """Marker-token count per language; argmax, ties by language name
     ascending (deterministic)."""
-    toks = _toks(text_col)
+    toks = tokens_col(text_col)
 
     def marker_count(lang):
         markers = LANG_MARKERS[lang]
@@ -73,7 +78,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id",
     """Integer quality features: token count, mean word length (x100,
     integer division), stopword ratio in basis points, and a frozen
     composite score."""
-    toks = _toks(text_col)
+    toks = tokens_col(text_col)
     base = docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -119,7 +124,7 @@ def quality_score_v2(docs: DataFrame, id_col: str = "doc_id",
     ZERO shuffles, scan speed at 100 TB (same as repetition_stats).
     Line-level Gopher rules (bullet/ellipsis line fractions) are out of
     scope here: the documents corpus is single-line by construction."""
-    toks = _toks(text_col)
+    toks = tokens_col(text_col)
     # '#' count + '...' occurrence count, all-integer (div is exact)
     n_sym = F.expr(
         f"(length({text_col}) - length(replace({text_col}, '#', '')))"
@@ -162,10 +167,9 @@ def fingerprint(docs: DataFrame, id_col: str = "doc_id",
     """Rolling polynomial fingerprint over token hashes:
     fold(acc*31 + H(tok)) mod P — order-sensitive (unlike a bag-of-
     tokens hash), so near-identical docs with swapped words differ."""
-    toks = _toks(text_col)
-    h = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % P  # noqa: E731
+    toks = tokens_col(text_col)
     fp = F.aggregate(toks, F.lit(0).cast("long"),
-                     lambda acc, t: (acc * 31 + h(t)) % P)
+                     lambda acc, t: (acc * 31 + portable_hash(t)) % P)
     return docs.select(F.col(id_col), fp.alias("fp"))
 
 
@@ -185,7 +189,7 @@ def token_chunks(docs: DataFrame, id_col: str = "doc_id",
     (id, chunk_id, n_tokens, chunk_md5)."""
     if stride <= 0 or window <= 0:
         raise ValueError("token_chunks: window and stride must be > 0")
-    base = docs.select(F.col(id_col), _toks(text_col).alias("_toks"))
+    base = docs.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
     n = F.size("_toks")
     chunks = F.expr(
         f"transform(sequence(0, (CASE WHEN size(_toks) <= {window} THEN 1 "
@@ -267,13 +271,7 @@ def bigram_coherence(docs: DataFrame, id_col: str = "doc_id",
     by the bigram string, rejoined via an AQE-skew-splittable hash
     join (a stop-bigram like 'of the' is a hot key by construction) —
     the same safe topology as substring dedup."""
-    toks = _toks(text_col)
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda k: F.concat_ws(" ", F.element_at(toks, k + 1),
-                                          F.element_at(toks, k + 2)))
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = _bigrams(tokens_col(text_col))
     bg = (docs.select(F.col(id_col), bigrams.alias("_bgs"))
           .filter(F.size("_bgs") > 0)
           .select(F.col(id_col), F.explode("_bgs").alias("bg")))
@@ -302,7 +300,7 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
     ~64k distinct keys — the reduce side is trivially small however
     large the corpus), then a driver-bound top-k sort over those few
     thousand rows."""
-    words = docs.select(F.explode(_toks(text_col)).alias("w"))
+    words = docs.select(F.explode(tokens_col(text_col)).alias("w"))
     pairs = words.filter(F.length("w") >= 2).select(
         F.explode(F.expr(
             "transform(sequence(1, length(w) - 1), "
@@ -342,7 +340,7 @@ def bpe_learn(docs: DataFrame, text_col: str = "text",
     from pyspark.sql import Row
 
     spark = docs.sparkSession
-    wf = (docs.select(F.explode(_toks(text_col)).alias("w"))
+    wf = (docs.select(F.explode(tokens_col(text_col)).alias("w"))
           .filter(F.length("w") >= 1)
           .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
     sym = wf.select(
@@ -409,7 +407,7 @@ def bpe_encode(docs: DataFrame, merges: list | None = None,
     if merges is None:
         merges = [r["pair"]
                   for r in bpe_learn(docs, text_col, n_merges).collect()]
-    toks = F.filter(_toks(text_col), lambda w: F.length(w) >= 1)
+    toks = F.filter(tokens_col(text_col), lambda w: F.length(w) >= 1)
     sym = F.transform(
         toks,
         lambda w: F.concat(F.lit(" "), F.concat_ws(" ", F.split(w, "")),
@@ -497,13 +495,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     (sequence/transform/array_distinct): ZERO shuffles, so at 100 TB
     this runs at scan speed. Integer-exact flag: flagged=1 iff
     100*dup_bigrams > threshold_pct*n_bigrams (no float division)."""
-    toks = _toks(text_col)
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
-                    lambda k: F.concat_ws(" ", F.element_at(toks, k + 1),
-                                          F.element_at(toks, k + 2)))
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = _bigrams(tokens_col(text_col))
     d = docs.select(F.col(id_col), bigrams.alias("bg"))
     n_all = F.size(F.col("bg")).cast("long")
     n_dist = F.size(F.array_distinct(F.col("bg"))).cast("long")
@@ -534,7 +526,6 @@ def hash_classifier_score(docs: DataFrame, buckets: int = 4096,
     Scale shape: pure map-side HOF math over the token array —
     transform + aggregate inside whole-stage codegen, zero shuffle,
     zero Python. Emits (id, n_toks, score, label)."""
-    from .dedup import tokens_col
     toks = tokens_col(text_col)
     score = F.expr(
         "aggregate(transform(split({t}, ' '), x -> "

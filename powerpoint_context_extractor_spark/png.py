@@ -85,6 +85,24 @@ def _unfilter_row(ft: int, row: bytearray, prev: bytes, bpp: int) -> None:
             raise ValueError(f"png: bad filter type {ft}")
 
 
+def _unfilter_rows(raw: bytes, pos: int, n_rows: int, rb: int,
+                   bpp: int) -> list:
+    """Unfilter ``n_rows`` scanlines of ``rb`` bytes (each after its
+    filter-type byte) starting at ``raw[pos]``; filter history starts
+    at a zero row."""
+    rows = []
+    prev = bytes(rb)
+    for _ in range(n_rows):
+        if pos + 1 + rb > len(raw):
+            raise ValueError("png: bad scanline data length")
+        row = bytearray(raw[pos + 1:pos + 1 + rb])
+        _unfilter_row(raw[pos], row, prev, bpp)
+        prev = bytes(row)
+        rows.append(row)
+        pos += 1 + rb
+    return rows
+
+
 def _chunk(typ: bytes, data: bytes) -> bytes:
     return (struct.pack(">I", len(data)) + typ + data
             + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
@@ -114,6 +132,53 @@ def _unpack_bits(row: bytes, width: int, depth: int) -> bytes:
         shift = 8 - depth * (x % per_byte + 1)
         out.append((b >> shift) & mask)
     return bytes(out)
+
+
+def _color_type(width: int, height: int, pixels, channels: int,
+                palette) -> int:
+    """IHDR color type for ``channels`` (3 with a ``palette``), after
+    the palette, channel-count and pixel-length checks."""
+    if palette is not None:
+        if channels != 1:
+            raise ValueError("png: palette pixels are 1-byte indices")
+        if not 1 <= len(palette) <= 256:
+            raise ValueError("png: palette must have 1..256 entries")
+        if any(p >= len(palette) for p in pixels):
+            raise ValueError("png: pixel index outside palette")
+        color = 3
+    else:
+        if channels not in _COLOR_FOR_CHANNELS:
+            raise ValueError(f"png: unsupported channel count {channels}")
+        color = _COLOR_FOR_CHANNELS[channels]
+    if len(pixels) != width * height * channels:
+        raise ValueError("png: pixels length != width*height*channels")
+    return color
+
+
+def _assemble(width: int, height: int, depth: int, color: int,
+              interlace: int, palette, rows: list, row_filters,
+              bpp: int) -> bytes:
+    """Signature, IHDR, PLTE (with a ``palette``), one IDAT of the
+    filtered scanline ``rows`` and IEND. Filter types cycle through
+    ``row_filters`` (default Sub) from each group's first row, and
+    filter history starts at a zero row per group; ``rows`` is a list
+    of groups (one for sequential images, one per Adam7 pass)."""
+    filters = row_filters or [1]
+    raw = bytearray()
+    for group in rows:
+        prev = bytes(len(group[0])) if group else b""
+        for i, row in enumerate(group):
+            ft = filters[i % len(filters)]
+            raw.append(ft)
+            raw += _filter_row(ft, row, prev, bpp)
+            prev = row
+    ihdr = struct.pack(">IIBBBBB", width, height, depth, color, 0, 0,
+                       interlace)
+    out = _SIG + _chunk(b"IHDR", ihdr)
+    if palette is not None:
+        out += _chunk(b"PLTE", bytes(b for rgb in palette for b in rgb))
+    return (out + _chunk(b"IDAT", zlib.compress(bytes(raw)))
+            + _chunk(b"IEND", b""))
 
 
 def render_png(width: int, height: int, pixels: bytes,
@@ -150,49 +215,21 @@ def render_png(width: int, height: int, pixels: bytes,
             raise ValueError("png: 16-bit palette is not a PNG format")
         if any(not 0 <= p < 65536 for p in pixels):
             raise ValueError("png: sample out of range for bit depth")
-    if palette is not None:
-        if channels != 1:
-            raise ValueError("png: palette pixels are 1-byte indices")
-        if not 1 <= len(palette) <= 256:
-            raise ValueError("png: palette must have 1..256 entries")
-        if any(p >= len(palette) for p in pixels):
-            raise ValueError("png: pixel index outside palette")
-        color = 3
-    else:
-        if channels not in _COLOR_FOR_CHANNELS:
-            raise ValueError(f"png: unsupported channel count {channels}")
-        color = _COLOR_FOR_CHANNELS[channels]
-    if len(pixels) != width * height * channels:
-        raise ValueError("png: pixels length != width*height*channels")
-    filters = row_filters or [1]
+    color = _color_type(width, height, pixels, channels, palette)
     stride = width * channels
-    raw = bytearray()
-    if bit_depth == 16:
-        packed_stride, bpp = stride * 2, channels * 2
-    elif bit_depth != 8:
-        packed_stride, bpp = (width * bit_depth + 7) // 8, 1
-    else:
-        packed_stride, bpp = stride, channels
-    prev = bytes(packed_stride)
+    rows = []
     for y in range(height):
         samples = pixels[y * stride:(y + 1) * stride]
         if bit_depth == 16:
-            row = b"".join(int(s).to_bytes(2, "big") for s in samples)
+            rows.append(b"".join(int(s).to_bytes(2, "big") for s in samples))
         elif bit_depth != 8:
-            row = _pack_bits(bytes(samples), width, bit_depth)
+            rows.append(_pack_bits(bytes(samples), width, bit_depth))
         else:
-            row = bytes(samples)
-        ft = filters[y % len(filters)]
-        raw.append(ft)
-        raw += _filter_row(ft, row, prev, bpp)
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", width, height, bit_depth, color,
-                       0, 0, 0)
-    out = _SIG + _chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += _chunk(b"PLTE", bytes(b for rgb in palette for b in rgb))
-    return (out + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + _chunk(b"IEND", b""))
+            rows.append(bytes(samples))
+    bpp = channels * 2 if bit_depth == 16 else (
+        channels if bit_depth == 8 else 1)
+    return _assemble(width, height, bit_depth, color, 0, palette, [rows],
+                     row_filters, bpp)
 
 
 # Adam7 interlace pass layout: (x0, y0, dx, dy) per pass
@@ -209,45 +246,24 @@ def render_png_interlaced(width: int, height: int, pixels: bytes,
     values as the sequential encoder so decodes are identical.
     ``palette`` follows the same color-type-3 contract as
     :func:`render_png`."""
-    if palette is not None:
-        if channels != 1:
-            raise ValueError("png: palette pixels are 1-byte indices")
-        if not 1 <= len(palette) <= 256:
-            raise ValueError("png: palette must have 1..256 entries")
-        if any(p >= len(palette) for p in pixels):
-            raise ValueError("png: pixel index outside palette")
-        color = 3
-    else:
-        if channels not in _COLOR_FOR_CHANNELS:
-            raise ValueError(f"png: unsupported channel count {channels}")
-        color = _COLOR_FOR_CHANNELS[channels]
-    if len(pixels) != width * height * channels:
-        raise ValueError("png: pixels length != width*height*channels")
-    filters = row_filters or [1]
-    raw = bytearray()
+    color = _color_type(width, height, pixels, channels, palette)
+    passes = []
     for x0, y0, dx, dy in _ADAM7:
         pw = (width - x0 + dx - 1) // dx
         ph = (height - y0 + dy - 1) // dy
         if pw <= 0 or ph <= 0:
             continue
-        pstride = pw * channels
-        prev = bytes(pstride)
+        rows = []
         for py in range(ph):
             y = y0 + py * dy
             row = bytearray()
             for px in range(pw):
                 o = (y * width + x0 + px * dx) * channels
                 row += pixels[o:o + channels]
-            ft = filters[py % len(filters)]
-            raw.append(ft)
-            raw += _filter_row(ft, bytes(row), prev, channels)
-            prev = bytes(row)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 1)
-    out = _SIG + _chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += _chunk(b"PLTE", bytes(b for rgb in palette for b in rgb))
-    return (out + _chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + _chunk(b"IEND", b""))
+            rows.append(bytes(row))
+        passes.append(rows)
+    return _assemble(width, height, 8, color, 1, palette, passes,
+                     row_filters, channels)
 
 
 def decode_png(data: bytes) -> tuple:
@@ -319,15 +335,9 @@ def decode_png(data: bytes) -> tuple:
             if pw <= 0 or ph <= 0:
                 continue
             pstride = pw * channels
-            prev = bytes(pstride)
-            for py in range(ph):
-                if pos + 1 + pstride > len(raw):
-                    raise ValueError("png: bad scanline data length")
-                ft = raw[pos]
-                row = bytearray(raw[pos + 1:pos + 1 + pstride])
-                pos += 1 + pstride
-                _unfilter_row(ft, row, prev, channels)
-                prev = bytes(row)
+            rows = _unfilter_rows(raw, pos, ph, pstride, channels)
+            pos += ph * (1 + pstride)
+            for py, row in enumerate(rows):
                 y = y0 + py * dy
                 for px in range(pw):
                     o = (y * width + x0 + px * dx) * channels
@@ -343,12 +353,7 @@ def decode_png(data: bytes) -> tuple:
         if len(raw) != (rb + 1) * height:
             raise ValueError("png: bad scanline data length")
         vals: list = []
-        prev = bytes(rb)
-        for y in range(height):
-            ft = raw[y * (rb + 1)]
-            row = bytearray(raw[y * (rb + 1) + 1:(y + 1) * (rb + 1)])
-            _unfilter_row(ft, row, prev, channels * 2)
-            prev = bytes(row)
+        for row in _unfilter_rows(raw, 0, height, rb, channels * 2):
             vals.extend((row[2 * k] << 8) | row[2 * k + 1]
                         for k in range(stride))
         return width, height, channels, vals
@@ -361,27 +366,16 @@ def decode_png(data: bytes) -> tuple:
         if len(raw) != (rb + 1) * height:
             raise ValueError("png: bad scanline data length")
         pixels = bytearray()
-        prev = bytes(rb)
         scale = 1 if indexed else 255 // ((1 << depth) - 1)
-        for y in range(height):
-            ft = raw[y * (rb + 1)]
-            row = bytearray(raw[y * (rb + 1) + 1:(y + 1) * (rb + 1)])
-            _unfilter_row(ft, row, prev, 1)
-            prev = bytes(row)
+        for row in _unfilter_rows(raw, 0, height, rb, 1):
             pixels += bytes(s * scale
                             for s in _unpack_bits(bytes(row), width,
                                                   depth))
     else:
         if len(raw) != (stride + 1) * height:
             raise ValueError("png: bad scanline data length")
-        pixels = bytearray()
-        prev = bytes(stride)
-        for y in range(height):
-            ft = raw[y * (stride + 1)]
-            row = bytearray(raw[y * (stride + 1) + 1:(y + 1) * (stride + 1)])
-            _unfilter_row(ft, row, prev, channels)
-            pixels += row
-            prev = bytes(row)
+        pixels = bytearray().join(
+            _unfilter_rows(raw, 0, height, stride, channels))
     if indexed:
         n_entries = len(palette) // 3
         if any(p >= n_entries for p in pixels):

@@ -29,6 +29,8 @@ DEFAULT_ARROW_BYTES = "16m"
 
 
 _MEM_RE = re.compile(r"^\s*(\d+)\s*([kmgt])b?\s*$", re.I)
+# local[N], local[N,F] (F = max task failures), local[*], local[*,F]
+_LOCAL_RE = re.compile(r"^local\[(\d+|\*)(?:,\d+)?\]$")
 
 
 def _gc_opts(driver_memory: str) -> str:
@@ -52,25 +54,35 @@ def _host_heap() -> str:
     return f"{min(48, max(1, total // 2 ** 31))}g"
 
 
+def _usable_cores() -> int:
+    return (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+            else os.cpu_count())
+
+
+def _task_slots(master: str) -> int:
+    """Task slots of a local master (``*`` = the usable cores); 32 for
+    any other master."""
+    m = _LOCAL_RE.match(master)
+    if m is None:
+        return 32
+    return _usable_cores() if m.group(1) == "*" else int(m.group(1))
+
+
 def get_spark(app: str = "pcx-extract", master: str | None = None,
               shuffle_partitions: int | None = None,
-              arrow_batch: int = DEFAULT_ARROW_BATCH,
-              arrow_bytes: str = DEFAULT_ARROW_BYTES,
               driver_memory: str | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """``master`` defaults to ``local[N]`` over the host's usable cores
-    and ``driver_memory`` to ``_host_heap()``. ``extra_conf`` entries
+    and ``driver_memory`` to ``_host_heap()``; ``shuffle_partitions``
+    defaults to the master's task slots. ``extra_conf`` entries
     are applied at BUILDER time — the seam for core (non-SQL) confs like
     ``spark.python.worker.reuse`` that ``spark.conf.set`` rejects after
     startup (perfbench/harness.py)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or (
-        len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
-        else os.cpu_count())
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _usable_cores()
     master = master or f"local[{cpus}]"
     driver_memory = driver_memory or _host_heap()
     if shuffle_partitions is None:
-        n = master.split("[")[-1].rstrip("]*")
-        shuffle_partitions = int(n) if n.isdigit() else 32
+        shuffle_partitions = _task_slots(master)
     b = (
         SparkSession.builder
         .master(master)
@@ -81,8 +93,10 @@ def get_spark(app: str = "pcx-extract", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_bytes)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(DEFAULT_ARROW_BATCH))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                DEFAULT_ARROW_BYTES)
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -57,6 +57,13 @@ def _adpcm_step(pred: int, index: int, s: int) -> tuple:
         diff -= step >> 1
     if diff >= step >> 2:
         nib |= 1
+    return (nib,) + _adpcm_expand(pred, index, nib)
+
+
+def _adpcm_expand(pred: int, index: int, nib: int) -> tuple:
+    """The IMA decoder's reconstruction of one nibble -> (new_pred,
+    new_index)."""
+    step = IMA_STEPS[index]
     recon = step >> 3
     if nib & 4:
         recon += step
@@ -67,7 +74,7 @@ def _adpcm_step(pred: int, index: int, s: int) -> tuple:
     pred = pred - recon if nib & 8 else pred + recon
     pred = max(-32768, min(32767, pred))
     index = max(0, min(88, index + IMA_INDEX_ADJUST[nib & 7]))
-    return nib, pred, index
+    return pred, index
 
 
 def adpcm_encode_block(samples, init_index: int = 0) -> bytes:
@@ -104,17 +111,7 @@ def adpcm_decode_block(block: bytes, n_samples: int) -> list:
     for k in range(n_samples - 1):
         byte = block[4 + (k >> 1)]
         nib = (byte >> 4) if k & 1 else (byte & 0x0F)
-        step = IMA_STEPS[index]
-        recon = step >> 3
-        if nib & 4:
-            recon += step
-        if nib & 2:
-            recon += step >> 1
-        if nib & 1:
-            recon += step >> 2
-        pred = pred - recon if nib & 8 else pred + recon
-        pred = max(-32768, min(32767, pred))
-        index = max(0, min(88, index + IMA_INDEX_ADJUST[nib & 7]))
+        pred, index = _adpcm_expand(pred, index, nib)
         out.append(pred)
     return out
 

@@ -1,12 +1,11 @@
-"""Scalar helper functions (functions/text.py), and the column
-helpers that only these tests use."""
+"""Scalar column helpers that only these tests use, checked beside the
+package's ``dedup.portable_hash`` and the sweep's ``_CENTS``."""
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from powerpoint_context_extractor_spark.functions.text import (
-    cents, portable_hash,
-)
+import __spark_entry__ as entry_mod
+from powerpoint_context_extractor_spark.operators.dedup import portable_hash
 
 from .conftest import write_artifacts
 
@@ -50,7 +49,7 @@ def test_text_helpers(spark):
     row = df.select(
         sanitize_filename(F.col("name")).alias("san"),
         zero_pad(F.col("n"), "slide_").alias("pad"),
-        cents(F.col("money")).alias("c"),
+        entry_mod._CENTS("money").alias("c"),
         ms_label(F.col("ms")).alias("lab"),
         portable_hash(F.col("s")).alias("h"),
     ).collect()[0]

@@ -39,3 +39,17 @@ def test_golden_span_invariant():
             continue
         for s in g["spans"]:
             assert 0 <= s["start"] <= s["end"] <= len(g["text"])
+
+
+def test_payload_generators_match_committed_digests():
+    """Every ``multimodal.*_payload_for_doc`` output for doc_id 0..27 hashes
+    to the digest committed in tests/fixtures/payload_digests.json, so a
+    change to a shared encoder or container writer that moves one byte of
+    any format fails here."""
+    from scripts.make_goldens import PAYLOAD_OUT, payload_digests
+    with open(PAYLOAD_OUT, encoding="utf-8") as f:
+        committed = json.load(f)
+    got = payload_digests()
+    assert set(got) == set(committed)
+    for name, digests in committed.items():
+        assert got[name] == digests, name

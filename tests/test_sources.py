@@ -76,24 +76,47 @@ def _has_docstring(node) -> bool:
             and isinstance(body[0].value.value, str))
 
 
-def _names_used(node):
-    """Identifiers ``node`` refers to: names, attributes, import aliases
-    and identifier-shaped string constants, skipping docstrings."""
+def _module_name(path: str) -> str:
+    name = os.path.relpath(path, ROOT)[:-len(".py")].replace(os.sep, ".")
+    return name[:-len(".__init__")] if name.endswith(".__init__") else name
+
+
+def _imports(tree, module: str, is_package: bool):
+    """(local name, source module, imported name or None) per import
+    alias anywhere in ``tree``; None binds the module itself."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    yield a.asname, a.name, None
+                else:
+                    root = a.name.split(".")[0]
+                    yield root, root, None
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = module.split(".")
+                parts = parts[:len(parts) - node.level + is_package]
+                base = ".".join(parts + ([node.module] if node.module
+                                         else []))
+            for a in node.names:
+                yield a.asname or a.name, base, a.name
+
+
+def _refs(node):
+    """Names, attribute nodes and identifier-shaped string constants
+    under ``node``, skipping docstrings."""
     if isinstance(node, ast.Name):
-        yield node.id
+        yield "name", node
     elif isinstance(node, ast.Attribute):
-        yield node.attr
-    elif isinstance(node, ast.alias):
-        yield from node.name.split(".")
-        if node.asname:
-            yield node.asname
+        yield "attr", node
     elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
           and node.value.isidentifier()):
-        yield node.value
+        yield "str", node
     doc = node.body[0] if _has_docstring(node) else None
     for child in ast.iter_child_nodes(node):
         if child is not doc:
-            yield from _names_used(child)
+            yield from _refs(child)
 
 
 def _defined(stmt) -> list:
@@ -111,24 +134,83 @@ def _defined(stmt) -> list:
 def test_every_package_name_has_a_caller_outside_tests():
     """Each top-level function, class and assignment of the package is
     used, outside its own definition, somewhere other than ``tests/``:
-    code whose only caller is a test lives in ``tests/``."""
-    users = {}                            # name -> {(path, statement)}
-    defined = []
+    code whose only caller is a test lives in ``tests/``.
+
+    A use of name N defined in module M counts only in M itself, or in
+    a module that imports N from M (directly or through a package
+    re-export) and then uses that binding, or that imports M and reads
+    attribute N of it. An identifier-shaped string N counts wherever it
+    appears (the sweep reaches some names by string). A bare import, a
+    same-named function in another module, or an attribute N of
+    anything but module M does not count."""
+    trees = {}
     for path in _trees(USERS):
         with open(path, encoding="utf-8") as f:
-            tree = ast.parse(f.read(), path)
-        in_package = path.startswith(os.path.join(ROOT, PACKAGE, ""))
-        for i, stmt in enumerate(tree.body):
-            names = _defined(stmt)
-            if "__all__" in names or (i == 0 and _has_docstring(tree)):
-                continue
-            for name in _names_used(stmt):
-                users.setdefault(name, set()).add((path, i))
-            if in_package:
-                defined += [(path, i, n) for n in names
+            trees[path] = ast.parse(f.read(), path)
+    modules = {_module_name(p): p for p in trees}
+    pkg_prefix = os.path.join(ROOT, PACKAGE, "")
+    defined = []                          # (module, name, path, statement)
+    reexport = {}                         # (module, local) -> (module, name)
+    binds = {}                            # path -> (local modules, names)
+    for path, tree in trees.items():
+        module = _module_name(path)
+        in_package = path.startswith(pkg_prefix)
+        mods, names = {}, {}
+        for local, base, name in _imports(
+                tree, module, path.endswith("__init__.py")):
+            if name is None or f"{base}.{name}" in modules:
+                mods[local] = base if name is None else f"{base}.{name}"
+            else:
+                names[local] = (base, name)
+                if in_package:
+                    reexport[(module, local)] = (base, name)
+        binds[path] = mods, names
+        if in_package:
+            for i, stmt in enumerate(tree.body):
+                defined += [(module, n, path, i) for n in _defined(stmt)
                             if not (n.startswith("__") and n.endswith("__"))]
+    keys = {(module, n) for module, n, _path, _i in defined}
+
+    def resolve(key):
+        for _ in range(8):                # follow re-export chains
+            if key in keys or key not in reexport:
+                break
+            key = reexport[key]
+        return key
+
+    def module_of(expr, mods):
+        if isinstance(expr, ast.Name):
+            return mods.get(expr.id)
+        if isinstance(expr, ast.Attribute):
+            inner = module_of(expr.value, mods)
+            if inner and f"{inner}.{expr.attr}" in modules:
+                return f"{inner}.{expr.attr}"
+        return None
+
+    used = {}                             # key -> {(path, statement)}
+    strings = {}                          # identifier -> {(path, statement)}
+    for path, tree in trees.items():
+        module = _module_name(path)
+        mods, names = binds[path]
+        for i, stmt in enumerate(tree.body):
+            if "__all__" in _defined(stmt) or (
+                    i == 0 and _has_docstring(tree)):
+                continue
+            for kind, node in _refs(stmt):
+                if kind == "str":
+                    strings.setdefault(node.value, set()).add((path, i))
+                    continue
+                if kind == "name":
+                    key = names.get(node.id, (module, node.id))
+                else:
+                    owner = module_of(node.value, mods)
+                    if owner is None:
+                        continue
+                    key = (owner, node.attr)
+                used.setdefault(resolve(key), set()).add((path, i))
     assert len(defined) > 500
     unused = [f"{os.path.relpath(path, ROOT)}::{name}"
-              for path, i, name in defined
-              if not users.get(name, set()) - {(path, i)}]
+              for module, name, path, i in defined
+              if not (used.get((module, name), set())
+                      | strings.get(name, set())) - {(path, i)}]
     assert unused == [], "\n".join(unused)
