@@ -1143,6 +1143,8 @@ def _decode_progressive_color(width: int, height: int, comps: list,
         if ss == 0:
             if se != 0:
                 raise ValueError("jpeg: progressive DC scan must be band 0")
+            if not sel:
+                raise ValueError("jpeg: progressive DC scan has no component")
             comps_in = [c for c in comps if c[0] in sel]
             walk = []                      # (cid, block raster idx)
             if len(sel) > 1:               # MCU-interleaved

@@ -24,13 +24,9 @@ batch loop.
 ``_spread_small_input``; ``partition_map`` never spreads.
 
 ``_map_batches`` is the one batch loop: it turns Arrow batches into
-row tuples, builds the output batches, and calls
-``_freeze_worker_heap`` on each input batch. In a Python worker that
-moves the import-time heap (pyspark, pyarrow, pandas: ~74k objects)
-into the collector's permanent generation once per process, so the
-full ``gc.collect()`` that PySpark's daemon runs after every task of a
-reused worker stops walking it (on a 4-core host: 43-126 ms per task
-before, under 0.3 ms after). The driver's heap is never frozen.
+row tuples and builds the output batches. The workers that run it are
+forked by the package daemon (``daemon.py``) with this module, pyarrow
+and pandas already imported and frozen out of the collector's walk.
 
 Scale notes (100 TB design):
 - map-only: no shuffle is *required*. ``_spread_small_input`` adds a
@@ -50,7 +46,6 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import functools
-import gc
 import itertools
 import os
 import time
@@ -61,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from .. import corpus
 from ..kernel import extract_document
 from ..sources.table_io import parquet_writer
 
@@ -96,27 +92,6 @@ WRITE_SUMMARY_SCHEMA = T.StructType([
 ])
 
 
-def _freeze_worker_heap() -> None:
-    """In a Python worker (a task is running), freeze the heap once per
-    process; elsewhere, do nothing."""
-    if TaskContext.get() is not None:
-        _freeze_import_heap()
-
-
-@functools.cache
-def _freeze_import_heap() -> None:
-    """``gc.freeze()`` after pyarrow's lazy pandas import, which its
-    first conversion would otherwise run after the freeze: pandas is
-    about half of the worker's import-time objects. Frozen objects are
-    still freed by refcounting, but a frozen cycle is never collected:
-    that bounds the leak to what the first task held when its first
-    batch arrived, once per worker. ``gc.freeze()`` itself is O(1), and
-    no collection runs before it."""
-    import pyarrow as pa
-    pa.array([], pa.int64())
-    gc.freeze()
-
-
 def _arrow_batch(rows, arrow_schema):
     """One Arrow batch of ``rows``, tuples in ``arrow_schema`` order."""
     import pyarrow as pa
@@ -135,7 +110,6 @@ def _map_batches(batches, fn, arrow_schema):
     def _rows():
         nonlocal turned
         for rb in batches:
-            _freeze_worker_heap()
             turned = True
             yield from zip(*(c.to_pylist() for c in rb.columns))
 
@@ -312,7 +286,6 @@ def extract_wrapped_documents(docs: DataFrame,
           "pdf15": "pdf15_page_for_document"}[wrap]
 
     def _row(doc_id, text):
-        from .. import corpus
         url = f"doc://{doc_id}"
         r = extract_document(url, getattr(corpus, fn)(doc_id, text))
         yield url, r.title, r.text, r.n_blocks
@@ -331,7 +304,6 @@ _CHARSET_KINDS = ("utf-8", "utf-8-bom", "utf-16", "cp1252-meta")
 
 
 def _charset_page(doc_id: int, text: str) -> bytes:
-    from .. import corpus
     page = corpus.page_for_document(doc_id, text).decode("utf-8")
     kind = _CHARSET_KINDS[doc_id % 4]
     if kind == "utf-8":
@@ -371,11 +343,6 @@ def extract_documents_charset(docs: DataFrame) -> DataFrame:
     return _charset_extract(docs, _charset_page)
 
 
-def _cjk_page(doc_id: int, text: str) -> bytes:
-    from .. import corpus
-    return corpus.cjk_page_for_document(doc_id, text)
-
-
 def extract_documents_cjk(docs: DataFrame) -> DataFrame:
     """CJK legacy-charset contract path (r4 VERDICT #2): each documents
     row wrapped as a page labeled with a legacy CJK meta charset
@@ -385,7 +352,7 @@ def extract_documents_cjk(docs: DataFrame) -> DataFrame:
     the WHATWG mapping (cp932/gbk/cp949/big5hkscs) — decoding with the
     narrow national-standard codec replace-mangles the extension char
     and fails the md5 check."""
-    return _charset_extract(docs, _cjk_page)
+    return _charset_extract(docs, corpus.cjk_page_for_document)
 
 
 # doc_id % 4 -> (encoding, page shape); kinds 2/3 are CJK-HEAVY minimal
@@ -395,7 +362,6 @@ NOBOM_CJK_REPEAT = 6
 
 
 def _nobom_page(doc_id: int, text: str) -> bytes:
-    from .. import corpus
     kind = doc_id % 4
     enc = "utf-16-le" if kind in (0, 2) else "utf-16-be"
     if kind < 2:

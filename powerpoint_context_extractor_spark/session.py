@@ -6,7 +6,9 @@ driver heap of half the physical memory, capped at 48 GiB. On a real
 cluster the same knobs apply per-executor and AQE re-plans at runtime.
 Arrow batches are bounded by *records* here — multi-MB ``html`` blobs
 mean records-per-batch is the effective bytes bound (SURVEY.md §4
-"Vectorization").
+"Vectorization"). Python workers fork from the package daemon
+(``daemon.py``), so the package must be importable where the JVM starts
+Python: from its working directory or ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -100,6 +102,8 @@ def get_spark(app: str = "pcx-extract", master: str | None = None,
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.python.daemon.module",
+                "powerpoint_context_extractor_spark.daemon")
         # throughput GC: G1 pause targets cost ~10-20% on scan-heavy
         # local runs; Parallel matches batch workloads. The 4g young-gen
         # cap bounds stop-the-world pause size at full width: transient

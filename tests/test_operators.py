@@ -2988,6 +2988,25 @@ def test_jpeg_progressive_color_equals_baseline_color():
         decode_jpeg(raw2)
 
 
+def test_jpeg_progressive_color_dc_scan_without_components():
+    """A progressive color DC scan whose SOS lists no component (Ns = 0)
+    is a ``jpeg:`` ValueError, not an IndexError: the first SOS of a
+    ``render_jpeg_color_progressive`` output rewritten to Ns = 0."""
+    import pytest as _pytest
+
+    from powerpoint_context_extractor_spark.jpeg import (
+        decode_jpeg, render_jpeg_color_progressive,
+    )
+    raw = render_jpeg_color_progressive(
+        16, 16, bytes(128 for _ in range(16 * 16 * 3)))
+    sos = raw.find(b"\xff\xda")
+    end = sos + 2 + int.from_bytes(raw[sos + 2:sos + 4], "big")
+    # FF DA Ls=6 Ns=0 Ss=0 Se=0 AhAl=0
+    raw = raw[:sos] + b"\xff\xda\x00\x06\x00\x00\x00\x00" + raw[end:]
+    with _pytest.raises(ValueError, match="^jpeg: "):
+        decode_jpeg(raw)
+
+
 def test_hll_registers_estimate_and_merge(spark):
     """r6: the HLL register sketch estimates distinct counts within
     the standard error envelope at p=8 (~6.5% sigma; assert 3 sigma),

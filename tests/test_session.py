@@ -59,3 +59,13 @@ def test_arrow_batch_bounds_are_the_module_constants(monkeypatch):
         session.DEFAULT_ARROW_BATCH)
     assert conf["spark.sql.execution.arrow.maxBytesPerBatch"] == (
         session.DEFAULT_ARROW_BYTES)
+
+
+def test_python_workers_fork_from_the_package_daemon(monkeypatch):
+    conf = _conf(monkeypatch, master="local[2]")
+    assert conf["spark.python.daemon.module"] == (
+        "powerpoint_context_extractor_spark.daemon")
+    # a caller's extra_conf overrides it, as it does any conf
+    conf = _conf(monkeypatch, master="local[2]", extra_conf={
+        "spark.python.daemon.module": "pyspark.daemon"})
+    assert conf["spark.python.daemon.module"] == "pyspark.daemon"

@@ -1,13 +1,20 @@
-"""What a reused Python worker pays around each task. PySpark runs
-``importlib.invalidate_caches()`` at the start of every task, and no
-task may pay for re-reading the zip archives on ``sys.path`` (the
-package's ``ZipImporterShedder``); it runs a full ``gc.collect()`` after
-every task, and no collection may walk the worker's import-time heap
-(``operators.extract._freeze_worker_heap``)."""
+"""What a Python worker pays before and around each task. Every worker
+forks from the package daemon (``daemon.py``), which has imported
+pyarrow, pandas and the kernel, installed ``ZipImporterShedder`` and
+frozen its heap. PySpark runs ``importlib.invalidate_caches()`` at the
+start of every task, and no task, a worker's first included, may pay
+for re-reading the zip archives on ``sys.path``; it runs a full
+``gc.collect()`` after every task of a reused worker, and no collection
+may walk the import-time heap. Only the daemon freezes, never the
+driver, and nothing else in the package calls ``gc.freeze``."""
 
+import ast
 import gc
 import importlib
 import importlib.machinery
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -22,6 +29,9 @@ from powerpoint_context_extractor_spark.operators.extract import (
 )
 
 PKG = "pcx_zip_probe"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "powerpoint_context_extractor_spark"
+DAEMON = f"{PACKAGE}.daemon"
 
 
 @pytest.fixture
@@ -114,6 +124,7 @@ def test_reused_workers_collect_without_the_import_heap(spark):
 
     def gc_heap_at_task_start(batches):
         import gc
+        import os
         import sys
 
         import pyarrow as pa
@@ -121,19 +132,24 @@ def test_reused_workers_collect_without_the_import_heap(spark):
         # namespaces every worker holds before its first batch
         spaces = [sys.modules[m].__dict__ for m in
                   ("pyspark.worker", "pyarrow.lib", "pandas.core.frame")]
+        with open(f"/proc/{os.getppid()}/cmdline", "rb") as f:
+            parent = f.read().replace(b"\0", b" ").decode()
         for _ in batches:
             pass
         yield pa.RecordBatch.from_pydict({
             "frozen": [gc.get_freeze_count()],
-            "walked": [sum(id(d) in walked for d in spaces)]})
+            "walked": [sum(id(d) in walked for d in spaces)],
+            "parent": [parent]})
 
     got = (spark.range(0, 4, numPartitions=4)
-           .mapInArrow(gc_heap_at_task_start, "frozen long, walked long")
+           .mapInArrow(gc_heap_at_task_start,
+                       "frozen long, walked long, parent string")
            .collect())
     assert len(got) == 4
     for r in got:
         assert r.frozen >= 20_000, r
         assert r.walked == 0, r
+        assert DAEMON in r.parent.split(), r
 
     # the driver's heap is never frozen
     before = gc.get_freeze_count()
@@ -141,3 +157,65 @@ def test_reused_workers_collect_without_the_import_heap(spark):
         [{"url": rows[0]["url"], "html": rows[0]["html"]}])
     assert sum(rb.num_rows for rb in _kernel_batches_arrow([batch])) == 1
     assert gc.get_freeze_count() == before
+
+
+def _freeze_calls(tree) -> int:
+    return sum(
+        (isinstance(n, ast.Attribute) and n.attr == "freeze"
+         and isinstance(n.value, ast.Name) and n.value.id == "gc")
+        or (isinstance(n, ast.ImportFrom) and n.module == "gc"
+            and any(a.name == "freeze" for a in n.names))
+        for n in ast.walk(tree))
+
+
+def test_only_the_daemon_freezes_the_heap():
+    calls = {}
+    for d, _dirs, names in os.walk(os.path.join(ROOT, PACKAGE)):
+        for name in names:
+            if name.endswith(".py"):
+                path = os.path.join(d, name)
+                with open(path, encoding="utf-8") as f:
+                    n = _freeze_calls(ast.parse(f.read(), path))
+                if n:
+                    calls[os.path.relpath(path, ROOT)] = n
+    assert calls == {os.path.join(PACKAGE, "daemon.py"): 1}
+
+
+_PROBE = """
+import gc, json, os, sys
+{imports}
+names = sorted(open(f"/proc/self/task/{{t}}/comm").read().strip()
+               for t in os.listdir("/proc/self/task"))
+print(json.dumps({{
+    "first": getattr(sys.meta_path[0], "__name__", None),
+    "pandas": "pandas" in sys.modules,
+    "frozen": gc.get_freeze_count(),
+    "threads": names}}))
+"""
+
+
+def _fresh_interpreter(imports: str) -> dict:
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", _PROBE.format(imports=imports)], cwd=ROOT,
+        env=env, capture_output=True, text=True, timeout=120, check=True)
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_daemon_module_prepares_a_fork_safe_heap():
+    """Importing the daemon module (its ``manager`` only runs as
+    ``__main__``) leaves a fresh interpreter with the shedder first on
+    ``sys.meta_path``, pandas loaded and the heap frozen, and with no
+    OS thread that a bare ``pyspark.daemon`` lacks but pyarrow's
+    jemalloc background thread: no thread pool runs when it forks."""
+    bare = _fresh_interpreter("import pyspark.daemon")
+    got = _fresh_interpreter(f"import {DAEMON}")
+    assert got["first"] == ZipImporterShedder.__name__
+    assert got["pandas"]
+    assert got["frozen"] >= 20_000
+    assert bare["frozen"] == 0
+    assert got["threads"] in (
+        bare["threads"], sorted(bare["threads"] + ["jemalloc_bg_thd"])), (
+        bare, got)
