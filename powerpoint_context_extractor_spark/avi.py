@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import struct
 
+from .limits import check_pixels
+
 __all__ = ["render_avi", "render_avi_rle8", "render_avi_mjpeg",
            "decode_avi", "rle8_encode_frame", "rle8_decode_frame",
            "render_bmp", "decode_bmp"]
@@ -192,7 +194,9 @@ def rle8_decode_frame(width: int, height: int, data: bytes) -> bytes:
     """Decode one BI_RLE8 frame -> top-down palette indices (len w*h).
     Handles runs, absolute mode (word-aligned), and the EOL (00 00),
     EOB (00 01), and delta (00 02 dx dy) escapes; delta-skipped pixels
-    keep the DIB-conventional 0 fill. Raises ValueError on overruns."""
+    keep the DIB-conventional 0 fill. Raises ValueError on overruns
+    and on dimensions over ``limits.MAX_PIXELS``."""
+    check_pixels("rle8", width, height)
     idx = bytearray(width * height)
     x, y = 0, height - 1                             # bottom-up cursor
     i = 0
@@ -332,6 +336,7 @@ def decode_avi(data: bytes) -> tuple:
     walk(12, 8 + riff_len)
     if width is None or not frames:
         raise ValueError("avi: missing avih header or frames")
+    check_pixels("avi", width, height)
     has_dc = any(k == "dc" for k, _s, _l in frames)
     if has_dc and compression not in (1, MJPG_FOURCC):
         raise ValueError(

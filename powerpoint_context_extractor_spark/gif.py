@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import struct
 
+from .limits import check_pixels
+
 MAX_CODE_WIDTH = 12
 
 # (row offset, row step) of the four GIF interlace passes
@@ -301,6 +303,7 @@ def _image_indices(image: tuple) -> bytes:
         raise ValueError("gif: image without any color table")
     if not 2 <= min_code <= 11:
         raise ValueError("gif: bad LZW min code size")
+    check_pixels("gif", w, h)
     idx = lzw_decode(lzw, min_code, w * h)
     if packed & 0x40:
         rows = [idx[r * w:(r + 1) * w] for r in range(h)]
@@ -384,6 +387,7 @@ def decode_gif_frames(data: bytes) -> tuple:
     Single-frame stills decode identically to ``decode_gif`` (same
     LZW + interlace machinery)."""
     sw, sh, bg, gct, pos = _screen_descriptor(data)
+    check_pixels("gif", sw, sh)
     bg_rgb = bytes(gct[bg]) if gct is not None and bg < len(gct) \
         else b"\x00\x00\x00"
     canvas = bytearray(bg_rgb * (sw * sh))

@@ -155,11 +155,20 @@ def _kernel_batches_arrow(batches):
                         to_arrow_schema(EXTRACTED_SCHEMA))
 
 
+#: Arrow bytes of kernel output a task holds before it writes them as
+#: one parquet row group
+ROW_GROUP_BYTES = 16 << 20
+
+
 def _write_batches(out_dir, batches):
-    """Kernel output of one task streamed into
+    """Kernel output of one task written into
     ``<out_dir>/part-<partition:05d>-<taskAttemptId>.parquet``; yields
     one ``WRITE_SUMMARY_SCHEMA`` row, or nothing for an empty task.
+    The output batches, one per crossing batch, are held and written
+    unconcatenated as one row group per ``ROW_GROUP_BYTES`` of output,
+    so the crossing batch size does not set the file's row groups.
     ``wall_ms`` runs from the first input batch to the writer's close."""
+    import pyarrow as pa
     batches = iter(batches)
     first = next(batches, None)
     if first is None:
@@ -168,14 +177,21 @@ def _write_batches(out_dir, batches):
     ctx = TaskContext.get()
     name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
     path = os.path.join(out_dir, name)
-    rows = ok = n_bytes = 0
+    rows = ok = n_bytes = held = 0
+    pending = []
     with parquet_writer(path, to_arrow_schema(EXTRACTED_SCHEMA),
                         stats_skip=("text",)) as w:
         for rb in _kernel_batches_arrow(itertools.chain([first], batches)):
-            w.write_batch(rb)
+            pending.append(rb)
+            held += rb.nbytes
             rows += rb.num_rows
             ok += rb.column("error").null_count
             n_bytes += sum(rb.column("in_bytes").to_pylist())
+            if held >= ROW_GROUP_BYTES:
+                w.write_table(pa.Table.from_batches(pending))
+                pending, held = [], 0
+        if pending:
+            w.write_table(pa.Table.from_batches(pending))
     wall_ms = int((time.monotonic() - t0) * 1000)
     yield _arrow_batch(
         [(ctx.partitionId(), name, rows, ok, n_bytes, wall_ms)],

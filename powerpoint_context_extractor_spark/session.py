@@ -4,9 +4,8 @@ Local-mode defaults are sized to the host: one task slot per core this
 process may run on (``SPARK_GRAFT_CPUS`` overrides the count) and a
 driver heap of half the physical memory, capped at 48 GiB. On a real
 cluster the same knobs apply per-executor and AQE re-plans at runtime.
-Arrow batches are bounded by *records* here — multi-MB ``html`` blobs
-mean records-per-batch is the effective bytes bound (SURVEY.md §4
-"Vectorization"). Python workers fork from the package daemon
+Arrow batches are bounded by bytes, with a records backstop (SURVEY.md
+§4 "Vectorization"). Python workers fork from the package daemon
 (``daemon.py``), so the package must be importable where the JVM starts
 Python: from its working directory or ``PYTHONPATH``.
 """
@@ -18,16 +17,18 @@ import re
 
 from pyspark.sql import SparkSession
 
-# Arrow batching is bounded by BYTES (scale-safe for multi-KB html rows);
-# the records bound is a backstop. Measured on this host: 512-row batches
-# cost ~20% extraction throughput at 32 cores (per-batch Python overhead),
-# while 32 MiB batches starve Python workers at full width (chunky
-# JVM-produce -> Python-consume pipeline: 32-wide runs never beat 17.2s
-# over 300k pages at 32m across 5 JVMs, vs 10.5-13.5s repeatedly at
-# 8-16m; the 8-wide arm is insensitive). 16 MiB ~= 3k synthetic pages
-# per batch keeps both amortization and pipelining.
+# Arrow batches are bounded by BYTES, since html rows run to many KB;
+# the records bound is a backstop. The batch sets a Python worker's
+# working set (one batch's rows as Python objects, beside its task file's
+# Arrow output) and the JVM's off-heap Arrow buffers. It does not set the
+# parquet layout: operators/extract.py::_write_batches writes one row
+# group per task file. On a 4-core host, perfbench cc_mixed, 10
+# alternating pairs of 1 MiB against 16 MiB: peak RSS of the process tree
+# 2,074 -> 1,859 MiB (lower in 10/10); at the tree's peak the 4 workers
+# held ~430 instead of ~575 MiB and the JVM 82-139 MiB less. run_cpu_s
+# 2.77 -> 2.31 s (lower in 7/10), output +0.13% bytes per document.
 DEFAULT_ARROW_BATCH = 65536
-DEFAULT_ARROW_BYTES = "16m"
+DEFAULT_ARROW_BYTES = "1m"
 
 
 _MEM_RE = re.compile(r"^\s*(\d+)\s*([kmgt])b?\s*$", re.I)

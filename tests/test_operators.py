@@ -2,6 +2,9 @@
 operators (the oracle parity itself is covered by scripts/check_entry.py
 and the driver's CORRECTNESS gate; these pin intended behavior)."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -3005,6 +3008,79 @@ def test_jpeg_progressive_color_dc_scan_without_components():
     raw = raw[:sos] + b"\xff\xda\x00\x06\x00\x00\x00\x00" + raw[end:]
     with _pytest.raises(ValueError, match="^jpeg: "):
         decode_jpeg(raw)
+
+
+def _last_line_under_1gib(body: str) -> str:
+    """The last stdout line of ``body`` run by a fresh interpreter whose
+    own address space is capped at 1 GiB (``RLIMIT_AS``)."""
+    import subprocess
+    import sys
+    import textwrap
+    src = ("import resource\n"
+           "resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))\n"
+           + textwrap.dedent(body))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run([sys.executable, "-c", src], cwd=root,
+                          capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    return proc.stdout.strip().splitlines()[-1]
+
+
+def test_avi_rle8_header_dims_over_the_pixel_cap():
+    """The 272-byte ``render_avi_rle8`` output with its avih dimensions
+    rewritten to 60000x60000 is an ``avi:`` ValueError under a 1 GiB
+    address-space limit, raised before the 10.8 GB frame buffers are
+    asked for; ``rle8_decode_frame`` refuses the same dimensions."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.avi import (
+            decode_avi, render_avi_rle8, rle8_decode_frame)
+        raw = render_avi_rle8(2, 2, [bytes(4)], [(0, 0, 0)])
+        at = raw.index(b"avih") + 8 + 32             # dwWidth, dwHeight
+        raw = raw[:at] + struct.pack("<II", 60000, 60000) + raw[at + 8:]
+        assert len(raw) == 272
+        errors = []
+        for fn, args in ((decode_avi, (raw,)),
+                         (rle8_decode_frame, (60000, 60000, b"\\0\\1"))):
+            try:
+                fn(*args)
+            except ValueError as e:
+                errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "avi: 60000x60000", "rle8: 60000x60000"], errors
+
+
+def test_gif_screen_dims_over_the_pixel_cap():
+    """The 14-byte GIF whose logical screen declares 65535x65535 is a
+    ``gif:`` ValueError from ``decode_gif_frames`` under a 1 GiB
+    address-space limit, raised before the 12.9 GB canvas is asked
+    for; an image block of those dimensions is refused by
+    ``decode_gif`` before its LZW decode."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.gif import (
+            decode_gif, decode_gif_frames)
+        raw = b"GIF89a" + struct.pack("<HHBBB", 65535, 65535, 0, 0, 0) + b";"
+        assert len(raw) == 14
+        errors = []
+        try:
+            decode_gif_frames(raw)
+        except ValueError as e:
+            errors.append(str(e))
+        # one 65535x65535 image with a 2-colour local table
+        image = (b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0, 0, 0)
+                 + b"," + struct.pack("<HHHHB", 0, 0, 65535, 65535, 0x80)
+                 + bytes(6) + b"\\x02\\x02\\x4c\\x01\\x00;")
+        try:
+            decode_gif(image)
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "gif: 65535x65535"] * 2, errors
 
 
 def test_hll_registers_estimate_and_merge(spark):
