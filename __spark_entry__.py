@@ -28,21 +28,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-_TMP_ROOT = None
-
-
 def _session_root() -> str:
-    """ONE session-scoped scratch root, removed atexit (r4 VERDICT #9:
-    per-query-invocation mkdtemp dirs leaked into /tmp — a sweep of
-    queries() left one dir per sink/stream query per run)."""
-    global _TMP_ROOT
-    if _TMP_ROOT is None:
-        import atexit
-        import shutil
-        import tempfile
-        _TMP_ROOT = tempfile.mkdtemp(prefix="pcx_session_")
-        atexit.register(shutil.rmtree, _TMP_ROOT, ignore_errors=True)
-    return _TMP_ROOT
+    """The package's one session scratch root, removed at exit
+    (``streaming.ingest._tmp_root``): every query's scratch dir nests
+    under it, so a sweep of queries() leaves nothing behind in /tmp."""
+    from powerpoint_context_extractor_spark.streaming.ingest import (
+        _tmp_root,
+    )
+    return _tmp_root()
 
 
 def _session_tmpdir(prefix: str) -> str:
@@ -400,7 +393,7 @@ def _text_bpe_encode(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.textstats import (
         bpe_encode,
     )
-    return bpe_encode(_t(spark, sf_dir, "documents"), n_merges=8)
+    return bpe_encode(_t(spark, sf_dir, "documents"))
 
 
 def _text_zlib_ratio(spark, sf_dir):
@@ -539,7 +532,7 @@ def _capstone_pretrain_corpus(spark, sf_dir):
                         "para_md5", "trim_md5")
     mix = mixture_sample_upsample(keyed, "domain", UPSAMPLE_WEIGHTS_BP,
                                   out_fraction_bp=8000)
-    trates = (temperature_rates(keyed, "domain", out_fraction_bp=5000)
+    trates = (temperature_rates(keyed, "domain")
               .select(F.col("_dom").alias("domain"),
                       F.col("rate_bp").alias("temp_rate_bp")))
     rows = _boundary(
@@ -713,8 +706,7 @@ def _sample_mixture_domains(spark, sf_dir):
          .select("doc_id",
                  F.format_string("d%d", F.col("doc_id") % 5)
                  .alias("domain")))
-    return mixture_sample(d, "domain", MIXTURE_WEIGHTS_BP,
-                          out_fraction_bp=5000)
+    return mixture_sample(d, "domain", MIXTURE_WEIGHTS_BP)
 
 
 UPSAMPLE_WEIGHTS_BP = {"d0": 1000, "d1": 1000, "d2": 1000, "d3": 7000}
@@ -768,7 +760,7 @@ def _sample_temperature(spark, sf_dir):
            .when(F.col("doc_id") % 10 < 9, 2).otherwise(3))
     d = (_t(spark, sf_dir, "documents")
          .select("doc_id", F.format_string("d%d", dom).alias("domain")))
-    return temperature_sample(d, "domain", out_fraction_bp=5000)
+    return temperature_sample(d, "domain")
 
 
 def _graph_pagerank_hosts(spark, sf_dir):
@@ -964,8 +956,7 @@ def _text_token_chunks(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.textstats import (
         token_chunks,
     )
-    return token_chunks(_t(spark, sf_dir, "documents"),
-                        window=64, stride=48)
+    return token_chunks(_t(spark, sf_dir, "documents"))
 
 
 def _sim_quantized_topk(spark, sf_dir):
@@ -975,7 +966,7 @@ def _sim_quantized_topk(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.similarity import (
         quantized_topk,
     )
-    return quantized_topk(_t(spark, sf_dir, "embeddings"), 0, k=10)
+    return quantized_topk(_t(spark, sf_dir, "embeddings"), 0)
 
 
 def _j_bucketed_colocated(spark, sf_dir):
@@ -1424,7 +1415,7 @@ def _agg_count_min(spark, sf_dir):
         F.when(F.col("doc_id") % 4 == 0, F.lit("hot"))
         .otherwise(F.format_string("k%d", F.col("doc_id") % 97))
         .alias("k"))
-    return count_min_sketch(d, "k", w=256, d=4)
+    return count_min_sketch(d, "k", w=256)
 
 
 def _agg_theta_sketch(spark, sf_dir):
@@ -1844,14 +1835,13 @@ def _sim_ivf_recall(spark, sf_dir):
     # assignment job + tiny-file scans; rows identical).
     qvecs = {r["_id"]: list(r["vq"]) for r in
              _quantized(emb.filter(F.col("vec_id")
-                                   .isin(list(_RECALL_QIDS))),
-                        "vec_id", "embedding").collect()}
+                                   .isin(list(_RECALL_QIDS)))).collect()}
     assign = _snapshot_boundary(
         kmeans_assign(emb, centroids=cents),
         _session_tmpdir("ivf_recall_"), "assign")
     parts = []
     for qid in (q for q in _RECALL_QIDS if q in qvecs):
-        ivf = ivf_topk_kmeans(emb, qid, k=10, n_centroids=8, nprobe=2,
+        ivf = ivf_topk_kmeans(emb, qid, nprobe=2,
                               centroids=cents, query_vec=qvecs[qid],
                               assignment=assign)
         brute = cosine_topk(emb, qid, k=10)
@@ -1881,8 +1871,8 @@ def _sim_ivf_topk_indexed(spark, sf_dir):
     )
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        "spark-warehouse", "ivf_index_contract")
-    ivf_build_index(_t(spark, sf_dir, "embeddings"), out, n_centroids=8)
-    return ivf_topk_indexed(spark, out, 0, k=10, nprobe=2)
+    ivf_build_index(_t(spark, sf_dir, "embeddings"), out)
+    return ivf_topk_indexed(spark, out, 0)
 
 
 def _dedup_simhash_query(spark, sf_dir):
@@ -1971,7 +1961,7 @@ def _dedup_substring(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.dedup import (
         substring_dedup_stats,
     )
-    return substring_dedup_stats(_docs_with_near_dups(spark, sf_dir), k=8)
+    return substring_dedup_stats(_docs_with_near_dups(spark, sf_dir))
 
 
 def _dedup_substring_trim(spark, sf_dir):
@@ -1984,7 +1974,7 @@ def _dedup_substring_trim(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.dedup import (
         substring_dedup_trim,
     )
-    return substring_dedup_trim(_docs_with_near_dups(spark, sf_dir), k=8)
+    return substring_dedup_trim(_docs_with_near_dups(spark, sf_dir))
 
 
 def _text_repetition(spark, sf_dir):
@@ -2127,7 +2117,7 @@ def _mm_video_frame_sample(spark, sf_dir):
     from powerpoint_context_extractor_spark.operators.multimodal import (
         extract_video_frames,
     )
-    return extract_video_frames(_t(spark, sf_dir, "documents"), every=2)
+    return extract_video_frames(_t(spark, sf_dir, "documents"))
 
 
 def _mm_features_wav(spark, sf_dir):
@@ -2951,8 +2941,7 @@ def _dedup_semantic(spark, sf_dir):
                        F.transform(F.col("embedding"),
                                    lambda x: x * F.lit(1.25).cast("float"))
                        .alias("embedding")))
-    return semantic_dedup(emb.unionByName(planted),
-                          threshold_micro=999000)
+    return semantic_dedup(emb.unionByName(planted))
 
 
 def _x2_param_regex(spark, sf_dir):

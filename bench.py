@@ -127,8 +127,7 @@ def main() -> None:
     from powerpoint_context_extractor_spark.plans.flagship import run_extraction
     import __spark_entry__ as entry_mod
 
-    spark = get_spark("pcx-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark("pcx-bench", master=f"local[{cpus}]")
     log(f"bench: sf={sf} sf_dir={sf_dir} cpus={cpus} pages={n_pages}")
 
     pages_dir = os.path.join(REPO, ".bench_cache", f"pages_sf{sf}_v5")

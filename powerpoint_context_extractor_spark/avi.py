@@ -281,7 +281,8 @@ def decode_avi(data: bytes) -> tuple:
     """Decode an uncompressed-DIB or BI_RLE8 AVI -> (width, height,
     fps, frames) where each frame is top-down RGB bytes (RLE8 indices
     are expanded through the strf palette). Raises ValueError outside
-    the subset (log-and-continue at the operator layer, F6 policy)."""
+    the subset (log-and-continue at the operator layer, F6 policy), and
+    when the frames together exceed ``limits.MAX_PIXELS`` pixels."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("avi: not a RIFF/AVI container")
     (riff_len,) = struct.unpack("<I", data[4:8])
@@ -336,7 +337,7 @@ def decode_avi(data: bytes) -> tuple:
     walk(12, 8 + riff_len)
     if width is None or not frames:
         raise ValueError("avi: missing avih header or frames")
-    check_pixels("avi", width, height)
+    check_pixels("avi", width, height, len(frames))
     has_dc = any(k == "dc" for k, _s, _l in frames)
     if has_dc and compression not in (1, MJPG_FOURCC):
         raise ValueError(

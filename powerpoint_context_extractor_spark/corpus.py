@@ -273,17 +273,17 @@ def _cjk_charset_html(rng: random.Random, kind: int | None = None) -> bytes:
     return html.encode(codec, errors="xmlcharrefreplace")
 
 
-def fixture_pages(seed: int = 42, per_class: int = 3):
-    """Yield dict rows (url, warc_ts, html, text, lang) covering every
-    fixture class; deterministic in (seed, per_class)."""
+def fixture_pages():
+    """Yield dict rows (url, warc_ts, html, text, lang): three per
+    fixture class, each from a fixed seed."""
     rows = []
     i = 0
     for ci, cls in enumerate(FIXTURE_CLASSES):
-        for k in range(per_class):
+        for k in range(3):
             # NB: index-based seed — Python's str hash is process-randomized
-            rng = random.Random((seed << 20) ^ (ci << 8) ^ k)
+            rng = random.Random((42 << 20) ^ (ci << 8) ^ k)
             if cls == "duplicate-url-content":
-                rng = random.Random(seed)  # same content every time
+                rng = random.Random(42)  # same content every time
             if cls == "legacy-charset":
                 # one fixture per encoding kind, round-robin over k
                 html = _legacy_charset_html(rng, kind=_LEGACY_KINDS[k % 3])

@@ -385,7 +385,8 @@ def decode_gif_frames(data: bytes) -> tuple:
       oracle can mirror; browsers render it transparent.)
 
     Single-frame stills decode identically to ``decode_gif`` (same
-    LZW + interlace machinery)."""
+    LZW + interlace machinery). The canvases kept together hold at
+    most ``limits.MAX_PIXELS`` pixels."""
     sw, sh, bg, gct, pos = _screen_descriptor(data)
     check_pixels("gif", sw, sh)
     bg_rgb = bytes(gct[bg]) if gct is not None and bg < len(gct) \
@@ -402,6 +403,7 @@ def decode_gif_frames(data: bytes) -> tuple:
         disposal, delay, transparent = control
         if left + w > sw or top + h > sh:
             raise ValueError("gif: frame rect outside logical screen")
+        check_pixels("gif", sw, sh, len(frames) + 1)
         idx = _image_indices(image)
         saved = bytes(canvas) if disposal == 3 else None
         npal = len(pal)

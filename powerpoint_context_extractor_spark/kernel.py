@@ -1051,13 +1051,11 @@ def _pdf_unescape(s: str) -> bytes:
     return bytes(out)
 
 
-def render_pdf(blocks, *, compress: bool = False,
-               hex_strings: bool = False) -> bytes:
+def render_pdf(blocks) -> bytes:
     """blocks: iterable of (role, y, x, text) with y measured from the
     page top (same convention as render_wdoc). Emits a complete valid
     single-page PDF 1.4 with a correct xref table."""
-    return render_pdf_pages([list(blocks)], compress=compress,
-                            hex_strings=hex_strings)
+    return render_pdf_pages([list(blocks)])
 
 
 def _pdf_content_obj(blocks, *, compress: bool = False,

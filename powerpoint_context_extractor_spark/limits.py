@@ -7,9 +7,11 @@ and RLE8 delta and end-of-line escapes skip pixels for a few bytes.
 So such a buffer is allocated only when the header declares at most
 ``MAX_PIXELS`` pixels: an absolute cap, as in Pillow's decompression-
 bomb check (``Image.MAX_IMAGE_PIXELS``), set to what a pure-Python
-decoder can fill, 4096 x 4096 or 48 MiB as RGB. Anything larger is
-rejected with the format's own ``ValueError``, the same class as any
-malformed input.
+decoder can fill, 4096 x 4096 or 48 MiB as RGB. A decode that keeps
+several frames (a GIF animation, an AVI) keeps a whole frame each, so
+the cap holds for the pixels summed over the frames it keeps. Anything
+larger is rejected with the format's own ``ValueError``, the same class
+as any malformed input.
 """
 
 from __future__ import annotations
@@ -17,9 +19,10 @@ from __future__ import annotations
 MAX_PIXELS = 1 << 24
 
 
-def check_pixels(fmt: str, width: int, height: int) -> None:
-    """Raise ``ValueError("<fmt>: ...")`` when ``width * height``
-    exceeds ``MAX_PIXELS``."""
-    if width * height > MAX_PIXELS:
-        raise ValueError(f"{fmt}: {width}x{height} exceeds the "
-                         f"{MAX_PIXELS}-pixel cap")
+def check_pixels(fmt: str, width: int, height: int, frames: int = 1) -> None:
+    """Raise ``ValueError("<fmt>: ...")`` when ``frames`` frames of
+    ``width * height`` pixels exceed ``MAX_PIXELS``."""
+    if frames * width * height > MAX_PIXELS:
+        size = f"{width}x{height}" if frames == 1 else (
+            f"{frames} frames of {width}x{height}")
+        raise ValueError(f"{fmt}: {size} exceeds the {MAX_PIXELS}-pixel cap")

@@ -22,15 +22,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def funnel_counts(events: DataFrame, steps: list,
-                  user_col: str = "user_id", ts_col: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
+def funnel_counts(events: DataFrame, steps: list) -> DataFrame:
     """-> (step_idx, step, n_users) for each funnel step in order."""
     if len(steps) < 2:
         raise ValueError("funnel_counts: need at least 2 steps")
-    df = events.select(F.col(user_col).alias("u"),
-                       F.col(ts_col).alias("t"),
-                       F.col(type_col).alias("et"))
+    df = events.select(F.col("user_id").alias("u"),
+                       F.col("ts").alias("t"),
+                       F.col("event_type").alias("et"))
     prev = None
     outs = []
     for k, step in enumerate(steps):
@@ -50,9 +48,7 @@ def funnel_counts(events: DataFrame, steps: list,
     return res
 
 
-def retention_cohorts(events: DataFrame, anchor_type: str,
-                      user_col: str = "user_id", ts_col: str = "ts",
-                      type_col: str = "event_type") -> DataFrame:
+def retention_cohorts(events: DataFrame, anchor_type: str) -> DataFrame:
     """Weekly retention-cohort matrix: users cohort on the WEEK of
     their first ``anchor_type`` event (week = epoch-seconds div
     604800 — integer-exact in any engine, no calendar-week dialect
@@ -63,10 +59,10 @@ def retention_cohorts(events: DataFrame, anchor_type: str,
     Scale shape: one grouped min for the anchors, one join back
     (anchor table is users-sized, broadcastable), one distinct count
     over (cohort, offset) — no per-user event lists."""
-    wk = F.floor(F.unix_timestamp(F.col(ts_col)) / 604800) \
+    wk = F.floor(F.unix_timestamp(F.col("ts")) / 604800) \
         .cast("long")
-    ev = events.select(F.col(user_col).alias("u"), wk.alias("wk"),
-                       F.col(type_col).alias("et"))
+    ev = events.select(F.col("user_id").alias("u"), wk.alias("wk"),
+                       F.col("event_type").alias("et"))
     anchors = (ev.filter(F.col("et") == anchor_type)
                .groupBy("u").agg(F.min("wk").alias("cohort_week")))
     return (ev.join(anchors, "u")

@@ -30,6 +30,10 @@ MINHASH_PERMS = [
 ]
 LSH_BANDS = 2        # 2 bands x 4 rows over the 8-long signature
 LSH_ROWS = 4
+SHINGLE_K = 3        # tokens per minhash / jaccard shingle
+WINDOW_K = 8         # tokens per substring-dedup / contamination window
+PARA_TOKENS = 20     # tokens per paragraph_dedup paragraph
+MIN_DOCS = 2         # a window or paragraph in >= MIN_DOCS docs is a dup
 
 
 def portable_hash(col: F.Column) -> F.Column:
@@ -39,13 +43,14 @@ def portable_hash(col: F.Column) -> F.Column:
     return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % P)
 
 
-def tokens_col(text_col: str = "text") -> F.Column:
-    return F.split(F.col(text_col), " ")
+def tokens_col() -> F.Column:
+    return F.split(F.col("text"), " ")
 
 
-def shingles_col(text_col: str = "text", k: int = 3) -> F.Column:
-    """Distinct k-token shingles in document order (array<string>)."""
-    toks = tokens_col(text_col)
+def shingles_col() -> F.Column:
+    """Distinct SHINGLE_K-token shingles in document order
+    (array<string>)."""
+    toks, k = tokens_col(), SHINGLE_K
     return F.array_distinct(
         F.when(F.size(toks) >= k,
                F.transform(F.sequence(F.lit(0), F.size(toks) - k),
@@ -53,15 +58,14 @@ def shingles_col(text_col: str = "text", k: int = 3) -> F.Column:
         .otherwise(F.array(F.concat_ws(" ", toks))))
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc -> 8 minhash values (columns m0..m7)."""
-    sh = docs.select(F.col(id_col),
-                     F.explode(shingles_col(text_col)).alias("shingle"))
+    sh = docs.select(F.col("doc_id"),
+                     F.explode(shingles_col()).alias("shingle"))
     x = portable_hash(F.col("shingle"))
     aggs = [F.min((F.lit(a) * x + F.lit(b)) % P).alias(f"m{j}")
             for j, (a, b) in enumerate(MINHASH_PERMS)]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 # Above this bucket cardinality the all-pairs self-join degenerates to
@@ -72,7 +76,7 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 DEFAULT_MAX_BUCKET = 4096
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
+def lsh_candidate_pairs(sigs: DataFrame,
                         max_bucket: int | None = DEFAULT_MAX_BUCKET) -> DataFrame:
     """Band signatures -> bucket self-join -> unordered candidate pairs.
 
@@ -83,7 +87,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
     for band in range(LSH_BANDS):
         cols = [F.col(f"m{band * LSH_ROWS + r}") for r in range(LSH_ROWS)]
         bands.append(sigs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(band).alias("band"),
             F.concat_ws("_", *cols).alias("bucket")))
     b = bands[0]
@@ -93,45 +97,43 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
         left = b.alias("l")
         right = b.alias("r")
         return (left.join(right, ["band", "bucket"])
-                .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-                .select(F.col(f"l.{id_col}").alias("id_a"),
-                        F.col(f"r.{id_col}").alias("id_b"))
+                .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+                .select(F.col("l.doc_id").alias("id_a"),
+                        F.col("r.doc_id").alias("id_b"))
                 .distinct())
     # bucket stats join is co-partitioned with the pair join (same
     # band+bucket key), so the cap costs no extra wide shuffle stage
     stats = b.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("bkt_n"),
-        F.min(id_col).alias("bkt_min"))
+        F.min("doc_id").alias("bkt_min"))
     bs = b.join(stats, ["band", "bucket"])
     small = (bs.filter(F.col("bkt_n") <= max_bucket)
-             .select("band", "bucket", id_col))
+             .select("band", "bucket", "doc_id"))
     left = small.alias("l")
     right = small.alias("r")
     small_pairs = (left.join(right, ["band", "bucket"])
-                   .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-                   .select(F.col(f"l.{id_col}").alias("id_a"),
-                           F.col(f"r.{id_col}").alias("id_b")))
+                   .filter(F.col("l.doc_id") < F.col("r.doc_id"))
+                   .select(F.col("l.doc_id").alias("id_a"),
+                           F.col("r.doc_id").alias("id_b")))
     big_pairs = (bs.filter((F.col("bkt_n") > max_bucket)
-                           & (F.col(id_col) != F.col("bkt_min")))
+                           & (F.col("doc_id") != F.col("bkt_min")))
                  .select(F.col("bkt_min").alias("id_a"),
-                         F.col(id_col).alias("id_b")))
+                         F.col("doc_id").alias("id_b")))
     return small_pairs.unionByName(big_pairs).distinct()
 
 
-def minhash_lsh_dedup(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      threshold_bp: int = 8000,
+def minhash_lsh_dedup(docs: DataFrame, threshold_bp: int = 8000,
                       max_bucket: int | None = DEFAULT_MAX_BUCKET) -> DataFrame:
     """Near-dup pairs with exact-jaccard verification (basis points, so
     the comparison is integer-exact cross-engine)."""
-    sigs = minhash_signatures(docs, id_col, text_col)
-    cands = lsh_candidate_pairs(sigs, id_col, max_bucket=max_bucket)
-    sets_df = docs.select(F.col(id_col),
-                          shingles_col(text_col).alias("sh"))
+    sigs = minhash_signatures(docs)
+    cands = lsh_candidate_pairs(sigs, max_bucket=max_bucket)
+    sets_df = docs.select(F.col("doc_id"),
+                          shingles_col().alias("sh"))
     a = sets_df.alias("a")
     b = sets_df.alias("b")
-    pairs = (cands.join(a, cands.id_a == F.col(f"a.{id_col}"))
-             .join(b, cands.id_b == F.col(f"b.{id_col}")))
+    pairs = (cands.join(a, cands.id_a == F.col("a.doc_id"))
+             .join(b, cands.id_b == F.col("b.doc_id")))
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
     # `div` = exact integer division (matches DuckDB `//`; double `/`
@@ -218,8 +220,7 @@ def near_dup_clusters(ids: DataFrame, pairs: DataFrame,
     return labels.select(F.col(id_col), F.col("label").alias("cluster"))
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """60-bit simhash over token multiset; token hash = first 15 md5 hex
     chars (60 bits, int64-safe).
 
@@ -229,8 +230,8 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
     per-bit vote of a token instance is 2*((h>>i)&1)-1, so summing it
     per instance directly is the same multiset math with no explode)."""
     inst = (docs
-            .select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"), F.explode(tokens_col()).alias("tok"))
+            .select(F.col("doc_id"),
                     F.conv(F.substring(F.md5(F.col("tok")), 1, 15),
                            16, 10).cast("long").alias("h")))
     votes = [
@@ -238,47 +239,43 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
         .alias(f"v{i}")
         for i in range(SIMHASH_BITS)
     ]
-    per_doc = inst.groupBy(id_col).agg(*votes)
+    per_doc = inst.groupBy("doc_id").agg(*votes)
     sim = F.lit(0).cast("long")
     for i in range(SIMHASH_BITS):
         sim = sim + F.when(F.col(f"v{i}") > 0,
                            F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return per_doc.select(F.col(id_col), sim.alias("simhash"))
+    return per_doc.select(F.col("doc_id"), sim.alias("simhash"))
 
 
-def simhash_hamming_to_query(docs: DataFrame, query_id: int,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
-    s = simhash(docs, id_col, text_col)
-    q = (s.filter(F.col(id_col) == query_id)
+def simhash_hamming_to_query(docs: DataFrame, query_id: int) -> DataFrame:
+    s = simhash(docs)
+    q = (s.filter(F.col("doc_id") == query_id)
          .select(F.col("simhash").alias("qhash")))
     return (s.crossJoin(F.broadcast(q))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.bit_count(F.col("simhash").bitwiseXOR(F.col("qhash")))
                     .cast("long").alias("hamming")))
 
 
-def ngram_jaccard_to_query(docs: DataFrame, query_id: int,
-                           id_col: str = "doc_id",
-                           text_col: str = "text", k: int = 3) -> DataFrame:
+def ngram_jaccard_to_query(docs: DataFrame, query_id: int) -> DataFrame:
     """Exact n-gram Jaccard of every doc vs one query doc (broadcast)."""
-    sets_df = docs.select(F.col(id_col), shingles_col(text_col, k).alias("sh"))
-    q = (sets_df.filter(F.col(id_col) == query_id)
+    sets_df = docs.select(F.col("doc_id"), shingles_col().alias("sh"))
+    q = (sets_df.filter(F.col("doc_id") == query_id)
          .select(F.col("sh").alias("qsh")))
     inter = F.size(F.array_intersect(F.col("sh"), F.col("qsh")))
     union = F.size(F.array_union(F.col("sh"), F.col("qsh")))
     return (sets_df.crossJoin(F.broadcast(q))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     (inter * 10000).cast("long").alias("i10k"),
                     union.cast("long").alias("u"))
-            .select(F.col(id_col), F.expr("i10k div u").alias("jaccard_bp")))
+            .select(F.col("doc_id"), F.expr("i10k div u").alias("jaccard_bp")))
 
 
-def token_windows_col(text_col: str = "text", k: int = 8) -> F.Column:
-    """ALL rolling k-token windows in position order (stride 1, NOT
-    deduped — positional coverage is the point); a doc shorter than k
-    tokens contributes its whole text as one window."""
-    toks = tokens_col(text_col)
+def token_windows_col() -> F.Column:
+    """ALL rolling k-token windows (k = WINDOW_K) in position order
+    (stride 1, NOT deduped — positional coverage is the point); a doc
+    shorter than k tokens contributes its whole text as one window."""
+    toks, k = tokens_col(), WINDOW_K
     return F.when(
         F.size(toks) >= k,
         F.transform(F.sequence(F.lit(0), F.size(toks) - k),
@@ -286,21 +283,19 @@ def token_windows_col(text_col: str = "text", k: int = 8) -> F.Column:
     ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def substring_dedup_stats(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", k: int = 8,
-                          min_docs: int = 2) -> DataFrame:
+def substring_dedup_stats(docs: DataFrame) -> DataFrame:
     """Exact SUBSTRING-level dedup stats (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better" — public
     method; r4 VERDICT missing #1): the cross-document duplicated-SPAN
     family that doc-level and paragraph-level dedup both miss. A
-    rolling k-token window is DUPLICATED iff its exact text occurs in
-    >= ``min_docs`` distinct documents; per document this emits the
-    positional window count, the duplicated-window count, and the
-    duplicated-span fraction in basis points — the per-doc signal a
-    corpus pipeline thresholds on before span trimming. (The suffix-
+    rolling WINDOW_K-token window is DUPLICATED iff its exact text
+    occurs in >= ``MIN_DOCS`` distinct documents; per document this
+    emits the positional window count, the duplicated-window count,
+    and the duplicated-span fraction in basis points — the per-doc
+    signal a corpus pipeline thresholds on before span trimming. (The suffix-
     array formulation in the paper is a single-machine construction;
     rolling-window hashing is its standard distributed equivalent at
-    fixed match length k.)
+    fixed match length WINDOW_K.)
 
     Scale shape: windows are assembled MAP-SIDE from the token array
     (transform/sequence/slice — same zero-token-shuffle pattern as
@@ -311,33 +306,31 @@ def substring_dedup_stats(docs: DataFrame, id_col: str = "doc_id",
     join, so a boilerplate span in 30% of a 100 TB corpus never lands
     in one task. Reference analog: the member-level scan loop this
     generalizes (pptx_extractor/notes/extractor.py:29-31)."""
-    wins = docs.select(F.col(id_col),
-                       F.explode(token_windows_col(text_col, k)).alias("win"))
-    keyed = wins.select(F.col(id_col), F.md5(F.col("win")).alias("wh"))
-    freq = (keyed.select("wh", F.col(id_col)).distinct()
+    wins = docs.select(F.col("doc_id"),
+                       F.explode(token_windows_col()).alias("win"))
+    keyed = wins.select(F.col("doc_id"), F.md5(F.col("win")).alias("wh"))
+    freq = (keyed.select("wh", F.col("doc_id")).distinct()
             .groupBy("wh").agg(F.count(F.lit(1)).alias("n_docs")))
     marked = keyed.join(freq, "wh")
-    return (marked.groupBy(id_col)
+    return (marked.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_windows"),
-                 F.sum((F.col("n_docs") >= min_docs).cast("long"))
+                 F.sum((F.col("n_docs") >= MIN_DOCS).cast("long"))
                  .alias("dup_windows"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("n_windows").cast("long").alias("n_windows"),
                     F.col("dup_windows").cast("long").alias("dup_windows"),
                     F.expr("(dup_windows * 10000) div n_windows")
                     .alias("dup_bp")))
 
 
-def substring_dedup_trim(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", k: int = 8,
-                         min_docs: int = 2) -> DataFrame:
+def substring_dedup_trim(docs: DataFrame) -> DataFrame:
     """Exact substring dedup WITH span trimming (r6, r5 VERDICT #3 —
     the stats tier's missing output half): duplicated rolling k-token
-    windows are merged into covered TOKEN spans and REMOVED, and the
-    surviving tokens re-join in document order — the actual Lee et al.
-    2021 cleaning step, mirroring ``paragraph_dedup``'s output shape.
-    Spans are token-granular because windows are token-granular (the
-    flagship corpus is whitespace-token text throughout).
+    windows (k = WINDOW_K) are merged into covered TOKEN spans and
+    REMOVED, and the surviving tokens re-join in document order — the
+    actual Lee et al. 2021 cleaning step, mirroring ``paragraph_dedup``'s
+    output shape. Spans are token-granular because windows are
+    token-granular (the flagship corpus is whitespace-token text throughout).
 
     Per doc: window at position p (1-based) covers tokens
     [p, least(p+k-1, m)] (a doc shorter than k has one whole-doc
@@ -355,9 +348,10 @@ def substring_dedup_trim(docs: DataFrame, id_col: str = "doc_id",
     O(tokens x dup-windows), bounded because the kernel caps document
     length. Reference analog: the keep/drop + deterministic
     re-assembly contract, pptx_extractor/utils/common.py:83-120."""
-    base = docs.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
+    k = WINDOW_K
+    base = docs.select(F.col("doc_id"), tokens_col().alias("_toks"))
     wins = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.when(
             F.size("_toks") >= k,
             F.transform(F.sequence(F.lit(0), F.size("_toks") - k),
@@ -365,16 +359,16 @@ def substring_dedup_trim(docs: DataFrame, id_col: str = "doc_id",
                             " ", F.slice("_toks", i + 1, k)))
         ).otherwise(F.array(F.concat_ws(" ", F.col("_toks")))))
         .alias("p0", "win"))
-    keyed = wins.select(F.col(id_col), (F.col("p0") + 1).alias("pos"),
+    keyed = wins.select(F.col("doc_id"), (F.col("p0") + 1).alias("pos"),
                         F.md5(F.col("win")).alias("wh"))
-    freq = (keyed.select("wh", F.col(id_col)).distinct()
+    freq = (keyed.select("wh", F.col("doc_id")).distinct()
             .groupBy("wh").agg(F.count(F.lit(1)).alias("n_docs")))
     dup_pos = (keyed.join(freq, "wh")
-               .filter(F.col("n_docs") >= min_docs)
-               .groupBy(id_col)
+               .filter(F.col("n_docs") >= MIN_DOCS)
+               .groupBy("doc_id")
                .agg(F.collect_list("pos").alias("_dups")))
-    j = base.join(dup_pos, id_col, "left").select(
-        F.col(id_col), "_toks",
+    j = base.join(dup_pos, "doc_id", "left").select(
+        F.col("doc_id"), "_toks",
         F.coalesce(F.col("_dups"), F.array().cast("array<int>"))
         .alias("_dups"),
         F.size("_toks").alias("_m"))
@@ -387,21 +381,19 @@ def substring_dedup_trim(docs: DataFrame, id_col: str = "doc_id",
     kept_txt = F.array_join(
         F.transform(kept, lambda jj: F.element_at("_toks", jj)), " ")
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_m").cast("long").alias("n_tokens"),
         (F.col("_m") - F.size(kept)).cast("long").alias("removed_tokens"),
         F.md5(kept_txt.cast("binary")).alias("clean_md5"))
 
 
-def paragraph_dedup(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", para_tokens: int = 20,
-                    min_docs: int = 2) -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """CCNet/RefinedWeb-style paragraph-level dedup: a paragraph that
-    appears in >= ``min_docs`` distinct documents is boilerplate
+    appears in >= ``MIN_DOCS`` distinct documents is boilerplate
     (cookie banners, license blurbs, nav crumbs survive DOM filtering)
     and is removed from EVERY document; the cleaned text is the
     surviving paragraphs re-joined in document order. Paragraphs here
-    are the flagship wrap's ``para_tokens``-token chunks, so the whole
+    are the flagship wrap's ``PARA_TOKENS``-token chunks, so the whole
     operator is exactly SQL-expressible.
 
     Scale shape (r4 VERDICT #3, skew-hardened r5 per r4 VERDICT
@@ -421,34 +413,32 @@ def paragraph_dedup(docs: DataFrame, id_col: str = "doc_id",
     rejoin the rows via a plain hash join on ph, which AQE's skew-join
     CAN split at runtime. Output unchanged (hash-identical oracle):
     (doc_id, total_paras, kept_paras, clean_md5)."""
-    base = docs.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
+    base = docs.select(F.col("doc_id"), tokens_col().alias("_toks"))
     paras = (base.filter(F.size("_toks") > 0)
              .select(
-                 F.col(id_col),
+                 F.col("doc_id"),
                  F.posexplode(F.expr(
-                     f"transform(sequence(0, (size(_toks)-1) DIV {para_tokens}), "
-                     f"i -> array_join(slice(_toks, i*{para_tokens}+1, "
-                     f"{para_tokens}), ' '))")).alias("cn", "para")))
+                     f"transform(sequence(0, (size(_toks)-1) DIV {PARA_TOKENS}), "
+                     f"i -> array_join(slice(_toks, i*{PARA_TOKENS}+1, "
+                     f"{PARA_TOKENS}), ' '))")).alias("cn", "para")))
     keyed = paras.withColumn("ph", F.md5(F.col("para")))
     # frequency side carries only (ph, doc) keys — never bodies
-    freq = (keyed.select("ph", F.col(id_col)).distinct()
+    freq = (keyed.select("ph", F.col("doc_id")).distinct()
             .groupBy("ph").agg(F.count(F.lit(1)).alias("n_docs")))
     marked = keyed.join(freq, "ph")
-    is_kept = F.col("n_docs") < min_docs
+    is_kept = F.col("n_docs") < MIN_DOCS
     kept_struct = F.when(is_kept, F.struct("cn", "para"))
-    return (marked.groupBy(id_col)
+    return (marked.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("total_paras"),
                  F.sum(is_kept.cast("long")).alias("kept_paras"),
                  F.md5(F.array_join(
                      F.transform(F.array_sort(F.collect_list(kept_struct)),
                                  lambda s: s["para"]),
                      "\n\n").cast("binary")).alias("clean_md5"))
-            .select(F.col(id_col), "total_paras", "kept_paras", "clean_md5"))
+            .select(F.col("doc_id"), "total_paras", "kept_paras", "clean_md5"))
 
 
 def prefix_jaccard_join(docs: DataFrame, threshold_bp: int = 5000,
-                        id_col: str = "doc_id",
-                        text_col: str = "text",
                         bucket_cap: int | None = None,
                         on_degenerate: str = "error") -> DataFrame:
     """EXACT all-pairs Jaccard similarity self-join via prefix
@@ -490,8 +480,8 @@ def prefix_jaccard_join(docs: DataFrame, threshold_bp: int = 5000,
                          "'error' or 'star'")
     if bucket_cap is not None and bucket_cap < 2:
         raise ValueError("prefix_jaccard_join: bucket_cap must be >= 2")
-    arrs = docs.select(F.col(id_col).alias("id"),
-                       F.array_distinct(tokens_col(text_col)).alias("ts"))
+    arrs = docs.select(F.col("doc_id").alias("id"),
+                       F.array_distinct(tokens_col()).alias("ts"))
     toks = arrs.select("id", F.explode("ts").alias("tok"))
     dfc = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_df"))
     w = W.partitionBy("id").orderBy("_df", "tok")
@@ -554,9 +544,7 @@ def prefix_jaccard_join(docs: DataFrame, threshold_bp: int = 5000,
     return out
 
 
-def cdc_chunks(docs: DataFrame, divisor: int = 16,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def cdc_chunks(docs: DataFrame, divisor: int = 16) -> DataFrame:
     """Content-defined chunking (the gear/FastCDC family, public
     method), simplified to a 2-token rolling window: a chunk boundary
     falls BEFORE token i wherever H(token[i-1] || ' ' || token[i]) %
@@ -576,32 +564,30 @@ def cdc_chunks(docs: DataFrame, divisor: int = 16,
     if divisor < 2:
         raise ValueError("cdc_chunks: divisor must be >= 2")
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(tokens_col(text_col)).alias("pos", "tok"))
-    w = W.partitionBy(id_col).orderBy("pos")
+        F.col("doc_id"),
+        F.posexplode(tokens_col()).alias("pos", "tok"))
+    w = W.partitionBy("doc_id").orderBy("pos")
     pair_hash = portable_hash(
         F.concat(F.lag("tok").over(w), F.lit(" "), F.col("tok")))
     boundary = (F.when(F.col("pos") == 0, F.lit(0))
                 .otherwise((pair_hash % divisor == 0).cast("long")))
     chunked = (toks.withColumn("_bd", boundary)
                .withColumn("chunk_id", F.sum("_bd").over(w)))
-    return (chunked.groupBy(id_col, "chunk_id")
+    return (chunked.groupBy("doc_id", "chunk_id")
             .agg(F.sort_array(F.collect_list(
                 F.struct("pos", "tok"))).alias("_st"))
-            .select(id_col, "chunk_id",
+            .select("doc_id", "chunk_id",
                     F.md5(F.concat_ws(" ", F.transform(
                         "_st", lambda s: s["tok"]))).alias("chunk_md5"),
                     F.size("_st").cast("long").alias("n_toks")))
 
 
-def contamination_check(corpus: DataFrame, benchmark: DataFrame,
-                        k: int = 8, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def contamination_check(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination (the n-gram collision check every
     serious pretraining pipeline runs before training — public
     method, e.g. the GPT-3/PaLM 13-gram overlap filters): a corpus
-    doc is contaminated iff it shares at least one exact k-token
-    window with any benchmark document. Emits per corpus doc
+    doc is contaminated iff it shares at least one exact
+    WINDOW_K-token window with any benchmark document. Emits per corpus doc
     (id, n_windows, hit_windows, contaminated).
 
     Scale shape: the benchmark side (eval sets are megabytes) reduces
@@ -610,21 +596,21 @@ def contamination_check(corpus: DataFrame, benchmark: DataFrame,
     (``token_windows_col``) and never shuffles rows — only the
     per-doc count aggregation moves combiner-ready partials."""
     bwin = (benchmark
-            .select(F.explode(token_windows_col(text_col, k))
+            .select(F.explode(token_windows_col())
                     .alias("_w"))
             .select(F.md5("_w").alias("_bw")).distinct())
     cwin = (corpus
-            .select(F.col(id_col),
-                    F.explode(token_windows_col(text_col, k))
+            .select(F.col("doc_id"),
+                    F.explode(token_windows_col())
                     .alias("_w"))
-            .select(F.col(id_col), F.md5("_w").alias("_cw")))
+            .select(F.col("doc_id"), F.md5("_w").alias("_cw")))
     return (cwin.join(F.broadcast(bwin),
                       F.col("_cw") == F.col("_bw"), "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_windows"),
                  F.sum(F.col("_bw").isNotNull().cast("long"))
                  .alias("hit_windows"))
-            .select(id_col,
+            .select("doc_id",
                     F.col("n_windows").cast("long").alias("n_windows"),
                     F.col("hit_windows").cast("long")
                     .alias("hit_windows"),

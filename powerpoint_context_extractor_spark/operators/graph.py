@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+DAMPING_PCT = 85   # the classic 0.85 damping, in percent
 
 
 def _truncate(df: DataFrame) -> DataFrame:
@@ -44,21 +45,20 @@ def _truncate(df: DataFrame) -> DataFrame:
     return df.checkpoint(eager=True) if reliable else df.localCheckpoint()
 
 
-def pagerank(edges: DataFrame, iterations: int = 5,
-             damping_pct: int = 85) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """Weighted PageRank over an edge list (src, dst, w), all-integer.
 
     rank_0(v)   = SCALE div n
     contrib(u→v)= (rank(u) * w_uv) div outw(u)
     rank_k+1(v) = ((SCALE div n) * (100 - d)) div 100
-                  + (d * sum_in contrib) div 100
+                  + (d * sum_in contrib) div 100,  d = DAMPING_PCT
 
     Every division is integer ``div`` with positive operands, so the
     fixpoint trajectory is exactly reproducible; the DuckDB oracle
     unrolls the same ``iterations`` steps. Emits (node, rank_scaled).
     """
-    if iterations < 0 or not (0 <= damping_pct <= 100):
-        raise ValueError("pagerank: iterations >= 0, damping in [0,100]")
+    if iterations < 0:
+        raise ValueError("pagerank: iterations >= 0")
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
              .distinct())
@@ -68,7 +68,7 @@ def pagerank(edges: DataFrame, iterations: int = 5,
     outw = edges.groupBy("src").agg(F.sum("w").alias("_ow"))
     ew = _truncate(edges.join(outw, "src")
                    .select("src", "dst", "w", "_ow"))
-    d = int(damping_pct)
+    d = DAMPING_PCT
     base = F.expr(f"((({SCALE} div _n) * {100 - d}) div 100)")
     ranks = _truncate(base_nodes.select(
         "node", F.expr(f"{SCALE} div _n").alias("r")))

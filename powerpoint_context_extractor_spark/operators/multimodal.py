@@ -162,13 +162,11 @@ def _feature_row(doc_id, payload):
     yield doc_id, kind, len(raw), features, error
 
 
-def extract_features(df: DataFrame, id_col: str = "doc_id",
-                     bin_col: str = "payload") -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract over binary payloads — the
     real Spark plumbing around the decoders (real PNG, stub others)."""
-    narrow = df.select(F.col(id_col).alias("doc_id"),
-                       F.col(bin_col).alias("payload"))
-    return row_map(narrow, _feature_row, FEATURE_SCHEMA)
+    return row_map(df.select("doc_id", "payload"), _feature_row,
+                   FEATURE_SCHEMA)
 
 
 def _px_stats(px, wsum: bool = False) -> tuple:
@@ -308,19 +306,17 @@ PNG_RESIZE_SCHEMA = T.StructType([
 ])
 
 
-def extract_png_resized(docs: DataFrame, out_w: int = 4,
-                        out_h: int = 4) -> DataFrame:
+def extract_png_resized(docs: DataFrame) -> DataFrame:
     """Decode the deterministic PNG per row (the frozen doc_id % 4
-    rule, see png_payload_for_doc) and nearest-neighbor resize it
-    (png.resize_nn,
-    channel-aware) — the preprocess step every multimodal training
-    pipeline runs before feature extraction. The resized pixel bytes
-    are emitted as hex so the DuckDB oracle can reconstruct them from
-    the floor-index rule and compare exactly."""
+    rule, see png_payload_for_doc) and nearest-neighbor resize it to
+    4x4 (png.resize_nn, channel-aware) — the preprocess step every
+    multimodal training pipeline runs before feature extraction. The
+    resized pixel bytes are emitted as hex so the DuckDB oracle can
+    reconstruct them from the floor-index rule and compare exactly."""
     def _row(doc_id):
         w, h, ch, px = decode_png(png_payload_for_doc(doc_id))
-        r = resize_nn(w, h, px, out_w, out_h, channels=ch)
-        yield doc_id, out_w, out_h, ch, sum(r), r.hex()
+        r = resize_nn(w, h, px, 4, 4, channels=ch)
+        yield doc_id, 4, 4, ch, sum(r), r.hex()
 
     return row_map(docs.select("doc_id"), _row, PNG_RESIZE_SCHEMA)
 
@@ -485,19 +481,16 @@ FRAME_SAMPLE_SCHEMA = T.StructType([
 ])
 
 
-def extract_video_frames(docs: DataFrame, every: int = 2) -> DataFrame:
+def extract_video_frames(docs: DataFrame) -> DataFrame:
     """Frame-sample a real video payload per documents row (the
     preprocess step every multimodal training pipeline runs before
-    captioning/embedding): decode the AVI, keep every ``every``-th
-    frame, emit exact pixel statistics per sampled frame. Arrow-
-    batched, zero shuffles; at 100 TB this is scan-speed like the
+    captioning/embedding): decode the AVI, keep every 2nd frame, emit
+    exact pixel statistics per sampled frame. Arrow-batched, zero
+    shuffles; at 100 TB this is scan-speed like the
     other decode kernels."""
-    if every <= 0:
-        raise ValueError("extract_video_frames: every must be > 0")
-
     def _row(doc_id):
         frames = decode_avi(avi_payload_for_doc(doc_id))[3]
-        for fid in range(0, len(frames), every):
+        for fid in range(0, len(frames), 2):
             yield (doc_id, fid) + _px_stats(frames[fid])
 
     return row_map(docs.select("doc_id"), _row, FRAME_SAMPLE_SCHEMA)
@@ -692,8 +685,7 @@ def image_dhash(docs: DataFrame, payload_col: str | None = None) -> DataFrame:
     return row_map(docs.select(*cols), _row, IMAGE_DHASH_SCHEMA)
 
 
-def image_near_dup_pairs(hashes: DataFrame, id_col: str = "doc_id",
-                         max_hamming: int = 6,
+def image_near_dup_pairs(hashes: DataFrame, max_hamming: int = 6,
                          collapse_exact: bool = False) -> DataFrame:
     """Near-duplicate image candidate pairs from dHash bands: two
     images collide when ANY 16-bit band matches exactly (an image pair
@@ -717,11 +709,11 @@ def image_near_dup_pairs(hashes: DataFrame, id_col: str = "doc_id",
     base = hashes.filter(F.col("band0").isNotNull())
     if collapse_exact:
         base = (base.groupBy("dhash_hex")
-                .agg(F.min(id_col).alias(id_col),
+                .agg(F.min("doc_id").alias("doc_id"),
                      *[F.min(f"band{i}").alias(f"band{i}")
                        for i in range(4)]))
     e = base.select(
-        F.col(id_col).alias("id"), "band0", "band1", "band2", "band3",
+        F.col("doc_id").alias("id"), "band0", "band1", "band2", "band3",
         F.explode(F.array(*[
             F.struct(F.lit(i).alias("bi"), F.col(f"band{i}").alias("bv"))
             for i in range(4)])).alias("bk"),
@@ -1076,18 +1068,18 @@ def extract_flac_ms_features(docs: DataFrame) -> DataFrame:
 
 # --- image luma histogram (r6) ---------------------------------------------
 
-def extract_image_histogram(docs: DataFrame, bins: int = 4) -> DataFrame:
+def extract_image_histogram(docs: DataFrame) -> DataFrame:
     """Integer luma histogram over real decoded images (the brightness
     profile vision-curation filters key on): luma = (299r + 587g +
     114b) // 1000 per pixel of the GIF fixture decode, bin = luma *
-    bins // 256. Emits (doc_id, bin, n_px) — one row per NON-EMPTY
+    4 // 256. Emits (doc_id, bin, n_px) — one row per NON-EMPTY
     bin, exactly reconstructible from the palette formula."""
     def _row(doc_id):
         px = decode_gif(gif_payload_for_doc(doc_id))[3]
         counts: dict = {}
         for i in range(0, len(px), 3):
             luma = (299 * px[i] + 587 * px[i + 1] + 114 * px[i + 2]) // 1000
-            b = luma * bins // 256
+            b = luma * 4 // 256
             counts[b] = counts.get(b, 0) + 1
         for b in sorted(counts):
             yield doc_id, b, counts[b]

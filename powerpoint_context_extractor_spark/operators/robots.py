@@ -55,34 +55,30 @@ def _star_group_fold(body_col: str, init, update):
     return F.aggregate(lines, start, step, lambda acc: acc["value"])
 
 
-def parse_disallow_rules(robots: DataFrame, host_col: str = "host",
-                         body_col: str = "robots_txt") -> DataFrame:
+def parse_disallow_rules(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, rules array<string>): the trimmed
     ``Disallow:`` targets of every ``User-agent: *`` group, empty rules
     (allow-all markers) removed — :func:`parse_access_rules`' entries
     with ``allow`` false, projected to ``rule``."""
     rules = F.filter(F.col("rules"), lambda r: ~r["allow"])
-    return parse_access_rules(robots, host_col, body_col).select(
-        F.col(host_col),
+    return parse_access_rules(robots).select(
+        F.col("host"),
         F.transform(rules, lambda r: r["rule"]).alias("rules"))
 
 
-def apply_robots(pages: DataFrame, robots: DataFrame,
-                 host_col: str = "host",
-                 path_col: str = "path") -> DataFrame:
+def apply_robots(pages: DataFrame, robots: DataFrame) -> DataFrame:
     """Left-broadcast-join pages to per-host rules; ``allowed`` = 1 iff
     no rule prefixes the path (hosts without robots allow everything)."""
-    rules = parse_disallow_rules(robots, host_col)
-    joined = pages.join(F.broadcast(rules), host_col, "left")
+    rules = parse_disallow_rules(robots)
+    joined = pages.join(F.broadcast(rules), "host", "left")
     blocked = F.exists(
         F.coalesce(F.col("rules"), F.array().cast("array<string>")),
-        lambda r: F.col(path_col).startswith(r))
+        lambda r: F.col("path").startswith(r))
     return joined.withColumn(
         "allowed", (~blocked).cast("long")).drop("rules")
 
 
-def parse_access_rules(robots: DataFrame, host_col: str = "host",
-                       body_col: str = "robots_txt") -> DataFrame:
+def parse_access_rules(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, rules array<struct<rule, allow>>):
     BOTH ``Allow:`` and ``Disallow:`` targets of every
     ``User-agent: *`` group (r7 — the full RFC 9309 §2.2.2 access
@@ -101,13 +97,11 @@ def parse_access_rules(robots: DataFrame, host_col: str = "host",
                 .otherwise(rules))
 
     init = F.array().cast("array<struct<rule:string,allow:boolean>>")
-    return robots.select(F.col(host_col), _star_group_fold(
-        body_col, init, update).alias("rules"))
+    return robots.select(F.col("host"), _star_group_fold(
+        "robots_txt", init, update).alias("rules"))
 
 
-def apply_robots_v2(pages: DataFrame, robots: DataFrame,
-                    host_col: str = "host",
-                    path_col: str = "path") -> DataFrame:
+def apply_robots_v2(pages: DataFrame, robots: DataFrame) -> DataFrame:
     """RFC 9309 §2.2.2 access verdict (r7): among the group's Allow +
     Disallow rules that MATCH the path, the LONGEST rule wins and an
     Allow beats a Disallow of equal length; no matching rule (or no
@@ -119,7 +113,7 @@ def apply_robots_v2(pages: DataFrame, robots: DataFrame,
     LITERAL length (the de-facto crawler convention for wildcard
     rules). One HOF fold per page over the tiny broadcast rules
     array — JVM codegen, zero shuffle."""
-    rules = parse_access_rules(robots, host_col)
+    rules = parse_access_rules(robots)
     # compile each rule once, parse-side: escape regex metachars,
     # then '*' -> '.*'; a trailing '$' (already escaped to '\$')
     # re-anchors; anchored at start
@@ -137,15 +131,15 @@ def apply_robots_v2(pages: DataFrame, robots: DataFrame,
             (r["rule"].contains("*")
              | r["rule"].endswith("$")).alias("wild"),
             r["allow"].alias("allow"))))
-    joined = pages.join(F.broadcast(rules), host_col, "left")
+    joined = pages.join(F.broadcast(rules), "host", "left")
     init = F.struct(F.lit(0).alias("best_len"),
                     F.lit(True).alias("best_allow"))
 
     def fold(acc, r):
         m = F.when(r["wild"],
                    F.call_function("regexp_like",
-                                   F.col(path_col), r["pat"])) \
-            .otherwise(F.col(path_col).startswith(r["rule"]))
+                                   F.col("path"), r["pat"])) \
+            .otherwise(F.col("path").startswith(r["rule"]))
         ln = F.length(r["rule"])
         better = m & (ln > acc["best_len"])
         tie_allow = m & (ln == acc["best_len"]) & r["allow"]
@@ -166,27 +160,25 @@ def apply_robots_v2(pages: DataFrame, robots: DataFrame,
         "allowed", verdict.cast("long")).drop("rules")
 
 
-def parse_sitemap_directives(robots: DataFrame, host_col: str = "host",
-                             body_col: str = "robots_txt") -> DataFrame:
+def parse_sitemap_directives(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, sitemap_url) per ``Sitemap:`` line.
     RFC 9309 §2.3: sitemap directives are GROUP-INDEPENDENT (they
     apply regardless of any User-agent group), so this is a flat
     line filter — key matched case-insensitively, URL kept verbatim.
     Pure HOF filter/transform + explode, JVM codegen, zero Python;
     feeds parse_sitemaps (weblinks.py) for crawl seeding."""
-    lines = F.split(F.col(body_col), r"\r?\n")
+    lines = F.split(F.col("robots_txt"), r"\r?\n")
     maps = F.filter(
         lines, lambda ln: F.lower(F.trim(ln)).startswith("sitemap:"))
     urls = F.transform(
         maps,
         lambda ln: F.trim(F.trim(ln).substr(F.lit(9), F.length(ln))))
-    return (robots.select(F.col(host_col),
+    return (robots.select(F.col("host"),
                           F.explode(urls).alias("sitemap_url"))
             .filter(F.col("sitemap_url") != ""))
 
 
-def parse_crawl_delay(robots: DataFrame, host_col: str = "host",
-                      body_col: str = "robots_txt") -> DataFrame:
+def parse_crawl_delay(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) -> (host, crawl_delay, has_delay): the
     ``Crawl-delay:`` seconds from ``User-agent: *`` groups — the same
     group-scoping state machine as parse_access_rules (the
@@ -201,8 +193,8 @@ def parse_crawl_delay(robots: DataFrame, host_col: str = "host",
                        & target.rlike(r"^[0-9]+$"), target.cast("long"))
                 .otherwise(delay))
 
-    agg = _star_group_fold(body_col, F.lit(-1).cast("long"), update)
+    agg = _star_group_fold("robots_txt", F.lit(-1).cast("long"), update)
     return robots.select(
-        F.col(host_col),
+        F.col("host"),
         F.greatest(agg, F.lit(0)).cast("long").alias("crawl_delay"),
         (agg >= 0).cast("long").alias("has_delay"))

@@ -26,22 +26,23 @@ from pyspark.sql import functions as F
 from .dedup import portable_hash
 from .extract import partition_map
 
+OUT_FRACTION_BP = 5000   # target output share of the corpus (50%)
+VAL_PCT = 10             # hash_split's validation share
+BUCKETS = 32             # stage-1 id buckets of the two-level top-k
 
-def hash_split(docs: DataFrame, id_col: str = "doc_id",
-               train_pct: int = 80, val_pct: int = 10,
-               salt: str = "split") -> DataFrame:
+
+def hash_split(docs: DataFrame, train_pct: int = 80) -> DataFrame:
     """Deterministic train/val/test assignment: bucket =
-    H(salt || id) % 100; [0, train) -> train, [train, train+val) ->
-    val, rest -> test. Emits (id, bucket, split)."""
-    if not (0 <= train_pct and 0 <= val_pct
-            and train_pct + val_pct <= 100):
+    H("split" || id) % 100; [0, train) -> train, [train, train+VAL_PCT)
+    -> val, rest -> test. Emits (id, bucket, split)."""
+    if not 0 <= train_pct <= 100 - VAL_PCT:
         raise ValueError("hash_split: percentages must fit in [0, 100]")
     bucket = (portable_hash(
-        F.format_string(f"{salt}%d", F.col(id_col))) % 100)
+        F.format_string("split%d", F.col("doc_id"))) % 100)
     split = (F.when(F.col("bucket") < train_pct, "train")
-             .when(F.col("bucket") < train_pct + val_pct, "val")
+             .when(F.col("bucket") < train_pct + VAL_PCT, "val")
              .otherwise("test"))
-    return (docs.select(F.col(id_col), bucket.alias("bucket"))
+    return (docs.select(F.col("doc_id"), bucket.alias("bucket"))
             .withColumn("split", split))
 
 
@@ -72,17 +73,15 @@ def _domain_rates(docs: DataFrame, domain_col: str, weights_bp: dict,
 
 
 def mixture_sample(docs: DataFrame, domain_col: str,
-                   weights_bp: dict, out_fraction_bp: int = 5000,
-                   id_col: str = "doc_id",
-                   salt: str = "mix") -> DataFrame:
+                   weights_bp: dict) -> DataFrame:
     """Re-balance a corpus toward target domain proportions: given
     target mixture weights (basis points per domain, summing to <=
     10000) and a target output fraction of the corpus, compute each
     domain's integer acceptance rate and keep a row iff
-    ``H(salt || id) % 10000 < rate_bp(domain)``.
+    ``H("mix" || id) % 10000 < rate_bp(domain)``.
 
     Exact integer derivation (mirrored in the oracle):
-      N_out    = (N_total * out_fraction_bp) div 10000
+      N_out    = (N_total * OUT_FRACTION_BP) div 10000
       quota_d  = (N_out * weights_bp[d]) div 10000
       rate_bp_d = least(10000, (quota_d * 10000) div count_d)
     A domain too small for its quota saturates at rate 10000 (keep
@@ -91,21 +90,20 @@ def mixture_sample(docs: DataFrame, domain_col: str,
     kept rows as (id, domain, rate_bp)."""
     if not weights_bp or sum(weights_bp.values()) > 10000:
         raise ValueError("mixture_sample: weights_bp must sum to <= 10000")
-    rates = (_domain_rates(docs, domain_col, weights_bp, out_fraction_bp)
+    rates = (_domain_rates(docs, domain_col, weights_bp, OUT_FRACTION_BP)
              .withColumn("rate_bp",
                          F.least(F.lit(10000), F.col("rate_bp"))))
-    h = portable_hash(F.format_string(f"{salt}%d", F.col(id_col))) % 10000
-    return (docs.select(F.col(id_col), F.col(domain_col).alias("domain"),
+    h = portable_hash(F.format_string("mix%d", F.col("doc_id"))) % 10000
+    return (docs.select(F.col("doc_id"), F.col(domain_col).alias("domain"),
                         h.alias("_h"))
             .join(F.broadcast(rates), F.col("domain") == F.col("_dom"))
             .filter(F.col("_h") < F.col("rate_bp"))
-            .select(id_col, "domain", "rate_bp"))
+            .select("doc_id", "domain", "rate_bp"))
 
 
-def mixture_sample_upsample(docs: DataFrame, domain_col: str,
-                            weights_bp: dict, out_fraction_bp: int = 5000,
-                            id_col: str = "doc_id",
-                            salt: str = "mix") -> DataFrame:
+def mixture_sample_upsample(docs: DataFrame, domain_col: str, weights_bp: dict,
+                            out_fraction_bp: int = OUT_FRACTION_BP
+                            ) -> DataFrame:
     """Mixture resampling WITH upsampling (r5 VERDICT #4): same integer
     quota derivation as :func:`mixture_sample`, but the per-domain rate
     is NOT capped at 10000 — a scarce domain whose quota exceeds its
@@ -114,7 +112,7 @@ def mixture_sample_upsample(docs: DataFrame, domain_col: str,
 
       rate_bp_d = (quota_d * 10000) div count_d         (uncapped)
       n_copies  = rate_bp div 10000
-                  + (1 if H(salt||id) % 10000 < rate_bp % 10000 else 0)
+                  + (1 if H("mix"||id) % 10000 < rate_bp % 10000 else 0)
 
     Each kept row is emitted ``n_copies`` times with ``rep`` in
     [0, n_copies): full copies deterministically, the fractional
@@ -128,27 +126,25 @@ def mixture_sample_upsample(docs: DataFrame, domain_col: str,
         raise ValueError(
             "mixture_sample_upsample: weights_bp must sum to <= 10000")
     rates = _domain_rates(docs, domain_col, weights_bp, out_fraction_bp)
-    h = portable_hash(F.format_string(f"{salt}%d", F.col(id_col))) % 10000
-    return (docs.select(F.col(id_col), F.col(domain_col).alias("domain"),
+    h = portable_hash(F.format_string("mix%d", F.col("doc_id"))) % 10000
+    return (docs.select(F.col("doc_id"), F.col(domain_col).alias("domain"),
                         h.alias("_h"))
             .join(F.broadcast(rates), F.col("domain") == F.col("_dom"))
             .withColumn("_nc", F.expr("rate_bp div 10000")
                         + F.when(F.col("_h") < F.col("rate_bp") % 10000,
                                  F.lit(1)).otherwise(F.lit(0)))
             .filter(F.col("_nc") > 0)
-            .select(F.col(id_col), F.col("domain"),
+            .select(F.col("doc_id"), F.col("domain"),
                     F.col("rate_bp").cast("long").alias("rate_bp"),
                     F.explode(F.sequence(
                         F.lit(0).cast("long"),
                         F.col("_nc").cast("long") - 1)).alias("rep")))
 
 
-def reservoir_sample(docs: DataFrame, stratum_col: str, k: int,
-                     id_col: str = "doc_id", salt: str = "res",
-                     buckets: int = 32) -> DataFrame:
+def reservoir_sample(docs: DataFrame, stratum_col: str, k: int) -> DataFrame:
     """Deterministic fixed-size-k sample per stratum ("reservoir"
     semantics without the sequential reservoir): rows are ranked within
-    their stratum by ``(H(salt || id), id)`` and the k smallest win.
+    their stratum by ``(H("res" || id), id)`` and the k smallest win.
     Hash-rank top-k is the distributed, rerun-stable equivalent of
     Vitter's algorithm R — the "random" order is a pure function of the
     row id, so resumes and cross-engine oracles agree, and appending
@@ -158,31 +154,30 @@ def reservoir_sample(docs: DataFrame, stratum_col: str, k: int,
     Scale shape: a naive single window over the stratum would sort
     every row of a hot stratum on one task (windows cannot be
     AQE-skew-split).  Instead: two-level exact top-k — stage 1 ranks
-    within ``(stratum, id % buckets)`` and keeps k per bucket, so no
-    task ever sorts more than ~1/buckets of a hot stratum; stage 2
-    ranks the <= buckets*k survivors per stratum.  The global top-k by
+    within ``(stratum, id % BUCKETS)`` and keeps k per bucket, so no
+    task ever sorts more than ~1/BUCKETS of a hot stratum; stage 2
+    ranks the <= BUCKETS*k survivors per stratum.  The global top-k by
     a total order is always contained in the union of per-bucket
     top-ks, so the two-level result is EXACTLY the single-window
     result (the oracle uses the plain one-level formulation)."""
-    if k <= 0 or buckets <= 0:
-        raise ValueError("reservoir_sample: k and buckets must be > 0")
+    if k <= 0:
+        raise ValueError("reservoir_sample: k must be > 0")
     from pyspark.sql import Window as W
-    h = portable_hash(F.format_string(f"{salt}%d", F.col(id_col)))
-    base = docs.select(F.col(id_col),
+    h = portable_hash(F.format_string("res%d", F.col("doc_id")))
+    base = docs.select(F.col("doc_id"),
                        F.col(stratum_col).alias("stratum"),
                        h.alias("_h"),
-                       (F.col(id_col) % buckets).alias("_b"))
-    w1 = W.partitionBy("stratum", "_b").orderBy("_h", id_col)
+                       (F.col("doc_id") % BUCKETS).alias("_b"))
+    w1 = W.partitionBy("stratum", "_b").orderBy("_h", "doc_id")
     stage1 = (base.withColumn("_r1", F.row_number().over(w1))
               .filter(F.col("_r1") <= k))
-    w2 = W.partitionBy("stratum").orderBy("_h", id_col)
+    w2 = W.partitionBy("stratum").orderBy("_h", "doc_id")
     return (stage1.withColumn("rk", F.row_number().over(w2))
             .filter(F.col("rk") <= k)
-            .select(id_col, "stratum", F.col("rk").cast("long").alias("rk")))
+            .select("doc_id", "stratum", F.col("rk").cast("long").alias("rk")))
 
 
-def temperature_rates(docs: DataFrame, domain_col: str,
-                      out_fraction_bp: int = 5000) -> DataFrame:
+def temperature_rates(docs: DataFrame, domain_col: str) -> DataFrame:
     """The T=2 per-domain acceptance-rate table behind
     :func:`temperature_sample`, exposed (r7) so composed pipelines
     can carry the temperature share as metadata without re-deriving
@@ -196,15 +191,12 @@ def temperature_rates(docs: DataFrame, domain_col: str,
             .withColumn("_n", F.sum("_cnt").over(win))
             .withColumn("_sw", F.sum("_w").over(win))
             .withColumn("rate_bp", F.least(F.lit(10000), F.expr(
-                f"(((_n * {int(out_fraction_bp)}) div 10000)"
+                f"(((_n * {OUT_FRACTION_BP}) div 10000)"
                 " * _w div _sw) * 10000 div _cnt")))
             .select("_dom", "rate_bp"))
 
 
-def temperature_sample(docs: DataFrame, domain_col: str,
-                       out_fraction_bp: int = 5000,
-                       id_col: str = "doc_id",
-                       salt: str = "temp") -> DataFrame:
+def temperature_sample(docs: DataFrame, domain_col: str) -> DataFrame:
     """Temperature-flattened mixture sampling (the mT5 / multilingual-
     pretraining rebalance, public method): target domain shares are
     proportional to count^(1/2) — i.e. sampling temperature T=2, the
@@ -215,34 +207,31 @@ def temperature_sample(docs: DataFrame, domain_col: str,
     ``floor(sqrt(x))``, identical in Spark and DuckDB because IEEE-754
     sqrt is correctly rounded and counts < 2^52 are exact doubles):
       w_d      = isqrt(count_d)
-      N_out    = (N_total * out_fraction_bp) div 10000
+      N_out    = (N_total * OUT_FRACTION_BP) div 10000
       quota_d  = (N_out * w_d) div sum(w)
       rate_bp  = least(10000, quota_d * 10000 div count_d)
-    Keep a row iff ``H(salt || id) % 10000 < rate_bp``.  Emits
+    Keep a row iff ``H("temp" || id) % 10000 < rate_bp``.  Emits
     (id, domain, rate_bp).
 
     Scale shape: same as :func:`mixture_sample` — one combiner count
     per domain, weights derived on the tiny counts table (single-
     partition window over thousands of domain rows is free), rates
     broadcast back; the corpus never shuffles."""
-    rates = temperature_rates(docs, domain_col, out_fraction_bp)
-    h = portable_hash(F.format_string(f"{salt}%d", F.col(id_col))) % 10000
-    return (docs.select(F.col(id_col), F.col(domain_col).alias("domain"),
+    rates = temperature_rates(docs, domain_col)
+    h = portable_hash(F.format_string("temp%d", F.col("doc_id"))) % 10000
+    return (docs.select(F.col("doc_id"), F.col(domain_col).alias("domain"),
                         h.alias("_h"))
             .join(F.broadcast(rates), F.col("domain") == F.col("_dom"))
             .filter(F.col("_h") < F.col("rate_bp"))
-            .select(id_col, "domain",
+            .select("doc_id", "domain",
                     F.col("rate_bp").cast("long").alias("rate_bp")))
 
 
 def weighted_reservoir_sample(docs: DataFrame, stratum_col: str,
-                              weight_col: str, k: int,
-                              id_col: str = "doc_id",
-                              salt: str = "wres",
-                              buckets: int = 32) -> DataFrame:
+                              weight_col: str, k: int) -> DataFrame:
     """Deterministic weight-biased fixed-k sample per stratum — the
     integer analog of the Efraimidis–Spirakis A-ES weighted reservoir
-    (public method): each row draws priority ``H(salt||id) div w``
+    (public method): each row draws priority ``H("wres"||id) div w``
     (uniform hash scaled down by weight, so a weight-2w row is twice
     as likely to land among the k smallest as a weight-w row), and the
     k smallest (priority, id) win. Same two-level exact top-k shape as
@@ -253,25 +242,24 @@ def weighted_reservoir_sample(docs: DataFrame, stratum_col: str,
     first ascending, so a w=0 row would otherwise deterministically
     win a slot, and a negative w would outrank every positive one).
     Emits (id, stratum, w, rk)."""
-    if k <= 0 or buckets <= 0:
-        raise ValueError(
-            "weighted_reservoir_sample: k and buckets must be > 0")
+    if k <= 0:
+        raise ValueError("weighted_reservoir_sample: k must be > 0")
     from pyspark.sql import Window as W
-    h = portable_hash(F.format_string(f"{salt}%d", F.col(id_col)))
+    h = portable_hash(F.format_string("wres%d", F.col("doc_id")))
     base = (docs.select(
-        F.col(id_col), F.col(stratum_col).alias("stratum"),
+        F.col("doc_id"), F.col(stratum_col).alias("stratum"),
         F.col(weight_col).cast("long").alias("w"),
         h.alias("_h"),
-        (F.col(id_col) % buckets).alias("_b"))
+        (F.col("doc_id") % BUCKETS).alias("_b"))
         .filter(F.col("w") > 0)
         .withColumn("_pri", F.expr("_h div w")))
-    w1 = W.partitionBy("stratum", "_b").orderBy("_pri", id_col)
+    w1 = W.partitionBy("stratum", "_b").orderBy("_pri", "doc_id")
     stage1 = (base.withColumn("_r1", F.row_number().over(w1))
               .filter(F.col("_r1") <= k))
-    w2 = W.partitionBy("stratum").orderBy("_pri", id_col)
+    w2 = W.partitionBy("stratum").orderBy("_pri", "doc_id")
     return (stage1.withColumn("rk", F.row_number().over(w2))
             .filter(F.col("rk") <= k)
-            .select(id_col, "stratum", "w",
+            .select("doc_id", "stratum", "w",
                     F.col("rk").cast("long").alias("rk")))
 
 
@@ -319,8 +307,7 @@ def global_order_index(docs: DataFrame, order_cols: list,
                     .alias("global_idx")))
 
 
-def global_running_offset(docs: DataFrame, order_cols: list,
-                          value_col: str, id_col: str = "doc_id",
+def global_running_offset(docs: DataFrame, order_cols: list, value_col: str,
                           n_parts: int = 32) -> DataFrame:
     """Exclusive global running sum of ``value_col`` in a total order
     (r7) — the cumulative-offset sibling of :func:`global_order_index`
@@ -347,9 +334,9 @@ def global_running_offset(docs: DataFrame, order_cols: list,
             yield pid, id_, v, acc
             acc += v
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     local = partition_map(
-        ranged.select("_pid", id_col, F.col(value_col).cast("long")),
+        ranged.select("_pid", "doc_id", F.col(value_col).cast("long")),
         _local_cumsum, f"_pid int, id {id_type}, v long, _lo long")
     from pyspark.sql import Window as W
     totals = local.groupBy("_pid").agg(F.sum("v").alias("_t"))
@@ -359,22 +346,20 @@ def global_running_offset(docs: DataFrame, order_cols: list,
                        W.unboundedPreceding, -1)), F.lit(0)))
                .select("_pid", "_off"))
     return (local.join(F.broadcast(offsets), "_pid")
-            .select(F.col("id").alias(id_col),
+            .select(F.col("id").alias("doc_id"),
                     F.col("v").cast("long").alias("value"),
                     (F.col("_lo") + F.col("_off")).cast("long")
                     .alias("offset")))
 
 
 def pack_sequences(docs: DataFrame, seq_len: int,
-                   order_cols: list | None = None,
-                   tokens_expr=None, id_col: str = "doc_id",
-                   text_col: str = "text",
                    n_parts: int = 32) -> DataFrame:
     """GPT-style sequence packing metadata (r7): concatenate every
     document's tokens in one fixed total order and cut the stream
-    into fixed ``seq_len`` training sequences — documents SPLIT
-    ACROSS pack boundaries, the standard pretraining layout (no
-    padding waste, unlike greedy bin packing). Per doc emits
+    into fixed ``seq_len`` training sequences — documents in doc_id
+    order, counted in whitespace tokens, SPLIT ACROSS pack boundaries,
+    the standard pretraining layout (no padding waste, unlike greedy
+    bin packing). Per doc emits
     (id, n_tokens, tok_offset, pack_first, pack_last,
     offset_in_pack):
 
@@ -393,17 +378,12 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     shuffle-bounded by the one range partition."""
     if seq_len <= 0:
         raise ValueError("pack_sequences: seq_len must be > 0")
-    if tokens_expr is None:
-        from .dedup import tokens_col
-        tokens_expr = F.size(tokens_col(text_col))
-    if order_cols is None:
-        order_cols = [id_col]
-    counted = docs.select(F.col(id_col),
-                          tokens_expr.cast("long").alias("_nt"))
-    off = global_running_offset(counted, order_cols, "_nt",
-                                id_col=id_col, n_parts=n_parts)
+    from .dedup import tokens_col
+    counted = docs.select(F.col("doc_id"),
+                          F.size(tokens_col()).cast("long").alias("_nt"))
+    off = global_running_offset(counted, ["doc_id"], "_nt", n_parts=n_parts)
     return off.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("value").alias("n_tokens"),
         F.col("offset").alias("tok_offset"),
         F.expr(f"offset div {int(seq_len)}").cast("long")

@@ -17,6 +17,11 @@ from pyspark.sql import functions as F
 
 from .sampling import global_order_index
 
+TOPK = 10            # rows each top-k search returns
+KMEANS_K = 8         # k-means cells of the IVF index
+KMEANS_ITERS = 3     # Lloyd iterations (the loop stops early at a fixpoint)
+NPROBE = 2           # cells a multi-probe search scans
+
 
 def _as_double(col: F.Column) -> F.Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -32,8 +37,7 @@ def _norm(a: F.Column) -> F.Column:
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def quantize_int8(emb: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
+def quantize_int8(emb: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization (r4) — the 4x storage/
     bandwidth cut every embedding store takes before ANN serving:
     scale = max(|x|) per vector, q_i = round(x_i / scale * 127) —
@@ -41,14 +45,14 @@ def quantize_int8(emb: DataFrame, id_col: str = "vec_id",
     and zero vectors quantize to zeros with scale 0. All JVM HOF math, zero shuffles.
     Emits (id, scale_micro, q_sum, q_csv) — exact integers, so the
     whole codec is DuckDB-oracle-checkable."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     amax = F.aggregate(F.transform(v, F.abs),
                        F.lit(0.0), lambda a, x: F.greatest(a, x))
     q = F.when(amax > 0, F.transform(
         v, lambda x: F.round(x / amax * 127).cast("long"))) \
         .otherwise(F.transform(v, lambda x: F.lit(0).cast("long")))
     return emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(amax * 1_000_000).cast("long").alias("scale_micro"),
         F.aggregate(q, F.lit(0).cast("long"),
                     lambda a, x: a + x).alias("q_sum"),
@@ -56,9 +60,9 @@ def quantize_int8(emb: DataFrame, id_col: str = "vec_id",
         .alias("q_csv"))
 
 
-def _q8_col(vec_col: str) -> F.Column:
-    """int8 code array for a vector column (the quantize_int8 codec)."""
-    v = _as_double(F.col(vec_col))
+def _q8_col() -> F.Column:
+    """int8 code array of ``embedding`` (the quantize_int8 codec)."""
+    v = _as_double(F.col("embedding"))
     amax = F.aggregate(F.transform(v, F.abs),
                        F.lit(0.0), lambda a, x: F.greatest(a, x))
     return (F.when(amax > 0, F.transform(
@@ -66,9 +70,7 @@ def _q8_col(vec_col: str) -> F.Column:
         .otherwise(F.transform(v, lambda x: F.lit(0).cast("long"))))
 
 
-def quantized_topk(emb: DataFrame, query_id: int, k: int = 10,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def quantized_topk(emb: DataFrame, query_id: int) -> DataFrame:
     """Top-k by cosine over the INT8-QUANTIZED vectors (r4) — the
     serving-time search a quantized embedding store actually runs.
     Symmetric per-vector scales cancel in cosine, so the score is pure
@@ -76,8 +78,8 @@ def quantized_topk(emb: DataFrame, query_id: int, k: int = 10,
     vs the float top-k is the codec's quality measure, and both sides
     are deterministic. Zero-norm codes are excluded (cosine undefined).
     Emits top-k (id, qcos_micro) by (score desc, id asc)."""
-    base = emb.select(F.col(id_col), _q8_col(vec_col).alias("qv"))
-    q = (base.filter(F.col(id_col) == query_id)
+    base = emb.select(F.col("vec_id"), _q8_col().alias("qv"))
+    q = (base.filter(F.col("vec_id") == query_id)
          .select(F.col("qv").alias("qq")))
     dot = F.aggregate(F.zip_with(F.col("qv"), F.col("qq"),
                                  lambda x, y: x * y),
@@ -89,72 +91,65 @@ def quantized_topk(emb: DataFrame, query_id: int, k: int = 10,
               * F.sqrt(n2(F.col("qq")).cast("double"))))
     return (base.crossJoin(F.broadcast(q))
             .filter((n2(F.col("qv")) > 0) & (n2(F.col("qq")) > 0))
-            .select(F.col(id_col),
+            .select(F.col("vec_id"),
                     F.round(cos * 1_000_000).cast("long")
                     .alias("qcos_micro"))
-            .orderBy(F.col("qcos_micro").desc(), F.col(id_col).asc())
-            .limit(k))
+            .orderBy(F.col("qcos_micro").desc(), F.col("vec_id").asc())
+            .limit(TOPK))
 
 
-def cosine_to_query(emb: DataFrame, query_id: int,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+def cosine_to_query(emb: DataFrame, query_id: int) -> DataFrame:
     """Cosine similarity of every vector vs one query vector, scaled to
     integer micro-units (round(cos*1e6)) for cross-engine exactness."""
-    v = _as_double(F.col(vec_col))
-    base = emb.select(F.col(id_col), v.alias("v"))
-    q = (base.filter(F.col(id_col) == query_id)
+    v = _as_double(F.col("embedding"))
+    base = emb.select(F.col("vec_id"), v.alias("v"))
+    q = (base.filter(F.col("vec_id") == query_id)
          .select(F.col("v").alias("qv")))
     cos = _dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))
     return (base.crossJoin(F.broadcast(q))
-            .select(F.col(id_col),
+            .select(F.col("vec_id"),
                     F.round(cos * 1_000_000).cast("long").alias("cos_micro")))
 
 
-def cosine_topk(emb: DataFrame, query_id: int, k: int = 10,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(emb: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Brute-force top-k by (cosine desc, id asc) — the ANN baseline."""
-    return (cosine_to_query(emb, query_id, id_col, vec_col)
-            .orderBy(F.col("cos_micro").desc(), F.col(id_col).asc())
+    return (cosine_to_query(emb, query_id)
+            .orderBy(F.col("cos_micro").desc(), F.col("vec_id").asc())
             .limit(k))
 
 
-def ivf_assign(emb: DataFrame, n_centroids: int = 8,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(emb: DataFrame, n_centroids: int = 8) -> DataFrame:
     """IVF cell assignment with deterministic centroids (= the first
     ``n_centroids`` vectors by id): argmin squared-L2, ties by centroid
     id. One broadcast join; no shuffle of the big side."""
-    v = _as_double(F.col(vec_col))
-    base = emb.select(F.col(id_col), v.alias("v"))
-    cents = (base.filter(F.col(id_col) < n_centroids)
-             .select(F.col(id_col).alias("cid"), F.col("v").alias("cv")))
+    v = _as_double(F.col("embedding"))
+    base = emb.select(F.col("vec_id"), v.alias("v"))
+    cents = (base.filter(F.col("vec_id") < n_centroids)
+             .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv")))
     d2 = F.aggregate(F.zip_with(F.col("v"), F.col("cv"),
                                 lambda x, y: (x - y) * (x - y)),
                      F.lit(0.0), lambda acc, x: acc + x)
     scored = base.crossJoin(F.broadcast(cents)).withColumn("d2", d2)
     # min(struct) = lexicographic (d2, cid) — deterministic tie-break,
     # mirrored in the oracle by row_number over (d2, cid)
-    return (scored.groupBy(id_col)
+    return (scored.groupBy("vec_id")
             .agg(F.min(F.struct("d2", "cid")).getField("cid").alias("cluster")))
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold_micro: int = 999000,
-                             n_centroids: int = 8, id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+                             n_centroids: int = 8) -> DataFrame:
     """Embedding-cosine near-dup pairs, IVF-bucketed: candidate pairs
     only form *within* an IVF cell (the scale path — self-join per
     cell, never O(n^2) global), then exact cosine filters. Like any
     single-probe IVF/LSH scheme, recall < 1 by construction; the
     oracle mirrors the same cell restriction."""
-    v = _as_double(F.col(vec_col))
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col)
-    base = (emb.select(F.col(id_col), v.alias("v"))
-            .join(assign, id_col))
-    a = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
+    v = _as_double(F.col("embedding"))
+    assign = ivf_assign(emb, n_centroids)
+    base = (emb.select(F.col("vec_id"), v.alias("v"))
+            .join(assign, "vec_id"))
+    a = base.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
                     F.col("cluster"))
-    b = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
+    b = base.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
                     F.col("cluster"))
     pairs = a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
     cos = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
@@ -163,9 +158,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold_micro: int = 999000,
             .filter(F.col("cos_micro") >= threshold_micro))
 
 
-def ivf_build_index(emb: DataFrame, out_dir: str, n_centroids: int = 8,
-                    iters: int = 3, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> str:
+def ivf_build_index(emb: DataFrame, out_dir: str) -> str:
     """Materialize the IVF index as a cluster-PARTITIONED parquet layout
     (``partitionBy('cluster')``): probes with a literal cluster
     predicate then touch only the matching partition directories — real
@@ -183,11 +176,11 @@ def ivf_build_index(emb: DataFrame, out_dir: str, n_centroids: int = 8,
     import json
     import os
 
-    cents = kmeans_centroids(emb, n_centroids, iters, id_col, vec_col)
-    assign = (_quantized(emb, id_col, vec_col)
+    cents = kmeans_centroids(emb)
+    assign = (_quantized(emb)
               .withColumn("cluster", _assign_expr(cents))
-              .select(F.col("_id").alias(id_col), "cluster"))
-    (emb.join(assign, id_col)
+              .select(F.col("_id").alias("vec_id"), "cluster"))
+    (emb.join(assign, "vec_id")
      .write.mode("overwrite").partitionBy("cluster").parquet(out_dir))
     # id->cluster lookup sidecar (r4 ADVICE #4): probes resolve the
     # query's cell from this narrow (id, cluster) table instead of
@@ -203,14 +196,12 @@ def ivf_build_index(emb: DataFrame, out_dir: str, n_centroids: int = 8,
     return out_dir
 
 
-def ivf_topk_indexed(spark, index_dir: str, query_id: int, k: int = 10,
-                     nprobe: int = 2, id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> DataFrame:
+def ivf_topk_indexed(spark, index_dir: str, query_id: int) -> DataFrame:
     """Multi-probe ANN over a materialized k-means IVF index: the
-    ``nprobe`` cells nearest the query (exact integer distance against
+    ``NPROBE`` cells nearest the query (exact integer distance against
     the sidecar centroids, driver-side K x dim math) become a literal
     ``cluster IN (...)`` predicate — `.explain` shows PartitionFilters
-    pruning to ~nprobe/K of the files. Same probed-cell semantics as
+    pruning to ~NPROBE/K of the files. Same probed-cell semantics as
     ``ivf_topk_kmeans``, but the cell restriction happens at the SOURCE
     instead of after a full scan. The query vector itself is fetched
     pruned too (r4 ADVICE #4): its cell comes from the narrow
@@ -224,15 +215,15 @@ def ivf_topk_indexed(spark, index_dir: str, query_id: int, k: int = 10,
         cents = json.load(f)
     idx = spark.read.parquet(index_dir)
     qcell_row = (spark.read.parquet(os.path.join(index_dir, "_assign"))
-                 .filter(F.col(id_col) == query_id).head())
+                 .filter(F.col("vec_id") == query_id).head())
     if qcell_row is None:
         raise KeyError(f"query id {query_id} not in index {index_dir}")
     # quantize the query vector with the SAME Spark expression used in
     # training (F.round = HALF_UP; Python round() banker's-rounds);
     # the literal cluster predicate makes this fetch partition-pruned
     qrow = (idx.filter((F.col("cluster") == int(qcell_row["cluster"]))
-                       & (F.col(id_col) == query_id))
-            .select(F.transform(_as_double(F.col(vec_col)),
+                       & (F.col("vec_id") == query_id))
+            .select(F.transform(_as_double(F.col("embedding")),
                                 lambda x: F.round(x * 1e6).cast("long"))
                     .alias("vq")).head())
     if qrow is None:
@@ -240,28 +231,27 @@ def ivf_topk_indexed(spark, index_dir: str, query_id: int, k: int = 10,
     qv = list(qrow["vq"])
     d2s = sorted((sum((x - y) * (x - y) for x, y in zip(qv, c)), cid)
                  for cid, c in enumerate(cents))
-    probe = [cid for _, cid in d2s[:nprobe]]
+    probe = [cid for _, cid in d2s[:NPROBE]]
     cell = (idx.filter(F.col("cluster").isin(probe))
-            .select(id_col, vec_col))
-    return (cosine_to_query(cell, query_id, id_col, vec_col)
-            .orderBy(F.col("cos_micro").desc(), F.col(id_col).asc())
-            .limit(k))
+            .select("vec_id", "embedding"))
+    return (cosine_to_query(cell, query_id)
+            .orderBy(F.col("cos_micro").desc(), F.col("vec_id").asc())
+            .limit(TOPK))
 
 
 def ivf_topk(emb: DataFrame, query_id: int, k: int = 10,
-             n_centroids: int = 8, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+             n_centroids: int = 8) -> DataFrame:
     """ANN: search only the query's IVF cell (scale path; recall<1 by
     construction, like any single-probe IVF)."""
-    assign = ivf_assign(emb, n_centroids, id_col, vec_col)
-    with_cell = emb.join(assign, id_col)
-    qcell = (with_cell.filter(F.col(id_col) == query_id)
+    assign = ivf_assign(emb, n_centroids)
+    with_cell = emb.join(assign, "vec_id")
+    qcell = (with_cell.filter(F.col("vec_id") == query_id)
              .select(F.col("cluster").alias("qcluster")))
     cell = (with_cell.crossJoin(F.broadcast(qcell))
             .filter(F.col("cluster") == F.col("qcluster"))
-            .select(id_col, vec_col))
-    return (cosine_to_query(cell, query_id, id_col, vec_col)
-            .orderBy(F.col("cos_micro").desc(), F.col(id_col).asc())
+            .select("vec_id", "embedding"))
+    return (cosine_to_query(cell, query_id)
+            .orderBy(F.col("cos_micro").desc(), F.col("vec_id").asc())
             .limit(k))
 
 
@@ -270,13 +260,13 @@ def ivf_topk(emb: DataFrame, query_id: int, k: int = 10,
 # naive first-K-vectors centroids / single-probe recall limits)
 # ---------------------------------------------------------------------------
 
-def _quantized(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _quantized(emb: DataFrame) -> DataFrame:
     """Vectors as exact integer micro-units (array<long>): all k-means
     arithmetic is then integer-exact, so centroids and assignments are
     bit-identical regardless of partitioning/summation order."""
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     return emb.select(
-        F.col(id_col).alias("_id"),
+        F.col("vec_id").alias("_id"),
         F.transform(v, lambda x: F.round(x * 1e6).cast("long")).alias("vq"))
 
 
@@ -295,10 +285,9 @@ def _assign_expr(cents: list) -> F.Column:
     return F.sort_array(F.array(*alts))[0]["cid"]
 
 
-def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> list:
-    """Deterministic Lloyd k-means in exact integer math. Seeds are the
+def kmeans_centroids(emb: DataFrame) -> list:
+    """Deterministic Lloyd k-means (K = KMEANS_K cells, at most
+    KMEANS_ITERS iterations) in exact integer math. Seeds are the
     vectors at evenly spaced id-ranks (not the first K, which collapse
     when early ids are similar); each iteration is one broadcast-
     assignment pass plus one (K x dim)-row aggregate collected to the
@@ -310,10 +299,10 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     moves more than the K seed ids to the driver.
 
     Returns centroids as lists of micro-unit ints (len K x dim)."""
-    base = _quantized(emb, id_col, vec_col).cache()
+    base = _quantized(emb).cache()
     n = base.count()
-    ranks = sorted({min(int(i * n / n_centroids), n - 1)
-                    for i in range(n_centroids)})
+    ranks = sorted({min(int(i * n / KMEANS_K), n - 1)
+                    for i in range(KMEANS_K)})
     seed_ids = [r["_id"] for r in
                 global_order_index(base.select("_id"), ["_id"], id_col="_id")
                 .filter(F.col("global_idx").isin(ranks)).collect()]
@@ -322,7 +311,7 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     cents = [list(r["vq"]) for r in
              base.filter(F.col("_id").isin(seed_ids))
              .orderBy("_id").collect()]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         stats = (base.withColumn("cluster", _assign_expr(cents))
                  .select("cluster", F.posexplode("vq").alias("pos", "val"))
                  .groupBy("cluster", "pos")
@@ -341,26 +330,19 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
     return cents
 
 
-def kmeans_assign(emb: DataFrame, n_centroids: int = 8, iters: int = 3,
-                  id_col: str = "vec_id",
-                  vec_col: str = "embedding",
-                  centroids: list | None = None) -> DataFrame:
+def kmeans_assign(emb: DataFrame, centroids: list | None = None) -> DataFrame:
     """Final k-means cell per vector (the IVF layout key). Every step is
     integer-exact, so the full clustering is DuckDB-oracle-checkable.
     Pass ``centroids`` (from kmeans_centroids) to skip re-training —
     the amortization seam (r8) callers use to compute the assignment
     ONCE and share it across many probes."""
-    cents = centroids if centroids is not None else kmeans_centroids(
-        emb, n_centroids, iters, id_col, vec_col)
-    return (_quantized(emb, id_col, vec_col)
+    cents = centroids if centroids is not None else kmeans_centroids(emb)
+    return (_quantized(emb)
             .withColumn("cluster", _assign_expr(cents))
-            .select(F.col("_id").alias(id_col), "cluster"))
+            .select(F.col("_id").alias("vec_id"), "cluster"))
 
 
-def ivf_topk_kmeans(emb: DataFrame, query_id: int, k: int = 10,
-                    n_centroids: int = 8, nprobe: int = 2, iters: int = 3,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding",
+def ivf_topk_kmeans(emb: DataFrame, query_id: int, nprobe: int = NPROBE,
                     centroids: list | None = None,
                     query_vec: list | None = None,
                     assignment: DataFrame | None = None) -> DataFrame:
@@ -372,15 +354,14 @@ def ivf_topk_kmeans(emb: DataFrame, query_id: int, k: int = 10,
     many probes — the deployment shape. r8 adds the other two
     amortization seams a many-query serving loop needs: ``query_vec``
     (the query's micro-unit vector, skipping the per-probe driver
-    ``head()`` job) and ``assignment`` ((id_col, cluster) rows, e.g. a
+    ``head()`` job) and ``assignment`` ((vec_id, cluster) rows, e.g. a
     materialized kmeans_assign output, replacing the per-probe
     re-evaluation of the K x dim assignment expression over the whole
     table). Both are pure plumbing: the probed cells and the returned
     rows are identical with or without them."""
-    cents = centroids if centroids is not None else kmeans_centroids(
-        emb, n_centroids, iters, id_col, vec_col)
+    cents = centroids if centroids is not None else kmeans_centroids(emb)
     if query_vec is None:
-        qrow = (_quantized(emb, id_col, vec_col)
+        qrow = (_quantized(emb)
                 .filter(F.col("_id") == query_id).head())
         if qrow is None:
             raise KeyError(f"query id {query_id} not in embeddings")
@@ -391,21 +372,19 @@ def ivf_topk_kmeans(emb: DataFrame, query_id: int, k: int = 10,
                  for cid, c in enumerate(cents))
     probe = [cid for _, cid in d2s[:nprobe]]
     if assignment is None:
-        cell_ids = (_quantized(emb, id_col, vec_col)
+        cell_ids = (_quantized(emb)
                     .withColumn("cluster", _assign_expr(cents))
                     .filter(F.col("cluster").isin(probe)).select("_id"))
     else:
         cell_ids = (assignment.filter(F.col("cluster").isin(probe))
-                    .select(F.col(id_col).alias("_id")))
-    cell = emb.join(cell_ids, F.col(id_col) == F.col("_id")).drop("_id")
-    return (cosine_to_query(cell, query_id, id_col, vec_col)
-            .orderBy(F.col("cos_micro").desc(), F.col(id_col).asc())
-            .limit(k))
+                    .select(F.col("vec_id").alias("_id")))
+    cell = emb.join(cell_ids, F.col("vec_id") == F.col("_id")).drop("_id")
+    return (cosine_to_query(cell, query_id)
+            .orderBy(F.col("cos_micro").desc(), F.col("vec_id").asc())
+            .limit(TOPK))
 
 
-def semantic_dedup(emb: DataFrame, threshold_micro: int = 999000,
-                   n_centroids: int = 8, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def semantic_dedup(emb: DataFrame, n_centroids: int = 8) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, public method) — semantic
     near-duplicate REMOVAL, end to end (r7): cluster the embedding
     space (IVF cells), form cosine pairs only WITHIN cells
@@ -420,13 +399,12 @@ def semantic_dedup(emb: DataFrame, threshold_micro: int = 999000,
     rounds with per-round lineage truncation, and the final fate join
     is a plain left join on id."""
     from .dedup import near_dup_clusters
-    pairs = embedding_near_dup_pairs(emb, threshold_micro, n_centroids,
-                                     id_col, vec_col)
-    ids = emb.select(F.col(id_col))
+    pairs = embedding_near_dup_pairs(emb, n_centroids=n_centroids)
+    ids = emb.select(F.col("vec_id"))
     comp = near_dup_clusters(
-        ids, pairs.select(F.col("id_a"), F.col("id_b")), id_col=id_col)
+        ids, pairs.select(F.col("id_a"), F.col("id_b")), id_col="vec_id")
     return comp.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster").cast("long").alias("rep_id"),
-        (F.col("cluster") == F.col(id_col)).cast("long")
+        (F.col("cluster") == F.col("vec_id")).cast("long")
         .alias("is_kept"))

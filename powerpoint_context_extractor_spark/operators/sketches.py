@@ -91,23 +91,26 @@ def theta_sketch(df: DataFrame, key_col: str, group_col: str,
                     est.cast("long").alias("est")))
 
 
-def count_min_sketch(df: DataFrame, key_col: str, w: int = 256,
-                     d: int = 4) -> DataFrame:
+CM_DEPTH = 4
+
+
+def count_min_sketch(df: DataFrame, key_col: str, w: int = 256) -> DataFrame:
     """Count-min sketch (Cormode & Muthukrishnan 2005, public method):
-    a d x w integer counter matrix; cell (j, h_j(key) % w) += 1 per
-    row, point estimate = min_j over a key's d cells (always >= the
-    true count). Like theta_sketch the ENTIRE state is oracle-exact:
-    each hash is the md5 seam over 'cm{j}|key', so DuckDB rebuilds
-    the matrix cell-for-cell.
+    a d x w integer counter matrix (d = ``CM_DEPTH``); cell
+    (j, h_j(key) % w) += 1 per row, point estimate = min_j over a
+    key's d cells (always >= the true count). Like theta_sketch the
+    ENTIRE state is oracle-exact: each hash is the md5 seam over
+    'cm{j}|key', so DuckDB rebuilds the matrix cell-for-cell.
 
     Scale shape: one explode to d rows per input row, then a
     combiner-friendly groupBy over at most d*w cells — sketch size is
     d*w longs regardless of input size, and partition sketches merge
     by cell-wise SUM (the linearity property that makes CM the
     standard distributed frequency sketch). Emits (row, col, cnt)."""
-    if w < 2 or d < 1:
-        raise ValueError("count_min_sketch: need w >= 2 and d >= 1")
-    rows = F.explode(F.array(*[F.lit(j) for j in range(d)])).alias("row")
+    if w < 2:
+        raise ValueError("count_min_sketch: need w >= 2")
+    rows = F.explode(F.array(*[F.lit(j) for j in range(CM_DEPTH)])
+                     ).alias("row")
     cell = (F.conv(F.substring(F.md5(
         F.concat(F.lit("cm"), F.col("row"), F.lit("|"),
                  F.col(key_col))), 1, 8), 16, 10)

@@ -38,22 +38,20 @@ def _bigrams(toks: F.Column) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def token_counts(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens + char count."""
     return docs.select(
-        F.col(id_col),
-        F.size(tokens_col(text_col)).cast("long").alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(f"({TOKEN_RE})"), 1))
+        F.col("doc_id"),
+        F.size(tokens_col()).cast("long").alias("ws_tokens"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(f"({TOKEN_RE})"), 1))
         .cast("long").alias("re_tokens"),
-        F.length(F.col(text_col)).cast("long").alias("n_chars_actual"))
+        F.length(F.col("text")).cast("long").alias("n_chars_actual"))
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id",
-            text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-token count per language; argmax, ties by language name
     ascending (deterministic)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
 
     def marker_count(lang):
         markers = LANG_MARKERS[lang]
@@ -63,38 +61,37 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id",
 
     scores = [marker_count(lang).alias(f"s_{lang}")
               for lang in sorted(LANG_MARKERS)]
-    scored = docs.select(F.col(id_col), *scores)
+    scored = docs.select(F.col("doc_id"), *scores)
     pairs = F.array(*[F.struct((-F.col(f"s_{lang}")).alias("neg"),
                                F.lit(lang).alias("lang"))
                       for lang in sorted(LANG_MARKERS)])
     return scored.select(
-        id_col,
+        "doc_id",
         F.array_min(pairs).getField("lang").alias("pred_lang"),
         (-F.array_min(pairs).getField("neg")).cast("long").alias("score"))
 
 
-def quality_score(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Integer quality features: token count, mean word length (x100,
     integer division), stopword ratio in basis points, and a frozen
     composite score."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_tokens"),
-        F.length(F.col(text_col)).cast("long").alias("nc"),
+        F.length(F.col("text")).cast("long").alias("nc"),
         F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("long")
         .alias("stop"))
     # `div` = exact integer division, matches DuckDB `//`
     feat = base.select(
-        id_col, "n_tokens",
+        "doc_id", "n_tokens",
         F.expr("((nc - (n_tokens - 1)) * 100) div n_tokens").alias("mean_wl_x100"),
         F.expr("(stop * 10000) div n_tokens").alias("stop_bp"))
     score = (F.least(F.col("n_tokens"), F.lit(100)) * 100
              + F.when((F.col("mean_wl_x100") >= 300)
                       & (F.col("mean_wl_x100") <= 800), 5000).otherwise(0)
              - F.col("stop_bp")).cast("long")
-    return feat.select(id_col, "n_tokens", "mean_wl_x100", "stop_bp",
+    return feat.select("doc_id", "n_tokens", "mean_wl_x100", "stop_bp",
                        score.alias("quality"))
 
 
@@ -110,8 +107,7 @@ GOPHER_MIN_ALPHA_BP = 8000     # >= 80% of words contain a letter
 GOPHER_MIN_STOP_DISTINCT = 2   # >= 2 distinct stop words present
 
 
-def quality_score_v2(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def quality_score_v2(docs: DataFrame) -> DataFrame:
     """Gopher rule set (r4 VERDICT #7, extending ``quality_score``):
     word-count bounds, mean-word-length bounds, symbol-to-word ratio
     ('#' and '...' per word), alphabetic-word fraction, and
@@ -124,16 +120,16 @@ def quality_score_v2(docs: DataFrame, id_col: str = "doc_id",
     ZERO shuffles, scan speed at 100 TB (same as repetition_stats).
     Line-level Gopher rules (bullet/ellipsis line fractions) are out of
     scope here: the documents corpus is single-line by construction."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     # '#' count + '...' occurrence count, all-integer (div is exact)
     n_sym = F.expr(
-        f"(length({text_col}) - length(replace({text_col}, '#', '')))"
-        f" + ((length({text_col}) - length(replace({text_col}, '...', '')))"
+        "(length(text) - length(replace(text, '#', '')))"
+        " + ((length(text) - length(replace(text, '...', '')))"
         f" div 3)")
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_words"),
-        F.length(F.col(text_col)).cast("long").alias("nc"),
+        F.length(F.col("text")).cast("long").alias("nc"),
         n_sym.cast("long").alias("n_sym"),
         F.size(F.filter(toks, lambda t: t.rlike("[a-z]"))).cast("long")
         .alias("n_alpha"),
@@ -142,7 +138,7 @@ def quality_score_v2(docs: DataFrame, id_col: str = "doc_id",
             F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]))).cast("long")
         .alias("n_stop_distinct"))
     feat = base.select(
-        id_col, "n_words",
+        "doc_id", "n_words",
         F.expr("((nc - (n_words - 1)) * 100) div n_words")
         .alias("mean_wl_x100"),
         F.expr("(n_sym * 10000) div n_words").alias("symbol_bp"),
@@ -157,56 +153,56 @@ def quality_score_v2(docs: DataFrame, id_col: str = "doc_id",
         & (F.col("alpha_bp") >= GOPHER_MIN_ALPHA_BP)
         & (F.col("n_stop_distinct") >= GOPHER_MIN_STOP_DISTINCT)
     ).cast("long")
-    return feat.select(id_col, "n_words", "mean_wl_x100", "symbol_bp",
+    return feat.select("doc_id", "n_words", "mean_wl_x100", "symbol_bp",
                        "alpha_bp", "n_stop_distinct",
                        gopher_pass.alias("gopher_pass"))
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling polynomial fingerprint over token hashes:
     fold(acc*31 + H(tok)) mod P — order-sensitive (unlike a bag-of-
     tokens hash), so near-identical docs with swapped words differ."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     fp = F.aggregate(toks, F.lit(0).cast("long"),
                      lambda acc, t: (acc * 31 + portable_hash(t)) % P)
-    return docs.select(F.col(id_col), fp.alias("fp"))
+    return docs.select(F.col("doc_id"), fp.alias("fp"))
 
 
-def token_chunks(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", window: int = 64,
-                 stride: int = 48) -> DataFrame:
+CHUNK_WINDOW = 64      # tokens per token_chunks chunk
+CHUNK_STRIDE = 48      # tokens between token_chunks chunk starts
+
+
+def token_chunks(docs: DataFrame) -> DataFrame:
     """Sliding-window token chunking (r4) — the context-window prep
     every LLM training pipeline runs: chunk k covers whitespace tokens
-    [k*stride, k*stride+window); overlapping when stride < window; a
-    doc with <= window tokens yields exactly one chunk; the final
-    chunk may be short but always starts inside the doc.
+    [k*stride, k*stride+window) with window = CHUNK_WINDOW and stride =
+    CHUNK_STRIDE, overlapping; a doc with <= window tokens yields
+    exactly one chunk; the final chunk may be short but always starts
+    inside the doc.
 
     Scale shape: chunks are a per-row pure function of the token array
     (same map-side transform/sequence/slice pattern as paragraph_dedup)
     — the only rows ever shuffled are whatever the CALLER aggregates;
     this operator itself is zero-shuffle scan-speed. Emits
     (id, chunk_id, n_tokens, chunk_md5)."""
-    if stride <= 0 or window <= 0:
-        raise ValueError("token_chunks: window and stride must be > 0")
-    base = docs.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
+    window, stride = CHUNK_WINDOW, CHUNK_STRIDE
+    base = docs.select(F.col("doc_id"), tokens_col().alias("_toks"))
     n = F.size("_toks")
     chunks = F.expr(
         f"transform(sequence(0, (CASE WHEN size(_toks) <= {window} THEN 1 "
         f"ELSE 1 + ((size(_toks) - {window} + {stride} - 1) DIV {stride}) "
-        f"END) - 1), "
+        "END) - 1), "
         f"k -> array_join(slice(_toks, k*{stride}+1, {window}), ' '))")
     out = (base.filter(n > 0)
-           .select(F.col(id_col),
+           .select(F.col("doc_id"),
                    F.posexplode(chunks).alias("chunk_id", "chunk")))
     return out.select(
-        id_col, "chunk_id",
+        "doc_id", "chunk_id",
         F.size(F.split(F.col("chunk"), " ")).cast("long").alias("n_tokens"),
         F.md5(F.col("chunk").cast("binary")).alias("chunk_md5"))
 
 
-def split_sentences(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def split_sentences(docs: DataFrame) -> DataFrame:
     """Regex sentence segmentation (r4): a sentence is a maximal run of
     non-terminator chars plus its trailing terminator run
     (``[^.!?]+[.!?]*``), trimmed, empties dropped — the frozen rule is
@@ -214,18 +210,17 @@ def split_sentences(docs: DataFrame, id_col: str = "doc_id",
     runs the IDENTICAL pattern. Per-row array math, zero shuffles.
     Emits (id, sent_id, n_chars, sent_md5)."""
     sents = F.expr(
-        f"filter(transform(regexp_extract_all({text_col}, "
+        "filter(transform(regexp_extract_all(text, "
         f"'[^.!?]+[.!?]*', 0), s -> trim(s)), s -> s != '')")
     out = docs.select(
-        F.col(id_col), F.posexplode(sents).alias("sent_id", "sentence"))
+        F.col("doc_id"), F.posexplode(sents).alias("sent_id", "sentence"))
     return out.select(
-        id_col, "sent_id",
+        "doc_id", "sent_id",
         F.length("sentence").cast("long").alias("n_chars"),
         F.md5(F.col("sentence").cast("binary")).alias("sent_md5"))
 
 
-def normalize_nfc(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def normalize_nfc(docs: DataFrame) -> DataFrame:
     """Unicode NFC normalization (r4): the canonicalization every LLM
     text pipeline runs before hashing/dedup — visually identical
     strings with decomposed combining marks ('e'+U+0301 vs 'é') hash
@@ -239,7 +234,7 @@ def normalize_nfc(docs: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import types as T
 
     schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
+        T.StructField("doc_id", T.LongType(), False),
         T.StructField("text_nfc", T.StringType(), True),
         T.StructField("changed", T.LongType(), True),
     ])
@@ -251,11 +246,10 @@ def normalize_nfc(docs: DataFrame, id_col: str = "doc_id",
             nfc = unicodedata.normalize("NFC", text)
             yield did, nfc, int(nfc != text)
 
-    return row_map(docs.select(id_col, text_col), _row, schema)
+    return row_map(docs.select("doc_id", "text"), _row, schema)
 
 
-def bigram_coherence(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def bigram_coherence(docs: DataFrame) -> DataFrame:
     """Corpus-statistics coherence score (r5) — the integer-exact
     stand-in for CCNet's LM-perplexity quality signal (public method;
     floating log-probs are not cross-engine-exact, corpus frequencies
@@ -271,24 +265,23 @@ def bigram_coherence(docs: DataFrame, id_col: str = "doc_id",
     by the bigram string, rejoined via an AQE-skew-splittable hash
     join (a stop-bigram like 'of the' is a hot key by construction) —
     the same safe topology as substring dedup."""
-    bigrams = _bigrams(tokens_col(text_col))
-    bg = (docs.select(F.col(id_col), bigrams.alias("_bgs"))
+    bigrams = _bigrams(tokens_col())
+    bg = (docs.select(F.col("doc_id"), bigrams.alias("_bgs"))
           .filter(F.size("_bgs") > 0)
-          .select(F.col(id_col), F.explode("_bgs").alias("bg")))
+          .select(F.col("doc_id"), F.explode("_bgs").alias("bg")))
     freq = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("corpus_n"))
     return (bg.join(freq, "bg")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
                  F.sum("corpus_n").alias("freq_sum"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("n_bigrams").cast("long").alias("n_bigrams"),
                     F.col("freq_sum").cast("long").alias("freq_sum"),
                     F.expr("(freq_sum * 100) div n_bigrams")
                     .alias("coherence_x100")))
 
 
-def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
-                    k: int = 20) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, k: int = 20) -> DataFrame:
     """First BPE merge step (Sennrich et al. 2016 — public method):
     corpus-wide adjacent-CHARACTER-pair frequencies within words, top-k
     by (count desc, pair asc) — the vocabulary-induction statistic a
@@ -300,7 +293,7 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
     ~64k distinct keys — the reduce side is trivially small however
     large the corpus), then a driver-bound top-k sort over those few
     thousand rows."""
-    words = docs.select(F.explode(tokens_col(text_col)).alias("w"))
+    words = docs.select(F.explode(tokens_col()).alias("w"))
     pairs = words.filter(F.length("w") >= 2).select(
         F.explode(F.expr(
             "transform(sequence(1, length(w) - 1), "
@@ -311,8 +304,7 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
             .limit(k))
 
 
-def bpe_learn(docs: DataFrame, text_col: str = "text",
-              n_merges: int = 8) -> DataFrame:
+def bpe_learn(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Iterative BPE vocabulary induction (r6, r5 VERDICT #5 — the
     actual merge LOOP, not just the first-pair statistic): run
     ``n_merges`` merges over the corpus, each picking the most frequent
@@ -340,7 +332,7 @@ def bpe_learn(docs: DataFrame, text_col: str = "text",
     from pyspark.sql import Row
 
     spark = docs.sparkSession
-    wf = (docs.select(F.explode(tokens_col(text_col)).alias("w"))
+    wf = (docs.select(F.explode(tokens_col()).alias("w"))
           .filter(F.length("w") >= 1)
           .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
     sym = wf.select(
@@ -382,9 +374,7 @@ def bpe_learn(docs: DataFrame, text_col: str = "text",
     return spark.createDataFrame(merges, schema)
 
 
-def bpe_encode(docs: DataFrame, merges: list | None = None,
-               id_col: str = "doc_id", text_col: str = "text",
-               n_merges: int = 8) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list | None = None) -> DataFrame:
     """Apply a learned BPE merge table to the corpus (r6 — the encode
     half of the tokenizer story; ``bpe_learn`` is the train half):
     per document, tokenize, expand each word to its symbol string,
@@ -400,14 +390,13 @@ def bpe_encode(docs: DataFrame, merges: list | None = None,
     skips training — the production shape: train once, encode many.
 
     Scale shape: encoding is MAP-ONLY, zero shuffle — the merge table
-    is a driver-held constant folded into the plan (≤ n_merges string
-    literals), each word's symbol string is rewritten in place via
+    is a driver-held constant folded into the plan (one string literal
+    per merge), each word's symbol string is rewritten in place via
     array ``transform``, and the per-doc sums are ``aggregate`` HOFs.
     No explode, no per-doc regroup, nothing corpus-sized moves."""
     if merges is None:
-        merges = [r["pair"]
-                  for r in bpe_learn(docs, text_col, n_merges).collect()]
-    toks = F.filter(tokens_col(text_col), lambda w: F.length(w) >= 1)
+        merges = [r["pair"] for r in bpe_learn(docs).collect()]
+    toks = F.filter(tokens_col(), lambda w: F.length(w) >= 1)
     sym = F.transform(
         toks,
         lambda w: F.concat(F.lit(" "), F.concat_ws(" ", F.split(w, "")),
@@ -425,7 +414,7 @@ def bpe_encode(docs: DataFrame, merges: list | None = None,
         sym, F.lit(0).cast("long"),
         lambda acc, s: acc + F.size(F.split(F.trim(s), " ")))
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("ws_tokens"),
         bpe.alias("bpe_tokens"))
     return out.withColumn(
@@ -434,14 +423,13 @@ def bpe_encode(docs: DataFrame, merges: list | None = None,
                "THEN bpe_tokens * 10000 div ws_tokens END").cast("long"))
 
 
-def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", level: int = 6) -> DataFrame:
+def compression_ratio(docs: DataFrame) -> DataFrame:
     """zlib compression-ratio quality signal (r5, r4 VERDICT missing
     #4 — a standard Gopher-adjacent heuristic): highly compressible
     text is repetitive boilerplate/template spam, near-incompressible
     'text' is binary junk or encrypted garbage; pipelines keep a band.
     ratio_bp = compressed_len * 10000 // utf8_len (integer-exact and
-    deterministic: zlib output at a fixed level is a pure function of
+    deterministic: zlib output at level 6 is a pure function of
     the input bytes — pinned by a dual-run pytest; DuckDB has no zlib,
     so the driver check is rows-only by design).
 
@@ -453,7 +441,7 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import types as T
 
     schema = T.StructType([
-        T.StructField(id_col, T.LongType(), False),
+        T.StructField("doc_id", T.LongType(), False),
         T.StructField("raw_len", T.LongType()),
         T.StructField("zlib_len", T.LongType()),
         T.StructField("ratio_bp", T.LongType()),
@@ -461,32 +449,29 @@ def compression_ratio(docs: DataFrame, id_col: str = "doc_id",
 
     def _row(did, text):
         b = (text or "").encode("utf-8")
-        z = len(zlib.compress(b, level))
+        z = len(zlib.compress(b, 6))
         yield did, len(b), z, z * 10000 // len(b) if b else None
 
-    return row_map(docs.select(id_col, text_col), _row, schema)
+    return row_map(docs.select("doc_id", "text"), _row, schema)
 
 
-def host_stats_salted(events: DataFrame, key_col: str = "event_type",
-                      n_salts: int = 8) -> DataFrame:
-    """Skew-safe two-stage aggregation (U5): partial agg on
-    (key, salt) spreads a hot key over ``n_salts`` reducers, final agg
+def host_stats_salted(events: DataFrame) -> DataFrame:
+    """Skew-safe two-stage aggregation (U5) of ``event_type``: partial
+    agg on (key, salt) spreads a hot key over 8 reducers, final agg
     merges partials. Result is identical to a plain groupBy — that
     identity IS the oracle."""
     salted = events.withColumn(
         "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                        F.lit(n_salts)))
-    partial = (salted.groupBy(key_col, "_salt")
+                        F.lit(8)))
+    partial = (salted.groupBy("event_type", "_salt")
                .agg(F.count(F.lit(1)).alias("pc"),
                     F.sum(F.round(F.col("value") * 100).cast("long")).alias("ps")))
-    return (partial.groupBy(key_col)
+    return (partial.groupBy("event_type")
             .agg(F.sum("pc").alias("n"),
                  F.sum("ps").alias("value_cents")))
 
 
-def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text",
-                     dup_threshold_pct: int = 10) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition filter: the fraction of
     duplicate token bigrams flags template/spam pages (MassiveText's
     'repetition' quality rules, Rae et al. 2021 — public method).
@@ -494,27 +479,25 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     Everything is per-row array math inside whole-stage codegen
     (sequence/transform/array_distinct): ZERO shuffles, so at 100 TB
     this runs at scan speed. Integer-exact flag: flagged=1 iff
-    100*dup_bigrams > threshold_pct*n_bigrams (no float division)."""
-    bigrams = _bigrams(tokens_col(text_col))
-    d = docs.select(F.col(id_col), bigrams.alias("bg"))
+    100*dup_bigrams > 10*n_bigrams (no float division)."""
+    bigrams = _bigrams(tokens_col())
+    d = docs.select(F.col("doc_id"), bigrams.alias("bg"))
     n_all = F.size(F.col("bg")).cast("long")
     n_dist = F.size(F.array_distinct(F.col("bg"))).cast("long")
-    return (d.select(F.col(id_col),
+    return (d.select(F.col("doc_id"),
                      n_all.alias("n_bigrams"),
                      n_dist.alias("n_distinct"),
                      (n_all - n_dist).alias("dup_bigrams"))
             .withColumn("flagged",
                         (100 * F.col("dup_bigrams")
-                         > dup_threshold_pct * F.col("n_bigrams"))
+                         > 10 * F.col("n_bigrams"))
                         .cast("long")))
 
 
-def hash_classifier_score(docs: DataFrame, buckets: int = 4096,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def hash_classifier_score(docs: DataFrame) -> DataFrame:
     """Linear text-classifier INFERENCE with the hashing trick (the
     fastText / Vowpal-Wabbit architecture, public method): each token
-    hashes into one of ``buckets`` weight slots and the doc score is
+    hashes into one of 4096 weight slots and the doc score is
     the plain sum of its tokens' weights — no vocabulary, no
     embedding matrix, O(tokens) per doc. The weight table here is
     FROZEN pseudo-weights (w[b] = ((b * 2654435761) % 1997) - 998, a
@@ -526,23 +509,21 @@ def hash_classifier_score(docs: DataFrame, buckets: int = 4096,
     Scale shape: pure map-side HOF math over the token array —
     transform + aggregate inside whole-stage codegen, zero shuffle,
     zero Python. Emits (id, n_toks, score, label)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
     score = F.expr(
-        "aggregate(transform(split({t}, ' '), x -> "
+        "aggregate(transform(split(text, ' '), x -> "
         "((cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint)"
-        " % {p}) % {b})"
+        f" % {P}) % 4096)"
         " * 2654435761 % 1997 - 998), "
-        "cast(0 as bigint), (acc, v) -> acc + v)".format(
-            t=text_col, p=P, b=int(buckets)))
+        "cast(0 as bigint), (acc, v) -> acc + v)")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).cast("long").alias("n_toks"),
         score.cast("long").alias("score"),
         (score > 0).cast("long").alias("label"))
 
 
-def tfidf_topk(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", k: int = 3) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     """Per-document salient-term extraction (TF-IDF top-k) — the
     keyword signal corpus curation and retrieval labeling both lean
     on. IDF uses the integer surrogate ``n_docs div df`` (monotone in
@@ -559,8 +540,8 @@ def tfidf_topk(docs: DataFrame, id_col: str = "doc_id",
     if k < 1:
         raise ValueError("tfidf_topk: k must be >= 1")
     toks = (docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"))
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"))
         .filter(F.length("term") >= 3))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -591,19 +572,18 @@ CONFUSABLE_DST = "aeopcyxisABEKMHOPCTXopuxO"
 assert len(CONFUSABLE_SRC) == len(CONFUSABLE_DST)
 
 
-def confusable_skeleton(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def confusable_skeleton(docs: DataFrame) -> DataFrame:
     """Homoglyph-spoof detection (the IDN/phishing signal a web corpus
     screens for): map the frozen confusable set to ASCII with one
     ``translate`` (single codegen expression, zero shuffle), count
     replaced chars via the delete-form of translate, and emit the
     skeleton's md5 so two visually-identical-but-differently-encoded
     texts collide. (id, n_confusables, flagged, skeleton_md5)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_conf = (F.length(t)
               - F.length(F.translate(t, CONFUSABLE_SRC, "")))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_conf.cast("long").alias("n_confusables"),
         (n_conf > 0).cast("long").alias("flagged"),
         F.md5(F.translate(t, CONFUSABLE_SRC, CONFUSABLE_DST))
@@ -611,8 +591,6 @@ def confusable_skeleton(docs: DataFrame, id_col: str = "doc_id",
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
-              id_col: str = "doc_id", text_col: str = "text",
-              q_id_col: str = "query_id", q_text_col: str = "q_text",
               buckets: int = 32) -> DataFrame:
     """BM25 retrieval over inverted postings (r7) — the lexical
     ranking every retrieval/dedup-against-index pipeline starts from
@@ -643,8 +621,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     if k < 1:
         raise ValueError("bm25_topk: k must be >= 1")
     toks = (docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"))
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"))
         .filter(F.length("term") >= 3))
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf"))
@@ -653,8 +631,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     tot = docs.select(F.count(F.lit(1)).alias("n_docs"))
     tsum = tf.agg(F.sum("tf").alias("t_tokens"))
     qterms = (queries.select(
-        F.col(q_id_col).alias("query_id"),
-        F.explode(F.split(F.lower(F.col(q_text_col)), " "))
+        F.col("query_id"),
+        F.explode(F.split(F.lower(F.col("q_text")), " "))
         .alias("term"))
         .filter(F.length("term") >= 3).distinct())
     scored = (tf.join(F.broadcast(qterms), "term")
@@ -689,8 +667,7 @@ PII_IPV4 = (r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b")
 PII_PHONE = r"\+[0-9]{1,3}[- ][0-9]{3,4}[- ][0-9]{4,7}"
 
 
-def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII redaction (r7) — the scrub pass every released training
     corpus runs (public method; e.g. the C4/ROOTS-style regex
     filters): emails, international-format phone numbers, and IPv4
@@ -701,7 +678,7 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
     char. Order matters and is FROZEN: emails first (an email must
     not first lose its digits to the phone pattern), then phones,
     then IPs. Map-only, zero shuffle, built-ins end to end."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_email = F.size(F.regexp_extract_all(t, F.lit(PII_EMAIL), 0))
     scrub1 = F.regexp_replace(t, PII_EMAIL, "<EMAIL>")
     n_phone = F.size(F.regexp_extract_all(scrub1, F.lit(PII_PHONE), 0))
@@ -709,7 +686,7 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
     n_ip = F.size(F.regexp_extract_all(scrub2, F.lit(PII_IPV4), 0))
     scrub3 = F.regexp_replace(scrub2, PII_IPV4, "<IP>")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_email.cast("long").alias("n_email"),
         n_phone.cast("long").alias("n_phone"),
         n_ip.cast("long").alias("n_ip"),
@@ -718,8 +695,7 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
         F.md5(scrub3.cast("binary")).alias("clean_md5"))
 
 
-def code_detect(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def code_detect(docs: DataFrame) -> DataFrame:
     """Code-vs-prose detection (r7) — the routing filter a mixed web
     corpus needs before language-specific pipelines: integer
     basis-point ratios of code-ish characters ({}();=<> and []),
@@ -727,7 +703,7 @@ def code_detect(docs: DataFrame, id_col: str = "doc_id",
     frozen rule-of-thumb flag (symbol_bp >= 300 AND (indent or semi
     present), or symbol_bp >= 800 alone). Everything integer,
     map-only, built-ins only."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.greatest(F.length(t), F.lit(1))
     sym = (F.length(t) - F.length(F.translate(t, "{}();=<>[]", "")))
     lines = F.split(t, "\n")
@@ -740,7 +716,7 @@ def code_detect(docs: DataFrame, id_col: str = "doc_id",
     # `//` uses) instead of relying on double rounding never crossing
     # an integer boundary
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         sym.cast("long").alias("_sym"),
         n_chars.cast("long").alias("_nchars"),
         indented.cast("long").alias("_ind"),
@@ -750,7 +726,7 @@ def code_detect(docs: DataFrame, id_col: str = "doc_id",
     ind_bp = F.expr("(_ind * 10000) div _nlines")
     semi_bp = F.expr("(_semi * 10000) div _nlines")
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         sym_bp.alias("symbol_bp"),
         ind_bp.alias("indent_bp"),
         semi_bp.alias("semi_bp"),

@@ -40,17 +40,16 @@ def _base_parts(url: Column) -> tuple[Column, Column]:
             F.regexp_extract(url, _URL_PREFIX, 2))
 
 
-def extract_anchors(pages: DataFrame, url_col: str = "url",
-                    html_col: str = "html_str") -> DataFrame:
+def extract_anchors(pages: DataFrame) -> DataFrame:
     """(url, html) -> one row per resolvable anchor:
     (src_url, src_host, target_url, target_host, anchor)."""
-    html = F.col(html_col)
+    html = F.col("html_str")
     pairs = F.arrays_zip(
         F.regexp_extract_all(html, F.lit(ANCHOR_RE), 1).alias("href"),
         F.regexp_extract_all(html, F.lit(ANCHOR_RE), 2).alias("txt"))
-    scheme, host = _base_parts(F.col(url_col))
+    scheme, host = _base_parts(F.col("url"))
     ex = (pages
-          .select(F.col(url_col).alias("src_url"),
+          .select(F.col("url").alias("src_url"),
                   scheme.alias("_scheme"), host.alias("src_host"),
                   F.explode(pairs).alias("p"))
           .select("src_url", "_scheme", "src_host",
@@ -101,22 +100,21 @@ SITEMAP_RE = (r"<(?:url|sitemap)>\s*<loc>([^<]*)</loc>"
               r"(?:\s*<lastmod>([^<]*)</lastmod>)?")
 
 
-def parse_sitemaps(pages: DataFrame, url_col: str = "url",
-                   xml_col: str = "xml") -> DataFrame:
+def parse_sitemaps(pages: DataFrame) -> DataFrame:
     """Sitemap/sitemapindex parsing (sitemaps.org protocol) — the
     crawl-seeding step next to robots.txt: one row per <loc> entry
     with its optional <lastmod>, tagged 'index' when the document is
     a <sitemapindex> (its locs are child sitemaps to fetch, not
     pages). Single JVM regexp_extract_all over the XML — zero Python,
     zero shuffle, scan speed at any scale."""
-    xml = F.col(xml_col)
+    xml = F.col("xml")
     pairs = F.arrays_zip(
         F.regexp_extract_all(xml, F.lit(SITEMAP_RE), 1).alias("loc"),
         F.regexp_extract_all(xml, F.lit(SITEMAP_RE), 2).alias("lastmod"))
     kind = F.when(xml.contains("<sitemapindex"),
                   F.lit("index")).otherwise(F.lit("urlset"))
     return (pages
-            .select(F.col(url_col).alias("sitemap_url"),
+            .select(F.col("url").alias("sitemap_url"),
                     kind.alias("kind"), F.explode(pairs).alias("p"))
             .select("sitemap_url", "kind",
                     F.col("p.loc").alias("loc"),
@@ -126,9 +124,7 @@ def parse_sitemaps(pages: DataFrame, url_col: str = "url",
 
 # --- politeness-aware frontier scheduling (r6) -----------------------------
 
-def frontier_schedule(urls: DataFrame, host_col: str = "host",
-                      url_col: str = "url",
-                      n_parts: int = 32) -> DataFrame:
+def frontier_schedule(urls: DataFrame, n_parts: int = 32) -> DataFrame:
     """Crawl-frontier fetch ordering with per-host politeness: each
     URL gets its round-robin position within its host (rank), then a
     contiguous global fetch sequence ordered by (rank, host, url) —
@@ -145,9 +141,9 @@ def frontier_schedule(urls: DataFrame, host_col: str = "host",
 
     from .sampling import global_order_index
     ranked = urls.select(
-        F.col(url_col).alias("url"), F.col(host_col).alias("host"),
+        F.col("url"), F.col("host"),
         F.row_number().over(
-            W.partitionBy(host_col).orderBy(url_col))
+            W.partitionBy("host").orderBy("url"))
         .cast("long").alias("rank"))
     idx = global_order_index(ranked, ["rank", "host", "url"],
                              id_col="url", n_parts=n_parts)
@@ -162,8 +158,7 @@ TABLE_ROW_RE = r"(?s)<tr[^>]*>(.*?)</tr>"   # (?s): rows span newlines
 TABLE_CELL_RE = r"<t[dh][^>]*>([^<]*)</t[dh]>"
 
 
-def extract_html_tables(pages: DataFrame, url_col: str = "url",
-                        html_col: str = "html_str") -> DataFrame:
+def extract_html_tables(pages: DataFrame) -> DataFrame:
     """Structured table extraction (the tabular-data mining step a
     web corpus runs for fact/QA datasets): every <tr> of every page
     explodes to (url, row_idx, col_idx, cell) with document-order
@@ -171,9 +166,9 @@ def extract_html_tables(pages: DataFrame, url_col: str = "url",
     zero Python, zero shuffle. Subset contract: cells are plain text
     (nested markup inside a cell stops at the first tag, like the
     anchor extractor); <th> and <td> are both cells."""
-    html = F.col(html_col)
+    html = F.col("html_str")
     rows = F.regexp_extract_all(html, F.lit(TABLE_ROW_RE), 1)
-    ex = (pages.select(F.col(url_col).alias("url"),
+    ex = (pages.select(F.col("url"),
                        F.posexplode(rows).alias("row_idx", "row_html"))
           .select("url", "row_idx",
                   F.posexplode(

@@ -55,12 +55,11 @@ def write_files(rows: DataFrame, out_dir: str, write) -> list:
 
 
 def artifact_manifest(df: DataFrame, id_col: str, payload_col: str,
-                      prefix: str = "artifact", width: int = 5,
-                      ext: str = "bin") -> DataFrame:
+                      prefix: str = "artifact") -> DataFrame:
     """Deterministic (filename, n_bytes, payload_sha) per row — the
     sink's write plan, checkable without touching a filesystem."""
     return df.select(
-        F.format_string(f"{prefix}_%0{width}d.{ext}", F.col(id_col))
+        F.format_string(f"{prefix}_%05d.bin", F.col(id_col))
         .alias("filename"),
         F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
         F.sha2(F.col(payload_col), 256).alias("payload_sha"))

@@ -25,14 +25,13 @@ PAGES_SCHEMA = T.StructType([
 ])
 
 
-def generate_pages_df(spark: SparkSession, n: int, seed: int = 42,
-                      min_paras: int = 2, max_paras: int = 8,
+def generate_pages_df(spark: SparkSession, n: int, min_paras: int = 2,
+                      max_paras: int = 8,
                       num_partitions: int | None = None) -> DataFrame:
     from ..corpus import page_row
 
     def _row(i):
-        page = page_row(i, seed=seed, min_paras=min_paras,
-                        max_paras=max_paras)
+        page = page_row(i, min_paras=min_paras, max_paras=max_paras)
         yield tuple(page[f] for f in PAGES_SCHEMA.names)
 
     parts = num_partitions or spark.sparkContext.defaultParallelism
@@ -41,10 +40,8 @@ def generate_pages_df(spark: SparkSession, n: int, seed: int = 42,
 
 
 def ensure_pages_dataset(spark: SparkSession, out_dir: str, n: int,
-                         seed: int = 42, min_paras: int = 2,
-                         max_paras: int = 8,
-                         num_files: int | None = None,
-                         compression: str = "snappy") -> str:
+                         min_paras: int = 2, max_paras: int = 8,
+                         num_files: int | None = None) -> str:
     """Materialize (once) a pages parquet dataset; cached by _COMPLETE
     marker so bench reruns reuse the identical input. ``num_files``
     controls scan-split granularity downstream (more, smaller files =
@@ -54,10 +51,10 @@ def ensure_pages_dataset(spark: SparkSession, out_dir: str, n: int,
     marker = os.path.join(out_dir, "_COMPLETE")
     if os.path.exists(marker):
         return out_dir
-    df = generate_pages_df(spark, n, seed=seed, min_paras=min_paras,
+    df = generate_pages_df(spark, n, min_paras=min_paras,
                            max_paras=max_paras, num_partitions=num_files)
-    df.write.mode("overwrite").option("compression", compression).parquet(out_dir)
+    df.write.mode("overwrite").option("compression", "snappy").parquet(out_dir)
     with open(marker, "w", encoding="utf-8") as f:
-        f.write(f"n={n} seed={seed} paras={min_paras}-{max_paras} "
-                f"codec={compression}\n")
+        f.write(f"n={n} seed=42 paras={min_paras}-{max_paras} "
+                "codec=snappy\n")
     return out_dir

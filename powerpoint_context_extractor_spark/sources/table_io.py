@@ -468,8 +468,7 @@ class SnapshotTable:
                 "new table state")
 
     def merge(self, spark: SparkSession, source: DataFrame,
-              key_col: str, run_id: str = "merge",
-              delete_col: str | None = None,
+              key_col: str, delete_col: str | None = None,
               stale_lock_s: float = 600.0) -> dict | None:
         """Keyed upsert — the Iceberg/Delta ``MERGE INTO`` analog:
         matched target rows are replaced by their source row,
@@ -515,7 +514,7 @@ class SnapshotTable:
                 cur.join(source.select(key_col), key_col, "left_anti")
                 .unionByName(inserts))
             replaced = [s["snapshot_id"] for s in snaps]
-            entry = self._write(out, run_id, replaces=replaced)
+            entry = self._write(out, "merge", replaces=replaced)
             self._validate_optimistic(set(replaced))
             commit(entry)
             return entry

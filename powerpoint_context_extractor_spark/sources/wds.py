@@ -43,17 +43,15 @@ from .artifact_sink import write_files
 _SHARD_NAME = re.compile(r"shard-(\d{5})\.tar")
 
 
-def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4,
-                     key_col: str = "doc_id",
-                     text_col: str = "text") -> int:
+def write_wds_shards(df: DataFrame, out_dir: str, n_shards: int = 4) -> int:
     """Write (key, text) rows as ``shard-%05d.tar`` with one
     ``<key:012d>.txt`` member per row. Returns n_shards."""
     if n_shards <= 0:
         raise ValueError("write_wds_shards: n_shards must be > 0")
     shard = portable_hash(
-        F.format_string("wds%d", F.col(key_col))) % n_shards
+        F.format_string("wds%d", F.col("doc_id"))) % n_shards
     rows = (df.select(F.format_string("shard-%05d.tar", shard).alias("file"),
-                      F.col(key_col).alias("k"), F.col(text_col).alias("t"))
+                      F.col("doc_id").alias("k"), F.col("text").alias("t"))
             .repartition(n_shards, "file")
             .sortWithinPartitions("file", "k"))
 

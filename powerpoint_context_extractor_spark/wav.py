@@ -77,14 +77,14 @@ def _adpcm_expand(pred: int, index: int, nib: int) -> tuple:
     return pred, index
 
 
-def adpcm_encode_block(samples, init_index: int = 0) -> bytes:
+def adpcm_encode_block(samples) -> bytes:
     """Encode one mono IMA ADPCM block: 4-byte header (int16 predictor
     = sample 0 verbatim, step index, reserved 0) + one nibble per
     remaining sample, packed low-nibble-first, zero-padded to whole
     bytes."""
     if not samples:
         raise ValueError("adpcm: empty block")
-    pred, index = samples[0], init_index
+    pred, index = samples[0], 0
     head = struct.pack("<hBB", pred, index, 0)
     nibs = []
     for s in samples[1:]:

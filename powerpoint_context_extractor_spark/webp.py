@@ -588,7 +588,7 @@ def decode_webp(data: bytes) -> tuple:
 # encoder twin
 # ---------------------------------------------------------------------------
 
-def _huffman_lengths(hist: dict, max_depth: int = _MAX_CODE_DEPTH) -> dict:
+def _huffman_lengths(hist: dict) -> dict:
     """Code lengths from a histogram (>= 2 symbols); frequencies are
     halved and rebuilt if the tree exceeds the depth cap."""
     import heapq
@@ -615,7 +615,7 @@ def _huffman_lengths(hist: dict, max_depth: int = _MAX_CODE_DEPTH) -> dict:
                 stack.append((b, d + 1))
             else:
                 lengths[node] = max(d, 1)
-        if max(lengths.values()) <= max_depth:
+        if max(lengths.values()) <= _MAX_CODE_DEPTH:
             return lengths
         freqs = {s: (f + 1) // 2 for s, f in freqs.items()}
 
@@ -937,12 +937,12 @@ def render_webp(width: int, height: int, rgba: bytes,
     return bytes(out)
 
 
-def _encode_meta_entropy_image(w: _Writer, px: list, width: int,
-                               height: int, n_groups: int,
-                               mbits: int = 2) -> None:
+def _encode_meta_entropy_image(w: _Writer, px: list, width: int, height: int,
+                               n_groups: int) -> None:
     """Top-level entropy image WITH meta prefix codes (r7): groups
     laid out by meta-tile column index mod n_groups; literal-only
     emission, each pixel coded by its tile's group codebooks."""
+    mbits = 2                                  # 4x4-pixel meta tiles
     w.bits(0, 1)                               # no color cache
     w.bits(1, 1)                               # meta prefix present
     w.bits(mbits - 2, 3)

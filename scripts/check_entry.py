@@ -104,8 +104,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from powerpoint_context_extractor_spark.session import get_spark
 
-    spark = get_spark("check-entry", master="local[8]", shuffle_partitions=8,
-                      driver_memory="16g")
+    spark = get_spark("check-entry", master="local[8]", driver_memory="16g")
     con = duckdb_views(args.sf)
     oracles = entry_mod.oracle_sql()
     names = args.names or list(entry_mod.queries())

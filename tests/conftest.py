@@ -9,8 +9,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from powerpoint_context_extractor_spark.session import get_spark
-    s = get_spark("pcx-tests", master="local[4]", shuffle_partitions=4,
-                  driver_memory="8g")
+    s = get_spark("pcx-tests", master="local[4]", driver_memory="8g")
     yield s
     s.stop()
 

@@ -64,7 +64,7 @@ def test_asof_hot_key_time_split_matches_unsplit(spark):
     split = asof_join_backward(left, right, "user_id", "ts",
                                ["purchase_cents"],
                                order_tiebreak="event_id",
-                               hot_keys=[7], n_time_buckets=8)
+                               hot_keys=[7])
     want = {(r["user_id"], r["event_id"]): r["purchase_cents"]
             for r in plain.collect()}
     got = {(r["user_id"], r["event_id"]): r["purchase_cents"]

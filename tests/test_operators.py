@@ -299,11 +299,10 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     indexed path and the recall-measured path are the same cells)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     idx_dir = str(tmp_path / "ivf")
-    similarity.ivf_build_index(emb, idx_dir, n_centroids=8)
-    out = similarity.ivf_topk_indexed(spark, idx_dir, 0, k=10, nprobe=2)
+    similarity.ivf_build_index(emb, idx_dir)
+    out = similarity.ivf_topk_indexed(spark, idx_dir, 0)
     rows = out.collect()
-    baseline = similarity.ivf_topk_kmeans(emb, 0, k=10, n_centroids=8,
-                                          nprobe=2).collect()
+    baseline = similarity.ivf_topk_kmeans(emb, 0, nprobe=2).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in baseline]
     # plan audit: the literal cluster predicate must reach the scan as
     # a PartitionFilter (directory-level pruning, not a post-scan
@@ -318,7 +317,7 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     import os
     with open(os.path.join(idx_dir, "_centroids.json")) as f:
         cents = json.load(f)
-    assert cents == similarity.kmeans_centroids(emb, 8, 3)
+    assert cents == similarity.kmeans_centroids(emb)
     # r4 ADVICE #4: the query-vector fetch is pruned too — its cell
     # comes from the _assign sidecar and the (cluster, id) fetch plan
     # carries a cluster PartitionFilter, not a full-index scan
@@ -334,7 +333,7 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
                   for r in spark.read.parquet(idx_dir)
                   .select("vec_id", "cluster").collect()}
     km_assign = {r["vec_id"]: r["cluster"]
-                 for r in similarity.kmeans_assign(emb, 8, 3).collect()}
+                 for r in similarity.kmeans_assign(emb).collect()}
     assert idx_assign == km_assign
 
 
@@ -359,7 +358,7 @@ def test_quantized_topk_recall_vs_float(spark, sf_dir):
     high overlap with the float top-10 (the codec's whole point), and
     scores stay within quantization error of the float scores."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qt = similarity.quantized_topk(emb, 0, k=10).collect()
+    qt = similarity.quantized_topk(emb, 0).collect()
     ft = similarity.cosine_topk(emb, 0, k=10).collect()
     q_ids = {r["vec_id"] for r in qt}
     f_ids = {r["vec_id"] for r in ft}
@@ -1609,10 +1608,10 @@ def test_kmeans_deterministic_and_partition_invariant(spark, sf_dir):
     """Integer-exact k-means: same centroids regardless of input
     partitioning (the property that makes it oracle-checkable)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    c1 = similarity.kmeans_centroids(emb, 8, 3)
-    c2 = similarity.kmeans_centroids(emb.repartition(13), 8, 3)
+    c1 = similarity.kmeans_centroids(emb)
+    c2 = similarity.kmeans_centroids(emb.repartition(13))
     assert c1 == c2
-    assign = similarity.kmeans_assign(emb, 8, 3)
+    assign = similarity.kmeans_assign(emb)
     sizes = [r["n"] for r in assign.groupBy("cluster")
              .agg(F.count(F.lit(1)).alias("n")).collect()]
     assert len(sizes) >= 2          # rank seeding avoids collapse
@@ -1622,13 +1621,13 @@ def test_ivf_nprobe_recall_monotone(spark, sf_dir):
     """More probes -> recall@10 never decreases, and nprobe=K recovers
     the brute-force result exactly (recall 1.0)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = similarity.kmeans_centroids(emb, 8, 3)
+    cents = similarity.kmeans_centroids(emb)
     brute = {r["vec_id"] for r in
              similarity.cosine_topk(emb, 0, k=10).collect()}
     last = -1.0
     for nprobe in (1, 2, 8):
         ivf = {r["vec_id"] for r in similarity.ivf_topk_kmeans(
-            emb, 0, k=10, nprobe=nprobe, centroids=cents).collect()}
+            emb, 0, nprobe=nprobe, centroids=cents).collect()}
         rec = len(ivf & brute) / 10
         assert rec >= last, (nprobe, rec, last)
         last = rec
@@ -1858,7 +1857,7 @@ def test_hash_split_deterministic_partition(spark):
                  spark.range(3000).selectExpr("id AS doc_id")).collect()}
     assert all(grown[k] == v for k, v in a.items())
     with _pytest.raises(ValueError, match="percentages"):
-        sampling.hash_split(docs, train_pct=95, val_pct=10)
+        sampling.hash_split(docs, train_pct=95)
 
 
 def test_mixture_sample_hits_domain_quotas(spark):
@@ -1873,8 +1872,7 @@ def test_mixture_sample_hits_domain_quotas(spark):
             + [(20000 + i, "junk") for i in range(160)])
     docs = spark.createDataFrame(rows, "doc_id long, domain string")
     out = sampling.mixture_sample(
-        docs, "domain", {"big": 5000, "rare": 5000},
-        out_fraction_bp=5000).collect()
+        docs, "domain", {"big": 5000, "rare": 5000}).collect()
     by_dom: dict = {}
     for r in out:
         by_dom.setdefault(r["domain"], []).append(r)
@@ -2004,8 +2002,7 @@ def test_compression_ratio_deterministic_and_discriminative(spark):
         (3, "tiny doc"),
     ]
     out = {r["doc_id"]: r for r in dedup.substring_dedup_stats(
-        spark.createDataFrame(rows, "doc_id long, text string"),
-        k=8).collect()}
+        spark.createDataFrame(rows, "doc_id long, text string")).collect()}
     # doc 0: 16 tokens -> 9 windows; windows starting at 0,1,2 lie
     # fully inside the shared span -> 3 duplicated
     assert (out[0]["n_windows"], out[0]["dup_windows"]) == (9, 3)
@@ -2017,8 +2014,7 @@ def test_compression_ratio_deterministic_and_discriminative(spark):
     # within-doc repeats do NOT count as cross-doc duplication
     solo = [(9, " ".join(["x"] * 20))]
     r = dedup.substring_dedup_stats(
-        spark.createDataFrame(solo, "doc_id long, text string"),
-        k=8).collect()[0]
+        spark.createDataFrame(solo, "doc_id long, text string")).collect()[0]
     assert (r["n_windows"], r["dup_windows"]) == (13, 0)
 
 
@@ -2032,7 +2028,7 @@ def test_substring_dedup_plan_shape(spark):
     docs = spark.createDataFrame(
         [(i, " ".join(f"t{i}_{j}" for j in range(30))) for i in range(40)],
         "doc_id long, text string")
-    out = dedup.substring_dedup_stats(docs, k=8)
+    out = dedup.substring_dedup_stats(docs)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
@@ -2060,7 +2056,7 @@ def test_substring_trim_merges_overlapping_spans(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in dedup.substring_dedup_trim(
-        docs, k=8).collect()}
+        docs).collect()}
     # doc 0: windows starting in the shared run match doc 1's windows.
     # shared tokens are positions 7..16 of doc 0; duplicated windows
     # are those fully inside the shared run: starts 7,8,9 -> cover
@@ -2116,8 +2112,7 @@ def test_token_chunks_windows_and_overlap(spark):
     rows = [(0, toks(5)), (1, toks(64)), (2, toks(65)), (3, toks(200))]
     out = {}
     for r in textstats.token_chunks(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            window=64, stride=48).collect():
+            spark.createDataFrame(rows, "doc_id long, text string")).collect():
         out.setdefault(r["doc_id"], []).append(r)
     for did in out:
         out[did].sort(key=lambda r: r["chunk_id"])
@@ -2589,7 +2584,7 @@ def test_count_min_overestimates_and_merges(spark):
             + [(f"k{i % 40}",) for i in range(800)])
     df = spark.createDataFrame(rows, "k string")
     cells = {(r["row"], r["col"]): r["cnt"]
-             for r in count_min_sketch(df, "k", w=256, d=4).collect()}
+             for r in count_min_sketch(df, "k", w=256).collect()}
     truth = {"hot": 500}
     for i in range(40):
         truth[f"k{i}"] = 20
@@ -2601,7 +2596,7 @@ def test_count_min_overestimates_and_merges(spark):
     h2 = spark.createDataFrame(rows[650:], "k string")
     merged: dict = {}
     for half in (h1, h2):
-        for r in count_min_sketch(half, "k", w=256, d=4).collect():
+        for r in count_min_sketch(half, "k", w=256).collect():
             merged[(r["row"], r["col"])] = \
                 merged.get((r["row"], r["col"]), 0) + r["cnt"]
     assert merged == cells
@@ -2899,8 +2894,7 @@ def test_temperature_sample_flattens_shares(spark):
     rows = ([(i, "big") for i in range(1600)]
             + [(10000 + i, "rare") for i in range(64)])
     docs = spark.createDataFrame(rows, "doc_id long, domain string")
-    out = sampling.temperature_sample(docs, "domain",
-                                      out_fraction_bp=5000).collect()
+    out = sampling.temperature_sample(docs, "domain").collect()
     # w(big)=40, w(rare)=8, sum=48; N_out=832
     # quota(big) = 832*40//48 = 693 -> rate 693*1e4//1600 = 4331
     # quota(rare) = 832*8//48 = 138 -> rate 10000 (capped: 138 > 64)
@@ -3081,6 +3075,54 @@ def test_gif_screen_dims_over_the_pixel_cap():
     """))
     assert [e.split(" exceeds ")[0] for e in errors] == [
         "gif: 65535x65535"] * 2, errors
+
+
+def test_gif_animation_frames_over_the_pixel_cap():
+    """The 729-byte ``render_gif_animation`` output of 30 1x1 frames on
+    a 4096x4096 screen keeps 30 whole 48 MiB canvases, so
+    ``decode_gif_frames`` refuses it as a ``gif:`` ValueError under a
+    1 GiB address-space limit, before the second canvas is kept."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json
+        from powerpoint_context_extractor_spark.gif import (
+            decode_gif_frames, render_gif_animation)
+        raw = render_gif_animation(
+            4096, 4096, [bytes(1)] * 30, [(0, 0, 0), (255, 255, 255)],
+            [0] * 30, [0] * 30, rects=[(0, 0, 1, 1)] * 30)
+        assert len(raw) == 729
+        errors = []
+        try:
+            decode_gif_frames(raw)
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "gif: 2 frames of 4096x4096"], errors
+
+
+def test_avi_frames_over_the_pixel_cap():
+    """The 1,316-byte 30-frame ``render_avi_rle8`` output with its avih
+    dimensions rewritten to 4096x4096 (each frame at the one-frame cap)
+    is an ``avi:`` ValueError under a 1 GiB address-space limit, raised
+    before any of the 30 48 MiB frames is decoded."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.avi import (
+            decode_avi, render_avi_rle8)
+        raw = render_avi_rle8(2, 2, [bytes(4)] * 30, [(0, 0, 0)])
+        at = raw.index(b"avih") + 8 + 32             # dwWidth, dwHeight
+        raw = raw[:at] + struct.pack("<II", 4096, 4096) + raw[at + 8:]
+        assert len(raw) == 1316
+        errors = []
+        try:
+            decode_avi(raw)
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "avi: 30 frames of 4096x4096"], errors
 
 
 def test_hll_registers_estimate_and_merge(spark):
@@ -3547,8 +3589,7 @@ def test_semantic_dedup_keeps_min_id_per_group(spark):
     rows += [(200, vec(3, 0.5))]                         # chain: 3~103~200
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {r["vec_id"]: (r["rep_id"], r["is_kept"])
-           for r in semantic_dedup(emb, threshold_micro=999000,
-                                   n_centroids=4).collect()}
+           for r in semantic_dedup(emb, n_centroids=4).collect()}
     assert len(out) == 46
     # note: vec() is periodic mod 19, so some base seeds are identical
     # to each other — assert the planted relations and the structural

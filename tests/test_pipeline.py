@@ -629,19 +629,17 @@ def test_query_scratch_dirs_stay_inside_session_root(spark, sf_dir):
     before = set(os.listdir(tmp))
     entry_mod._sink_jsonl_shards(spark, sf_dir).count()
     entry_mod._warc_extract(spark, sf_dir).count()
-    allowed = set()
-    if entry_mod._TMP_ROOT:
-        allowed.add(os.path.basename(entry_mod._TMP_ROOT))
     from powerpoint_context_extractor_spark.streaming import ingest
-    if ingest._TMP_ROOT:
-        allowed.add(os.path.basename(ingest._TMP_ROOT))
-    leaked = {e for e in set(os.listdir(tmp)) - before - allowed
+    root = ingest._TMP_ROOT
+    leaked = {e for e in set(os.listdir(tmp)) - before
+              - {os.path.basename(root or "")}
               if e.startswith(("pcx_", "spark_graft"))}
     assert not leaked, leaked
-    # everything the queries made lives under the session root
-    assert entry_mod._TMP_ROOT and os.path.isdir(entry_mod._TMP_ROOT)
+    # everything the queries made lives under the one session root
+    assert root and os.path.isdir(root)
+    assert entry_mod._session_root() == root
     assert any(n.startswith(("pcx_jsonl_", "warc_"))
-               for n in os.listdir(entry_mod._TMP_ROOT))
+               for n in os.listdir(root))
 
 
 def test_snapshot_commit_is_metadata_only(spark, tmp_path, monkeypatch):
@@ -802,8 +800,7 @@ def test_capstone_pretrain_corpus_plan_and_wds(spark, sf_dir, tmp_path):
            for r in rows]
     df = spark.createDataFrame(key, "doc_id long, text string")
     wds_dir = str(tmp_path / "wds")
-    write_wds_shards(df, wds_dir, n_shards=4, key_col="doc_id",
-                     text_col="text")
+    write_wds_shards(df, wds_dir, n_shards=4)
     back = {(r["doc_id"], r["text"])
             for r in read_wds_shards(spark, wds_dir).collect()}
     assert back == set(key)

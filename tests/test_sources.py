@@ -214,3 +214,97 @@ def test_every_package_name_has_a_caller_outside_tests():
               if not (used.get((module, name), set())
                       | strings.get(name, set())) - {(path, i)}]
     assert unused == [], "\n".join(unused)
+
+
+# -- no parameter that only one value reaches --------------------------
+
+#: where a call counts: every user of the package, tests included
+CALLERS = USERS + ("tests",)
+#: ``sys.meta_path`` protocol: Python's import system passes these
+PROTOCOL = {("ZipImporterShedder", "find_spec")}
+
+
+def _functions(tree):
+    """(class or None, function) per module-level function and per
+    method of a module-level class."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield None, node
+        elif isinstance(node, ast.ClassDef):
+            for sub in node.body:
+                if isinstance(sub, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield node, sub
+
+
+def _defaulted(cls, fn):
+    """(name, default, positional index as a caller counts it, or None
+    for keyword-only) per parameter of ``fn`` that has a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                 for d in fn.decorator_list)
+    bound = cls is not None and not static      # self / cls
+    first = len(pos) - len(a.defaults)
+    for i, (p, d) in enumerate(zip(pos[first:], a.defaults)):
+        yield p.arg, d, first + i - bound
+    for p, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield p.arg, d, None
+
+
+def _sets_other_value(call, name, default, index) -> bool:
+    """Whether ``call`` may give parameter ``name`` a value other than
+    ``default``: a ``**`` mapping sets every parameter, a ``*`` sequence
+    every position from its own on, and any argument whose expression
+    differs from the default's is another value."""
+    dump = ast.dump(default)
+    for k in call.keywords:
+        if k.arg is None or (k.arg == name and ast.dump(k.value) != dump):
+            return True
+    if index is None:
+        return False
+    for j, arg in enumerate(call.args[:index + 1]):
+        if isinstance(arg, ast.Starred) or (
+                j == index and ast.dump(arg) != dump):
+            return True
+    return False
+
+
+def test_every_defaulted_parameter_takes_a_second_value():
+    """A parameter with a default is a setting, and each setting
+    multiplies the configurations the tests must cover. So every
+    defaulted parameter of a package function or method has a caller,
+    in the package, the scripts, the benchmark or the tests, that
+    passes it something other than its default; a parameter only one
+    value reaches is that value, written as a constant.
+
+    Calls are matched by function name, like the census this guard
+    replaces: ``f(...)`` and ``x.f(...)`` both count for every ``f``.
+    Dunder methods and the ``sys.meta_path`` protocol are exempt."""
+    calls = {}
+    defaulted = []
+    pkg_prefix = os.path.join(ROOT, PACKAGE, "")
+    for path in _trees(CALLERS):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = getattr(func, "id", getattr(func, "attr", None))
+                calls.setdefault(name, []).append(node)
+        if not path.startswith(pkg_prefix):
+            continue
+        for cls, fn in _functions(tree):
+            owner = cls.name if cls else None
+            if (fn.name.startswith("__") and fn.name.endswith("__")
+                    or (owner, fn.name) in PROTOCOL):
+                continue
+            where = f"{os.path.relpath(path, ROOT)}::" + (
+                f"{owner}.{fn.name}" if owner else fn.name)
+            defaulted += [(where, fn.name, *p) for p in _defaulted(cls, fn)]
+    assert len(defaulted) > 100
+    single = [f"{where}({name})"
+              for where, fn, name, default, index in defaulted
+              if not any(_sets_other_value(c, name, default, index)
+                         for c in calls.get(fn, ()))]
+    assert single == [], "\n".join(single)

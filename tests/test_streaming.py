@@ -343,8 +343,7 @@ def test_stream_window_counts_million_row_backlog(spark, tmp_path):
              .cast("timestamp").alias("ts"),
              F.concat(F.lit("e"), (F.col("id") % 4)).alias("event_type"))
      .write.mode("overwrite").parquet(src))
-    got = stream_windowed_counts_to_table(spark, src, str(tmp_path / "o"),
-                                          n_files=4)
+    got = stream_windowed_counts_to_table(spark, src, str(tmp_path / "o"))
     rows = {(str(r["win_start"]), r["event_type"]): r["n"]
             for r in got.collect()}
     assert len(rows) == got.count()
