@@ -34,6 +34,8 @@ from __future__ import annotations
 import math
 import struct
 
+from .limits import check_pixels
+
 __all__ = ["render_jpeg_gray", "decode_jpeg_gray", "render_jpeg_color",
            "render_jpeg_gray_progressive", "decode_jpeg", "QTABLE",
            "ycbcr_from_rgb", "rgb_from_ycbcr"]
@@ -609,7 +611,8 @@ def decode_jpeg(data: bytes) -> tuple:
     the frozen integer ``rgb_from_ycbcr``). Honors the STREAM's
     quantization and huffman tables (DQT/DHT are parsed, not assumed).
     Raises ValueError outside the subset (log-and-continue at the
-    operator layer, F6 policy)."""
+    operator layer, F6 policy), and on a frame header over
+    ``limits.MAX_PIXELS`` before any buffer is sized from it."""
     if not data.startswith(b"\xff\xd8"):
         raise ValueError("jpeg: missing SOI")
     i = 2
@@ -661,6 +664,7 @@ def decode_jpeg(data: bytes) -> tuple:
                 raise ValueError(
                     f"jpeg: unsupported component count {nc} "
                     "(subset is grayscale or YCbCr 4:2:0)")
+            check_pixels("jpeg", width, height)
             for c in range(nc):
                 cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
                 comps.append((cid, hv >> 4, hv & 0x0F, tq))

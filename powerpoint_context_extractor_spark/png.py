@@ -25,6 +25,8 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .limits import check_pixels
+
 __all__ = ["render_png", "decode_png", "resize_nn"]
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -237,6 +239,16 @@ _ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
           (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
 
 
+def _adam7_passes(width: int, height: int):
+    """(x0, y0, dx, dy, pass width, pass height) of each non-empty
+    Adam7 pass of a width x height image."""
+    for x0, y0, dx, dy in _ADAM7:
+        pw = (width - x0 + dx - 1) // dx
+        ph = (height - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            yield x0, y0, dx, dy, pw, ph
+
+
 def render_png_interlaced(width: int, height: int, pixels: bytes,
                           channels: int = 1, row_filters=None,
                           palette=None) -> bytes:
@@ -248,11 +260,7 @@ def render_png_interlaced(width: int, height: int, pixels: bytes,
     :func:`render_png`."""
     color = _color_type(width, height, pixels, channels, palette)
     passes = []
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
+    for x0, y0, dx, dy, pw, ph in _adam7_passes(width, height):
         rows = []
         for py in range(ph):
             y = y0 + py * dy
@@ -306,6 +314,7 @@ def decode_png(data: bytes) -> tuple:
                 raise ValueError(
                     f"png: 16-bit subset is sequential gray/RGB/RGBA "
                     f"(color={color} interlace={inter})")
+            check_pixels("png", width, height)
             interlaced = inter == 1
             indexed = color == 3
             channels = 1 if indexed else _CHANNELS_FOR_COLOR[color]
@@ -323,17 +332,22 @@ def decode_png(data: bytes) -> tuple:
     if indexed and palette is None:
         raise ValueError("png: indexed image missing PLTE")
     stride = width * channels
-    raw = zlib.decompress(bytes(idat))
+    # inflate no more than the IHDR declares (one byte past it, so a
+    # longer stream still fails the length checks below)
+    passes = ([p[4:] for p in _adam7_passes(width, height)]
+              if interlaced else [(width, height)])
+    expected = sum(h * (1 + (w * channels * depth + 7) // 8)
+                   for w, h in passes)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(bytes(idat), expected + 1)
+    if not inflate.eof and len(raw) <= expected:
+        raise ValueError("png: truncated zlib stream")
     if interlaced:
         # Adam7: seven reduced images, filter history resets per pass;
         # pixels scatter back to (x0 + px*dx, y0 + py*dy)
         pixels = bytearray(width * height * channels)
         pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
+        for x0, y0, dx, dy, pw, ph in _adam7_passes(width, height):
             pstride = pw * channels
             rows = _unfilter_rows(raw, pos, ph, pstride, channels)
             pos += ph * (1 + pstride)

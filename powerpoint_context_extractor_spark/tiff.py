@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import struct
 
+from .limits import check_pixels
+
 _TAG_WIDTH = 256
 _TAG_HEIGHT = 257
 _TAG_BPS = 258
@@ -379,7 +381,9 @@ def _read_ifd(data: bytes, e: str, ifd_off: int) -> tuple:
     return tags, nxt
 
 
-def _decode_page(data: bytes, e: str, tags: dict) -> tuple:
+def _decode_page(data: bytes, e: str, tags: dict, kept: int) -> tuple:
+    """One page, refused before any allocation when its pixels beside
+    the ``kept`` pixels of earlier pages exceed ``limits.MAX_PIXELS``."""
     tiled = _TAG_TILE_OFFSETS in tags
     req = ((_TAG_TILE_WIDTH, _TAG_TILE_LENGTH, _TAG_TILE_OFFSETS,
             _TAG_TILE_BYTES) if tiled
@@ -403,11 +407,13 @@ def _decode_page(data: bytes, e: str, tags: dict) -> tuple:
         raise ValueError(f"tiff: predictor {predictor} unsupported")
     if channels not in (1, 3) or any(b != 8 for b in bps) or planar != 1:
         raise ValueError("tiff: subset is 8-bit chunky gray/RGB")
+    check_pixels("tiff", width, height, kept=kept)
     row_bytes = width * channels
     if tiled:
         tw, th = tags[_TAG_TILE_WIDTH][0], tags[_TAG_TILE_LENGTH][0]
         if tw <= 0 or th <= 0:
             raise ValueError("tiff: bad tile size")
+        check_pixels("tiff", tw, th)
         trow = tw * channels
         across = (width + tw - 1) // tw
         down = (height + th - 1) // th
@@ -463,7 +469,8 @@ def _decode_page(data: bytes, e: str, tags: dict) -> tuple:
 
 def decode_tiff_pages(data: bytes) -> list:
     """Full multi-page decode (r7): walks the IFD chain and returns
-    [(width, height, channels, pixel bytes), ...] in page order."""
+    [(width, height, channels, pixel bytes), ...] in page order. The
+    pages together hold at most ``limits.MAX_PIXELS`` pixels."""
     if len(data) < 8 or data[:2] not in (b"II", b"MM"):
         raise ValueError("tiff: bad byte-order mark")
     e = "<" if data[:2] == b"II" else ">"
@@ -472,13 +479,15 @@ def decode_tiff_pages(data: bytes) -> list:
         raise ValueError("tiff: bad magic number")
     (ifd_off,) = struct.unpack(e + "I", data[4:8])
     pages = []
+    kept = 0
     seen = set()
     while ifd_off:
         if ifd_off in seen:
             raise ValueError("tiff: IFD chain loops")
         seen.add(ifd_off)
         tags, ifd_off = _read_ifd(data, e, ifd_off)
-        pages.append(_decode_page(data, e, tags))
+        pages.append(_decode_page(data, e, tags, kept))
+        kept += pages[-1][0] * pages[-1][1]
     if not pages:
         raise ValueError("tiff: no IFDs")
     return pages

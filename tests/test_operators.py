@@ -3125,6 +3125,186 @@ def test_avi_frames_over_the_pixel_cap():
         "avi: 30 frames of 4096x4096"], errors
 
 
+def test_tiff_tile_dims_over_the_pixel_cap():
+    """The 402-byte ``render_tiff(4, 4, bytes(16), tile=(16, 16))``
+    output with ImageWidth, ImageLength, TileWidth and TileLength
+    rewritten to 60000 is a ``tiff:`` ValueError under a 1 GiB
+    address-space limit, raised before the 3.6 GB page buffer is asked
+    for; a 4x4 image with 60000x60000 tiles is refused before the
+    tile's LZW decode is sized from them."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.tiff import (
+            decode_tiff, render_tiff)
+
+        def rewrite(raw, tags):
+            (ifd,) = struct.unpack("<I", raw[4:8])
+            (n,) = struct.unpack("<H", raw[ifd:ifd + 2])
+            out = bytearray(raw)
+            for k in range(n):
+                o = ifd + 2 + 12 * k
+                tag, typ = struct.unpack("<HH", raw[o:o + 4])
+                if tag in tags:
+                    fmt = "<H" if typ == 3 else "<I"
+                    out[o + 8:o + 8 + struct.calcsize(fmt)] = struct.pack(
+                        fmt, 60000)
+            return bytes(out)
+
+        raw = render_tiff(4, 4, bytes(16), tile=(16, 16))
+        assert len(raw) == 402
+        errors = []
+        for tags in ((256, 257, 322, 323), (322, 323)):
+            try:
+                decode_tiff(rewrite(raw, tags))
+            except ValueError as e:
+                errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "tiff: 60000x60000"] * 2, errors
+
+
+def test_tiff_pages_over_the_pixel_cap():
+    """A 16 MiB TIFF whose 80 IFDs all point at one 4096x4096 gray
+    strip would keep 80 whole 16 MiB pages; ``decode_tiff_pages``
+    refuses it as a ``tiff:`` ValueError under a 1 GiB address-space
+    limit, before the second page is decoded."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.tiff import (
+            decode_tiff_pages)
+        n, side = 80, 4096
+        strip = 8 + 66 * n
+        raw = bytearray(b"II*\\0" + struct.pack("<I", 8))
+        for k in range(n):
+            raw += struct.pack("<H", 5)
+            for tag, value in ((256, side), (257, side), (273, strip),
+                               (278, side), (279, side * side)):
+                raw += struct.pack("<HHII", tag, 4, 1, value)
+            raw += struct.pack("<I", 8 + 66 * (k + 1) if k < n - 1 else 0)
+        raw += bytes(side * side)
+        errors = []
+        try:
+            decode_tiff_pages(bytes(raw))
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "tiff: 4096x4096 beside 16777216 kept pixels"], errors
+
+
+def test_jpeg_baseline_frame_dims_over_the_pixel_cap():
+    """``render_jpeg_gray`` and ``render_jpeg_color`` outputs whose
+    SOF0 declares 65520x65520 are ``jpeg:`` ValueErrors under a 1 GiB
+    address-space limit, raised before the 4.3 GB gray plane and the
+    color planes are asked for."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.jpeg import (
+            decode_jpeg, render_jpeg_color, render_jpeg_gray)
+        errors = []
+        for raw in (render_jpeg_gray(8, 8, bytes(64)),
+                    render_jpeg_color(16, 16, bytes(16 * 16 * 3))):
+            at = raw.index(b"\\xff\\xc0") + 5   # Y, X
+            raw = raw[:at] + struct.pack(">HH", 65520, 65520) + raw[at + 4:]
+            try:
+                decode_jpeg(raw)
+            except ValueError as e:
+                errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "jpeg: 65520x65520"] * 2, errors
+
+
+def test_jpeg_progressive_frame_dims_over_the_pixel_cap():
+    """Progressive gray and color outputs whose SOF2 declares
+    65520x65520 are ``jpeg:`` ValueErrors under a 1 GiB address-space
+    limit, raised before 67M coefficient blocks are asked for."""
+    errors = json.loads(_last_line_under_1gib("""
+        import json, struct
+        from powerpoint_context_extractor_spark.jpeg import (
+            decode_jpeg, render_jpeg_color_progressive,
+            render_jpeg_gray_progressive)
+        errors = []
+        for raw in (render_jpeg_gray_progressive(8, 8, bytes(64)),
+                    render_jpeg_color_progressive(
+                        16, 16, bytes(16 * 16 * 3))):
+            at = raw.index(b"\\xff\\xc2") + 5   # Y, X
+            raw = raw[:at] + struct.pack(">HH", 65520, 65520) + raw[at + 4:]
+            try:
+                decode_jpeg(raw)
+            except ValueError as e:
+                errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "jpeg: 65520x65520"] * 2, errors
+
+
+# png(ihdr, idat): a PNG of one IHDR (width, height, depth, color,
+# interlace), one IDAT and IEND, with valid CRCs
+_PNG_SRC = """
+        import json, struct, zlib
+        from powerpoint_context_extractor_spark.png import decode_png
+
+        def chunk(typ, body):
+            return (struct.pack(">I", len(body)) + typ + body
+                    + struct.pack(">I", zlib.crc32(typ + body)))
+
+        def png(ihdr, idat):
+            w, h, depth, color, inter = ihdr
+            head = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, inter)
+            return (b"\\x89PNG\\r\\n\\x1a\\n" + chunk(b"IHDR", head)
+                    + chunk(b"IDAT", idat) + chunk(b"IEND", b""))
+"""
+
+
+def test_png_ihdr_dims_over_the_pixel_cap():
+    """An interlaced gray PNG whose IHDR declares 65535x65535 beside a
+    one-byte zlib stream is a ``png:`` ValueError under a 1 GiB
+    address-space limit, raised before the 4.3 GB pixel buffer is
+    asked for."""
+    errors = json.loads(_last_line_under_1gib(_PNG_SRC + """
+        raw = png((65535, 65535, 8, 0, 1), zlib.compress(b"\\0"))
+        assert len(raw) == 66
+        errors = []
+        try:
+            decode_png(raw)
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert [e.split(" exceeds ")[0] for e in errors] == [
+        "png: 65535x65535"], errors
+
+
+def test_png_idat_inflates_no_more_than_the_ihdr_declares():
+    """A 1x1 gray PNG whose IDAT is a valid 1.3 MB zlib stream of
+    1.25 GiB of zeros is a ``png:`` ValueError under a 1 GiB
+    address-space limit: the inflate stops one byte past the 2 bytes
+    the IHDR declares, where an unbounded one asks for all of it."""
+    errors = json.loads(_last_line_under_1gib(_PNG_SRC + """
+        zeros = bytes(16 << 20)
+        c = zlib.compressobj(9)
+        head = c.compress(zeros) + c.flush(zlib.Z_FULL_FLUSH)
+        block = c.compress(zeros) + c.flush(zlib.Z_FULL_FLUSH)
+        assert head[2:] == block     # each full-flushed block restarts
+        n = 80
+        adler = (n * len(zeros)) % 65521 << 16 | 1
+        idat = (head + block * (n - 1) + c.flush()[:-4]
+                + struct.pack(">I", adler))
+        errors = []
+        try:
+            decode_png(png((1, 1, 8, 0, 0), idat))
+        except ValueError as e:
+            errors.append(str(e))
+        print(json.dumps(errors))
+    """))
+    assert errors == ["png: bad scanline data length"], errors
+
+
 def test_hll_registers_estimate_and_merge(spark):
     """r6: the HLL register sketch estimates distinct counts within
     the standard error envelope at p=8 (~6.5% sigma; assert 3 sigma),

@@ -69,3 +69,48 @@ def test_python_workers_fork_from_the_package_daemon(monkeypatch):
     conf = _conf(monkeypatch, master="local[2]", extra_conf={
         "spark.python.daemon.module": "pyspark.daemon"})
     assert conf["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+# -Xmn in MiB: YOUNG_PER_SLOT (96 MiB) per task slot, by master ...
+_YOUNG_BY_SLOTS = {
+    "local[4]": 384,
+    "local[8,2]": 768,
+    "local[*]": 96 * len(os.sched_getaffinity(0)),
+    "spark://host:7077": 3072,            # 32 slots
+}
+# ... and a third of the heap, by heap string
+_THIRD_OF_HEAP = {"2g": 682, "8gb": 2730, "8192m": 2730, "48G": 16384,
+                  "1g": 341}
+
+
+@pytest.mark.parametrize("master", sorted(_YOUNG_BY_SLOTS))
+@pytest.mark.parametrize("heap", sorted(_THIRD_OF_HEAP))
+def test_young_generation_is_sized_by_task_slots(monkeypatch, master, heap):
+    young = min(_YOUNG_BY_SLOTS[master], _THIRD_OF_HEAP[heap])
+    assert session._gc_opts(heap, master) == (
+        f"-XX:+UseParallelGC -Xmn{young}m")
+    rec = _Recorder()
+    monkeypatch.setattr(session.SparkSession, "builder", rec)
+    session.get_spark(master=master, driver_memory=heap)
+    assert rec.conf["spark.driver.extraJavaOptions"] == (
+        session._gc_opts(heap, master))
+
+
+def test_young_generation_of_the_live_session(spark):
+    """The test session (8g heap, local[4]) runs ParallelGC with a
+    384 MiB young generation. The JVM's memory pools agree: eden's max
+    is the young generation less both survivor spaces, so eden plus
+    the one survivor pool (the to-space is no pool) is at most the young
+    generation and at least two thirds of it (ParallelGC's survivor
+    spaces are at most a third of it, MinSurvivorRatio=3)."""
+    jvm = spark.sparkContext._jvm
+    mgmt = jvm.java.lang.management.ManagementFactory
+    young = 384 << 20
+    hotspot = mgmt.getPlatformMXBean(jvm.java.lang.Class.forName(
+        "com.sun.management.HotSpotDiagnosticMXBean"))
+    for flag in ("NewSize", "MaxNewSize"):
+        assert int(hotspot.getVMOption(flag).getValue()) == young, flag
+    pools = {p.getName(): p.getUsage() for p in mgmt.getMemoryPoolMXBeans()}
+    eden, survivor = pools["PS Eden Space"], pools["PS Survivor Space"]
+    assert 2 * young // 3 <= eden.getMax() + survivor.getMax() <= young
+    assert eden.getCommitted() + survivor.getCommitted() <= young
