@@ -337,7 +337,7 @@ def decode_avi(data: bytes) -> tuple:
     walk(12, 8 + riff_len)
     if width is None or not frames:
         raise ValueError("avi: missing avih header or frames")
-    check_pixels("avi", width, height, len(frames))
+    check_pixels("avi", width, height, (len(frames) - 1) * width * height)
     has_dc = any(k == "dc" for k, _s, _l in frames)
     if has_dc and compression not in (1, MJPG_FOURCC):
         raise ValueError(

@@ -403,7 +403,7 @@ def decode_gif_frames(data: bytes) -> tuple:
         disposal, delay, transparent = control
         if left + w > sw or top + h > sh:
             raise ValueError("gif: frame rect outside logical screen")
-        check_pixels("gif", sw, sh, len(frames) + 1)
+        check_pixels("gif", sw, sh, len(frames) * sw * sh)
         idx = _image_indices(image)
         saved = bytes(canvas) if disposal == 3 else None
         npal = len(pal)

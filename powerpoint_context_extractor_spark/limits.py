@@ -20,14 +20,12 @@ from __future__ import annotations
 MAX_PIXELS = 1 << 24
 
 
-def check_pixels(fmt: str, width: int, height: int, frames: int = 1,
-                 kept: int = 0) -> None:
-    """Raise ``ValueError("<fmt>: ...")`` when ``frames`` frames of
-    ``width * height`` pixels, beside the ``kept`` pixels a decode
-    already holds, exceed ``MAX_PIXELS``."""
-    if kept + frames * width * height > MAX_PIXELS:
-        size = f"{width}x{height}" if frames == 1 else (
-            f"{frames} frames of {width}x{height}")
+def check_pixels(fmt: str, width: int, height: int, kept: int = 0) -> None:
+    """Raise ``ValueError("<fmt>: ...")`` when a ``width * height``
+    image, beside the ``kept`` pixels of the other frames or pages the
+    decode keeps, exceeds ``MAX_PIXELS``."""
+    if kept + width * height > MAX_PIXELS:
+        size = f"{width}x{height}"
         if kept:
             size += f" beside {kept} kept pixels"
         raise ValueError(f"{fmt}: {size} exceeds the {MAX_PIXELS}-pixel cap")

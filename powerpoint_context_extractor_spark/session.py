@@ -6,11 +6,12 @@ driver heap of half the physical memory, capped at 48 GiB. On a real
 cluster the same knobs apply per-executor and AQE re-plans at runtime.
 Arrow batches are bounded by bytes, with a records backstop (SURVEY.md
 §4 "Vectorization"). The JVM runs ParallelGC with a young generation
-of ``YOUNG_PER_SLOT`` (96 MiB) per task slot, at most a third of the
-heap: 384 MiB at ``local[4]``, 3 GiB at 32 slots. Python workers fork
-from the package daemon (``daemon.py``), so the package must be
-importable where the JVM starts Python: from its working directory or
-``PYTHONPATH``.
+that starts at ``YOUNG_PER_SLOT`` (96 MiB) per task slot, 384 MiB at
+``local[4]`` and 3 GiB at 32 slots, and grows as ParallelGC's own
+sizing needs to a third of the heap, at most ``YOUNG_CAP`` (4 GiB).
+Python workers fork from the package daemon (``daemon.py``), so the
+package must be importable where the JVM starts Python: from its
+working directory or ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -33,27 +34,18 @@ from pyspark.sql import SparkSession
 DEFAULT_ARROW_BATCH = 65536
 DEFAULT_ARROW_BYTES = "1m"
 
-# The JVM's young generation per task slot (-Xmn = this x slots, capped
-# at a third of the heap). What dies young is each running task's
-# transient state (Arrow batch buffers, row iterators, parquet pages),
-# so eden follows the slots, not the heap (Spark's tuning guide sizes
-# eden from the tasks' working space). ParallelGC's default, a third of
-# the heap, gave perfbench's 2g heap a 683 MiB young generation that the
-# JVM filled between collections. On a 4-core host, perfbench, 10
-# alternating pairs per workload against that default: cc_mixed peak
-# RSS of the process tree 1,866 -> 1,581 MiB (lower in 10/10),
-# resume_rerun 2,056 -> 1,908 MiB (10/10); run_cpu_s, setup_s and the
-# output unchanged. 128 MiB a slot gave cc_mixed 1,712-1,735 MiB.
-# Smaller is worse: at 64 MiB a slot the more frequent young
-# collections promote more of each resumed run's broadcast state, and
-# resume_rerun rose to 2,354-2,412 MiB. 32 slots get 3 GiB, near the
-# 4 GiB pause cap measured at full width (BENCH/BASELINE.md: with an
-# unbounded young gen, 32-wide runs showed 1.6-7.5 s single pauses
-# against <= 353 ms capped). A heap that starts small and grows (no
-# -Xms, as bench.py runs) pays for it in GC: at sf0.1 its JVM paused
-# 6.4 s (34 full GCs, 30 of them ParallelGC ergonomics) against 2.1 s
-# with the default young generation.
+# The JVM's young generation starts at YOUNG_PER_SLOT per task slot.
+# What dies young is each running task's transient state (Arrow batch
+# buffers, row iterators, parquet pages), so eden follows the slots, not
+# the heap (Spark's tuning guide sizes eden from the tasks' working
+# space). Smaller is worse: more frequent young collections promote more
+# of each resumed run's broadcast state. It is a start, not a fixed size:
+# tasks that hold more (bench.py's each hold a whole input row group)
+# need ParallelGC to grow it, or pay in young collections. YOUNG_CAP
+# bounds that growth where a larger young generation gave multi-second
+# pauses at 32 slots (BENCH/BASELINE.md).
 YOUNG_PER_SLOT = 96 << 20
+YOUNG_CAP = 4 << 30
 
 
 _MEM_RE = re.compile(r"^\s*(\d+)\s*([kmgt])b?\s*$", re.I)
@@ -62,17 +54,23 @@ _LOCAL_RE = re.compile(r"^local\[(\d+|\*)(?:,\d+)?\]$")
 
 
 def _gc_opts(driver_memory: str, master: str) -> str:
-    """ParallelGC with ``-Xmn`` = min(heap / 3, ``YOUNG_PER_SLOT`` x the
-    master's task slots). The heap parses in every JVM memory-string
-    form ('8g', '8gb', '8192m', '48G'); one that does not parse leaves
-    the per-slot size, which the JVM itself bounds by the heap."""
-    young = YOUNG_PER_SLOT * _task_slots(master)
+    """ParallelGC with a young generation that starts at
+    ``YOUNG_PER_SLOT`` x the master's task slots (``-XX:NewSize``) and
+    may grow to a third of the heap, at most ``YOUNG_CAP``
+    (``-XX:MaxNewSize``). A heap fixed at its maximum (``-Xms`` =
+    ``-Xmx``) leaves the young generation no room to grow, so it keeps
+    the start. The heap parses in every JVM memory-string form ('8g',
+    '8gb', '8192m', '48G'); for one that does not parse, the JVM bounds
+    the young generation by its heap."""
+    most = YOUNG_CAP
     m = _MEM_RE.match(driver_memory)
     if m:
         heap = int(m.group(1)) << {"k": 10, "m": 20, "g": 30,
                                    "t": 40}[m.group(2).lower()]
-        young = min(young, heap // 3)
-    return f"-XX:+UseParallelGC -Xmn{young >> 20}m"
+        most = min(most, heap // 3)
+    young = min(YOUNG_PER_SLOT * _task_slots(master), most)
+    return (f"-XX:+UseParallelGC -XX:NewSize={young >> 20}m "
+            f"-XX:MaxNewSize={most >> 20}m")
 
 
 def _host_heap() -> str:
@@ -131,8 +129,9 @@ def get_spark(app: str = "pcx-extract", master: str | None = None,
                 "powerpoint_context_extractor_spark.daemon")
         # throughput GC: G1 pause targets cost ~10-20% on scan-heavy
         # local runs; Parallel matches batch workloads. The young
-        # generation is sized by task slots (YOUNG_PER_SLOT), not by
-        # ParallelGC's default of a third of the heap.
+        # generation starts at a size set by the task slots
+        # (YOUNG_PER_SLOT), not at ParallelGC's default of a third of
+        # the heap.
         .config("spark.driver.extraJavaOptions",
                 _gc_opts(driver_memory, master))
     )

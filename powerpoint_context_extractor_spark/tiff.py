@@ -407,7 +407,7 @@ def _decode_page(data: bytes, e: str, tags: dict, kept: int) -> tuple:
         raise ValueError(f"tiff: predictor {predictor} unsupported")
     if channels not in (1, 3) or any(b != 8 for b in bps) or planar != 1:
         raise ValueError("tiff: subset is 8-bit chunky gray/RGB")
-    check_pixels("tiff", width, height, kept=kept)
+    check_pixels("tiff", width, height, kept)
     row_bytes = width * channels
     if tiled:
         tw, th = tags[_TAG_TILE_WIDTH][0], tags[_TAG_TILE_LENGTH][0]

@@ -3098,7 +3098,7 @@ def test_gif_animation_frames_over_the_pixel_cap():
         print(json.dumps(errors))
     """))
     assert [e.split(" exceeds ")[0] for e in errors] == [
-        "gif: 2 frames of 4096x4096"], errors
+        "gif: 4096x4096 beside 16777216 kept pixels"], errors
 
 
 def test_avi_frames_over_the_pixel_cap():
@@ -3122,7 +3122,7 @@ def test_avi_frames_over_the_pixel_cap():
         print(json.dumps(errors))
     """))
     assert [e.split(" exceeds ")[0] for e in errors] == [
-        "avi: 30 frames of 4096x4096"], errors
+        "avi: 4096x4096 beside 486539264 kept pixels"], errors
 
 
 def test_tiff_tile_dims_over_the_pixel_cap():

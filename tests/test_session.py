@@ -71,14 +71,16 @@ def test_python_workers_fork_from_the_package_daemon(monkeypatch):
     assert conf["spark.python.daemon.module"] == "pyspark.daemon"
 
 
-# -Xmn in MiB: YOUNG_PER_SLOT (96 MiB) per task slot, by master ...
+# The young generation's start in MiB: YOUNG_PER_SLOT (96 MiB) per task
+# slot, by master ...
 _YOUNG_BY_SLOTS = {
     "local[4]": 384,
     "local[8,2]": 768,
     "local[*]": 96 * len(os.sched_getaffinity(0)),
+    "local[64]": 6144,
     "spark://host:7077": 3072,            # 32 slots
 }
-# ... and a third of the heap, by heap string
+# ... and its bound, a third of the heap, by heap string
 _THIRD_OF_HEAP = {"2g": 682, "8gb": 2730, "8192m": 2730, "48G": 16384,
                   "1g": 341}
 
@@ -86,9 +88,10 @@ _THIRD_OF_HEAP = {"2g": 682, "8gb": 2730, "8192m": 2730, "48G": 16384,
 @pytest.mark.parametrize("master", sorted(_YOUNG_BY_SLOTS))
 @pytest.mark.parametrize("heap", sorted(_THIRD_OF_HEAP))
 def test_young_generation_is_sized_by_task_slots(monkeypatch, master, heap):
-    young = min(_YOUNG_BY_SLOTS[master], _THIRD_OF_HEAP[heap])
+    most = min(_THIRD_OF_HEAP[heap], 4096)          # YOUNG_CAP
+    young = min(_YOUNG_BY_SLOTS[master], most)
     assert session._gc_opts(heap, master) == (
-        f"-XX:+UseParallelGC -Xmn{young}m")
+        f"-XX:+UseParallelGC -XX:NewSize={young}m -XX:MaxNewSize={most}m")
     rec = _Recorder()
     monkeypatch.setattr(session.SparkSession, "builder", rec)
     session.get_spark(master=master, driver_memory=heap)
@@ -97,20 +100,22 @@ def test_young_generation_is_sized_by_task_slots(monkeypatch, master, heap):
 
 
 def test_young_generation_of_the_live_session(spark):
-    """The test session (8g heap, local[4]) runs ParallelGC with a
-    384 MiB young generation. The JVM's memory pools agree: eden's max
-    is the young generation less both survivor spaces, so eden plus
-    the one survivor pool (the to-space is no pool) is at most the young
-    generation and at least two thirds of it (ParallelGC's survivor
-    spaces are at most a third of it, MinSurvivorRatio=3)."""
+    """The test session (8g heap, local[4]) runs ParallelGC with a young
+    generation that starts at 384 MiB and may grow to a third of the
+    heap. The JVM's memory pools agree: eden plus the one survivor pool
+    (the to-space is no pool) is at most that third, and at least two
+    thirds of the start (ParallelGC's survivor spaces are at most a
+    third of the young generation, MinSurvivorRatio=3, and it does not
+    shrink below the start)."""
     jvm = spark.sparkContext._jvm
     mgmt = jvm.java.lang.management.ManagementFactory
-    young = 384 << 20
+    young, most = 384 << 20, 2730 << 20
     hotspot = mgmt.getPlatformMXBean(jvm.java.lang.Class.forName(
         "com.sun.management.HotSpotDiagnosticMXBean"))
-    for flag in ("NewSize", "MaxNewSize"):
-        assert int(hotspot.getVMOption(flag).getValue()) == young, flag
+    assert int(hotspot.getVMOption("NewSize").getValue()) == young
+    assert int(hotspot.getVMOption("MaxNewSize").getValue()) == most
     pools = {p.getName(): p.getUsage() for p in mgmt.getMemoryPoolMXBeans()}
     eden, survivor = pools["PS Eden Space"], pools["PS Survivor Space"]
-    assert 2 * young // 3 <= eden.getMax() + survivor.getMax() <= young
-    assert eden.getCommitted() + survivor.getCommitted() <= young
+    assert eden.getMax() + survivor.getMax() <= most
+    assert 2 * young // 3 <= (
+        eden.getCommitted() + survivor.getCommitted()) <= most
